@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Per-family sf0.1 -> sf1 scaling factors from two bench JSONs.
 
-Buckets every query into the BASELINE.md family taxonomy and prints the
+Buckets every query into the BASELINE.md family taxonomy (one query
+module per family, e.g. graft.dedup.DedupQueries) and prints the
 summed-minimum ratio per family plus the whole-surface ratio — the
 numbers the standing sf1 row quotes. Dev tooling only.
 
@@ -30,7 +31,8 @@ FAMILIES = {
                   "q_train", "q_curriculum", "q_boilerplate", "q_importance",
                   "q_dataset_card", "q_stratified", "q_label_centroids",
                   "q_nb_", "q_pmi", "q_frequent_pairs", "q_rank_fusion",
-                  "q_source_mix"],
+                  "q_source_mix", "q_bm25", "q_ql_", "q_hybrid", "q_postings",
+                  "q_retrieval", "q_weighted_sample", "q_leakage"],
     "dedup": ["q_dedup", "q_dup_", "q_semantic", "q_kmv"],
     "sim": ["q_sim_", "q_embed_", "q_pq_encode", "q_hard_negatives"],
     "graph": ["q_pagerank", "q_trustrank", "q_triangles", "q_kcore",
@@ -39,7 +41,8 @@ FAMILIES = {
     "stats": ["q_amount_histogram", "q_approx_percentiles", "q_benford",
               "q_chi_square", "q_equidepth", "q_exact_percentiles",
               "q_mad_", "q_profile", "q_psi", "q_stats", "q_winsorize",
-              "q_zscore", "q_zorder", "q_rfm"],
+              "q_zscore", "q_zorder", "q_rfm", "q_k_anonymity",
+              "q_l_diversity"],
 }
 
 

@@ -62,27 +62,37 @@ object Bench {
     // (Within-run warm-sample spread was tried first and over-flags: JIT
     // keeps improving across the whole run, so early-alphabet queries
     // show 2-3x pair-vs-C drift even on an idle machine.)
-    // The reference is only meaningful at the SF it was measured at: an sf1
-    // run compared against the sf0.1 idle reference would flag nearly every
-    // query (r10's first BENCH_sf1 listed 99 "contended" queries that were
-    // just the sf0.1→sf1 scale-up). The TSV's optional `#sf <basename>`
-    // header records its SF; on mismatch the check is skipped entirely.
+    // The reference is only meaningful at the SF and core count it was
+    // measured at: an sf1 run compared against the sf0.1 idle reference
+    // would flag nearly every query (r10's first BENCH_sf1 listed 99
+    // "contended" queries that were just the sf0.1→sf1 scale-up), and a
+    // 4-core run against a 32-core reference flags almost everything. The
+    // TSV's `#sf <basename>` and `#cpus <n>` headers record both; unless
+    // both match this run the check is skipped entirely (a TSV without
+    // `#cpus` never applies).
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val (refSf, idleRef): (String, Map[String, Double]) = {
+    val cpus = spark.sparkContext.defaultParallelism
+    val (refSf, refCpus, idleRef): (String, Option[String], Map[String, Double]) = {
       val p = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_IDLE_REF", "BENCH_IDLE_REF.tsv"))
       if (java.nio.file.Files.isReadable(p)) {
         val lines = scala.jdk.CollectionConverters.ListHasAsScala(
           java.nio.file.Files.readAllLines(p)).asScala.toSeq
-        val sf = lines.headOption.filter(_.startsWith("#sf\t"))
-          .map(_.stripPrefix("#sf\t").trim).getOrElse("sf0.1")
-        sf -> lines.flatMap { l => l.split("\t") match {
-          case Array(n, v) if !n.startsWith("#") =>
-            scala.util.Try(n -> v.toDouble).toOption
-          case _ => None
-        }}.toMap
-      } else "none" -> Map.empty[String, Double]
+        val header = lines.filter(_.startsWith("#")).map(_.split("\t", 2))
+          .collect { case Array(k, v) => k -> v.trim }.toMap
+        (header.getOrElse("#sf", "sf0.1"), header.get("#cpus"),
+          lines.flatMap { l => l.split("\t") match {
+            case Array(n, v) if !n.startsWith("#") =>
+              scala.util.Try(n -> v.toDouble).toOption
+            case _ => None
+          }}.toMap)
+      } else ("none", None, Map.empty[String, Double])
     }
+    val refMatches = refSf == sfBase && refCpus.contains(cpus.toString)
+    if (refSf == sfBase && !refMatches)
+      System.err.println(s"[bench] idle reference cpus=" +
+        s"${refCpus.getOrElse("unrecorded")} vs this run's $cpus: " +
+        "contended adjudication disabled")
     // Freshness guard (round 14): the committed idle reference only
     // adjudicates a run if it actually covers the current query registry.
     // A reference missing more than 25% of registered queries predates
@@ -91,9 +101,9 @@ object Bench {
     // smaller gaps are warned per-count and the affected queries simply
     // have no idle row (same as today). Procedure note in BASELINE.md.
     val refMissing =
-      if (refSf != sfBase) Seq.empty[String]
+      if (!refMatches) Seq.empty[String]
       else names.filterNot(idleRef.contains)
-    val refStale = refSf == sfBase && names.nonEmpty &&
+    val refStale = refMatches && names.nonEmpty &&
       refMissing.size * 4 > names.size
     if (refMissing.nonEmpty)
       System.err.println(s"[bench] idle reference $refSf lacks " +
@@ -101,7 +111,7 @@ object Bench {
         (if (refStale) " (>25% — STALE: contended adjudication disabled; " +
           "rebuild via >=3 idle JVM runs + scripts/merge_idle_ref.py)"
          else s": ${refMissing.take(8).mkString(", ")}"))
-    val refApplies = refSf == sfBase && !refStale
+    val refApplies = refMatches && !refStale
 
     // Locale.ROOT: the default-locale f"" interpolator would print a comma
     // decimal separator on e.g. de_DE hosts and break the JSON contract
@@ -147,7 +157,7 @@ object Bench {
           if idleRef.get(n).exists(i => v > i * 1.5 && v - i > 0.2) => n }
       val contendedJson = contended.map(n => s""""$n"""").mkString("[", ",", "]")
       val partial = if (!finalRec) s""","partial":true,"n_done":$nDone""" else ""
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${names.size},"queries":$m,"contended":$contendedJson,"contended_ref":"${if (refApplies) refSf else "none"}"$partial$extra,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${names.size},"queries":$m,"contended":$contendedJson,"contended_ref":"${if (refApplies) refSf else "none"}"$partial$extra,"sf":"$sfDir","cpus":$cpus}"""
     }
     def checkpoint(done: Int, finalRec: Boolean = false): Unit = {
       val rs = currentResults

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.BoundedTopKStrategy
+
 /** Library entry point: a SparkSession tuned for this engine.
   *
   * Sets the confs every graft workload needs — UTC (oracle parity), AQE
@@ -47,11 +49,20 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    install(spark)
+  }
+
+  /** Register the custom function surface and the planner strategy
+    * (rank-filter windows -> bounded-heap top-k) on an existing session.
+    * The strategy is prepended only if absent, so strategies a host
+    * application installed survive and repeated calls add nothing.
+    * Cluster-wide alternative:
+    * `spark.sql.extensions=graft.functions.GraftExtensions`. */
+  def install(spark: SparkSession): SparkSession = {
     graft.functions.GraftFunctions.register(spark)
-    // planner strategy: rank-filter windows -> bounded-heap top-k
-    // (idempotent assignment; also installable cluster-wide via
-    // spark.sql.extensions=graft.functions.GraftExtensions)
-    spark.experimental.extraStrategies = Seq(graft.plans.BoundedTopKStrategy)
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(BoundedTopKStrategy))
+      ex.extraStrategies = BoundedTopKStrategy +: ex.extraStrategies
     spark
   }
 }

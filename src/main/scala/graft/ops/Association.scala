@@ -37,7 +37,7 @@ object Association {
   /** All x < y combinations of a SORTED-distinct array column (named
     * `arrCol`) as an array of (a, b) structs — the in-row pair generator
     * shared by the basket pair count here and the co-purchase edge
-    * builds (graft.SparkEntry.partPairEdges). Index-slice over the
+    * builds (graft.graph.GraphQueries.partPairEdges). Index-slice over the
     * sorted array, so pair order equals the element type's natural `<`. */
   def pairCombinations(arrCol: String): org.apache.spark.sql.Column =
     expr(s"""flatten(transform($arrCol, (x, i) ->

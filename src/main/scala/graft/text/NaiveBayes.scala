@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
 object NaiveBayes {
 
   /** Default holdout modulus — doc_id % 5 == 0 (20%) is scored, the rest
-    * trains. Shared with the oracle SQL in SparkEntry. */
+    * trains. Shared with the oracle SQL in [[TextQueries]]. */
   val HoldoutMod = 5L
 
   private def trainSlice(documents: DataFrame, holdoutMod: Long) =

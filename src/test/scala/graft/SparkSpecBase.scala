@@ -36,11 +36,8 @@ object SparkSpecBase {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // mirror GraftSession: the whole suite runs under the production
-    // planner strategy (BoundedTopKSpec toggles it off to diff plans)
-    s.experimental.extraStrategies = Seq(graft.plans.BoundedTopKStrategy)
-    // and the custom function surface (graft_dot in the similarity ops)
-    graft.functions.GraftFunctions.register(s)
-    s
+    // the production function surface and planner strategy
+    // (BoundedTopKSpec toggles the strategy off to diff plans)
+    GraftSession.install(s)
   }
 }

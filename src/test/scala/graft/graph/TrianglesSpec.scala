@@ -82,7 +82,7 @@ class TrianglesSpec extends SparkSpecBase {
       .select(col("x.pk").as("a"), col("y.pk").as("b"))
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = graft.SparkEntry.partPairEdges(spark, sf0001)
+    val got = graft.graph.GraphQueries.partPairEdges(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref && got.nonEmpty)
   }
