@@ -1,5 +1,19 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+
+import org.apache.spark.SparkContext
+import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{CartesianProductExec, SortMergeJoinExec}
+
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line to stdout.
   *
@@ -8,68 +22,196 @@ package graft
   * under-report). One warm-up query runs first so JVM/codegen warm-up isn't
   * billed to the first measured query.
   *
+  * Besides wall time, every query is profiled and audited in the same
+  * loop, outside the timed region: the task work of each timed sample
+  * ([[TaskWork]]: jobs, stages, tasks, shuffle bytes, spill, GC, input)
+  * and the shape of its static executed plan ([[planShape]]: shuffles,
+  * broadcasts, pushed-filter scans, sort-merge joins, cartesian products,
+  * cached-relation scans), checked against the reviewed SMJ allowlist
+  * ([[expectedSmj]]). Both land in the record's `metrics` map, named as
+  * perfbench's traced run names the same measures; queries whose plan
+  * fails the audit are listed in `plan_flags`.
+  *
   * Output discipline: the harness that runs this keeps only a bounded tail
   * of the process output, and sbt prints its own footer line after `main`
   * returns — so the LAST line we print must be a complete, parseable JSON
   * record that fits in that window even with the footer behind it. With 80+
   * registered queries the full per-query map is ~3 KB and cannot fit, so:
-  *   1. the full-precision record is written to BENCH_FULL.json (repo root)
-  *      and also printed early for anyone reading the whole log;
+  *   1. the full-precision record (samples, metrics, plan flags) is
+  *      written to BENCH_FULL.json (repo root);
   *   2. the final stdout line is the same record with the `queries` map cut
   *      to the heaviest entries, sized well under the tail window.
   */
 object Bench {
+
+  /** Static plan shape of one query: node counts over the executed plan,
+    * adaptive plans read as their initial (pre-execution) plan. */
+  final case class PlanShape(exchanges: Int, broadcasts: Int,
+      pushedScans: Int, smj: Int, cartesian: Int, inMemory: Int) {
+    def metrics: Seq[(String, Double)] = Seq(
+      "plan.exchanges" -> exchanges, "plan.broadcasts" -> broadcasts,
+      "plan.pushed_filter_scans" -> pushedScans,
+      "plan.smj" -> smj, "plan.cartesian" -> cartesian,
+      "plan.inmemory_relations" -> inMemory)
+      .map { case (k, v) => k -> v.toDouble }
+  }
+
+  /** Every node of `plan`, each instance once, as formatted explain
+    * numbers them: children, subqueries and cached relations' plans (both
+    * are `innerChildren`; a cached plan scanned twice is one computation),
+    * adaptive plans through their initial plan and query stages through
+    * their stage plan. A reused exchange is a leaf: its plan is counted
+    * where it first appears. */
+  private def planNodes(plan: SparkPlan): Iterable[TreeNode[_]] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[TreeNode[_], java.lang.Boolean])
+    def walk(node: TreeNode[_]): Unit = node match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => if (seen.add(node)) (node.children ++ node.innerChildren)
+        .foreach { case c: TreeNode[_] => walk(c); case _ => }
+    }
+    walk(plan)
+    scala.jdk.CollectionConverters.SetHasAsScala(seen).asScala
+  }
+
+  def planShape(plan: SparkPlan): PlanShape = {
+    val nodes = planNodes(plan)
+    def count(p: PartialFunction[TreeNode[_], Boolean]): Int =
+      nodes.count(p.applyOrElse(_, (_: TreeNode[_]) => false))
+    PlanShape(
+      exchanges = count { case _: ShuffleExchangeExec => true },
+      broadcasts = count { case _: BroadcastExchangeExec => true },
+      pushedScans = count { case s: FileSourceScanLike =>
+        s.metadata.get("PushedFilters").exists(_ != "[]") },
+      smj = count { case _: SortMergeJoinExec => true },
+      cartesian = count { case _: CartesianProductExec => true },
+      inMemory = count { case _: InMemoryTableScanExec => true })
+  }
+
+  /** Reviewed sort-merge join counts per query. An SMJ is a review
+    * prompt: wrong where a broadcast was intended, right for large-large
+    * joins. Pinning the exact count means a new unintended SMJ in a
+    * listed query (a broadcast regressing) still flags. The dupClusters
+    * family is absent: its rounds are checkpoint-truncated, so its emitted
+    * plans are bounded and SMJ-free. */
+  val expectedSmj: Map[String, Int] = Map(
+    "q_interval_join" -> 1, // bucketized range join (large-large)
+    "q_importance_resample" -> 2, // vocab full-outer (x2 plan reuse)
+    // touched-id semi-join text pruning (x2: corpus+batch union sides)
+    "q_dedup_incremental" -> 2,
+    // endpoint label-lookup id joins (x2: doc_a+doc_b sides)
+    "q_dedup_clusters_incremental" -> 2,
+    "q_hybrid_rrf" -> 1, // RRF full-outer list fusion (model-sized)
+    // RRF fusion + qrels + idcg list joins (x3, model-sized)
+    "q_retrieval_ndcg" -> 3,
+    // cluster-label attach (corpus-sized at scale)
+    "q_leakage_safe_split" -> 1)
+
+  /** Audit findings for one query's plan: any cartesian product, and more
+    * sort-merge joins than [[expectedSmj]] allows. Empty = clean. */
+  def planFlags(name: String, shape: PlanShape): Seq[String] = {
+    val allowed = expectedSmj.getOrElse(name, 0)
+    Seq(
+      (shape.cartesian > 0) -> s"$name: cartesian x${shape.cartesian}",
+      (shape.smj > allowed) -> s"$name: smj x${shape.smj} > expected $allowed")
+      .collect { case (true, f) => f }
+  }
+
+  /** Task work of one timed sample. Spark posts listener events
+    * asynchronously, so a sample's totals are read only after the bus
+    * has been drained ([[sample]]); and task ends are counted only for
+    * stages submitted since the last [[reset]], so a straggler task of an
+    * earlier sample can never be billed to a later one. */
+  final class TaskWork extends SparkListener {
+    private val stages = ConcurrentHashMap.newKeySet[Int]()
+    private val jobs = new LongAdder
+    private val peakMem = new AtomicLong
+    // (metric, per-task reading, scale to the metric's unit)
+    private val perTask: Seq[(String, TaskMetrics => Long, Double)] = Seq(
+      ("spark.tasks", _ => 1L, 1.0),
+      ("spark.executor_run_s", _.executorRunTime, 1e-3),
+      ("spark.gc_s", _.jvmGCTime, 1e-3),
+      ("spark.shuffle_write_mb", _.shuffleWriteMetrics.bytesWritten, 1e-6),
+      ("spark.shuffle_read_mb", _.shuffleReadMetrics.totalBytesRead, 1e-6),
+      ("spark.spill_mb", _.diskBytesSpilled, 1e-6),
+      ("spark.spill_memory_mb", _.memoryBytesSpilled, 1e-6),
+      ("spark.input_mb", _.inputMetrics.bytesRead, 1e-6))
+    private val sums = perTask.map(_ => new LongAdder)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      stages.add(e.stageInfo.stageId)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).filter(_ => stages.contains(e.stageId)).foreach { m =>
+        perTask.zip(sums).foreach { case ((_, read, _), sum) => sum.add(read(m)) }
+        peakMem.accumulateAndGet(m.peakExecutionMemory, math.max)
+      }
+
+    def reset(): Unit = {
+      stages.clear(); jobs.reset(); sums.foreach(_.reset()); peakMem.set(0L)
+    }
+
+    def metrics: Seq[(String, Double)] =
+      Seq("spark.jobs" -> jobs.sum.toDouble, "spark.stages" -> stages.size.toDouble) ++
+        perTask.zip(sums).map { case ((k, _, scale), sum) => k -> sum.sum * scale } :+
+        ("spark.peak_task_memory_mb" -> peakMem.get / 1e6)
+  }
+
+  /** Runs `body` as one timed sample: its wall seconds and the task work
+    * of exactly that sample. The bus drain that makes the work complete
+    * runs after the clock stops. */
+  def sample[A](sc: SparkContext, work: TaskWork)(body: => A)
+      : (A, Double, Seq[(String, Double)]) = {
+    work.reset()
+    val t0 = System.nanoTime()
+    val out = body
+    val sec = (System.nanoTime() - t0) / 1e9
+    org.apache.spark.GraftListenerBusDrain.drain(sc)
+    (out, sec, work.metrics)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create(appName = "graft-bench")
     // fail loudly on corpus schema drift BEFORE timing anything
     Tables.schemaProbe(spark, sfDir)
+    val work = new TaskWork
+    spark.sparkContext.addSparkListener(work)
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    /** Builds and materializes one query; None (logged) on failure. */
+    def runQuery(name: String): Option[DataFrame] =
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        Some(df)
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        None
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
-    runOnce("q_envelope_parse") // warm-up (JVM + codegen + FS caches)
+    runQuery("q_envelope_parse") // warm-up (JVM + codegen + FS caches)
 
-    // three runs per query: a back-to-back A,A pair — the second run rides
-    // the just-warmed JIT/codegen/page-cache state (measured: separated
-    // runs inflate the total 40%, 70.5s vs 50.3s at sf0.1), keeping mins
-    // comparable to the historical anchors — PLUS one temporally-separated
-    // pass C over all queries, so a correlated contention burst that
-    // inflates a query's warm pair cannot also inflate its C sample
-    // minutes later. min of 3. SPARK_GRAFT_PASSES=2 skips C (diagnostic).
-    // Dev iteration: SPARK_GRAFT_ONLY=q_a,q_b limits the run to named
-    // queries (the driver never sets either — full surface, 3 passes).
+    // three runs per query, min of 3: a back-to-back A,A pair (the second
+    // rides the warmed JIT/codegen/page cache; separated runs inflated the
+    // sf0.1 total 40%) plus one temporally-separated pass C, so one
+    // contention burst cannot inflate all three. SPARK_GRAFT_PASSES=2
+    // skips C; SPARK_GRAFT_ONLY=q_a,q_b limits the run to named queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val thirdPass = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3") != "2"
-    // Self-adjudicating contention: compare each query's min against the
-    // COMMITTED idle reference (BENCH_IDLE_REF.tsv, written by the idle
-    // gate run and committed with it) — the exact comparison the
-    // adjudication previously burned an idle re-run to make (r6/r7/r9:
-    // every >=2x driver mover was disproved by an idle re-run). A query
-    // >1.5x AND >0.2s above its idle min in THIS run is listed as
-    // contended: its min is a host-contention artifact, not a regression.
-    // (Within-run warm-sample spread was tried first and over-flags: JIT
-    // keeps improving across the whole run, so early-alphabet queries
-    // show 2-3x pair-vs-C drift even on an idle machine.)
-    // The reference is only meaningful at the SF and core count it was
-    // measured at: an sf1 run compared against the sf0.1 idle reference
-    // would flag nearly every query (r10's first BENCH_sf1 listed 99
-    // "contended" queries that were just the sf0.1→sf1 scale-up), and a
-    // 4-core run against a 32-core reference flags almost everything. The
-    // TSV's `#sf <basename>` and `#cpus <n>` headers record both; unless
-    // both match this run the check is skipped entirely (a TSV without
-    // `#cpus` never applies).
+    // Self-adjudicating contention: a query >1.5x AND >0.2s above its min
+    // in the COMMITTED idle reference (BENCH_IDLE_REF.tsv) is listed as
+    // contended — its min is a host-contention artifact, not a regression
+    // (r6/r7/r9: every >=2x mover in a contended run was disproved by an
+    // idle re-run; within-run spread over-flags as JIT keeps improving).
+    // The reference applies only at the SF and core count it was measured
+    // at (its `#sf` and `#cpus` headers; a TSV without `#cpus` never
+    // applies): otherwise a scale-up or fewer cores flags nearly everything.
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
     val cpus = spark.sparkContext.defaultParallelism
     val (refSf, refCpus, idleRef): (String, Option[String], Map[String, Double]) = {
@@ -93,13 +235,9 @@ object Bench {
       System.err.println(s"[bench] idle reference cpus=" +
         s"${refCpus.getOrElse("unrecorded")} vs this run's $cpus: " +
         "contended adjudication disabled")
-    // Freshness guard (round 14): the committed idle reference only
-    // adjudicates a run if it actually covers the current query registry.
-    // A reference missing more than 25% of registered queries predates
-    // the surface and would silently exempt every new query from the
-    // contended check — refuse it (treat as not applicable) and say so;
-    // smaller gaps are warned per-count and the affected queries simply
-    // have no idle row (same as today). Procedure note in BASELINE.md.
+    // Freshness guard: a reference missing >25% of registered queries
+    // predates the surface and is refused; smaller gaps are warned and
+    // those queries simply have no idle row. Procedure in BASELINE.md.
     val refMissing =
       if (!refMatches) Seq.empty[String]
       else names.filterNot(idleRef.contains)
@@ -117,6 +255,10 @@ object Bench {
     // decimal separator on e.g. de_DE hosts and break the JSON contract
     def d3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def num(v: Double): String =
+      if (v == math.rint(v)) v.toLong.toString else d3(v)
+    def strs(xs: Iterable[String]): String =
+      xs.map(x => s""""$x"""").mkString("[", ",", "]")
 
     // Artifact hygiene: subset runs (SPARK_GRAFT_ONLY) must not clobber
     // the committed full-surface artifact; idle gate runs override the
@@ -125,23 +267,18 @@ object Bench {
     val outName = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "BENCH_SUBSET.json" else "BENCH_FULL.json")
 
-    // ---- measurement loop (round 14: incremental + contention-aware) ----
-    // The r13 driver run was timeout-killed (rc=124) with zero parseable
-    // output even though all 177 queries had completed: the one summary
-    // line printed at the END never ran. Two structural fixes:
+    // ---- measurement loop (incremental + contention-aware) ----
     //   1. CHECKPOINT after every query — rewrite the artifact file AND
-    //      print the current compact summary line (flagged "partial")
-    //      so ANY truncated run still leaves a parseable record with
-    //      per-query provenance in the harness's bounded output tail.
-    //      The final, non-partial line still prints last and wins.
-    //   2. SKIP the back-to-back repeat sample when the first sample is
-    //      >5x the committed idle reference (and >10s): the pair min is
-    //      already contention-contaminated, so a second 100+s sample has
-    //      zero information value — it is what pushed the r13 run past
-    //      the driver's window (q_triangles 144s + 243s). The temporally
-    //      separated pass C still runs: minutes later it is the sample
-    //      that can actually rescue the min.
+    //      print the compact summary line flagged "partial", so a
+    //      timeout-killed run (r13: rc=124, zero parseable output) still
+    //      leaves a parseable record. The final line prints last and wins.
+    //   2. SKIP the back-to-back repeat when the first sample is >5x the
+    //      idle reference (and >10s): that pair is already contaminated,
+    //      and pass C minutes later is the sample that can rescue the min.
     val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    // per query: one task-work record per sample, and the plan shape
+    val sampleWork = scala.collection.mutable.Map[String, Vector[Seq[(String, Double)]]]()
+    val shapes = scala.collection.mutable.Map[String, PlanShape]()
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
 
     def currentResults: Seq[(String, Double)] =
@@ -155,18 +292,30 @@ object Bench {
       val contended = if (!refApplies) Seq.empty[String]
         else qs.collect { case (n, v)
           if idleRef.get(n).exists(i => v > i * 1.5 && v - i > 0.2) => n }
-      val contendedJson = contended.map(n => s""""$n"""").mkString("[", ",", "]")
       val partial = if (!finalRec) s""","partial":true,"n_done":$nDone""" else ""
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${names.size},"queries":$m,"contended":$contendedJson,"contended_ref":"${if (refApplies) refSf else "none"}"$partial$extra,"sf":"$sfDir","cpus":$cpus}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","n_queries":${names.size},"queries":$m,"contended":${strs(contended)},"contended_ref":"${if (refApplies) refSf else "none"}"$partial$extra,"sf":"$sfDir","cpus":$cpus}"""
     }
+    // per query: plan.* counts, then each spark.* metric as a list
+    // aligned with that query's "samples"
+    def metricsJson: String = samples.keys.map { n =>
+      val plan = shapes.get(n).toSeq.flatMap(_.metrics)
+        .map { case (k, v) => s""""$k":${num(v)}""" }
+      val perSample = sampleWork(n)
+      val task = perSample.headOption.toSeq.flatMap(_.map(_._1)).zipWithIndex
+        .map { case (k, i) =>
+          s""""$k":${perSample.map(s => num(s(i)._2)).mkString("[", ",", "]")}""" }
+      s""""$n":${(plan ++ task).mkString("{", ",", "}")}"""
+    }.mkString("{", ",", "}")
     def checkpoint(done: Int, finalRec: Boolean = false): Unit = {
       val rs = currentResults
       val total = rs.map(_._2).sum
       val sampleMap = samples.map { case (n, ss) =>
         s""""$n":${ss.map(d3).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
-      val skippedJson = skipped.map(n => s""""$n"""").mkString("[", ",", "]")
+      val flags = samples.keys.toSeq.flatMap(n =>
+        shapes.get(n).toSeq.flatMap(planFlags(n, _)))
       val full = record(rs, total, done, finalRec,
-        extra = s""","samples":$sampleMap,"skipped_repeat":$skippedJson""")
+        extra = s""","samples":$sampleMap,"skipped_repeat":${strs(skipped)}""" +
+          s""","metrics":$metricsJson,"plan_flags":${strs(flags)}""")
       try java.nio.file.Files.write(java.nio.file.Paths.get(outName),
         (full + "\n").getBytes("UTF-8"))
       catch { case e: Throwable =>
@@ -180,29 +329,44 @@ object Bench {
       println(record(heaviest, total, done, finalRec,
         extra = s""","queries_full":"$outName""""))
     }
+    // one timed sample: seconds (-1 on failure) and task work recorded,
+    // the built DataFrame returned for the plan walk
+    def addSample(n: String): Option[DataFrame] = {
+      val (df, sec, m) = sample(spark.sparkContext, work)(runQuery(n))
+      samples(n) = samples.getOrElse(n, Vector.empty) :+ (if (df.isEmpty) -1.0 else sec)
+      sampleWork(n) = sampleWork.getOrElse(n, Vector.empty) :+ m
+      df
+    }
 
     // pass A,A (with the contamination skip), checkpointing per query
     for ((n, i) <- names.zipWithIndex) {
-      val t1 = runOnce(n)
+      val first = addSample(n)
+      val t1 = samples(n).head
       val contaminated = refApplies && t1 > 10.0 &&
         idleRef.get(n).exists(idle => t1 > idle * 5)
-      if (contaminated) {
+      val last = if (contaminated) {
         skipped += n
         System.err.println(s"[bench] $n first sample ${d3(t1)}s > 5x idle " +
           s"${d3(idleRef(n))}s — skipping repeat (pass C still runs)")
-        samples(n) = Vector(t1)
-      } else samples(n) = Vector(t1, runOnce(n))
+        first
+      } else addSample(n)
+      // the static plan, re-planned after the pair so planning never sits
+      // between two back-to-back samples; persists the first run
+      // materialized carry their real sizes, as in the runs after it
+      try last.foreach(df => shapes(n) = planShape(df.queryExecution.executedPlan))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $n plan walk failed: ${e.getMessage}")
+      }
       checkpoint(i + 1)
     }
     // temporally-separated pass C over all queries
     if (thirdPass) for (n <- names) {
-      samples(n) = samples(n) :+ runOnce(n)
+      addSample(n)
       checkpoint(names.size)
     }
 
     // final line: heaviest queries only, capped so the line stays < ~1200
-    // chars — complete per-query detail (incl. raw samples) is in the
-    // file / the full partial lines above. checkpoint() prints it.
+    // chars — complete per-query detail is in the file.
     checkpoint(names.size, finalRec = true)
     spark.stop()
   }

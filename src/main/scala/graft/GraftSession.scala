@@ -42,8 +42,7 @@ object GraftSession {
       // On a cluster this is the standard "thousands of initial
       // partitions, AQE right-sizes" posture.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          (cores * 8).toString))
+        (cores * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -122,11 +122,6 @@ object Dedup {
     * Old round blocks are dropped by the ContextCleaner once the frame
     * goes out of scope. */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 10): DataFrame = {
-    // GRAFT_DEBUG_ROUNDS=1: per-round wall times to stderr (dev probes)
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
-    def mark(name: String, t0: Long): Unit = if (debug)
-      System.err.println(f"[dupClusters] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    var t = System.nanoTime()
     // r15 (guide §1.2 — don't compute the input twice): the symmetric
     // edge list is a 1→2 in-row explode of ONE pairs pass, not a union
     // of two branches that each re-derive the whole upstream candidate/
@@ -138,16 +133,13 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .truncated
-    mark("edges", t); t = System.nanoTime()
     var labels = edges.select(col("src").as("node"))
       .distinct()
       .withColumn("label", col("node"))
       .truncated
-    mark("labels0", t)
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
-      t = System.nanoTime()
       val neighborMin = edges
         .join(labels.withColumnRenamed("node", "dst")
           .withColumnRenamed("label", "dst_label"), "dst")
@@ -168,7 +160,6 @@ object Dedup {
       changed = next.filter(col("__chg")).count()
       labels = next.drop("__chg")
       round += 1
-      mark(s"round$round (changed=$changed)", t)
     }
     // convergence really is asserted: exiting on maxRounds with pending
     // updates would hand back partially-propagated clusters that silently

@@ -1,11 +1,12 @@
 package org.apache.spark
 
-/** Shim exposing the `private[spark]` listener-bus drain to graft's dev
-  * probes: [[graft.QueryMetricsProbe]] attributes task metrics to the run
+/** Shim exposing the `private[spark]` listener-bus drain to
+  * [[graft.Bench]], which attributes task metrics to the timed sample
   * that produced them by blocking on `LiveListenerBus.waitUntilEmpty()`
-  * (every queued event dispatched) between runs, instead of a fixed
-  * sleep that silently mis-attributes late events. Probe-only surface;
-  * nothing in the library's query path touches it.
+  * (every queued event dispatched) after each sample, outside the timed
+  * region, instead of a fixed sleep that silently mis-attributes late
+  * events. Measurement-only surface; nothing in the library's query path
+  * touches it.
   */
 object GraftListenerBusDrain {
   /** Block until the listener bus has dispatched every queued event.
