@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.trees.TreeNode
@@ -24,10 +25,11 @@ import org.apache.spark.sql.execution.joins.{CartesianProductExec, SortMergeJoin
   *
   * Besides wall time, every query is profiled and audited in the same
   * loop, outside the timed region: the task work of each timed sample
-  * ([[TaskWork]]: jobs, stages, tasks, shuffle bytes, spill, GC, input)
-  * and the shape of its static executed plan ([[planShape]]: shuffles,
-  * broadcasts, pushed-filter scans, sort-merge joins, cartesian products,
-  * cached-relation scans), checked against the reviewed SMJ allowlist
+  * ([[TaskWork]]: jobs, stages, tasks, shuffle bytes, spill, GC, input;
+  * plus the Janino compiles it triggered) and the shape of its static
+  * executed plan ([[planShape]]: shuffles, broadcasts, pushed-filter
+  * scans, sort-merge joins, cartesian products, cached-relation scans),
+  * checked against the reviewed SMJ allowlist
   * ([[expectedSmj]]). Both land in the record's `metrics` map, named as
   * perfbench's traced run names the same measures; queries whose plan
   * fails the audit are listed in `plan_flags`.
@@ -160,17 +162,21 @@ object Bench {
         ("spark.peak_task_memory_mb" -> peakMem.get / 1e6)
   }
 
-  /** Runs `body` as one timed sample: its wall seconds and the task work
-    * of exactly that sample. The bus drain that makes the work complete
-    * runs after the clock stops. */
+  /** Runs `body` as one timed sample: its wall seconds, the task work of
+    * exactly that sample, and `codegen.compiles`, the classes Janino
+    * compiled meanwhile (a JVM-wide count: driver and local executors; 0
+    * when every generated class came from the codegen cache). The bus
+    * drain that makes the work complete runs after the clock stops. */
   def sample[A](sc: SparkContext, work: TaskWork)(body: => A)
       : (A, Double, Seq[(String, Double)]) = {
     work.reset()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     val out = body
     val sec = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     org.apache.spark.GraftListenerBusDrain.drain(sc)
-    (out, sec, work.metrics)
+    (out, sec, work.metrics :+ ("codegen.compiles" -> compiles.toDouble))
   }
 
   def main(args: Array[String]): Unit = {

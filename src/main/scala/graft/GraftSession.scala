@@ -9,11 +9,28 @@ import graft.plans.BoundedTopKStrategy
   * Sets the confs every graft workload needs — UTC (oracle parity), AQE
   * (runtime coalescing + skew-join splitting), nanos-as-long parquet reads
   * (the corpus's TIMESTAMP(NANOS) columns), right-sized shuffle
-  * parallelism — and registers the custom function surface. On a real
-  * cluster pass the same settings via spark-submit and
+  * parallelism, a generated-code cache that holds the streaming working
+  * set — and registers the custom function surface. On a real cluster
+  * pass the same settings via spark-submit and
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+  * `spark.sql.codegen.cache.maxEntries` is a static conf: Spark reads it
+  * once per JVM, so it must be passed at submit time (`--conf`), not set
+  * on a running session.
   */
 object GraftSession {
+
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The six stateful
+    * pipelines of perfbench's `stream_stateful_replay` compile about 113
+    * classes in their first round of triggers. The default cache, split
+    * by Guava into 4 LRU segments of ~25, evicted each class before its
+    * next use, so every micro-batch recompiled: 344-406 Janino compiles
+    * per run (JFR: Janino in 10.5% of the JVM's CPU samples). At 200,
+    * 1000 and 2000 entries a run makes 158 (6.6% of samples); what
+    * remains after the first round is Spark's watermark predicates, which
+    * inline the current watermark as a literal. 1000 leaves headroom for
+    * `GraftApp`'s 12 queries. */
+  val CodegenCacheEntries = 1000
 
   def create(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -45,6 +62,7 @@ object GraftSession {
         (cores * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -604,10 +604,6 @@ object Pipelines {
         PatternKTracker.process(steps, horizonUs))
   }
 
-  /** Pipeline 3 — balance reconciliation: true incremental per-key state via
-    * `flatMapGroupsWithState` (the streaming twin of
-    * [[graft.ops.Reconcile]]; reference
-    * `topology/BalanceReconciliationProcessor.java:42-152`). */
   /** Live per-key EWMA recency scores — the streaming twin of
     * [[graft.ops.EventAnalytics.ewmaRecency]] via [[EwmaTracker]].
     * Input: (key, ts_us, seq, amount_cents). State: k entries per key. */
@@ -624,6 +620,10 @@ object Pipelines {
         GroupStateTimeout.NoTimeout)(EwmaTracker.process(k))
   }
 
+  /** Pipeline 3 — balance reconciliation: true incremental per-key state via
+    * `flatMapGroupsWithState` (the streaming twin of
+    * [[graft.ops.Reconcile]]; reference
+    * `topology/BalanceReconciliationProcessor.java:42-152`). */
   def reconcileAlerts(spark: SparkSession, parsed: DataFrame): Dataset[ReconRow] = {
     import spark.implicits._
     completed(parsed)
@@ -705,10 +705,6 @@ case class ReconRow(txn_id: Long, account_id: Long, event_time_ms: Long,
     stored_balance: Option[Double], discrepancy: Double,
     recon_status: String, severity: String)
 
-/** Per-account sequential reconciliation with one Double of state — the
-  * streaming analog of the reference's RocksDB `account-balance-store`.
-  * Events are ordered (event_time_us, txn_id) within each micro-batch;
-  * cross-batch order follows stream arrival, as in the reference. */
 /** Input row for the funnel tracker — `event_ts` carries the watermark
   * through the typed projection (same note as [[DormTxn]]). */
 case class FunnelEvent(event_id: Long, user_id: Long, ts_us: Long,
@@ -994,6 +990,10 @@ object ConcurrencyTracker {
   }
 }
 
+/** Per-account sequential reconciliation with one Double of state — the
+  * streaming analog of the reference's RocksDB `account-balance-store`.
+  * Events are ordered (event_time_us, txn_id) within each micro-batch;
+  * cross-batch order follows stream arrival, as in the reference. */
 object Reconciler {
 
   private def round2(x: Double): Double =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Bench's per-query profiler and plan audit, called as plain functions:
   * the plan walk counts nodes (not explain text) across adaptive plans
   * and subqueries, the SMJ allowlist flags only unexpected joins, and
-  * each timed sample carries only its own task work. */
+  * each timed sample carries only its own task work and compiles. */
 class BenchSpec extends SparkSpecBase {
 
   private def shape(df: DataFrame): Bench.PlanShape =
@@ -59,6 +59,23 @@ class BenchSpec extends SparkSpecBase {
     assert(Bench.planFlags("q_interval_join", oneSmj.copy(smj = 2)).nonEmpty)
     assert(Bench.planFlags("q_interval_join", oneSmj.copy(cartesian = 1)).nonEmpty)
     assert(Bench.planFlags("q_unlisted", oneSmj.copy(smj = 0)).isEmpty)
+  }
+
+  test("a sample counts the classes it compiles; a warm repeat compiles none") {
+    val sc = spark.sparkContext
+    val work = new Bench.TaskWork
+    sc.addSparkListener(work)
+    try {
+      // literals no other test uses: generated code inlines them, so the
+      // first run cannot hit the codegen cache
+      val df = spark.range(1000).select((col("id") * 7919L + 104729L).as("x"))
+        .filter(col("x") % 7121L =!= 4099L)
+      def noop(): Unit = df.write.format("noop").mode("overwrite").save()
+      val (_, _, first) = Bench.sample(sc, work)(noop())
+      val (_, _, second) = Bench.sample(sc, work)(noop())
+      assert(first.toMap.apply("codegen.compiles") >= 1.0)
+      assert(second.toMap.apply("codegen.compiles") === 0.0)
+    } finally sc.removeSparkListener(work)
   }
 
   test("back-to-back samples each report only their own shuffle bytes") {
