@@ -8,16 +8,52 @@ import graft.plans.BoundedTopKStrategy
   *
   * Sets the confs every graft workload needs — UTC (oracle parity), AQE
   * (runtime coalescing + skew-join splitting), nanos-as-long parquet reads
-  * (the corpus's TIMESTAMP(NANOS) columns), right-sized shuffle
-  * parallelism, a generated-code cache that holds the streaming working
-  * set — and registers the custom function surface. On a real cluster
+  * (the corpus's TIMESTAMP(NANOS) columns), the two partition widths
+  * below, a generated-code cache that holds the streaming working set —
+  * and registers the custom function surface. On a real cluster
   * pass the same settings via spark-submit and
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   * `spark.sql.codegen.cache.maxEntries` is a static conf: Spark reads it
   * once per JVM, so it must be passed at submit time (`--conf`), not set
   * on a running session.
+  *
+  * Two partition widths, set from the core count:
+  *  - Batch shuffles start at `cores * 8` partitions
+  *    (`spark.sql.adaptive.coalescePartitions.initialPartitionNum`) and
+  *    AQE coalesces them down per stage. With AQE coalescing on, Spark
+  *    sizes batch shuffles from that conf, not `spark.sql.shuffle.partitions`.
+  *    One batch planner rule still reads the latter: `EnsureRequirements`
+  *    keeps a child's existing partitioning only if it has at least that
+  *    many partitions. A full `graft.Bench` at sf0.01 plans the same
+  *    shuffles, broadcasts and joins for all 178 queries at 4 and at 32
+  *    cores with the state width as with `cores`.
+  *  - Streaming state is `spark.sql.shuffle.partitions` =
+  *    [[statePartitions]]`(cores)` partitions per stateful query. Streaming
+  *    runs without AQE, and Spark records this width in each checkpoint's
+  *    offset log and restores it on restart, so a checkpoint keeps the width
+  *    it was started with whatever the session says later.
   */
 object GraftSession {
+
+  /** State-holding queries `GraftApp.start` launches: velocity fraud,
+    * balance reconciliation, dormancy, daily spend, rolling spend, TWAB,
+    * the two `DimStore` KTables, funnel and the 3-step pattern
+    * (`GraftAppSpec` counts them from their progress reports). */
+  val StatefulQueries = 10
+
+  /** State partitions per stateful streaming query, sized so that all of
+    * `GraftApp`'s stateful queries together run about one state task per
+    * core per trigger: 1 at 4 cores, 3 at 32, 20 at the cluster default
+    * of 200. Each state task pays fixed costs that do not shrink with its
+    * rows: a state-store load, a delta-file commit, and the file sink's
+    * Hadoop-conf deserialization. At `cores` partitions per query the six
+    * stateful pipelines of perfbench's `stream_stateful_replay` ran 24
+    * state tasks per trigger round on 4 cores. At 1 partition a traced
+    * run made 64 Spark tasks instead of 166, state commits took 2.9 s
+    * instead of 16.0 s and executor run time was 22 s instead of 57 s.
+    * The median micro-batch latency fell 23% (1932 → 1484 ms, 10
+    * interleaved pairs on 4 vCPUs). */
+  def statePartitions(cores: Int): Int = math.max(1, cores / StatefulQueries)
 
   /** Entries in Spark's generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, default 100). The six stateful
@@ -34,8 +70,7 @@ object GraftSession {
 
   def create(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      appName: String = "graft",
-      shufflePartitions: Option[Int] = None): SparkSession = {
+      appName: String = "graft"): SparkSession = {
     val cores = master match {
       case s if s.startsWith("local[") && s.endsWith("]") =>
         s.stripPrefix("local[").stripSuffix("]") match {
@@ -47,8 +82,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cores).toString)
+      .config("spark.sql.shuffle.partitions", statePartitions(cores).toString)
       .config("spark.sql.adaptive.enabled", "true")
       // AQE picks the ACTUAL post-shuffle partition count by coalescing
       // down from this ceiling, so large shuffles aren't forced into

@@ -134,6 +134,7 @@ object Features {
       c -> ps.map { case (nu, de) => rank(nu, de, n) }
     }
     val cuts = OrderStatistics.kthSmallest(t, "currency", "kobo", targets)
+    t.unpersist()
     val rows = for ((c, n) <- ns.toSeq; (nu, de) <- ps) yield {
       val r = rank(nu, de, n)
       (c, nu.toDouble / de, r, cuts((c, r)))
@@ -174,6 +175,8 @@ object Features {
       medRank.map { case (c, r) => c -> Seq(r) })
     val madDf = medRank.toSeq
       .map { case (c, r) => (c, mad((c, r))) }.toDF("currency", "mad_kobo")
+    // the driver-side passes are done; the returned frame rescans
+    t.unpersist()
     dev.join(broadcast(madDf), "currency")
       .select(col("txn_id"), col("currency"), col("kobo"),
         col("med_kobo"), col("mad_kobo"),

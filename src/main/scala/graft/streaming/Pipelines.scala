@@ -25,7 +25,13 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
   * `spark.sql.streaming.stateStore.providerClass`); all stateful stages key
   * by account_id, so state partitions with the shuffle and no executor sees
   * more than its key range. The reconciliation state is ONE double per
-  * account — O(#accounts) total, trivially partitionable.
+  * account — O(#accounts) total, trivially partitionable. The number of
+  * state partitions per query is `spark.sql.shuffle.partitions`, which
+  * `GraftSession.create` sets to [[graft.GraftSession.statePartitions]]:
+  * the cores divided among `GraftApp`'s stateful queries, so each trigger
+  * runs about one state task per core (1 per query at 4 cores, 20 at a
+  * cluster's 200). A query's first batch records the width in its
+  * checkpoint, and a restart keeps it whatever the session conf says.
   */
 object Pipelines {
 

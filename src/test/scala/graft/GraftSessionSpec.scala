@@ -23,4 +23,8 @@ class GraftSessionSpec extends SparkSpecBase {
       assert(got.count(_ == BoundedTopKStrategy) === 1)
     } finally spark.experimental.extraStrategies = prev
   }
+
+  test("statePartitions gives the stateful queries about one state task per core") {
+    assert(Seq(1, 4, 32, 200).map(GraftSession.statePartitions) === Seq(1, 1, 3, 20))
+  }
 }

@@ -18,6 +18,15 @@ trait SparkSpecBase extends AnyFunSuite {
         .withColumn("props", lit("""{"k": 1}""")))
   }
 
+  /** Run `body` with the streaming state width
+    * (`spark.sql.shuffle.partitions`) at `n`, then restore the suite's. */
+  def withStatePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** Parsed-transaction frame from the same tuple shape. */
   def txns(rows: Seq[(Long, Long, Long, String, Double)]): DataFrame =
     graft.cdc.EnvelopeOps.parsedTransactions(eventsDf(rows))

@@ -16,6 +16,11 @@ class GraftAppSpec extends SparkSpecBase {
       queries.foreach(_.processAllAvailable())
     } finally queries.foreach(_.stop())
 
+    // GraftSession.statePartitions divides the cores among the stateful
+    // queries, so the divisor must count exactly the queries holding state
+    val stateful = queries.count(_.recentProgress.exists(_.stateOperators.nonEmpty))
+    assert(stateful === graft.GraftSession.StatefulQueries)
+
     // stateless + stateful-complete sinks land rows from the single batch;
     // the windowed append-mode sinks (fraud/dormancy/daily) legitimately
     // hold rows back until the watermark closes their windows — a single

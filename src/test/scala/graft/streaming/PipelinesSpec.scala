@@ -25,6 +25,31 @@ class PipelinesSpec extends SparkSpecBase {
     EnvelopeOps.upsertsOnly(
       EnvelopeOps.parsedTransactions(Tables.events(spark, sf0001)))
 
+  private lazy val batchCompleted =
+    batchParsed.filter(Predicates.isCompleted(col("status")))
+
+  // reconciliation, rolling spend and TWAB against their batch twins, as
+  // compared by their single-batch tests and at the production state width
+  private def reconRows(df: DataFrame) =
+    df.select("txn_id", "balance_after", "recon_status").collect().toSet
+  private lazy val reconWant = reconRows(Reconcile.reconcile(batchCompleted))
+
+  private def rollingRows(df: DataFrame) =
+    df.select("txn_id", "rolling_spend_kobo", "rolling_n_txns").collect().toSet
+  private lazy val rollingWant = rollingRows(Windows.rollingSpend(
+    batchCompleted.filter(Predicates.isDebit(col("txn_type"))), windowSec = 86400L))
+
+  private def twabRows(df: DataFrame) = {
+    import spark.implicits._
+    df.as[(Long, Long, Long, Long)].collect()
+  }
+  /** The LAST emission (max interval count) per account is the full-span
+    * TWAB; earlier emissions are the live prefix view. */
+  private def twabFinal(emissions: DataFrame) =
+    twabRows(emissions).groupBy(_._1).map(_._2.maxBy(_._2)).toSet
+  private lazy val twabWant =
+    twabRows(graft.ops.EventAnalytics.timeWeightedBalance(batchCompleted)).toSet
+
   test("streaming high-value alerts == batch notification query") {
     val stream = Pipelines.highValueAlerts(
       Pipelines.parsedStream(spark, sf0001),
@@ -134,44 +159,73 @@ class PipelinesSpec extends SparkSpecBase {
   test("streaming reconciliation (flatMapGroupsWithState) == batch lag() operator") {
     val stream = Pipelines.reconcileAlerts(spark,
       Pipelines.parsedStream(spark, sf0001))
-    val got = runToTable(stream.toDF(), "recon_stream", "append")
-      .select("txn_id", "balance_after", "recon_status").collect().toSet
-    val want = Reconcile.reconcile(
-        batchParsed.filter(Predicates.isCompleted(col("status"))))
-      .select("txn_id", "balance_after", "recon_status").collect().toSet
-    assert(got === want)
+    val got = reconRows(runToTable(stream.toDF(), "recon_stream", "append"))
+    assert(got === reconWant)
     assert(got.nonEmpty)
   }
 
   test("streaming rolling spend (flatMapGroupsWithState) == batch RANGE window") {
     val stream = Pipelines.rollingSpendAlerts(spark,
       Pipelines.parsedStream(spark, sf0001))
-    val got = runToTable(stream.toDF(), "rolling_stream", "append")
-      .select("txn_id", "rolling_spend_kobo", "rolling_n_txns")
-      .collect().toSet
-    val want = Windows.rollingSpend(
-        batchParsed.filter(Predicates.isCompleted(col("status")) &&
-          Predicates.isDebit(col("txn_type"))), windowSec = 86400L)
-      .select("txn_id", "rolling_spend_kobo", "rolling_n_txns")
-      .collect().toSet
-    assert(got === want)
+    val got = rollingRows(runToTable(stream.toDF(), "rolling_stream", "append"))
+    assert(got === rollingWant)
     assert(got.nonEmpty)
   }
 
   test("streaming TWAB (O(1) state) final emission per account == batch operator") {
-    import spark.implicits._
     val stream = Pipelines.twabUpdates(spark,
       Pipelines.parsedStream(spark, sf0001))
-    val emissions = runToTable(stream.toDF(), "twab_stream", "append")
-      .as[(Long, Long, Long, Long)].collect()
-    // the LAST emission (max interval count) per account is the full-span
-    // TWAB; earlier emissions are the live prefix view
-    val got = emissions.groupBy(_._1).map(_._2.maxBy(_._2)).toSet
-    val want = graft.ops.EventAnalytics.timeWeightedBalance(
-        batchParsed.filter(Predicates.isCompleted(col("status"))))
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got === want)
+    val got = twabFinal(runToTable(stream.toDF(), "twab_stream", "append"))
+    assert(got === twabWant)
     assert(got.nonEmpty)
+  }
+
+  test("reconciliation, rolling spend and TWAB at the production state width, " +
+      "one time-ordered file per trigger == batch twins") {
+    import java.nio.file.Paths
+    import java.nio.file.attribute.FileTime
+    // the sf0.001 events cut into event-time ranges, one file each, with
+    // mtimes in the same order (the file source reads the oldest first)
+    val dir = Files.createTempDirectory("graft_width").toString
+    val raw = Tables.events(spark, sf0001).drop("ts_us", "event_ts")
+    val nFiles = 4
+    val Seq(lo, hi) = raw.agg(min("ts_ns"), max("ts_ns")).head().toSeq.map(_.asInstanceOf[Long])
+    val step = (hi - lo) / nFiles + 1
+    (0 until nFiles).foreach { f =>
+      val staging = Files.createTempDirectory("graft_width_stage").toString
+      raw.filter(col("ts_ns") >= lo + f * step && col("ts_ns") < lo + (f + 1) * step)
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dest = Paths.get(s"$dir/events_$f.parquet")
+      Files.copy(part.toPath, dest)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(1600000000000L + f * 10000L))
+    }
+
+    val width = graft.GraftSession.statePartitions(4)
+    withStatePartitions(width) {
+      def parsed() = Pipelines.parsedStreamFromPath(spark, dir, "*.parquet", Some(1))
+      val outs = Seq(
+        "recon_width" -> Pipelines.reconcileAlerts(spark, parsed()).toDF(),
+        "rolling_width" -> Pipelines.rollingSpendAlerts(spark, parsed()).toDF(),
+        "twab_width" -> Pipelines.twabUpdates(spark, parsed()).toDF()
+      ).map { case (name, df) =>
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          q.processAllAvailable()
+          val progress = q.recentProgress.filter(_.numInputRows > 0)
+          assert(progress.length === nFiles, name)
+          assert(progress.flatMap(_.stateOperators).map(_.numShufflePartitions).toSet ===
+            Set(width.toLong), name)
+        } finally q.stop()
+        spark.table(name)
+      }
+      val Seq(recon, rolling, twab) = outs
+      assert(reconRows(recon) === reconWant)
+      assert(rollingRows(rolling) === rollingWant)
+      assert(twabFinal(twab) === twabWant)
+    }
   }
 
   test("streaming EWMA (k-ring state) final emission per key == batch " +

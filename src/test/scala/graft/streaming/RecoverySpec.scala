@@ -13,20 +13,23 @@ import graft.SparkSpecBase
 class RecoverySpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** One parquet file of raw events `dir/f.parquet`, written elsewhere and
+    * copied in whole (the file source lists the directory). */
+  private def writeFile(dir: String, rows: Seq[(Long, Long, Long, String, Double)],
+      f: String): Unit = {
+    val staging = Files.createTempDirectory("graft_rec_st").toString
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+      .withColumn("props", lit("{}"))
+      .coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new java.io.File(staging).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
+  }
+
   test("flatMapGroupsWithState balance survives query restart from checkpoint") {
     val dir = Files.createTempDirectory("graft_rec_in").toString
     val ckpt = Files.createTempDirectory("graft_rec_ck").toString
     val base = 1700000000000000000L
-
-    def writeFile(rows: Seq[(Long, Long, Long, String, Double)], f: String): Unit = {
-      val staging = Files.createTempDirectory("graft_rec_st").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("props", lit("{}"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
-    }
 
     // memory sink can't recover from checkpoint; use the parquet file sink
     val outDir = Files.createTempDirectory("graft_rec_out").toString
@@ -40,14 +43,14 @@ class RecoverySpec extends SparkSpecBase {
     def results() = spark.read.parquet(outDir)
 
     // batch 1: one purchase for account 7 -> balance -100, BOOTSTRAP
-    writeFile(Seq((1L, base, 7L, "purchase", 100.0)), "f1")
+    writeFile(dir, Seq((1L, base, 7L, "purchase", 100.0)), "f1")
     runBatch()
     val r1 = results().filter($"txn_id" === 1).head()
     assert(r1.getAs[String]("recon_status") === "BOOTSTRAP")
     assert(r1.getAs[Double]("balance_after") === -100.0)
 
     // stop + restart from the same checkpoint with a new file appended
-    writeFile(Seq((2L, base + 1000000000L, 7L, "signup", 30.0)), "f2")
+    writeFile(dir, Seq((2L, base + 1000000000L, 7L, "signup", 30.0)), "f2")
     runBatch()
     val r2 = results().filter($"txn_id" === 2).head()
     // state restored: stored_balance = -100 (not BOOTSTRAP), new bal -70
@@ -62,16 +65,6 @@ class RecoverySpec extends SparkSpecBase {
     val base = 1700000000000000000L
     val hourNs = 3600L * 1000000000L
 
-    def writeFile(rows: Seq[(Long, Long, Long, String, Double)], f: String): Unit = {
-      val staging = Files.createTempDirectory("graft_recf_st").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("props", lit("{}"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
-    }
-
     val outDir = Files.createTempDirectory("graft_recf_out").toString
     def runBatch(): Unit = {
       val out = Pipelines.funnelAlerts(spark,
@@ -83,7 +76,7 @@ class RecoverySpec extends SparkSpecBase {
     def results() = spark.read.parquet(outDir)
 
     // run 1: two clicks land in state, nothing resolves yet
-    writeFile(Seq(
+    writeFile(dir, Seq(
       (1L, base, 7L, "click", 1.0),
       (2L, base + hourNs / 2, 7L, "click", 1.0)), "f1")
     runBatch()
@@ -92,7 +85,7 @@ class RecoverySpec extends SparkSpecBase {
     // restart 1: a purchase 40 min after click 2 — converts ONLY click 2
     // (click 1's horizon passed), and the same event's arrival seals
     // click 1 unconverted. Both clicks came from restored state.
-    writeFile(Seq(
+    writeFile(dir, Seq(
       (3L, base + hourNs / 2 + 2400L * 1000000000L, 7L, "purchase", 1.0)), "f2")
     runBatch()
     val rows = results().collect()
@@ -111,16 +104,6 @@ class RecoverySpec extends SparkSpecBase {
     val base = 1700000000000000000L
     val minNs = 60L * 1000000000L
 
-    def writeFile(rows: Seq[(Long, Long, Long, String, Double)], f: String): Unit = {
-      val staging = Files.createTempDirectory("graft_recp_st").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("props", lit("{}"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
-    }
-
     val outDir = Files.createTempDirectory("graft_recp_out").toString
     def runBatch(): Unit = {
       val out = Pipelines.pattern3Alerts(spark,
@@ -133,7 +116,7 @@ class RecoverySpec extends SparkSpecBase {
 
     // run 1: click + its view — the pair is promoted to STAGE-2 state,
     // nothing emits yet
-    writeFile(Seq(
+    writeFile(dir, Seq(
       (1L, base, 7L, "click", 1.0),
       (2L, base + 10 * minNs, 7L, "view", 1.0)), "f1")
     runBatch()
@@ -141,7 +124,7 @@ class RecoverySpec extends SparkSpecBase {
 
     // restart: the purchase arrives 30 min after the view — it must
     // resolve the RESTORED stage-2 pair into a completed chain
-    writeFile(Seq(
+    writeFile(dir, Seq(
       (3L, base + 40 * minNs, 7L, "purchase", 1.0)), "f2")
     runBatch()
     val rows = results().collect().map(r =>
@@ -152,5 +135,40 @@ class RecoverySpec extends SparkSpecBase {
     assert(rows.toSeq === Seq((1L,
       Some((base + 10 * minNs) / 1000),
       Some((base + 40 * minNs) / 1000), true)))
+  }
+
+  test("a restart keeps the checkpoint's state width, whatever the session conf says") {
+    val dir = Files.createTempDirectory("graft_recw_in").toString
+    val base = 1700000000000000000L
+    val rows = (0 until 48).map { i =>
+      (i + 1L, base + i * 1000000000L, i % 12L,
+        if (i % 3 == 0) "signup" else "purchase", 10.0 + i)
+    }
+    def run(ckpt: String, outDir: String, width: Int): Unit =
+      withStatePartitions(width) {
+        val q = Pipelines.reconcileAlerts(spark,
+            Pipelines.parsedStreamFromPath(spark, dir)).toDF()
+          .writeStream.format("parquet").option("path", outDir)
+          .outputMode("append").option("checkpointLocation", ckpt).start()
+        q.processAllAvailable(); q.stop()
+      }
+    def results(outDir: String) = spark.read.parquet(outDir).collect().toSet
+
+    // started at 4 state partitions, restarted while the session says 1
+    val ckpt = Files.createTempDirectory("graft_recw_ck").toString
+    val outDir = Files.createTempDirectory("graft_recw_out").toString
+    writeFile(dir, rows.take(24), "f1")
+    run(ckpt, outDir, width = 4)
+    writeFile(dir, rows.drop(24), "f2")
+    run(ckpt, outDir, width = 1)
+    val partitions = new java.io.File(s"$ckpt/state/0").list()
+      .filter(_.forall(_.isDigit)).map(_.toInt).toSet
+    assert(partitions === (0 until 4).toSet)
+
+    // the restarted run found every account's state where it left it
+    val whole = Files.createTempDirectory("graft_recw_out1").toString
+    run(Files.createTempDirectory("graft_recw_ck1").toString, whole, width = 4)
+    assert(results(outDir) === results(whole))
+    assert(results(outDir).nonEmpty)
   }
 }
