@@ -46,6 +46,10 @@ object SparkSpecBase {
       // production's size rather than Spark's default
       .config("spark.sql.codegen.cache.maxEntries",
         GraftSession.CodegenCacheEntries.toString)
+      // production's local file system for checkpoints and sinks; like the
+      // cache size it must be set with the first SparkContext, as Hadoop
+      // caches the `file:` FileSystem once per JVM
+      .config(GraftSession.LocalFileSystemConfs)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
