@@ -17,17 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object EventAnalytics {
 
-  /** Click→purchase funnel conversion: for every click, the timestamp of
-    * the user's FIRST purchase strictly after it within `withinSec` (null
-    * if none — the row survives so conversion ratios can be computed
-    * downstream). A same-timestamp purchase does NOT convert (the frame
-    * starts 1 µs after the click): simultaneous events carry no causal
-    * order, so counting them would manufacture conversions.
-    *
-    * One window, partitioned by user, forward-looking conditional RANGE
-    * frame — where a join formulation would materialize every
-    * (click, purchase-within-horizon) pair, this emits exactly one row
-    * per click. */
   /** First-order Markov transition matrix of the event stream: per user
     * (total order (ts_us, event_id) — deterministic under timestamp
     * ties), each adjacent pair contributes one (prev_event, next_event)
@@ -49,17 +38,21 @@ object EventAnalytics {
     counts.withColumn("p", col("n") / sum(col("n")).over(tot).cast("double"))
   }
 
-  def clickToPurchase(events: DataFrame, withinSec: Long): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-      .rangeBetween(1L, withinSec * 1000000L)
-    events
-      .withColumn("next_purchase_us",
-        min(when(col("event_type") === "purchase", col("ts_us"))).over(w))
-      .filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        col("next_purchase_us"),
-        col("next_purchase_us").isNotNull.as("converted"))
-  }
+  /** Click→purchase funnel conversion: for every click, the timestamp of
+    * the user's FIRST purchase strictly after it within `withinSec` (null
+    * if none — the row survives so conversion ratios can be computed
+    * downstream). A same-timestamp purchase does NOT convert (the frame
+    * starts 1 µs after the click): simultaneous events carry no causal
+    * order, so counting them would manufacture conversions.
+    *
+    * The 2-step [[kStepPattern]]: one window, partitioned by user,
+    * forward-looking conditional RANGE frame — where a join formulation
+    * would materialize every (click, purchase-within-horizon) pair, this
+    * emits exactly one row per click. */
+  def clickToPurchase(events: DataFrame, withinSec: Long): DataFrame =
+    kStepPattern(events, Seq("click", "purchase"), withinSec)
+      .withColumnRenamed("step1_us", "next_purchase_us")
+      .withColumnRenamed("completed", "converted")
 
   /** Weekly cohort retention: users bucketed by their FIRST active week
     * (integer floor of epoch-micros — engine-exact, no calendar

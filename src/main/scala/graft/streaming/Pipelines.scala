@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 import graft.cdc.EnvelopeOps
 import graft.ops.{Enrich, Notify, Predicates, Windows}
@@ -32,6 +33,20 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
   * runs about one state task per core (1 per query at 4 cores, 20 at a
   * cluster's 200). A query's first batch records the width in its
   * checkpoint, and a restart keeps it whatever the session conf says.
+  *
+  * Lateness: every event-time `GroupState` tracker (dormancy timers,
+  * rolling spend, TWAB, concurrency, EWMA, the funnel and k-step
+  * patterns) folds through [[OrderedFold]]: per key, a row strictly
+  * behind the greatest order key already folded is dropped and counted in
+  * the query's `graft.late_rows.<tracker>` accumulator, the per-key form
+  * of the no-grace windows' drop. [[reconcileAlerts]] alone folds in
+  * arrival order, as the reference's balance store does.
+  *
+  * Upgrade rule: these trackers' state carries the seal, so a checkpoint
+  * written before [[OrderedFold]] does not restore — delete the tracker
+  * query's checkpoint on upgrade. Spark's state-schema check refuses the
+  * old checkpoint when the query starts (`StateSchemaCheck` in
+  * `RecoverySpec`).
   */
 object Pipelines {
 
@@ -230,14 +245,11 @@ object Pipelines {
     * tombstone semantics need the delete to win the argmax). */
   def accountsDimStream(spark: SparkSession, customerDir: String,
       glob: String = "customer.parquet"): DataFrame = {
-    val raw = spark.readStream
-      .schema("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING")
-      .option("pathGlobFilter", glob)
-      .parquet(customerDir)
     // the ONE wire path (synthesize -> encode -> decode -> parse) shared
     // with the batch KTable — all lazy transforms, so it lifts to the
     // streaming frame unchanged
-    val changelog = graft.cdc.DimensionCdc.accountChangelog(raw)
+    val changelog = graft.cdc.DimensionCdc.accountChangelog(
+        customerStream(spark, customerDir, glob))
       .filter(col("account_id").isNotNull)
     graft.ops.LatestByKey.latestByMaxBy(changelog,
       Seq("account_id"), struct(col("cdc_ts_us")))
@@ -249,15 +261,20 @@ object Pipelines {
     * argmax as [[accountsDimStream]]. */
   def customersDimStream(spark: SparkSession, customerDir: String,
       glob: String = "customer.parquet"): DataFrame = {
-    val raw = spark.readStream
-      .schema("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING")
-      .option("pathGlobFilter", glob)
-      .parquet(customerDir)
-    val changelog = graft.cdc.DimensionCdc.customerChangelog(raw)
+    val changelog = graft.cdc.DimensionCdc.customerChangelog(
+        customerStream(spark, customerDir, glob))
       .filter(col("customer_id").isNotNull)
     graft.ops.LatestByKey.latestByMaxBy(changelog,
       Seq("customer_id"), struct(col("cdc_ts_us")))
   }
+
+  /** The customer file-stream both KTables' changelogs are built from. */
+  private def customerStream(spark: SparkSession, customerDir: String,
+      glob: String): DataFrame =
+    spark.readStream
+      .schema("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING")
+      .option("pathGlobFilter", glob)
+      .parquet(customerDir)
 
   /** Pipeline 1's declared TWO-HOP form with BOTH dimensions continuously
     * maintained — the reference declares the customers hop
@@ -375,21 +392,8 @@ object Pipelines {
     * Watermarks on both sides + the time-bound join condition let Spark
     * expire join state; inner matches emit as they arrive. */
   def creditDebitPairs(debits: DataFrame, credits: DataFrame,
-      toleranceSec: Long): DataFrame = {
-    val d = debits
-      .select(col("txn_id"), col("account_id"), col("event_ts"))
-      .withWatermark("event_ts", "0 seconds")
-    val c = credits
-      .select(col("txn_id").as("credit_txn_id"),
-        col("account_id").as("credit_account_id"),
-        col("event_ts").as("credit_ts"))
-      .withWatermark("credit_ts", "0 seconds")
-    d.join(c,
-      col("account_id") === col("credit_account_id") &&
-        col("credit_ts") >= col("event_ts") - expr(s"INTERVAL $toleranceSec SECONDS") &&
-        col("credit_ts") <= col("event_ts") + expr(s"INTERVAL $toleranceSec SECONDS"))
-      .select("txn_id", "credit_txn_id", "account_id")
-  }
+      toleranceSec: Long): DataFrame =
+    creditDebitJoin(debits, credits, toleranceSec, "inner")
 
   /** Stream–stream LEFT OUTER windowed join: every debit emits — matched
     * debits as they pair, unmatched debits with null credit columns once
@@ -404,7 +408,11 @@ object Pipelines {
     * results stall with it. Keep both filters broad enough that each side
     * keeps observing event time, or set a nonzero delay policy. */
   def creditDebitPairsOuter(debits: DataFrame, credits: DataFrame,
-      toleranceSec: Long): DataFrame = {
+      toleranceSec: Long): DataFrame =
+    creditDebitJoin(debits, credits, toleranceSec, "left_outer")
+
+  private def creditDebitJoin(debits: DataFrame, credits: DataFrame,
+      toleranceSec: Long, joinType: String): DataFrame = {
     val d = debits
       .select(col("txn_id"), col("account_id"), col("event_ts"))
       .withWatermark("event_ts", "0 seconds")
@@ -417,13 +425,20 @@ object Pipelines {
       col("account_id") === col("credit_account_id") &&
         col("credit_ts") >= col("event_ts") - expr(s"INTERVAL $toleranceSec SECONDS") &&
         col("credit_ts") <= col("event_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-      "left_outer")
+      joinType)
       .select("txn_id", "credit_txn_id", "account_id")
   }
 
+  /** The late-row counter of one tracker query, `graft.late_rows.<tracker>`
+    * (see [[OrderedFold]]). A named accumulator, so it appears in each
+    * task's accumulables: the Spark UI and any `SparkListener` see it. */
+  private def lateRows(spark: SparkSession, tracker: String): LongAccumulator =
+    spark.sparkContext.longAccumulator(s"graft.late_rows.$tracker")
+
   /** Pipeline 5 alternative — dormancy with state + event-time timers
     * (see [[DormancyDetector]]): alerts fire exactly when the watermark
-    * closes a single-event session. */
+    * closes a single-event session. Late rows: [[OrderedFold]],
+    * `graft.late_rows.dormancy`. */
   def dormancyTimeoutAlerts(spark: SparkSession, parsed: DataFrame,
       gapUs: Long): Dataset[DormancyAlert] = {
     import spark.implicits._
@@ -433,19 +448,22 @@ object Pipelines {
       .as[DormTxn]
       .groupByKey(_.account_id)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(DormancyDetector.process(gapUs))
+        GroupStateTimeout.EventTimeTimeout)(
+        DormancyDetector.fold(gapUs, lateRows(spark, "dormancy")))
   }
 
   /** Rolling trailing-window spend as true incremental state — the
     * streaming twin of [[graft.ops.Windows.rollingSpend]]. Each account's
     * GroupState holds only its IN-WINDOW (event_time_us, kobo) pairs, so
     * per-key state is bounded by the window's transaction count, not by
-    * history; every arriving transaction emits with its own trailing
+    * history; every accepted transaction emits with its own trailing
     * frame. Same-timestamp transactions arriving in one batch share their
-    * frame — the batch RANGE window's peer semantics. The equivalence
-    * contract is the same in-order feed as [[reconcileAlerts]]
-    * (time-ordered files; a frame can't retroactively absorb a peer that
-    * arrives after its row was emitted). */
+    * frame — the batch RANGE window's peer semantics. A debit behind its
+    * account's newest folded `(event_time_us, txn_id)` is dropped and
+    * counted in `graft.late_rows.rolling_spend` ([[OrderedFold]]), so the
+    * output equals the batch twin over the accepted debits whenever
+    * equal-time peers share a batch (a frame can't retroactively absorb a
+    * peer that arrives after its row was emitted). */
   def rollingSpendAlerts(spark: SparkSession, parsed: DataFrame,
       windowUs: Long = 86400L * 1000000L): Dataset[RollRow] = {
     import spark.implicits._
@@ -458,21 +476,24 @@ object Pipelines {
       .groupByKey(_.account_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
-        RollingSpendTracker.process(windowUs))
+        RollingSpendTracker.fold(windowUs, lateRows(spark, "rolling_spend")))
   }
 
   /** Time-weighted average balance as incremental per-account state — the
     * streaming twin of [[graft.ops.EventAnalytics.timeWeightedBalance]]:
-    * every arriving transaction extends the account's holding-interval
+    * every accepted transaction extends the account's holding-interval
     * numerator Σ balance·Δt and emits the account's LIVE TWAB (the
     * continuous-accrual view a billing engine consumes; the final
-    * emission per account equals the batch operator). State is O(1) per
-    * account — five scalars — and lives for the account's lifetime by
-    * definition (the span is first..last transaction), so there is no
-    * timeout; the numerator is carried as an exact decimal STRING
-    * (kobo·micros exceeds a long and a default BigDecimal encoder's
-    * 20 integer digits). Same sign-separated truncating division as the
-    * batch form — integer-exact, no float anywhere. */
+    * emission per account equals the batch operator over the accepted
+    * transactions). A transaction behind its account's newest folded event
+    * time is dropped and counted in `graft.late_rows.twab`
+    * ([[OrderedFold]]). State is O(1) per account — five scalars and the
+    * seal — and lives for the account's lifetime by definition (the span
+    * is first..last transaction), so there is no timeout; the numerator is
+    * carried as an exact decimal STRING (kobo·micros exceeds a long and a
+    * default BigDecimal encoder's 20 integer digits). Same sign-separated
+    * truncating division as the batch form — integer-exact, no float
+    * anywhere. */
   def twabUpdates(spark: SparkSession, parsed: DataFrame): Dataset[TwabRow] = {
     import spark.implicits._
     val signed = when(Predicates.isDebit(col("txn_type")),
@@ -485,7 +506,7 @@ object Pipelines {
       .as[TwabTxn]
       .groupByKey(_.account_id)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(TwabTracker.process)
+        GroupStateTimeout.NoTimeout)(TwabTracker.fold(lateRows(spark, "twab")))
   }
 
   /** Session concurrency as DAY-SHARDED incremental state + merge-on-read
@@ -508,10 +529,11 @@ object Pipelines {
     *      so the merge is model-sized, exactly like the batch scan's
     *      driver offset table.
     *
-    * Feed contract (fail-loud in the tracker): boundaries arrive in
-    * (ts_ms, delta) order per day — ends before starts at equal ts, the
-    * batch operator's tie rule — with equal-ts pairs never split across
-    * batches out of order. */
+    * Lateness ([[OrderedFold]]): boundaries fold per day in (ts_ms, delta)
+    * order — ends before starts at equal ts, the batch operator's tie
+    * rule; a boundary behind its day's newest folded (ts_ms, delta) is
+    * dropped and counted in `graft.late_rows.concurrency`, and a batch
+    * that folds nothing for a day emits nothing for it. */
   def concurrencyPartials(spark: SparkSession,
       boundaries: DataFrame): Dataset[ConcurrencyPartial] = {
     import spark.implicits._
@@ -523,7 +545,8 @@ object Pipelines {
       .as[BoundaryEvent]
       .groupByKey(e => Math.floorDiv(e.ts_ms, 86400000L))
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(ConcurrencyTracker.process)
+        GroupStateTimeout.NoTimeout)(
+        ConcurrencyTracker.fold(lateRows(spark, "concurrency")))
   }
 
   /** Merge-on-read completion of [[concurrencyPartials]]: lift each day's
@@ -544,37 +567,27 @@ object Pipelines {
   }
 
   /** Funnel conversion as incremental state + event-time timers — the
-    * streaming twin of [[graft.ops.EventAnalytics.clickToPurchase]].
-    * Pending clicks wait in GroupState; a purchase resolves every pending
-    * click it strictly follows within the horizon (emitted immediately);
-    * under the in-order feed contract, ANY later event of the same user
-    * seals clicks whose horizon it has passed (no purchase can now
-    * arrive for them), and an event-time timer at (earliest pending
-    * click + horizon) expires the rest when the watermark passes — the
-    * same state+timers pattern as [[DormancyDetector]]. Per-key state is
-    * bounded by the horizon's click count. */
+    * streaming twin of [[graft.ops.EventAnalytics.clickToPurchase]], and
+    * like it the 2-step pattern: [[patternKAlerts]] over
+    * (click, purchase). A purchase resolves every pending click it
+    * strictly follows within the horizon (emitted immediately); a later
+    * same-user event, or the event-time timer at the earliest pending
+    * horizon, seals clicks whose horizon has passed. An event behind its
+    * user's newest folded `(ts_us, event_id)` is dropped and counted in
+    * `graft.late_rows.funnel` ([[OrderedFold]]). */
   def funnelAlerts(spark: SparkSession, events: DataFrame,
       horizonUs: Long = 3600L * 1000000L): Dataset[FunnelRow] = {
     import spark.implicits._
-    events
-      .withWatermark("event_ts", "0 seconds")
-      .selectExpr("event_id", "user_id", "ts_us", "event_type", "event_ts")
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(FunnelTracker.process(horizonUs))
+    patternFold(spark, events, Seq("click", "purchase"), horizonUs, "funnel")
+      .map(r => FunnelRow(r.event_id, r.user_id, r.ts_us,
+        r.matched_us.lift(1), r.completed))
   }
 
   /** 3-step sequence pattern as incremental state + event-time timers —
     * the streaming twin of [[graft.ops.EventAnalytics.threeStepPattern]]
     * (CEP: click → view → purchase, each hop strictly later within the
-    * horizon of the previous step). Stage-1 state holds clicks awaiting
-    * their view; a matching view promotes them to stage-2 (awaiting
-    * purchase); a purchase resolves stage-2 entries immediately; under
-    * the in-order feed contract any later same-user event seals entries
-    * whose hop horizon it has passed, and an event-time timer at the
-    * earliest pending horizon expires the rest when the watermark
-    * passes. Per-key state is bounded by the horizon's event count. */
+    * horizon of the previous step): [[patternKAlerts]] over the three
+    * steps, late rows counted in `graft.late_rows.pattern3`. */
   def pattern3Alerts(spark: SparkSession, events: DataFrame,
       horizonUs: Long = 3600L * 1000000L): Dataset[Pattern3Row] = {
     import spark.implicits._
@@ -589,14 +602,22 @@ object Pipelines {
     * length). A pending chain at prefix length i awaits the first
     * `steps(i)` event strictly later than and within the horizon of its
     * LAST matched event; a matching arrival claims every such chain
-    * (in-order processing makes "first after" local, mirroring the batch
+    * (ordered folding makes "first after" local, mirroring the batch
     * frame-min); any later same-user event — or the event-time timer at
     * the earliest pending horizon — seals chains whose hop window has
-    * passed, emitting the partial prefix. Per-key state is bounded by
+    * passed, emitting the partial prefix. An event behind its user's
+    * newest folded `(ts_us, event_id)` is dropped and counted in
+    * `graft.late_rows.pattern<k>` ([[OrderedFold]]), so the output equals
+    * the batch twin over the accepted events. Per-key state is bounded by
     * the horizon's event count × (k−1) stages. */
   def patternKAlerts(spark: SparkSession, events: DataFrame,
       steps: Seq[String],
-      horizonUs: Long = 3600L * 1000000L): Dataset[PatternKRow] = {
+      horizonUs: Long = 3600L * 1000000L): Dataset[PatternKRow] =
+    patternFold(spark, events, steps, horizonUs, s"pattern${steps.size}")
+
+  private def patternFold(spark: SparkSession, events: DataFrame,
+      steps: Seq[String], horizonUs: Long,
+      tracker: String): Dataset[PatternKRow] = {
     import spark.implicits._
     require(steps.size >= 2 && steps.distinct.size == steps.size,
       "pattern needs >= 2 distinct step types")
@@ -607,12 +628,14 @@ object Pipelines {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
-        PatternKTracker.process(steps, horizonUs))
+        PatternKTracker.fold(steps, horizonUs, lateRows(spark, tracker)))
   }
 
   /** Live per-key EWMA recency scores — the streaming twin of
     * [[graft.ops.EventAnalytics.ewmaRecency]] via [[EwmaTracker]].
-    * Input: (key, ts_us, seq, amount_cents). State: k entries per key. */
+    * Input: (key, ts_us, seq, amount_cents). State: k amounts per key.
+    * A row behind its key's newest folded (ts_us, seq) is dropped and
+    * counted in `graft.late_rows.ewma` ([[OrderedFold]]). */
   def ewmaUpdates(spark: SparkSession, rows: DataFrame, k: Int = 8)
       : Dataset[EwmaRow] = {
     import spark.implicits._
@@ -623,7 +646,7 @@ object Pipelines {
       .as[EwmaTxn]
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(EwmaTracker.process(k))
+        GroupStateTimeout.NoTimeout)(EwmaTracker.fold(k, lateRows(spark, "ewma")))
   }
 
   /** Pipeline 3 — balance reconciliation: true incremental per-key state via
@@ -648,7 +671,8 @@ object Pipelines {
 case class DormancyAlert(account_id: Long, session_start_ms: Long,
     n_events: Long)
 
-/** Per-account session state for the timeout-based dormancy detector. */
+/** Per-account session state for the timeout-based dormancy detector
+  * (`n == 0`: no open session). */
 case class SessionState(startUs: Long, lastUs: Long, n: Long)
 
 /** Input row for the dormancy detector — carries the watermarked
@@ -664,41 +688,23 @@ case class DormTxn(txn_id: Long, account_id: Long, event_time_us: Long,
   * running-balance scan and watermarked windows: state + timers.
   */
 object DormancyDetector {
-  import org.apache.spark.sql.streaming.GroupState
+  private val NoSession = SessionState(0L, 0L, 0L)
 
-  def process(gapUs: Long)(accountId: Long, events: Iterator[DormTxn],
-      state: GroupState[SessionState]): Iterator[DormancyAlert] = {
-    if (events.isEmpty && state.hasTimedOut) {
-      // session closed: alert iff it contained exactly one event
-      val s = state.get
-      state.remove()
-      if (s.n == 1) Iterator.single(DormancyAlert(accountId, s.startUs / 1000, s.n))
-      else Iterator.empty
-    } else {
-      val sorted = events.toSeq.sortBy(e => (e.event_time_us, e.txn_id))
-      var closed = List.empty[DormancyAlert]
-      var cur = state.getOption
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.event_time_us - s.lastUs < gapUs =>
-            cur = Some(SessionState(s.startUs, e.event_time_us, s.n + 1))
-          case Some(s) =>
-            // gap exceeded within the batch: the old session closed
-            if (s.n == 1) closed ::= DormancyAlert(accountId, s.startUs / 1000, s.n)
-            cur = Some(SessionState(e.event_time_us, e.event_time_us, 1))
-          case None =>
-            cur = Some(SessionState(e.event_time_us, e.event_time_us, 1))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        // ceil to millis: floor would fire up to 1ms early (and below
-        // the watermark for sub-ms gaps, crashing the query)
-        state.setTimeoutTimestamp((s.lastUs + gapUs + 999) / 1000)
-      }
-      closed.reverseIterator
-    }
-  }
+  private def alert(accountId: Long, s: SessionState): Seq[DormancyAlert] =
+    if (s.n == 1) Seq(DormancyAlert(accountId, s.startUs / 1000, s.n)) else Nil
+
+  def fold(gapUs: Long, lateRows: LongAccumulator)
+      : OrderedFold[DormTxn, SessionState, DormancyAlert] =
+    new OrderedFold[DormTxn, SessionState, DormancyAlert](lateRows,
+      orderKey = e => (e.event_time_us, e.txn_id),
+      zero = NoSession,
+      step = (s, e) =>
+        if (s.n > 0 && e.event_time_us - s.lastUs < gapUs)
+          (SessionState(s.startUs, e.event_time_us, s.n + 1), Nil)
+        else // the gap closed the open session
+          (SessionState(e.event_time_us, e.event_time_us, 1), alert(e.account_id, s)),
+      expiry = Some(Expiry[SessionState, DormancyAlert](_.lastUs + gapUs,
+        (accountId, s, _) => (NoSession, alert(accountId, s)))))
 }
 
 /** Input row for the stateful reconciler. */
@@ -711,7 +717,7 @@ case class ReconRow(txn_id: Long, account_id: Long, event_time_ms: Long,
     stored_balance: Option[Double], discrepancy: Double,
     recon_status: String, severity: String)
 
-/** Input row for the funnel tracker — `event_ts` carries the watermark
+/** Input row for the pattern trackers — `event_ts` carries the watermark
   * through the typed projection (same note as [[DormTxn]]). */
 case class FunnelEvent(event_id: Long, user_id: Long, ts_us: Long,
     event_type: String, event_ts: java.sql.Timestamp)
@@ -719,53 +725,6 @@ case class FunnelEvent(event_id: Long, user_id: Long, ts_us: Long,
 /** Output row — same shape as the batch funnel operator. */
 case class FunnelRow(event_id: Long, user_id: Long, ts_us: Long,
     next_purchase_us: Option[Long], converted: Boolean)
-
-/** Stateful funnel tracker: pending (click_id, click_ts) pairs per user.
-  * Resolution order inside a batch is event-time order; a purchase at
-  * exactly a click's timestamp never converts it (strictly-after, the
-  * batch RANGE frame's 1-µs-following bound). */
-object FunnelTracker {
-  def process(horizonUs: Long)(userId: Long, events: Iterator[FunnelEvent],
-      state: GroupState[Seq[(Long, Long)]]): Iterator[FunnelRow] = {
-    var pending = state.getOption.getOrElse(Seq.empty)
-    val out = scala.collection.mutable.ArrayBuffer.empty[FunnelRow]
-    def seal(beforeUs: Long): Unit = {
-      val (expired, live) = pending.partition(_._2 + horizonUs < beforeUs)
-      expired.foreach { case (id, ts) =>
-        out += FunnelRow(id, userId, ts, None, converted = false)
-      }
-      pending = live
-    }
-    if (events.isEmpty && state.hasTimedOut) {
-      // the watermark passed the earliest pending horizon
-      seal(state.getCurrentWatermarkMs() * 1000)
-    } else {
-      events.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-        // in-order contract: this event's timestamp proves no purchase
-        // can still arrive for clicks whose horizon lies strictly before
-        seal(e.ts_us)
-        if (e.event_type == "purchase") {
-          val (hit, rest) = pending.partition(c =>
-            c._2 < e.ts_us && e.ts_us <= c._2 + horizonUs)
-          hit.foreach { case (id, ts) =>
-            out += FunnelRow(id, userId, ts, Some(e.ts_us), converted = true)
-          }
-          pending = rest
-        } else if (e.event_type == "click") {
-          pending :+= ((e.event_id, e.ts_us))
-        }
-      }
-    }
-    if (pending.isEmpty) state.remove()
-    else {
-      state.update(pending)
-      // ceil to millis (see DormancyDetector note)
-      state.setTimeoutTimestamp(
-        (pending.map(_._2).min + horizonUs + 999) / 1000)
-    }
-    out.iterator
-  }
-}
 
 /** Output row — same shape as the batch 3-step pattern operator. */
 case class Pattern3Row(event_id: Long, user_id: Long, ts_us: Long,
@@ -791,59 +750,41 @@ case class PatternKRow(event_id: Long, user_id: Long, ts_us: Long,
   * previous step's timestamp never matches (the batch RANGE frame's
   * 1-µs-following bound). */
 object PatternKTracker {
-  def process(steps: Seq[String], horizonUs: Long)(userId: Long,
-      events: Iterator[FunnelEvent],
-      state: GroupState[Seq[PendingChain]]): Iterator[PatternKRow] = {
+  def fold(steps: Seq[String], horizonUs: Long, lateRows: LongAccumulator)
+      : OrderedFold[FunnelEvent, Seq[PendingChain], PatternKRow] = {
     val k = steps.size
-    var pending = state.getOption.getOrElse(Seq.empty)
-    val out = scala.collection.mutable.ArrayBuffer.empty[PatternKRow]
-    def seal(beforeUs: Long): Unit = {
-      val (expired, live) = pending.partition(
-        _.matched_us.last + horizonUs < beforeUs)
-      expired.foreach { c =>
-        out += PatternKRow(c.event_id, userId, c.matched_us.head,
-          c.matched_us, completed = false)
-      }
-      pending = live
+    // every chain whose hop window closed before `beforeUs` emits as a
+    // stalled prefix: no matching event can arrive for it any more
+    def close(userId: Long, pending: Seq[PendingChain], beforeUs: Long) = {
+      val (expired, live) =
+        pending.partition(_.matched_us.last + horizonUs < beforeUs)
+      (live, expired.map(c => PatternKRow(c.event_id, userId,
+        c.matched_us.head, c.matched_us, completed = false)))
     }
-    if (events.isEmpty && state.hasTimedOut) {
-      seal(state.getCurrentWatermarkMs() * 1000)
-    } else {
-      events.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-        seal(e.ts_us)
+    new OrderedFold[FunnelEvent, Seq[PendingChain], PatternKRow](lateRows,
+      orderKey = e => (e.ts_us, e.event_id),
+      zero = Seq.empty,
+      step = (prior, e) => {
+        val (pending, stalled) = close(e.user_id, prior, e.ts_us)
         val stage = steps.indexOf(e.event_type)
-        if (stage == 0) {
-          pending :+= PendingChain(e.event_id, Seq(e.ts_us))
-        } else if (stage > 0) {
+        if (stage == 0) (pending :+ PendingChain(e.event_id, Seq(e.ts_us)), stalled)
+        else if (stage < 0) (pending, stalled)
+        else {
           val (hit, rest) = pending.partition(c =>
             c.matched_us.length == stage &&
               c.matched_us.last < e.ts_us &&
               e.ts_us <= c.matched_us.last + horizonUs)
           val advanced = hit.map(c =>
             c.copy(matched_us = c.matched_us :+ e.ts_us))
-          if (stage == k - 1) {
-            advanced.foreach { c =>
-              out += PatternKRow(c.event_id, userId, c.matched_us.head,
-                c.matched_us, completed = true)
-            }
-            pending = rest
-          } else {
-            pending = rest ++ advanced
-          }
+          if (stage < k - 1) (rest ++ advanced, stalled)
+          else (rest, stalled ++ advanced.map(c => PatternKRow(c.event_id,
+            e.user_id, c.matched_us.head, c.matched_us, completed = true)))
         }
-      }
-    }
-    if (pending.isEmpty) state.remove()
-    else {
-      state.update(pending)
-      val earliest = pending.map(_.matched_us.last).min
-      // ceil to millis (see DormancyDetector note); floored at watermark+1
-      // so an already-overdue key times out next batch instead of throwing
-      state.setTimeoutTimestamp(math.max(
-        (earliest + horizonUs + 999) / 1000,
-        state.getCurrentWatermarkMs() + 1))
-    }
-    out.iterator
+      },
+      expiry = Some(Expiry[Seq[PendingChain], PatternKRow](
+        pending => if (pending.isEmpty) Long.MinValue
+          else pending.map(_.matched_us.last).min + horizonUs,
+        close)))
   }
 }
 
@@ -854,47 +795,37 @@ case class RollTxn(txn_id: Long, account_id: Long, event_time_us: Long,
 case class RollRow(txn_id: Long, account_id: Long, event_time_us: Long,
     rolling_spend_kobo: Long, rolling_n_txns: Long)
 
-/** Stateful trailing-window tracker: the buffer is pruned to the window
-  * width on every batch (entries older than `max ts − window` can never
-  * appear in a future frame under the in-order contract), so state size
-  * is O(window txn count) per account. Integer-kobo money keeps every
-  * emitted sum exact. */
+/** Stateful trailing-window tracker: the buffer of (event_time_us, kobo)
+  * is pruned to the window width after every batch (an entry older than
+  * `seal − window` can never appear in an accepted row's frame), so state
+  * size is O(window txn count) per account; the timeout at (seal + window)
+  * frees an idle account's buffer. Integer-kobo money keeps every emitted
+  * sum exact. */
 object RollingSpendTracker {
-  def process(windowUs: Long)(accountId: Long, events: Iterator[RollTxn],
-      state: GroupState[Seq[(Long, Long)]]): Iterator[RollRow] = {
-    if (events.isEmpty && state.hasTimedOut) {
-      // the watermark passed (newest buffered ts + window): no in-order
-      // arrival can ever include a buffered entry in its frame again, and
-      // an idle account's empty frame is reconstructible — free the state
-      // (without this, total state grows monotonically with the number of
-      // accounts ever seen, even though each key's buffer is bounded)
-      state.remove()
-      return Iterator.empty
-    }
-    var buf = state.getOption.getOrElse(Seq.empty)
-    val out = scala.collection.mutable.ArrayBuffer.empty[RollRow]
-    events.toSeq.sortBy(e => (e.event_time_us, e.txn_id))
-      .groupBy(_.event_time_us).toSeq.sortBy(_._1)
-      .foreach { case (ts, peers) =>
-        // peers enter the buffer BEFORE any of them emits, so equal-ts
-        // rows see each other — the RANGE frame's peer semantics
-        buf = buf.filter(_._1 > ts - windowUs - 1) ++
-          peers.map(e => (e.event_time_us, e.kobo))
-        val frame = buf.filter(p => p._1 >= ts - windowUs && p._1 <= ts)
-        val total = frame.map(_._2).sum
-        val n = frame.size.toLong
-        peers.foreach(e => out += RollRow(e.txn_id, accountId, ts, total, n))
-      }
-    val maxTs = buf.foldLeft(Long.MinValue)((m, p) => math.max(m, p._1))
-    state.update(buf.filter(_._1 >= maxTs - windowUs))
-    // ceil to millis (see DormancyDetector note); floored at watermark+1
-    // because a key whose newest event is already > window behind the
-    // global watermark must still time out in the NEXT batch, not throw
-    state.setTimeoutTimestamp(math.max(
-      (maxTs + windowUs + 999) / 1000,
-      state.getCurrentWatermarkMs() + 1))
-    out.iterator
-  }
+  private def newest(buf: Seq[(Long, Long)]): Long =
+    buf.foldLeft(Long.MinValue)((m, p) => math.max(m, p._1))
+
+  def fold(windowUs: Long, lateRows: LongAccumulator)
+      : OrderedFold[RollTxn, Seq[(Long, Long)], RollRow] =
+    new OrderedFold[RollTxn, Seq[(Long, Long)], RollRow](lateRows,
+      orderKey = e => (e.event_time_us, e.txn_id),
+      zero = Seq.empty,
+      step = (buf, e) => (buf :+ ((e.event_time_us, e.kobo)), Nil),
+      // frames are read once the whole batch is buffered, so equal-ts
+      // rows see each other — the RANGE frame's peer semantics
+      endOfBatch = (_, buf, rows) => {
+        val out = rows.map { e =>
+          val ts = e.event_time_us
+          val frame = buf.filter(p => p._1 >= ts - windowUs && p._1 <= ts)
+          RollRow(e.txn_id, e.account_id, ts, frame.map(_._2).sum,
+            frame.size.toLong)
+        }
+        val maxTs = newest(buf)
+        (buf.filter(_._1 >= maxTs - windowUs), out)
+      },
+      expiry = Some(Expiry[Seq[(Long, Long)], RollRow](
+        newest(_) + windowUs,
+        (_, _, _) => (Seq.empty, Nil))))
 }
 
 /** Input row for the TWAB tracker (`kobo` arrives pre-signed). */
@@ -916,7 +847,9 @@ case class TwabState(first_us: Long, last_us: Long, bal_kobo: Long,
   * previous balance occupied (equal-timestamp consecutive events close a
   * zero-length interval — counted, worth 0, exactly the batch lead()
   * semantics under the unique-txn_id ordering) and emits the account's
-  * live TWAB once a positive span exists. */
+  * live TWAB once a positive span exists. The order key is event time
+  * alone: no emitted value depends on the order of equal-time rows, and
+  * the seal keeps every Δt non-negative. */
 object TwabTracker {
   private def twabMicro(num: BigInt, spanUs: Long): Long = {
     // truncation toward zero on the separated magnitude == floor on the
@@ -924,35 +857,26 @@ object TwabTracker {
     val q = (num.abs * 1000000) / spanUs
     (if (num.signum < 0) -q else q).toLong
   }
-  def process(accountId: Long, events: Iterator[TwabTxn],
-      state: GroupState[TwabState]): Iterator[TwabRow] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[TwabRow]
-    var st = state.getOption.orNull
-    events.toSeq.sortBy(e => (e.event_time_us, e.txn_id)).foreach { e =>
-      if (st == null) {
-        st = TwabState(e.event_time_us, e.event_time_us, e.kobo, 0L, "0")
-      } else {
-        val dt = e.event_time_us - st.last_us
-        // fail-loud in-order contract: per-batch sort only orders WITHIN
-        // a micro-batch, so an event landing in a later batch with an
-        // earlier event time would make dt negative and silently corrupt
-        // the exact numerator. The source contract (file source replays
-        // in path order; the harness feeds time-ordered batches) makes
-        // this unreachable — seal it the way the pattern trackers do.
-        require(dt >= 0, s"TWAB account $accountId: out-of-order event " +
-          s"${e.txn_id} at ${e.event_time_us}us behind sealed ${st.last_us}us")
-        val num = BigInt(st.num) + BigInt(st.bal_kobo) * dt
-        st = TwabState(st.first_us, e.event_time_us, st.bal_kobo + e.kobo,
-          st.n_intervals + 1, num.toString)
-        val span = st.last_us - st.first_us
-        if (span > 0)
-          out += TwabRow(accountId, st.n_intervals, span,
-            twabMicro(num, span))
-      }
-    }
-    if (st != null) state.update(st)
-    out.iterator
-  }
+
+  def fold(lateRows: LongAccumulator)
+      : OrderedFold[TwabTxn, Option[TwabState], TwabRow] =
+    new OrderedFold[TwabTxn, Option[TwabState], TwabRow](lateRows,
+      orderKey = e => (e.event_time_us, 0L),
+      zero = None,
+      step = {
+        case (None, e) =>
+          (Some(TwabState(e.event_time_us, e.event_time_us, e.kobo, 0L, "0")), Nil)
+        case (Some(st), e) =>
+          val num = BigInt(st.num) +
+            BigInt(st.bal_kobo) * (e.event_time_us - st.last_us)
+          val next = TwabState(st.first_us, e.event_time_us,
+            st.bal_kobo + e.kobo, st.n_intervals + 1, num.toString)
+          val span = next.last_us - next.first_us
+          (Some(next),
+            if (span > 0) Seq(TwabRow(e.account_id, next.n_intervals, span,
+              twabMicro(num, span)))
+            else Nil)
+      })
 }
 
 /** One ±1 session boundary (start = +1, end = −1) with its event time. */
@@ -965,35 +889,29 @@ case class BoundaryEvent(ts_ms: Long, delta: Long,
 case class ConcurrencyPartial(day: Long, local_max: Long, net_delta: Long,
     n_boundaries: Long)
 
-/** Per-day tracker state: local running level, local max, boundary count,
-  * and the last (ts, delta) seen — the in-order seal. */
+/** Per-day tracker state: local running level, local max, boundary count. */
 case class ConcurrencyState(running: Long, local_max: Long,
-    n_boundaries: Long, last_ts: Long, last_delta: Long)
+    n_boundaries: Long)
 
-/** Stateful per-day concurrency tracker: scans the day's boundaries in
+/** Stateful per-day concurrency tracker: folds the day's boundaries in
   * (ts_ms, delta) order (ends before starts at equal ts — the batch tie
-  * rule) and keeps the day-local running level and max. Fail-loud on
-  * out-of-order arrivals across batches, the TwabTracker discipline. */
+  * rule), keeps the day-local running level and max, and emits the day's
+  * partial once per batch that moved it. */
 object ConcurrencyTracker {
-  def process(day: Long, events: Iterator[BoundaryEvent],
-      state: GroupState[ConcurrencyState]): Iterator[ConcurrencyPartial] = {
-    var st = state.getOption.getOrElse(
-      ConcurrencyState(0L, Long.MinValue, 0L, Long.MinValue, Long.MinValue))
-    events.toSeq.sortBy(e => (e.ts_ms, e.delta)).foreach { e =>
-      require(e.ts_ms > st.last_ts ||
-          (e.ts_ms == st.last_ts && e.delta >= st.last_delta),
-        s"concurrency day $day: boundary (${e.ts_ms}, ${e.delta}) behind " +
-          s"sealed (${st.last_ts}, ${st.last_delta}) — out-of-order feed")
-      val r = st.running + e.delta
-      st = ConcurrencyState(r, math.max(st.local_max, r),
-        st.n_boundaries + 1, e.ts_ms, e.delta)
-    }
-    state.update(st)
-    if (st.n_boundaries > 0)
-      Iterator.single(ConcurrencyPartial(day, st.local_max, st.running,
-        st.n_boundaries))
-    else Iterator.empty
-  }
+  def fold(lateRows: LongAccumulator)
+      : OrderedFold[BoundaryEvent, ConcurrencyState, ConcurrencyPartial] =
+    new OrderedFold[BoundaryEvent, ConcurrencyState, ConcurrencyPartial](
+      lateRows,
+      orderKey = e => (e.ts_ms, e.delta),
+      zero = ConcurrencyState(0L, Long.MinValue, 0L),
+      step = (st, e) => {
+        val r = st.running + e.delta
+        (ConcurrencyState(r, math.max(st.local_max, r), st.n_boundaries + 1), Nil)
+      },
+      endOfBatch = (day, st, rows) =>
+        (st, if (rows.isEmpty) Nil
+          else Seq(ConcurrencyPartial(day, st.local_max, st.running,
+            st.n_boundaries))))
 }
 
 /** Per-account sequential reconciliation with one Double of state — the
@@ -1043,37 +961,25 @@ case class EwmaRow(key: Long, seq: Long, n_recent: Long, weight_sum: Long,
     ewma_num: Long, ewma_cents: Long)
 
 /** Stateful last-k EWMA tracker — the streaming twin of
-  * [[graft.ops.EventAnalytics.ewmaRecency]]: per-key state is a ring of
-  * the k most recent (ts, seq, amount) entries (O(k) scalars, lifetime
-  * state like [[TwabTracker]] — the score is defined over the key's
-  * whole history, so there is nothing to time out), and every arriving
-  * event emits the key's LIVE recency score; the final emission per key
-  * equals the batch operator. Power-of-two weights and one truncating
-  * division per emission — exact integers end to end.
-  *
-  * Feed contract (fail-loud, the [[TwabTracker]] discipline): events
-  * arrive in strictly increasing (ts_us, seq) order per key — the
-  * per-batch sort orders within a batch; cross-batch regressions
-  * require() out. */
+  * [[graft.ops.EventAnalytics.ewmaRecency]]: per-key state is the amounts
+  * of the k most recent events in (ts_us, seq) order (O(k) scalars,
+  * lifetime state like [[TwabTracker]] — the score is defined over the
+  * key's whole history, so there is nothing to time out), and every
+  * accepted event emits the key's LIVE recency score; the final emission
+  * per key equals the batch operator over the accepted events.
+  * Power-of-two weights and one truncating division per emission — exact
+  * integers end to end. */
 object EwmaTracker {
-  def process(k: Int)(key: Long, events: Iterator[EwmaTxn],
-      state: GroupState[Seq[(Long, Long, Long)]]): Iterator[EwmaRow] = {
-    var ring = state.getOption.getOrElse(Seq.empty) // oldest..newest
-    val out = scala.collection.mutable.ArrayBuffer.empty[EwmaRow]
-    events.toSeq.sortBy(e => (e.ts_us, e.seq)).foreach { e =>
-      ring.lastOption.foreach { case (ts, seq, _) =>
-        require(e.ts_us > ts || (e.ts_us == ts && e.seq > seq),
-          s"out-of-order event for key $key: (${e.ts_us},${e.seq}) " +
-            s"after ($ts,$seq) — the in-order feed contract is broken")
-      }
-      ring = (ring :+ ((e.ts_us, e.seq, e.amount_cents))).takeRight(k)
-      val recent = ring.reverse
-      val ws = recent.indices.map(j => 1L << (k - 1 - j))
-      val num = recent.zip(ws).map { case ((_, _, a), w) => a * w }.sum
-      out += EwmaRow(key, e.seq, recent.size.toLong, ws.sum, num,
-        num / ws.sum)
-    }
-    state.update(ring)
-    out.iterator
-  }
+  def fold(k: Int, lateRows: LongAccumulator)
+      : OrderedFold[EwmaTxn, Seq[Long], EwmaRow] =
+    new OrderedFold[EwmaTxn, Seq[Long], EwmaRow](lateRows,
+      orderKey = e => (e.ts_us, e.seq),
+      zero = Seq.empty,
+      step = (ring, e) => {
+        val next = (ring :+ e.amount_cents).takeRight(k) // oldest..newest
+        val ws = next.indices.map(j => 1L << (k - 1 - j))
+        val num = next.reverse.zip(ws).map { case (a, w) => a * w }.sum
+        (next, Seq(EwmaRow(e.key, e.seq, next.size.toLong, ws.sum, num,
+          num / ws.sum)))
+      })
 }

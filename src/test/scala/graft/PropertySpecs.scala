@@ -107,52 +107,86 @@ object TrainingPrepProps extends Properties("training-prep") {
 }
 
 /** The streaming rolling-spend tracker against a quadratic reference
-  * model, driven through Spark's own TestGroupState across random
-  * in-order batch splits — pins the state pruning, the peer semantics,
-  * and cross-batch frame continuity without a streaming harness. */
+  * model, driven through Spark's own TestGroupState across random batch
+  * splits — pins the state pruning, the peer semantics, cross-batch frame
+  * continuity and the lateness policy without a streaming harness. */
 object RollingSpendProps extends Properties("rolling-spend-tracker") {
   import org.apache.spark.api.java.Optional
   import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-  import graft.streaming.{RollTxn, RollingSpendTracker}
+  import org.apache.spark.util.LongAccumulator
+  import graft.streaming.{RollTxn, RollingSpendTracker, Sealed}
 
   private val WindowUs = 100L * 1000000L // 100 s
 
   private val genEvents: Gen[List[(Long, Long)]] =
     Gen.listOf(Gen.zip(Gen.chooseNum(0L, 300L), Gen.chooseNum(1L, 1000L)))
 
+  private def txns(raw: List[(Long, Long)]): List[RollTxn] =
+    raw.zipWithIndex.map { case ((tsSec, kobo), i) =>
+      RollTxn(i.toLong, 7L, tsSec * 1000000L, kobo,
+        new java.sql.Timestamp(tsSec * 1000L))
+    }.sortBy(e => (e.event_time_us, e.txn_id))
+
+  /** Time-ordered batches of whole timestamp groups (same-ts peers share a
+    * batch), at most `nBatches` of them. */
+  private def batches(events: List[RollTxn], nBatches: Int): Seq[List[RollTxn]] = {
+    val tsGroups = events.groupBy(_.event_time_us).toSeq.sortBy(_._1).map(_._2)
+    val per = math.max(1, math.ceil(tsGroups.size.toDouble / nBatches).toInt)
+    tsGroups.grouped(per).map(_.flatten.toList).toSeq
+  }
+
+  /** Feeds `batches` in order through one tracker; returns its rows as
+    * (txn_id, spend, n) and the late-row count. */
+  private def track(batches: Seq[List[RollTxn]]): (Set[(Long, Long, Long)], Long) = {
+    val late = new LongAccumulator
+    val fold = RollingSpendTracker.fold(WindowUs, late)
+    var state: Option[Sealed[Seq[(Long, Long)]]] = None
+    val got = batches.filter(_.nonEmpty).flatMap { chunk =>
+      // watermark trails the batch max by the window so nothing times
+      // out mid-feed (the timeout path is pinned separately below)
+      val wmMs = math.max(0L,
+        chunk.map(_.event_time_us).max / 1000 - WindowUs / 1000 - 1000)
+      val gs = TestGroupState.create[Sealed[Seq[(Long, Long)]]](
+        state.fold(Optional.empty[Sealed[Seq[(Long, Long)]]]())(Optional.of),
+        GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wmMs),
+        hasTimedOut = false)
+      val rows = fold(7L, chunk.iterator, gs).toList
+      state = if (gs.exists) Some(gs.get) else None
+      rows
+    }.map(r => (r.txn_id, r.rolling_spend_kobo, r.rolling_n_txns)).toSet
+    (got, late.value)
+  }
+
+  /** The batch RANGE window over `events`. */
+  private def model(events: Seq[RollTxn]): Set[(Long, Long, Long)] =
+    events.map { e =>
+      val frame = events.filter(o =>
+        o.event_time_us >= e.event_time_us - WindowUs &&
+          o.event_time_us <= e.event_time_us)
+      (e.txn_id, frame.map(_.kobo).sum, frame.size.toLong)
+    }.toSet
+
   property("tracker == trailing-window model under in-order batch splits") =
     forAll(genEvents, Gen.chooseNum(1, 5)) { (raw, nBatches) =>
-      val events = raw.zipWithIndex.map { case ((tsSec, kobo), i) =>
-        RollTxn(i.toLong, 7L, tsSec * 1000000L, kobo,
-          new java.sql.Timestamp(tsSec * 1000L))
-      }.sortBy(e => (e.event_time_us, e.txn_id))
-      // contract: batches are time-ordered and same-ts peers share a batch
-      val tsGroups = events.groupBy(_.event_time_us).toSeq.sortBy(_._1).map(_._2)
-      val per = math.max(1, math.ceil(tsGroups.size.toDouble / nBatches).toInt)
-      val batches = tsGroups.grouped(per).map(_.flatten).toSeq
+      val events = txns(raw)
+      track(batches(events, nBatches)) == ((model(events), 0L))
+    }
 
-      var state: Option[Seq[(Long, Long)]] = None
-      val got = batches.filter(_.nonEmpty).flatMap { chunk =>
-        // watermark trails the batch max by the window so nothing times
-        // out mid-feed (the timeout path is pinned separately below)
-        val wmMs = math.max(0L,
-          chunk.map(_.event_time_us).max / 1000 - WindowUs / 1000 - 1000)
-        val gs = TestGroupState.create[Seq[(Long, Long)]](
-          state.fold(Optional.empty[Seq[(Long, Long)]]())(Optional.of),
-          GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wmMs),
-          hasTimedOut = false)
-        val rows = RollingSpendTracker.process(WindowUs)(7L, chunk.iterator, gs).toList
-        state = if (gs.exists) Some(gs.get) else None
-        rows
-      }.map(r => (r.txn_id, r.rolling_spend_kobo, r.rolling_n_txns)).toSet
-
-      val want = events.map { e =>
-        val frame = events.filter(o =>
-          o.event_time_us >= e.event_time_us - WindowUs &&
-            o.event_time_us <= e.event_time_us)
-        (e.txn_id, frame.map(_.kobo).sum, frame.size.toLong)
-      }.toSet
-      got == want
+  property("tracker == trailing-window model over the rows a seal model " +
+      "accepts, under random batch order") =
+    forAll(genEvents, Gen.chooseNum(1, 5), Gen.long) { (raw, nBatches, seed) =>
+      val events = txns(raw)
+      val arrival = new scala.util.Random(seed).shuffle(batches(events, nBatches))
+      // the seal model: a row behind the newest (ts, id) already accepted
+      // is rejected
+      var seal = (Long.MinValue, Long.MinValue)
+      val accepted = arrival.flatMap(_.filter { e =>
+        val k = (e.event_time_us, e.txn_id)
+        val ok = Ordering[(Long, Long)].gteq(k, seal)
+        if (ok) seal = k
+        ok
+      })
+      track(arrival) == ((model(accepted), (events.size - accepted.size).toLong))
     }
 
   property("event-time timeout frees the state and emits nothing") =
@@ -162,10 +196,11 @@ object RollingSpendProps extends Properties("rolling-spend-tracker") {
         raw.map { case (ts, k) => (ts * 1000000L, k) }
       // timeout fires only once the watermark passed every buffered frame
       val wmMs = buf.map(_._1).max / 1000 + WindowUs / 1000 + 1
-      val gs = TestGroupState.create[Seq[(Long, Long)]](Optional.of(buf),
+      val gs = TestGroupState.create[Sealed[Seq[(Long, Long)]]](
+        Optional.of(Sealed(buf, buf.map(_._1).max, 0L)),
         GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wmMs),
         hasTimedOut = true)
-      val rows = RollingSpendTracker.process(WindowUs)(
+      val rows = RollingSpendTracker.fold(WindowUs, new LongAccumulator)(
         7L, Iterator.empty, gs).toList
       rows.isEmpty && !gs.exists
     }

@@ -228,6 +228,137 @@ class PipelinesSpec extends SparkSpecBase {
     }
   }
 
+  test("late files at the production state width: rolling spend, TWAB, funnel " +
+      "and pattern3 drop and count each row behind its key's seal, and equal " +
+      "their batch twins over the rows they accept") {
+    import java.nio.file.Paths
+    import java.nio.file.attribute.FileTime
+    import org.apache.spark.GraftListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import spark.implicits._
+    // the width test's four event-time files with the last two arriving
+    // swapped, then a sentinel event 10 days later that moves the
+    // watermark past every pending pattern horizon
+    val dir = Files.createTempDirectory("graft_late").toString
+    val raw = Tables.events(spark, sf0001).drop("ts_us", "event_ts")
+    val nFiles = 4
+    val Seq(lo, hi) = raw.agg(min("ts_ns"), max("ts_ns")).head().toSeq.map(_.asInstanceOf[Long])
+    val step = (hi - lo) / nFiles + 1
+    val Seq(maxEvent, maxUser) = raw.agg(max("event_id"), max("user_id")).head().toSeq.map(_.asInstanceOf[Long])
+    val files = (0 until nFiles).map(f =>
+      raw.filter(col("ts_ns") >= lo + f * step && col("ts_ns") < lo + (f + 1) * step)) :+
+      raw.limit(1).withColumn("event_id", lit(maxEvent + 1))
+        .withColumn("ts_ns", lit(hi + 10L * 86400L * 1000000000L))
+        .withColumn("user_id", lit(maxUser + 1)).withColumn("event_type", lit("view"))
+        .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
+    val arrival = Seq(0, 1, 3, 2, 4)
+    arrival.zipWithIndex.foreach { case (f, pos) =>
+      val staging = Files.createTempDirectory("graft_late_stage").toString
+      files(f).coalesce(1).write.mode("overwrite").parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dest = Paths.get(s"$dir/events_$f.parquet")
+      Files.copy(part.toPath, dest)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(1600000000000L + pos * 10000L))
+    }
+
+    // the batch view of the same feed, each row tagged with its file's
+    // arrival position
+    val position = arrival.zipWithIndex.flatMap { case (f, pos) =>
+      files(f).select("event_id").as[Long].collect().map(_ -> pos)
+    }.toMap
+    val events = Tables.deriveEventTime(files.reduce(_ union _))
+    val completed = EnvelopeOps.upsertsOnly(EnvelopeOps.parsedTransactions(events))
+      .filter(Predicates.isCompleted(col("status")))
+    val debits = completed.filter(Predicates.isDebit(col("txn_type")))
+    /** (arrival position, key, order key, id) of each row a tracker folds. */
+    def modelRows(df: DataFrame, id: String, key: String, ts: String,
+        tie: Option[String]) =
+      df.select(col(id), col(key), col(ts), tie.fold(lit(0L))(col))
+        .as[(Long, Long, Long, Long)].collect().toSeq
+        .map { case (i, k, t, b) => (position(i), k, (t, b), i) }
+    /** Ids of the rows a per-key seal model accepts: files in arrival
+      * order, each sorted by order key; a row strictly behind the greatest
+      * order key its key has folded is rejected. */
+    def sealAccepted(rows: Seq[(Int, Long, (Long, Long), Long)]): Set[Long] = {
+      val seal = scala.collection.mutable.Map.empty[Long, (Long, Long)]
+      rows.sortBy(r => (r._1, r._3)).filter { case (_, key, k, _) =>
+        val accept = seal.get(key).forall(Ordering[(Long, Long)].gteq(k, _))
+        if (accept) seal(key) = k
+        accept
+      }.map(_._4).toSet
+    }
+    val rollingIn = modelRows(debits, "txn_id", "account_id", "event_time_us", Some("txn_id"))
+    val twabIn = modelRows(completed, "txn_id", "account_id", "event_time_us", None)
+    val eventsIn = modelRows(events, "event_id", "user_id", "ts_us", Some("event_id"))
+
+    val late = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.filter(_.name.exists(_.startsWith("graft.late_rows.")))
+          .foreach(a => late(a.name.get) =
+            late.getOrElse(a.name.get, 0L) + a.update.fold(0L)(_.toString.toLong))
+    }
+    val width = graft.GraftSession.statePartitions(4)
+    val dropped = withStatePartitions(width) {
+      def parsed() = Pipelines.parsedStreamFromPath(spark, dir, "*.parquet", Some(1))
+      def stream() = Pipelines.eventStreamFromPath(spark, dir, "*.parquet", Some(1))
+      spark.sparkContext.addSparkListener(listener)
+      try Seq(
+        "rolling_late" -> Pipelines.rollingSpendAlerts(spark, parsed()).toDF(),
+        "twab_late" -> Pipelines.twabUpdates(spark, parsed()).toDF(),
+        "funnel_late" -> Pipelines.funnelAlerts(spark, stream()).toDF(),
+        "pattern3_late" -> Pipelines.pattern3Alerts(spark, stream()).toDF()
+      ).map { case (name, df) =>
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          q.processAllAvailable() // rethrows if the query died
+          name -> q.recentProgress.flatMap(_.stateOperators)
+            .map(_.numRowsDroppedByWatermark).sum
+        } finally q.stop()
+      }.toMap
+      finally {
+        GraftListenerBusDrain.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+
+    /** accepted + counted late + dropped by Spark's watermark filter ==
+      * the rows the tracker was fed; returns the accepted ids. */
+    def accounted(name: String, tracker: String,
+        in: Seq[(Int, Long, (Long, Long), Long)]): Seq[Long] = {
+      val accepted = sealAccepted(in)
+      assert(accepted.size + late.getOrElse(s"graft.late_rows.$tracker", 0L) +
+        dropped(name) === in.size.toLong, name)
+      accepted.toSeq
+    }
+    val rollingOk = accounted("rolling_late", "rolling_spend", rollingIn)
+    val twabOk = accounted("twab_late", "twab", twabIn)
+    val funnelOk = accounted("funnel_late", "funnel", eventsIn)
+    val patternOk = accounted("pattern3_late", "pattern3", eventsIn)
+    // the swap really lands rows behind their keys' seals
+    Seq("rolling_spend", "twab", "funnel", "pattern3").foreach(t =>
+      assert(late.getOrElse(s"graft.late_rows.$t", 0L) > 0L, t))
+
+    assert(rollingRows(spark.table("rolling_late")) === rollingRows(
+      Windows.rollingSpend(debits.filter(col("txn_id").isin(rollingOk: _*)),
+        windowSec = 86400L)))
+    assert(twabFinal(spark.table("twab_late")) === twabRows(
+      graft.ops.EventAnalytics.timeWeightedBalance(
+        completed.filter(col("txn_id").isin(twabOk: _*)))).toSet)
+    val funnelCols = Seq("event_id", "next_purchase_us", "converted")
+    assert(spark.table("funnel_late").select(funnelCols.map(col): _*).collect().toSet ===
+      graft.ops.EventAnalytics.clickToPurchase(
+        events.filter(col("event_id").isin(funnelOk: _*)), withinSec = 3600L)
+        .select(funnelCols.map(col): _*).collect().toSet)
+    val p3Cols = Seq("event_id", "next_view_us", "purchase_us", "completed")
+    assert(spark.table("pattern3_late").select(p3Cols.map(col): _*).collect().toSet ===
+      graft.ops.EventAnalytics.threeStepPattern(
+        events.filter(col("event_id").isin(patternOk: _*)), withinSec = 3600L)
+        .select(p3Cols.map(col): _*).collect().toSet)
+  }
+
   test("streaming EWMA (k-ring state) final emission per key == batch " +
       "operator, fed across micro-batches") {
     import spark.implicits._
@@ -265,41 +396,50 @@ class PipelinesSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
-  test("EWMA tracker fails loudly on a cross-batch out-of-order event") {
+  /** Folds `first`, then `late` as a later batch through a fresh tracker
+    * and checks the lateness policy: the late batch emits nothing, leaves
+    * the state as it was and is counted, one per row. */
+  private def assertLateDropped[E, S, O](
+      fold: org.apache.spark.util.LongAccumulator => OrderedFold[E, S, O],
+      key: Long, first: Seq[E], late: Seq[E]): Unit = {
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    def txn(tsUs: Long, seq: Long) = EwmaTxn(7L, tsUs, seq, 100L,
-      new java.sql.Timestamp(tsUs / 1000))
-    val state = TestGroupState.create[Seq[(Long, Long, Long)]](
+    val counter = spark.sparkContext.longAccumulator("graft.late_rows.test")
+    val f = fold(counter)
+    val state = TestGroupState.create[Sealed[S]](
       Optional.empty(), GroupStateTimeout.NoTimeout,
       batchProcessingTimeMs = 0L, eventTimeWatermarkMs = Optional.of(1L),
       hasTimedOut = false)
-    EwmaTracker.process(8)(7L,
-      Iterator(txn(1000000L, 1), txn(2000000L, 2)), state).toList
-    val e = intercept[IllegalArgumentException] {
-      EwmaTracker.process(8)(7L, Iterator(txn(1500000L, 3)), state).toList
-    }
-    assert(e.getMessage.contains("out-of-order"))
+    assert(f(key, first.iterator, state).nonEmpty)
+    val sealedState = state.get
+    assert(f(key, late.iterator, state).isEmpty)
+    assert(state.get === sealedState)
+    assert(counter.value === late.size.toLong)
   }
 
-  test("TWAB tracker fails loudly on a cross-batch out-of-order event") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+  test("EWMA tracker drops and counts a row behind its key's seal") {
+    def txn(tsUs: Long, seq: Long) = EwmaTxn(7L, tsUs, seq, 100L,
+      new java.sql.Timestamp(tsUs / 1000))
+    // (1.5 s, seq 3) arrives after (2 s, seq 2) was folded
+    assertLateDropped[EwmaTxn, Seq[Long], EwmaRow](EwmaTracker.fold(8, _), 7L,
+      Seq(txn(1000000L, 1), txn(2000000L, 2)), Seq(txn(1500000L, 3)))
+  }
+
+  test("TWAB tracker drops and counts a row behind its key's seal") {
     def txn(id: Long, tsUs: Long) = TwabTxn(id, 7L, tsUs, 100L,
       new java.sql.Timestamp(tsUs / 1000))
-    val state = TestGroupState.create[TwabState](
-      Optional.empty(), GroupStateTimeout.NoTimeout,
-      batchProcessingTimeMs = 0L, eventTimeWatermarkMs = Optional.of(1L),
-      hasTimedOut = false)
-    // batch 1 seals up to ts 2_000_000; a later batch delivering ts
-    // 1_500_000 would make dt negative and silently corrupt the exact
-    // numerator — the tracker must throw, not absorb
-    TwabTracker.process(7L, Iterator(txn(1, 1000000L), txn(2, 2000000L)),
-      state).toList
-    val e = intercept[IllegalArgumentException] {
-      TwabTracker.process(7L, Iterator(txn(3, 1500000L)), state).toList
-    }
-    assert(e.getMessage.contains("out-of-order"))
+    // folded, ts 1_500_000 after 2_000_000 would make Δt negative and
+    // corrupt the exact numerator
+    assertLateDropped[TwabTxn, Option[TwabState], TwabRow](TwabTracker.fold, 7L,
+      Seq(txn(1, 1000000L), txn(2, 2000000L)), Seq(txn(3, 1500000L)))
+  }
+
+  test("concurrency tracker drops and counts a boundary behind its day's seal") {
+    def b(tsMs: Long, delta: Long) = BoundaryEvent(tsMs, delta,
+      new java.sql.Timestamp(tsMs))
+    assertLateDropped[BoundaryEvent, ConcurrencyState, ConcurrencyPartial](
+      ConcurrencyTracker.fold, 0L,
+      Seq(b(1000L, 1L), b(3000L, -1L)), Seq(b(2000L, 1L)))
   }
 
   test("streaming session concurrency (day-sharded state + merge-on-read) == batch prefix scan") {

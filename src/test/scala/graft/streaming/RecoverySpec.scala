@@ -171,4 +171,44 @@ class RecoverySpec extends SparkSpecBase {
     assert(results(outDir) === results(whole))
     assert(results(outDir).nonEmpty)
   }
+
+  test("StateSchemaCheck: a TWAB checkpoint written before the seal is " +
+      "refused when the query starts") {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode, StreamingQueryException}
+    val dir = Files.createTempDirectory("graft_recs_in").toString
+    val ckpt = Files.createTempDirectory("graft_recs_ck").toString
+    val outDir = Files.createTempDirectory("graft_recs_out").toString
+    val base = 1700000000000000000L
+    def start(out: org.apache.spark.sql.DataFrame) =
+      out.writeStream.format("parquet").option("path", outDir)
+        .outputMode("append").option("checkpointLocation", ckpt).start()
+    // the pre-seal tracker's plan: bare TwabState per account
+    def unsealed(account: Long, rows: Iterator[TwabTxn],
+        state: GroupState[TwabState]): Iterator[TwabRow] = {
+      rows.foreach(e => state.update(TwabState(e.event_time_us,
+        e.event_time_us, e.kobo, 0L, "0")))
+      Iterator.empty
+    }
+    writeFile(dir, Seq((1L, base, 7L, "purchase", 10.0)), "f1")
+    val old = start(Pipelines.parsedStreamFromPath(spark, dir)
+      .filter(graft.ops.Predicates.isCompleted(col("status")))
+      .withWatermark("event_ts", "0 seconds")
+      .select(col("txn_id"), col("account_id"), col("event_time_us"),
+        lit(0L).as("kobo"), col("event_ts"))
+      .as[TwabTxn]
+      .groupByKey(_.account_id)
+      .flatMapGroupsWithState[TwabState, TwabRow](OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(unsealed).toDF())
+    old.processAllAvailable(); old.stop()
+
+    writeFile(dir, Seq((2L, base + 1000000000L, 7L, "purchase", 10.0)), "f2")
+    val q = start(Pipelines.twabUpdates(spark,
+      Pipelines.parsedStreamFromPath(spark, dir)).toDF())
+    val e = intercept[StreamingQueryException] {
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(e.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+      e.getMessage)
+  }
 }
