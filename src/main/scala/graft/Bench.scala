@@ -7,9 +7,10 @@ import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.trees.TreeNode
-import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
+import org.apache.spark.sql.execution.{CacheManager, CachedData, FileSourceScanLike, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -32,7 +33,8 @@ import org.apache.spark.sql.execution.joins.{CartesianProductExec, SortMergeJoin
   * checked against the reviewed SMJ allowlist
   * ([[expectedSmj]]). Both land in the record's `metrics` map, named as
   * perfbench's traced run names the same measures; queries whose plan
-  * fails the audit are listed in `plan_flags`.
+  * fails the audit, or whose plan function leaves a cached plan behind
+  * ([[leftCached]]), are listed in `plan_flags`.
   *
   * Output discipline: the harness that runs this keeps only a bounded tail
   * of the process output, and sbt prints its own footer line after `main`
@@ -105,19 +107,39 @@ object Bench {
     // endpoint label-lookup id joins (x2: doc_a+doc_b sides)
     "q_dedup_clusters_incremental" -> 2,
     "q_hybrid_rrf" -> 1, // RRF full-outer list fusion (model-sized)
-    // RRF fusion + qrels + idcg list joins (x3, model-sized)
-    "q_retrieval_ndcg" -> 3,
+    // RRF fusion + qrels + idcg list joins (model-sized) and the qrels
+    // pool's two doc_id joins (301/997 of the corpus: large-large)
+    "q_retrieval_ndcg" -> 5,
     // cluster-label attach (corpus-sized at scale)
     "q_leakage_safe_split" -> 1)
 
-  /** Audit findings for one query's plan: any cartesian product, and more
-    * sort-merge joins than [[expectedSmj]] allows. Empty = clean. */
-  def planFlags(name: String, shape: PlanShape): Seq[String] = {
+  /** Audit findings for one query: any cartesian product, more
+    * sort-merge joins than [[expectedSmj]] allows, and any plan its plan
+    * function left in the CacheManager. Empty = clean. */
+  def planFlags(name: String, shape: PlanShape, leftCached: Int = 0): Seq[String] = {
     val allowed = expectedSmj.getOrElse(name, 0)
     Seq(
       (shape.cartesian > 0) -> s"$name: cartesian x${shape.cartesian}",
-      (shape.smj > allowed) -> s"$name: smj x${shape.smj} > expected $allowed")
+      (shape.smj > allowed) -> s"$name: smj x${shape.smj} > expected $allowed",
+      (leftCached > 0) -> s"$name: cached plan left behind x$leftCached")
       .collect { case (true, f) => f }
+  }
+
+  /** The plans the session's CacheManager holds, each substituted into
+    * every later plan with a canonically equal subtree (private in Spark). */
+  def cachedPlans(spark: SparkSession): Seq[LogicalPlan] = {
+    val f = classOf[CacheManager].getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(spark.sharedState.cacheManager)
+      .asInstanceOf[Seq[CachedData]].map(_.plan)
+  }
+
+  /** Runs `body` and returns what it added to the CacheManager: a plan
+    * function's leak, since no caller can release a frame it persisted. */
+  def leftCached[A](spark: SparkSession)(body: => A): (A, Seq[LogicalPlan]) = {
+    val before = cachedPlans(spark)
+    val out = body
+    (out, cachedPlans(spark).filterNot(p => before.exists(_ eq p)))
   }
 
   /** Task work of one timed sample. Spark posts listener events
@@ -187,10 +209,13 @@ object Bench {
     val work = new TaskWork
     spark.sparkContext.addSparkListener(work)
 
+    val leaks = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+
     /** Builds and materializes one query; None (logged) on failure. */
     def runQuery(name: String): Option[DataFrame] =
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val (df, left) = leftCached(spark)(SparkEntry.queries(name)(spark, sfDir))
+        leaks(name) = leaks(name) max left.size
         df.write.format("noop").mode("overwrite").save()
         Some(df)
       } catch { case e: Throwable =>
@@ -318,7 +343,7 @@ object Bench {
       val sampleMap = samples.map { case (n, ss) =>
         s""""$n":${ss.map(d3).mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
       val flags = samples.keys.toSeq.flatMap(n =>
-        shapes.get(n).toSeq.flatMap(planFlags(n, _)))
+        shapes.get(n).toSeq.flatMap(planFlags(n, _, leaks(n))))
       val full = record(rs, total, done, finalRec,
         extra = s""","samples":$sampleMap,"skipped_repeat":${strs(skipped)}""" +
           s""","metrics":$metricsJson,"plan_flags":${strs(flags)}""")

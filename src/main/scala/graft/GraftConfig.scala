@@ -30,7 +30,11 @@ final case class GraftConfig(
 
 object GraftConfig {
 
-  private def resolve(spark: SparkSession, sparkKey: String, envKey: String,
+  /** The one resolver for every `spark.graft.*` key: Spark conf
+    * `spark.graft.<sparkKey>`, then env var `envKey`, then `default`.
+    * The streaming sources, sinks, ingest knobs and health port use it
+    * too. */
+  def resolve(spark: SparkSession, sparkKey: String, envKey: String,
       default: String): String =
     spark.conf.getOption(s"spark.graft.$sparkKey")
       .orElse(sys.env.get(envKey))

@@ -71,7 +71,8 @@ object Dedup {
   def ngramJaccardPairs(documents: DataFrame, threshold: Double,
       maxDocId: Long, n: Int = 3): DataFrame = {
     val docs = documents.filter(col("doc_id") < maxDocId)
-    // postings reused three times (sizes + both join sides): persist
+    // held for the one action below (sf0.1, 4 cores: the family's
+    // queries 1.03-1.14x slower unheld, 1.2-1.6x checkpointed)
     val sh = shingles(docs, n).persist()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
 
@@ -81,7 +82,7 @@ object Dedup {
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
 
-    inter
+    val out = inter
       .join(broadcast(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("n_sh", "n_a")), "doc_a")
       .join(broadcast(sizes.withColumnRenamed("doc_id", "doc_b")
@@ -93,6 +94,9 @@ object Dedup {
         col("n_inter") / (col("n_a") + col("n_b") - col("n_inter"))))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "n_inter", "jaccard")
+      .localCheckpoint()
+    sh.unpersist()
+    out
   }
 
   /** Near-dup PAIRS -> duplicate CLUSTERS (what a dedup pipeline actually
@@ -301,7 +305,6 @@ object Dedup {
         Seq("doc_a"), "left")
       .join(l.select(col("doc_id").as("doc_b"), col("cluster_id").as("__cb")),
         Seq("doc_b"), "left")
-      .persist()
     val reducedEdges = mapped
       .select(coalesce(col("__ca"), col("doc_a")).as("doc_a"),
         coalesce(col("__cb"), col("doc_b")).as("doc_b"))
@@ -314,7 +317,7 @@ object Dedup {
         when(col("__cb").isNull, col("doc_b")))).as("doc_id"))
       .filter(col("doc_id").isNotNull)
       .distinct()
-    val reduced = dupClusters(reducedEdges, maxRounds).persist()
+    val reduced = dupClusters(reducedEdges, maxRounds)
 
     val freshRows = reduced.join(broadcast(freshNodes), Seq("doc_id"))
     // rep -> merged label, for reps only (reduced minus fresh nodes)
@@ -428,9 +431,6 @@ object Dedup {
       .withColumn("__sig",
         graft.sim.Similarity.lshBucketFromPlanes("v", planes))
     val mask = (1L << bitsPerBand) - 1
-    // persisted: both self-join sides reuse one signature pass instead of
-    // re-running the plane dots per side (same discipline as the winnow
-    // postings; (vec_id, band, bucket) is three scalars per posting)
     val posted = e.select(col("vec_id"),
       explode(expr(
         s"""transform(sequence(0, ${nBands - 1}), b ->
@@ -439,7 +439,6 @@ object Dedup {
           .stripMargin)).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"),
         col("bb.bucket").as("bucket"))
-      .persist()
 
     val cands = posted.as("a")
       .join(posted.as("b"),

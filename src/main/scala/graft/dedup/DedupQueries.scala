@@ -271,7 +271,7 @@ object DedupQueries {
     // over all pairs (same recursive-CTE oracle as q_dedup_clusters)
     GraftQuery("q_dedup_clusters_incremental", (s, dir) => {
       val allPairs = Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir), JaccardThreshold, JaccardMaxDocId).persist()
+        Tables.documents(s, dir), JaccardThreshold, JaccardMaxDocId)
       val corpusPairs = allPairs.filter(
         pmod(col("doc_a"), lit(10)) =!= 7 && pmod(col("doc_b"), lit(10)) =!= 7)
       val newPairs = allPairs.filter(

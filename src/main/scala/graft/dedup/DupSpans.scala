@@ -42,19 +42,6 @@ import org.apache.spark.sql.functions._
   * superset and the recheck restores exactness; only the sliver's text
   * ever shuffles). The default keeps the 8-byte posture, which is exact
   * at test scale and matches the oracle's fnv64-replay SQL.
-  *
-  * Cache ownership ([[MinHashLSH.candidatePairs]] policy, stated here
-  * for the whole family): [[dupSpans]], [[gramIndex]],
-  * [[dupPositionsIncremental]] and [[duplicatedPositions]] persist
-  * their pruned gram-proxy frame for the duration of the returned
-  * (lazy) plan's consumers and do NOT unpersist — the returned frame is
-  * lazy, so there is no in-function action to unpersist after. Blocks
-  * are corpus-gram-sized (24 B/gram) and are reclaimed by Spark's LRU
-  * eviction / ContextCleaner once the frames go out of scope; a caller
-  * that runs many unrelated queries in one session after a span pass
-  * should `spark.catalog.clearCache()` or unpersist explicitly to avoid
-  * the CacheManager substituting the cached subtree into later
-  * canonically-equal plans (the round-11 PostingsIndex measurement).
   */
 object DupSpans {
 
@@ -95,12 +82,12 @@ object DupSpans {
     // hashes; without a cache the tokenize + gram-concat + fnv64 scan
     // (the family's hottest kernel, ~2/3 of this query) ran twice.
     // The persisted frame is the PRUNED (doc_id, pos, gh) proxy — 24
-    // bytes per gram, no gram strings; ownership: cached until LRU
-    // eviction, the candidatePairs policy. r15: under verifyExact the
-    // SAME cached frame carries the gram string too (the exact-verify
-    // recheck needs it), so the gram kernel runs once on that path as
-    // well instead of re-deriving positionalGrams beside the proxy —
-    // the wider cache row is the verifyExact path's documented cost.
+    // bytes per gram, no gram strings, held for the one action below
+    // (sf0.1, 4 cores: 1.1-1.4x slower unheld or checkpointed). r15:
+    // under verifyExact the SAME cached frame carries the gram string
+    // too (the exact-verify recheck needs it), so the gram kernel runs
+    // once on that path as well instead of re-deriving positionalGrams
+    // beside the proxy — the wider cache row is that path's cost.
     val gramsP = (if (verifyExact)
         positionalGrams(documents, n).select("doc_id", "pos", "gh", "__gram")
       else positionalGrams(documents, n).select("doc_id", "pos", "gh"))
@@ -118,7 +105,7 @@ object DupSpans {
         cand.join(trueDup, "__gram")
       }
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    hits.select("doc_id", "pos").distinct()
+    val out = hits.select("doc_id", "pos").distinct()
       .withColumn("__gap",
         when(col("pos") - lag("pos", 1).over(byDoc) > n, 1).otherwise(0))
       .withColumn("__island", sum("__gap").over(byDoc))
@@ -128,6 +115,9 @@ object DupSpans {
       .withColumn("span_tokens",
         col("span_end") - col("span_start") + 1)
       .select("doc_id", "span_start", "span_end", "span_tokens")
+      .localCheckpoint()
+    gramsP.unpersist()
+    out
   }
 
   /** Per-document duplication report over the whole corpus (every doc
@@ -166,10 +156,7 @@ object DupSpans {
     * after a semi-join on the df=1 key set, so no executor ever
     * materializes a high-df list even transiently. */
   def gramIndex(documents: DataFrame, n: Int = 8): DataFrame = {
-    // persisted for the same two-consumer reason as dupSpans (df agg +
-    // the df=1 exemplar collect)
     val occ = positionalGrams(documents, n).select("gh", "doc_id", "pos")
-      .persist()
     val dfFrame = occ.select("gh", "doc_id").distinct()
       .groupBy("gh").agg(count(lit(1)).as("df"))
     val singles = occ
@@ -207,7 +194,6 @@ object DupSpans {
   def dupPositionsIncremental(index: DataFrame, batch: DataFrame,
       n: Int = 8): DataFrame = {
     val bg = positionalGrams(batch, n).select("doc_id", "pos", "gh")
-      .persist() // two consumers: the batch-df agg + the hit join
     val bdf = bg.select("gh", "doc_id").distinct()
       .groupBy("gh").agg(count(lit(1)).as("bdf"))
     val merged = bdf.join(index, Seq("gh"), "left")
@@ -249,7 +235,7 @@ object DupSpans {
     * contract. */
   def duplicatedPositions(documents: DataFrame, n: Int = 8): DataFrame = {
     val grams = positionalGrams(documents, n)
-      .select("doc_id", "pos", "gh").persist() // two consumers, as above
+      .select("doc_id", "pos", "gh")
     grams
       .join(duplicatedGramKeys(grams), "gh")
       .select("doc_id", "pos").distinct()

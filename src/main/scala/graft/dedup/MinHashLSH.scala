@@ -154,22 +154,19 @@ object MinHashLSH {
   /** Candidate pairs from banding + signature-agreement estimate.
     * Emits pairs with estimated Jaccard >= `threshold`. */
   def candidatePairs(documents: DataFrame, threshold: Double): DataFrame = {
-    // Signatures are referenced three times (banding + both sides of the
-    // verify join); persist the small (doc_id, 64-long) frame so the
-    // per-row signature scan runs once (at full scale this is a
-    // materialized signature table). Per-row, not groupBy: the signature
-    // stage shuffles nothing. Ownership note: blocks stay cached
-    // until LRU eviction — long-lived sessions calling this repeatedly
-    // should unpersist after materializing.
+    // Per-row, so no exchange shares it: held for the one action below
+    // (sf0.1, 4 cores: 1.8x slower unheld, 1.0-1.2x checkpointed)
     val sigs = signaturesPerRow(documents).persist()
-
-    bandingCandidates(sigs)
+    val out = bandingCandidates(sigs)
       .join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
       .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
       .withColumn("est_jaccard", round(expr(
         s"aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1.0D, 0.0D)), 0D, (acc, x) -> acc + x) / $NumPerms"), 6))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
+      .localCheckpoint()
+    sigs.unpersist()
+    out
   }
 
   /** The full MinHash dedup composition with EXACT verification: banding
@@ -189,16 +186,10 @@ object MinHashLSH {
     * exact-Jaccard answer the DuckDB oracle computes. Callers passing a
     * lower threshold get the same candidates-then-verify shape but only
     * S-curve recall against an exhaustive ground truth.
-    *
-    * The shingle postings are built once, persisted, and reused by the
-    * signature build, the pair-size table, and both intersection join
-    * sides (ownership: cached until LRU eviction — long-lived sessions
-    * should unpersist after materializing, same policy as
-    * [[candidatePairs]]). */
+    */
   def verifiedPairs(documents: DataFrame, threshold: Double): DataFrame = {
-    val sh = Dedup.shingles(documents).persist()
-    val cands = bandingCandidates(signaturesFromShingles(sh).persist())
-    verifyJaccard(cands, sh, threshold)
+    val sh = Dedup.shingles(documents)
+    verifyJaccard(bandingCandidates(signaturesFromShingles(sh)), sh, threshold)
   }
 
   /** The exact-verification stage shared by every candidates-then-verify
@@ -294,9 +285,7 @@ object MinHashLSH {
     * MinHashLSHSpec. */
   def incrementalVerifiedPairs(index: DataFrame, corpusText: DataFrame,
       batch: DataFrame, threshold: Double): DataFrame = {
-    // the batch is read three times (banding + semi-join + shingles) and
-    // is small by definition — persist its banded signatures
-    val batchBanded = signatureIndex(batch).persist()
+    val batchBanded = signatureIndex(batch)
     val vsCorpus = index.as("a")
       .join(batchBanded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
@@ -307,13 +296,14 @@ object MinHashLSH {
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val cands = vsCorpus.union(vsBatch).distinct().persist()
+    // once for both consumers (sf0.1, 4 cores: 0.67x persisted, 1.3-1.5x unheld)
+    val cands = vsCorpus.union(vsBatch).distinct().localCheckpoint()
 
     val touched = cands.select(col("doc_a").as("doc_id"))
       .union(cands.select(col("doc_b").as("doc_id"))).distinct()
     val sh = Dedup.shingles(
       corpusText.select("doc_id", "text").union(batch.select("doc_id", "text"))
-        .join(touched, Seq("doc_id"), "left_semi")).persist()
+        .join(touched, Seq("doc_id"), "left_semi"))
     verifyJaccard(cands, sh, threshold)
   }
 
@@ -338,12 +328,8 @@ object MinHashLSH {
     * ultra-common, so the cap is opt-in, not silent). */
   def winnowContainmentPairs(documents: DataFrame, minShared: Long,
       k: Int = 16, w: Int = 16, maxDf: Long = Long.MaxValue): DataFrame = {
-    // the winnow scan (rolling hash over every char of the corpus) is the
-    // expensive stage and the postings frame is two longs per fingerprint
-    // — persist it so the self-join's two sides (and the capped path's
-    // hot-set aggregation) reuse ONE pass instead of re-hashing the
-    // corpus 2-3x (ownership: cached until LRU eviction, same policy as
-    // candidatePairs)
+    // the winnow scan, held for the one action below (sf0.1, 4 cores:
+    // 1.05-1.12x slower unheld, 1.2x checkpointed)
     val raw = documents
       .select(col("doc_id"), explode(expr(s"graft_winnow(text, $k, $w)")).as("fp"))
       .persist()
@@ -358,12 +344,15 @@ object MinHashLSH {
           .filter(col("__df") > maxDf).select("fp")
         raw.join(broadcast(hot), Seq("fp"), "left_anti")
       }
-    fps.as("a")
+    val out = fps.as("a")
       .join(fps.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_fps"))
       .filter(col("n_shared_fps") >= minShared)
+      .localCheckpoint()
+    raw.unpersist()
+    out
   }
 
   /** Containment composition with EXACT verification: winnow-fingerprint
@@ -418,8 +407,15 @@ object MinHashLSH {
     * a wider guaranteed hamming radius at the cost of smaller (noisier)
     * bucket keys; the default 4x16 is the precision-leaning choice. */
   def simhashPairs(documents: DataFrame, maxHamming: Int = 3,
-      nChunks: Int = 4): DataFrame =
-    simhashPairsFromSignatures(simhash(documents), maxHamming, nChunks)
+      nChunks: Int = 4): DataFrame = {
+    // per-row, so no exchange shares it: held for the one action below
+    // (sf0.1, 4 cores: 3.1-3.8x slower unheld, 1.1-1.2x checkpointed)
+    val sigs = simhash(documents).persist()
+    val out = simhashPairsFromSignatures(sigs, maxHamming, nChunks)
+      .localCheckpoint()
+    sigs.unpersist()
+    out
+  }
 
   /** The chunk-bucketed hamming candidate stage over an ALREADY-COMPUTED
     * `(doc_id, simhash)` signature frame — the machinery [[simhashPairs]]
@@ -436,10 +432,7 @@ object MinHashLSH {
       s"$nChunks-chunk bucketing only guarantees recall for hamming <= ${nChunks - 1}")
     val bits = 64 / nChunks
     val mask = (1L << bits) - 1
-    // tiny (doc_id, long) frame reused on both sides of the self-join —
-    // persist so the signature pass over the corpus runs once, not twice
-    val sh = signatures.persist()
-    val chunked = sh.select(col("doc_id"), col("simhash"),
+    val chunked = signatures.select(col("doc_id"), col("simhash"),
         explode(array((0 until nChunks).map(k =>
           struct(lit(k).as("k"),
             expr(s"(shiftright(simhash, ${k * bits}) & $mask)").as("chunk"))): _*)).as("c"))
@@ -489,7 +482,6 @@ object MinHashLSH {
     // SLOWER at sf0.1 (1.8 → 2.7 s) than streaming only the matched
     // postings rows — the opposite trade of the selective-candidate
     // callers (r14; see verifyJaccard)
-    verifyJaccardPostings(cands, Dedup.shingles(documents).persist(),
-      threshold)
+    verifyJaccardPostings(cands, Dedup.shingles(documents), threshold)
   }
 }

@@ -169,8 +169,7 @@ object Multimodal {
   def nearDupPairs(documents: DataFrame, threshold: Double,
       nChunks: Int = 32, maxHamming: Int = 27,
       frameWidth: Int = 64): DataFrame = {
-    // postings feed the signature pass AND both verify sides: persist
-    val sh = framePostings(documents, frameWidth).persist()
+    val sh = framePostings(documents, frameWidth)
     val cands = graft.dedup.MinHashLSH.simhashPairsFromSignatures(
       frameSignatures(sh), maxHamming, nChunks)
     graft.dedup.MinHashLSH.verifyJaccard(cands, sh, threshold)
@@ -193,7 +192,7 @@ object Multimodal {
       nChunks: Int = 32, maxHamming: Int = 27,
       frameWidth: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = framePostings(documents, frameWidth).persist()
+    val sh = framePostings(documents, frameWidth)
     val cands = graft.dedup.MinHashLSH.simhashPairsFromSignatures(
       frameSignatures(sh), maxHamming, nChunks)
     val pairs = graft.dedup.MinHashLSH.verifyJaccard(cands, sh, threshold)
@@ -222,7 +221,7 @@ object Multimodal {
   def exhaustiveNearDupPairs(documents: DataFrame, threshold: Double,
       frameWidth: Int = 64): DataFrame = {
     require(threshold > 0.0, "inverted-index exhaustiveness needs jaccard > 0")
-    val sh = framePostings(documents, frameWidth).persist()
+    val sh = framePostings(documents, frameWidth)
     val cands = sh.as("a")
       .join(sh.as("b"),
         col("a.shingle") === col("b.shingle") &&

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed EXACT prefix scan (running sum) without funnelling the
   * frame through one reducer — the classic two-pass parallel scan:
@@ -26,9 +25,9 @@ object PrefixScan {
 
   /** Running sum of `deltaCol` in ascending (`tsCol`, `deltaCol`) order.
     * Output columns: (tsCol, deltaCol, running). Two passes over the
-    * range-partitioned frame (persisted between them — ownership: freed
-    * via the returned plan's lineage on LRU eviction, the same policy as
-    * the dedup postings caches). */
+    * range-partitioned RDD; the second re-reads the first's shuffle
+    * output (Spark skips a shuffle stage whose map output exists), so
+    * nothing is persisted. */
   def runningSum(df: DataFrame, tsCol: String, deltaCol: String,
       partitions: Int = 32): DataFrame = {
     val spark = df.sparkSession
@@ -39,7 +38,6 @@ object PrefixScan {
       .repartitionByRange(partitions, col(tsCol), col(deltaCol))
       .sortWithinPartitions(tsCol, deltaCol)
       .rdd
-    part.persist(StorageLevel.MEMORY_AND_DISK)
     // pass 1: per-partition totals — `partitions` rows to the driver
     val sums = part
       .mapPartitionsWithIndex((i, it) =>

@@ -105,10 +105,9 @@ object Opq {
     // expensive scan here, and the PQ pipeline downstream runs several
     // actions (meta, grid stats, training sample, encode, search) that
     // would each recompute it. Production materializes the transformed
-    // corpus to storage after this one map pass; in-session, persist()
-    // makes the variance job below populate the cache and every later
-    // action reuse it (the rotated frame is d longs per vector — far
-    // smaller than the text corpus PQ exists to compress)
+    // corpus to storage after this one map pass; in-session, an eager
+    // localCheckpoint computes it once for every action (d longs per
+    // vector; sf0.1, 4 cores: 0.88-0.94x the persist it replaced)
     val rotated: DataFrame = u
       .withColumn("g", transform_(col("v"), x =>
         least(floor((x - lit(mn)) / lit(st)).cast("long"),
@@ -117,7 +116,7 @@ object Opq {
         aggregate(zip_with(row, col("g"), (a, b) => a * b),
           lit(0L), (acc, x) => acc + x)))
       .select(col("vec_id"), col("rot"))
-      .persist()
+      .localCheckpoint()
 
     val vsum = udaf(Similarity.VecSumAgg)
     val mom = rotated.agg(

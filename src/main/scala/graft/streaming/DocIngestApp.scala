@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.GraftSession
+import graft.{GraftConfig, GraftSession}
 import graft.text.TextAnalysis
 
 /** Application entrypoint for the CONTINUOUS training-data ingest side —
@@ -30,7 +30,7 @@ import graft.text.TextAnalysis
   */
 object DocIngestApp {
 
-  /** Ingest knobs, resolved with the same discipline as [[graft.GraftConfig]]
+  /** Ingest knobs, resolved by [[graft.GraftConfig.resolve]]
     * (spark conf > env var > oracle-verified default — the defaults are
     * exactly `q_corpus_curate`'s arguments, so an unconfigured ingest
     * reproduces the batch curator). */
@@ -38,17 +38,11 @@ object DocIngestApp {
       watermarkDelay: String)
 
   object IngestConfig {
-    private def resolve(spark: SparkSession, sparkKey: String,
-        envKey: String, default: String): String =
-      spark.conf.getOption(s"spark.graft.$sparkKey")
-        .orElse(sys.env.get(envKey))
-        .getOrElse(default)
-
     def load(spark: SparkSession): IngestConfig = IngestConfig(
-      lang = resolve(spark, "ingestLang", "GRAFT_INGEST_LANG", "en"),
-      minQuality = resolve(spark, "ingestMinQuality",
+      lang = GraftConfig.resolve(spark, "ingestLang", "GRAFT_INGEST_LANG", "en"),
+      minQuality = GraftConfig.resolve(spark, "ingestMinQuality",
         "GRAFT_INGEST_MIN_QUALITY", "0.5").toDouble,
-      watermarkDelay = resolve(spark, "ingestWatermarkDelay",
+      watermarkDelay = GraftConfig.resolve(spark, "ingestWatermarkDelay",
         "GRAFT_INGEST_WATERMARK_DELAY", "1 hour"))
   }
 

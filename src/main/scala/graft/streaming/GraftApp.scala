@@ -7,10 +7,16 @@ import graft.{GraftConfig, GraftSession, Tables}
 
 /** Application entrypoint — the analog of the reference's `main()`
   * (`ABBankStreamProcessorApplication.java`: load config, build the
-  * topology, start, await). One shared parsed CDC stream fans into the
-  * five pipelines, each owning its sink and (for the stateful ones) its
-  * state store; thresholds come from [[GraftConfig]] (spark conf >
-  * `ABBANK_*` env vars > oracle-verified defaults).
+  * topology, start, await). [[start]] launches 12 streaming queries: the
+  * five reference pipelines, the rolling-spend and TWAB extensions, the
+  * two KTable [[DimStore]]s, the two-hop enrichment, and the funnel and
+  * 3-step pattern trackers. Each owns its sink and (for the stateful
+  * ones) its state store. They share the parsed stream's plan, not its
+  * rows: every query opens its own source scan and decodes each event
+  * again (perfbench's `stream_app_backlog` measured
+  * `source.rows_per_event` = 10.03); decoding once is ROADMAP item 1.
+  * Thresholds come from [[GraftConfig]] (spark conf > `ABBANK_*` env
+  * vars > oracle-verified defaults).
   *
   * Source and sinks are config-driven ([[Sources]]): files (default) or
   * `format("kafka")` the day a connector jar is present — a `--conf`
@@ -22,8 +28,8 @@ import graft.{GraftConfig, GraftSession, Tables}
   */
 object GraftApp {
 
-  /** Start all five pipelines; returns the running queries (callers —
-    * and tests — control their lifecycle). */
+  /** Start the 12 queries; returns them running (callers — and tests —
+    * control their lifecycle). */
   def start(spark: SparkSession, srcDir: String, outBase: String): Seq[StreamingQuery] = {
     val cfg = GraftConfig.load(spark)
     // transport chosen by spark.graft.source (files | files-avro | kafka)
@@ -86,8 +92,8 @@ object GraftApp {
     // ops sidecar (reference ABBankStreamsApp.java:78-79 starts its
     // HealthServer before awaiting the topology); registered BEFORE the
     // queries so their started events are tracked
-    val healthPort = spark.conf.getOption("spark.graft.healthPort")
-      .orElse(sys.env.get("ABBANK_HEALTH_PORT")).map(_.toInt).getOrElse(8080)
+    val healthPort =
+      GraftConfig.resolve(spark, "healthPort", "ABBANK_HEALTH_PORT", "8080").toInt
     val health = new HealthServer(spark, healthPort).start()
     try {
       val queries = start(spark, srcDir, outBase)

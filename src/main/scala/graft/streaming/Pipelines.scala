@@ -10,8 +10,10 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
 
 /** The reference's five stream pipelines recomposed as Structured Streaming
   * (reference `topology/ABBankTopology.java:149-153` fans one shared parsed
-  * stream into five subgraphs; here one parsed streaming DataFrame feeds
-  * five `writeStream` sinks, or `foreachBatch` shares a single scan).
+  * stream into five subgraphs). Here each pipeline is its own streaming
+  * query over the parsed stream's plan, so each one scans and decodes the
+  * source itself; [[fanOutStateless]] shares one scan per micro-batch
+  * across stateless sinks, but no app calls it yet (ROADMAP item 1).
   *
   * Semantics choices (SURVEY §2.5): event time = envelope record time
   * (`event_ts`); NO grace -> `withWatermark(_, "0 seconds")`; emission on

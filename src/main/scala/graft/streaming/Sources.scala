@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
+import graft.GraftConfig
 import graft.cdc.{AvroWire, EnvelopeOps}
 
 /** Config-driven source/sink seam — the day a Kafka connector jar lands on
@@ -27,7 +28,7 @@ import graft.cdc.{AvroWire, EnvelopeOps}
   * and everything downstream (Confluent frame decode, envelope parse,
   * upsert filter, event-time derivation) is shared, transport-blind code.
   *
-  * Resolution (same precedence discipline as [[graft.GraftConfig]]):
+  * Resolution ([[graft.GraftConfig.resolve]]: spark conf > env var > default):
   *   - `spark.graft.source` / `GRAFT_SOURCE`: `files` (default; plain
   *     parquet events), `files-avro` (wire-framed fixtures), `kafka`.
   *   - `spark.graft.kafka.bootstrapServers` / `KAFKA_BOOTSTRAP_SERVERS`.
@@ -45,10 +46,6 @@ object Sources {
   /** Output topic prefix (`ABBankStreamsConfig.java:24-28`). */
   val NotificationTopicPrefix = "abbank.notifications."
 
-  private def resolve(spark: SparkSession, key: String, env: String,
-      default: String): String =
-    spark.conf.getOption(key).orElse(sys.env.get(env)).getOrElse(default)
-
   /** Transport-blind decode: `(key, value)` binary frames → parsed
     * upserts-only transactions with `event_ts`. This is the ONE chain all
     * three source branches share — a test driving fixture bytes through it
@@ -61,7 +58,7 @@ object Sources {
   /** The topology's input stream, transport chosen by config. `srcDir` is
     * the monitored directory for the file branches (ignored by kafka). */
   def cdcSource(spark: SparkSession, srcDir: String): DataFrame =
-    resolve(spark, "spark.graft.source", "GRAFT_SOURCE", "files") match {
+    GraftConfig.resolve(spark, "source", "GRAFT_SOURCE", "files") match {
       case "kafka"      => parsedFromWire(kafkaFrames(spark))
       case "files-avro" => Pipelines.parsedWireStreamAvro(spark, srcDir)
       case "files"      => Pipelines.parsedStream(spark, srcDir)
@@ -74,10 +71,10 @@ object Sources {
   private def kafkaFrames(spark: SparkSession): DataFrame =
     spark.readStream.format("kafka")
       .option("kafka.bootstrap.servers",
-        resolve(spark, "spark.graft.kafka.bootstrapServers",
+        GraftConfig.resolve(spark, "kafka.bootstrapServers",
           "KAFKA_BOOTSTRAP_SERVERS", "localhost:9092"))
       .option("subscribe",
-        resolve(spark, "spark.graft.kafka.topic", "ABBANK_TXN_TOPIC",
+        GraftConfig.resolve(spark, "kafka.topic", "ABBANK_TXN_TOPIC",
           DefaultTxnTopic))
       .option("startingOffsets", "earliest")
       .load()
@@ -93,7 +90,7 @@ object Sources {
       : StreamingQuery = {
     val spark = df.sparkSession
     val base: DataStreamWriter[Row] =
-      resolve(spark, "spark.graft.sink", "GRAFT_SINK", "parquet") match {
+      GraftConfig.resolve(spark, "sink", "GRAFT_SINK", "parquet") match {
         case "kafka" =>
           val keyCol = if (df.columns.contains("account_id")) col("account_id")
             else lit(null)
@@ -102,7 +99,7 @@ object Sources {
           EnvelopeOps.kafkaWireFormat(df, keyCol, valueCol)
             .writeStream.format("kafka")
             .option("kafka.bootstrap.servers",
-              resolve(spark, "spark.graft.kafka.bootstrapServers",
+              GraftConfig.resolve(spark, "kafka.bootstrapServers",
                 "KAFKA_BOOTSTRAP_SERVERS", "localhost:9092"))
             .option("topic", s"$NotificationTopicPrefix$name")
         case "parquet" =>

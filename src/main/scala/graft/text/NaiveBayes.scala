@@ -43,12 +43,7 @@ object NaiveBayes {
     documents.filter(col("doc_id") % holdoutMod =!= 0)
 
   /** Per-class token counts over the train slice: (label, term, term_n).
-    * One explode + one hash aggregation; vocabulary-sized output.
-    * Persisted: the grid, class totals, vocabulary size, and OOV
-    * constants all derive from this one aggregate — without the persist
-    * each subtree re-plans the corpus scan + explode (no static exchange
-    * reuse fires across the differing downstream aggregations), which at
-    * 100 TB is four corpus passes instead of one. */
+    * One explode + one hash aggregation; vocabulary-sized output. */
   private def termCounts(documents: DataFrame, labelCol: String,
       holdoutMod: Long): DataFrame =
     trainSlice(documents, holdoutMod)
@@ -56,7 +51,6 @@ object NaiveBayes {
         explode(split(col("text"), " ")).as("term"))
       .groupBy("label", "term")
       .agg(count(lit(1)).as("term_n"))
-      .persist()
 
   /** The fitted model: for EVERY (class, train-vocabulary term) pair, the
     * raw count and the add-one-smoothed log-likelihood in integer

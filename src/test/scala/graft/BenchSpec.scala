@@ -61,6 +61,22 @@ class BenchSpec extends SparkSpecBase {
     assert(Bench.planFlags("q_unlisted", oneSmj.copy(smj = 0)).isEmpty)
   }
 
+  test("a plan function that leaves a cached plan behind is flagged") {
+    val clean = Bench.PlanShape(exchanges = 0, broadcasts = 0,
+      pushedScans = 0, smj = 0, cartesian = 0, inMemory = 0)
+    val (_, none) = Bench.leftCached(spark)(spark.range(10).toDF())
+    assert(none.isEmpty)
+    val df = spark.range(7919).select((col("id") * 3).as("x"))
+    val (_, left) = Bench.leftCached(spark)(df.persist())
+    try {
+      assert(left.size === 1)
+      assert(Bench.planFlags("q_leaky", clean, leftCached = left.size) ===
+        Seq("q_leaky: cached plan left behind x1"))
+      assert(Bench.planFlags("q_leaky", clean).isEmpty)
+    } finally df.unpersist()
+    assert(!Bench.cachedPlans(spark).exists(p => left.exists(_ eq p)))
+  }
+
   test("a sample counts the classes it compiles; a warm repeat compiles none") {
     val sc = spark.sparkContext
     val work = new Bench.TaskWork

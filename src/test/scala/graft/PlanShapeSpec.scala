@@ -358,10 +358,11 @@ class PlanShapeSpec extends SparkSpecBase {
   }
 
   test("exact percentiles: the result is a plan literal (selection ran at construction)") {
-    val plan = formattedPlan(
-      SparkEntry.queries("q_exact_percentiles")(spark, sf0001))
+    val df = SparkEntry.queries("q_exact_percentiles")(spark, sf0001)
+    val plan = formattedPlan(df)
     assert(plan.contains("LocalTableScan"), plan.take(2000))
     assert(!plan.contains("Exchange"), plan.take(2000))
+    assert(df.count() > 0)
   }
 
   test("MAD outliers: medians broadcast back; no sort, no window, no SMJ") {
@@ -373,6 +374,7 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"),
       plan.take(2000))
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    assert(df.count() > 0)
   }
 
   test("training manifest: at most 4 text scans (2 train-corpus + eval-slice reads)") {

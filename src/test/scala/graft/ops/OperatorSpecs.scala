@@ -236,15 +236,6 @@ class FeaturesSpec extends SparkSpecBase {
       ("B", 0.5, 1L, 900L), ("B", 0.9, 2L, 1100L), ("B", 0.99, 2L, 1100L)))
   }
 
-  test("q_exact_percentiles and q_mad_outliers leave nothing cached") {
-    // suites share one session: start from an empty cache
-    spark.catalog.clearCache()
-    Seq("q_exact_percentiles", "q_mad_outliers").foreach { name =>
-      assert(graft.SparkEntry.queries(name)(spark, sf0001).count() > 0, name)
-      assert(spark.sharedState.cacheManager.isEmpty, name)
-    }
-  }
-
   test("MAD outliers: whale flagged without dragging the gate; zero-MAD group calm") {
     // A: kobo 100,200,300,400,10000 -> med 300, adevs {200,100,0,100,9700}
     // -> MAD 100; only the whale exceeds 3*MAD (a mean/sigma gate would
