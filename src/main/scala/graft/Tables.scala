@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test corpus (see /root/repo/TESTDATA.md).
   *
@@ -27,11 +28,13 @@ object Tables {
     deriveEventTime(table(spark, sfDir, "events"))
   }
 
-  /** Schema-adaptive event-time derivation. Accepts the raw frame with `ts`
-    * as TIMESTAMP / TIMESTAMP_NTZ (micros) or LongType (epoch-nanos), or an
+  /** Schema-adaptive event-time derivation, as one `select` over
+    * [[eventColumns]]. Accepts the raw frame with `ts` as TIMESTAMP /
+    * TIMESTAMP_NTZ (micros) or LongType (epoch-nanos), or an
     * already-renamed `ts_ns` long, and emits the engine's event-time
     * contract regardless of source encoding:
-    *   - `ts_ns`      LongType epoch-nanos (raw resolution)
+    *   - `ts_ns`      LongType epoch-nanos (raw resolution), at the
+    *                  position of the column it derives from
     *   - `ts_us`      LongType epoch-micros (exact integer event time; all
     *                  window arithmetic uses this to stay engine-agnostic)
     *   - `event_ts`   TimestampType at micros (matches the DuckDB oracle's
@@ -40,39 +43,54 @@ object Tables {
     * is epoch-exact.
     */
   def deriveEventTime(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    // Long-sourced ns values (parquet int64 or a caller-renamed ts_ns) are a
-    // CLAIM of nanos, not a guarantee — if a caller mislabels micros/millis
-    // as ts_ns, every window/join downstream silently drifts 1000×
-    // (VERDICT r6/r7's recurring bug class). Guard per-row in codegen:
-    // modern epoch-nanos are ≥1e17 (~1973-03); a positive value below that
-    // is micros/millis/seconds wearing the wrong label → loud error.
-    // Nulls and non-positive values pass (pre-1970 nanos are negative).
-    val fromLong = df.columns.contains("ts_ns") ||
-      df.schema("ts").dataType == LongType
-    val minPlausibleNs = 100000000000000000L // 1e17
-    val withNs =
-      if (df.columns.contains("ts_ns")) df
-      else df.schema("ts").dataType match {
-        case LongType => df.withColumnRenamed("ts", "ts_ns")
+    val ev = eventColumns(df.schema)
+    val source = if (df.columns.contains("ts_ns")) "ts_ns" else "ts"
+    val derived = Seq("ts_us", "event_ts")
+    df.select(df.columns.toSeq.map {
+      case `source` => ev("ts_ns").as("ts_ns")
+      case c if derived.contains(c) => ev(c).as(c)
+      case c => col(c)
+    } ++ derived.filterNot(df.columns.contains).map(c => ev(c).as(c)): _*)
+  }
+
+  /** The columns of a raw events frame with schema `schema`, by name, as
+    * expressions over its own columns: `ts_ns`, `ts_us` and `event_ts` are
+    * derived from whichever `ts` encoding the frame carries (see
+    * [[deriveEventTime]]); any other name is the column itself. The stream
+    * decode reads event time through this without a projection of its own.
+    */
+  private[graft] def eventColumns(schema: StructType): String => Column = {
+    val (ns, us) =
+      if (schema.fieldNames.contains("ts_ns") || schema("ts").dataType == LongType) {
+        // Long-sourced ns values (parquet int64 or a caller-renamed ts_ns)
+        // are a CLAIM of nanos, not a guarantee — if a caller mislabels
+        // micros/millis as ts_ns, every window/join downstream silently
+        // drifts 1000× (VERDICT r6/r7's recurring bug class). Guard per-row
+        // in codegen: modern epoch-nanos are ≥1e17 (~1973-03); a positive
+        // value below that is micros/millis/seconds wearing the wrong label
+        // → loud error. Nulls and non-positive values pass (pre-1970 nanos
+        // are negative).
+        val raw = col(if (schema.fieldNames.contains("ts_ns")) "ts_ns" else "ts")
+        val minPlausibleNs = 100000000000000000L // 1e17
+        val ns = when(raw.isNull || raw <= 0L || raw >= minPlausibleNs, raw)
+          .otherwise(raise_error(concat(
+            lit("[graft] ts_ns unit mismatch: "), raw.cast("string"),
+            lit(s" is positive but < 1e17 — epoch-micros/millis mislabeled as nanos? " +
+              "Pass the raw frame to Tables.deriveEventTime instead of renaming."))))
+        (ns, call_function("div", ns, lit(1000)))
+      } else schema("ts").dataType match {
         case TimestampType | TimestampNTZType =>
-          // select (not withColumn+drop) keeps ts_ns at ts's position
-          val tsNs = (unix_micros(col("ts").cast(TimestampType)) * 1000L).as("ts_ns")
-          df.select(df.columns.map(c => if (c == "ts") tsNs else col(c)).toSeq: _*)
+          val us = unix_micros(col("ts").cast(TimestampType))
+          (us * 1000L, us)
         case other => throw new IllegalArgumentException(
           s"events.ts has unsupported type $other — expected TIMESTAMP, TIMESTAMP_NTZ, or BIGINT epoch-nanos")
       }
-    val guarded =
-      if (!fromLong) withNs
-      else withNs.withColumn("ts_ns",
-        when(col("ts_ns").isNull || col("ts_ns") <= 0L ||
-            col("ts_ns") >= minPlausibleNs, col("ts_ns"))
-          .otherwise(raise_error(concat(
-            lit("[graft] ts_ns unit mismatch: "), col("ts_ns").cast("string"),
-            lit(s" is positive but < 1e17 — epoch-micros/millis mislabeled as nanos? " +
-              "Pass the raw frame to Tables.deriveEventTime instead of renaming.")))))
-    guarded.withColumn("ts_us", expr("ts_ns div 1000"))
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
+    {
+      case "ts_ns" => ns
+      case "ts_us" => us
+      case "event_ts" => timestamp_micros(us)
+      case c => col(c)
+    }
   }
 
   def customer(spark: SparkSession, sfDir: String): DataFrame =

@@ -11,8 +11,11 @@ import graft.ops.LatestByKey
 object CdcQueries {
 
   def queries: Seq[GraftQuery] = Seq(
-    // S4 + P1-P5: envelope synthesis -> typed parse (conversions of §1.2)
-    GraftQuery("q_envelope_parse", (s, dir) => parsed(s, dir),
+    // S4 + P1-P5: envelope synthesis -> typed parse (conversions of §1.2),
+    // through the nested envelope struct so the oracle checks the round trip
+    GraftQuery("q_envelope_parse", (s, dir) =>
+      EnvelopeOps.parseTxnEnvelope(
+        EnvelopeOps.synthesizeTxnEnvelope(Tables.events(s, dir))),
       P +
       "SELECT txn_id, account_id, txn_ref, txn_type, amount, currency, status, event_time_ms, event_time_us, op FROM txns"),
 

@@ -5,12 +5,23 @@ import org.apache.spark.sql.functions._
 
 /** CDC envelope synthesis + parsing over the `events` test table.
   *
-  * The test corpus has no real Kafka/Avro feed, so the batch queries
-  * synthesize the reference's Debezium-style envelope from `events` columns
-  * deterministically, then parse it back with the exact conversion rules of
-  * the reference (`model/TransactionEvent.java:39-64`, `util/CdcParser.java`).
-  * The DuckDB oracle reproduces only the *flat output* — the nested
-  * construction/parse round-trip is the Spark-side operator under test.
+  * The test corpus has no real Kafka/Avro feed, so the envelope mapping is
+  * written once, as per-field rules: [[afterImage]] builds each Debezium
+  * `after` field from the event columns, and [[parseRules]] turns each
+  * `after` field into a flat transaction column with the exact conversion
+  * rules of the reference (`model/TransactionEvent.java:39-64`,
+  * `util/CdcParser.java`). Both take a field accessor, so the same rules
+  * run on two paths:
+  *   - nested: [[synthesizeTxnEnvelope]] builds the envelope struct and
+  *     [[parseTxnEnvelope]] reads a real one back. The wire, Kafka and
+  *     serde paths (`AvroWire`, `Sources.parsedFromWire`, the JSON seams)
+  *     and the `q_envelope_parse` query run this round trip.
+  *   - flat: [[parsedTransactions]] (batch) and
+  *     `Pipelines.parsedStreamFromPath` (streaming) apply the parse rules
+  *     straight to the event columns in one projection, so Catalyst never
+  *     sees the struct it would only collapse away again on every trigger.
+  * The DuckDB oracle reproduces only the *flat output*; `EnvelopeOpsSpec`
+  * pins the flat path to the nested round trip.
   *
   * Analog mapping (events -> banking):
   *   event_id -> TRANSACTION_ID, user_id -> ACCOUNT_ID, value -> AMOUNT,
@@ -45,22 +56,51 @@ object EnvelopeOps {
       .when(eventId % 10 === 2, "r")
       .otherwise("c")
 
+  /** MicroTimestamp micros -> epoch millis (SQL `div`, truncating). */
+  private def millis(micros: Column): Column =
+    call_function("div", micros, lit(1000))
+
+  /** The envelope's `after` image, field by field, over the event columns
+    * named through `ev`. Ids are carried as doubles (the Avro wire type
+    * for Oracle NUMBER) so the parse rules exercise the reference's
+    * double->long conversion (`util/CdcParser.java:67-70`). */
+  private def afterImage(ev: String => Column): Seq[(String, Column)] = Seq(
+    "TRANSACTION_ID" -> ev("event_id").cast("double"),
+    "ACCOUNT_ID" -> ev("user_id").cast("double"),
+    "TRANSACTION_REF" -> concat(lit("TXN-"), ev("event_id")),
+    "TRANSACTION_TYPE" -> txnType(ev("event_type")),
+    "AMOUNT" -> ev("value"),
+    "CURRENCY" -> currency(ev("user_id")),
+    "STATUS" -> status(ev("event_type")),
+    "INITIATED_AT" -> ev("ts_us"),                       // MicroTimestamp
+    "COMPLETED_AT" -> (ev("ts_us") + 1000000))
+
+  /** Parse rules: each flat transaction column from the `after` field
+    * accessor and the op code, applying the reference's conversions:
+    * double id -> long, MicroTimestamp micros -> millis
+    * (`model/TransactionEvent.java:87-104`). Null-safe like the reference:
+    * malformed rows become nulls, never failures. */
+  private def parseRules(after: String => Column, op: Column): Seq[(String, Column)] = Seq(
+    "txn_id" -> after("TRANSACTION_ID").cast("long"),
+    "account_id" -> after("ACCOUNT_ID").cast("long"),
+    "txn_ref" -> after("TRANSACTION_REF"),
+    "txn_type" -> after("TRANSACTION_TYPE"),
+    "amount" -> after("AMOUNT"),
+    "currency" -> coalesce(after("CURRENCY"), lit("NGN")),
+    "status" -> after("STATUS"),
+    "event_time_ms" -> millis(after("INITIATED_AT")),
+    "event_time_us" -> after("INITIATED_AT"),
+    "op" -> op)
+
+  private def named(cols: Seq[(String, Column)]): Seq[Column] =
+    cols.map { case (n, c) => c.as(n) }
+
   /** events (from [[graft.Tables.events]]) -> one nested `envelope` column
-    * shaped like [[Schemas.transactionEnvelope]]. Ids are carried as doubles
-    * (the Avro wire type for Oracle NUMBER) so the parse step exercises the
-    * reference's double->long conversion (`util/CdcParser.java:67-70`). */
+    * shaped like [[Schemas.transactionEnvelope]], `after` built by
+    * [[afterImage]]. */
   def synthesizeTxnEnvelope(events: DataFrame): DataFrame = {
-    val after = struct(
-      col("event_id").cast("double").as("TRANSACTION_ID"),
-      col("user_id").cast("double").as("ACCOUNT_ID"),
-      concat(lit("TXN-"), col("event_id")).as("TRANSACTION_REF"),
-      txnType(col("event_type")).as("TRANSACTION_TYPE"),
-      col("value").as("AMOUNT"),
-      currency(col("user_id")).as("CURRENCY"),
-      status(col("event_type")).as("STATUS"),
-      col("ts_us").as("INITIATED_AT"),                       // MicroTimestamp
-      expr("ts_us + 1000000").as("COMPLETED_AT")
-    )
+    val after = struct(named(afterImage(col)): _*)
+    val tsMs = millis(col("ts_us"))
     events.select(
       struct(
         // typed null of the same struct shape (insert events carry no before-image)
@@ -70,50 +110,48 @@ object EnvelopeOps {
           lit("3.2.0").as("version"),
           lit("oracle").as("connector"),
           lit("abbank").as("name"),
-          expr("ts_us div 1000").as("ts_ms"),
+          tsMs.as("ts_ms"),
           lit("ORCLCDB").as("db"),
           lit("ABBANK").as("schema"),
           lit("TRANSACTIONS").as("table"),
           col("event_id").cast("string").as("scn")
         ).as("source"),
         opCode(col("event_id")).as("op"),
-        expr("ts_us div 1000").as("ts_ms"),
+        tsMs.as("ts_ms"),
         col("ts_us").as("ts_us"),
         col("ts_ns").as("ts_ns")
       ).as("envelope"))
   }
 
-  /** Envelope -> flat typed transaction row, applying the reference's
-    * conversions: double id -> long, MicroTimestamp micros -> millis
-    * (`model/TransactionEvent.java:87-104`). Null-safe like the reference:
-    * malformed rows become nulls, never failures. */
+  /** Envelope -> flat typed transaction row: [[parseRules]] over the
+    * nested `envelope.after` fields. */
   def parseTxnEnvelope(env: DataFrame): DataFrame =
-    env.select(
-      col("envelope.after.TRANSACTION_ID").cast("long").as("txn_id"),
-      col("envelope.after.ACCOUNT_ID").cast("long").as("account_id"),
-      col("envelope.after.TRANSACTION_REF").as("txn_ref"),
-      col("envelope.after.TRANSACTION_TYPE").as("txn_type"),
-      col("envelope.after.AMOUNT").as("amount"),
-      coalesce(col("envelope.after.CURRENCY"), lit("NGN")).as("currency"),
-      col("envelope.after.STATUS").as("status"),
-      expr("envelope.after.INITIATED_AT div 1000").as("event_time_ms"),
-      col("envelope.after.INITIATED_AT").as("event_time_us"),
-      col("envelope.op").as("op"))
+    env.select(named(parseRules(f => col(s"envelope.after.$f"),
+      col("envelope.op"))): _*)
 
-  /** P1+P2+P4 of the reference pre-pipeline: drop null envelopes, drop
-    * deletes (tombstones), drop invalid account ids
+  /** The flat decode: the parsed transaction columns as expressions over
+    * the event columns named through `ev` — [[parseRules]] applied to
+    * [[afterImage]] with no envelope struct in between. */
+  private[graft] def decodeEvents(ev: String => Column): Seq[(String, Column)] =
+    parseRules(afterImage(ev).toMap, opCode(ev("event_id")))
+
+  /** P1+P2+P4 of the reference pre-pipeline as one predicate over the
+    * parsed columns named through `txn`: drop null envelopes, drop deletes
+    * (tombstones), drop invalid account ids
     * (`topology/ABBankTopology.java:87-99`). Keeps c/u/r — snapshot reads
     * are processed like inserts (reference test `ABBankTopologyTest.java:243-250`). */
-  def upsertsOnly(parsed: DataFrame): DataFrame =
-    parsed
-      .filter(col("txn_id").isNotNull)
-      .filter(col("op") =!= "d")
-      .filter(col("account_id").isNotNull && col("account_id") =!= 0)
+  private[graft] def isUpsert(txn: String => Column): Column =
+    txn("txn_id").isNotNull && txn("op") =!= "d" &&
+      txn("account_id").isNotNull && txn("account_id") =!= 0
 
-  /** Full pre-pipeline from raw events: synthesize -> parse. Deletes kept;
-    * callers needing upserts apply [[upsertsOnly]]. */
+  /** [[isUpsert]] over a parsed frame. */
+  def upsertsOnly(parsed: DataFrame): DataFrame = parsed.filter(isUpsert(col))
+
+  /** Full pre-pipeline from raw events in one `select` ([[decodeEvents]]);
+    * rows equal `parseTxnEnvelope(synthesizeTxnEnvelope(events))`. Deletes
+    * kept; callers needing upserts apply [[upsertsOnly]]. */
   def parsedTransactions(events: DataFrame): DataFrame =
-    parseTxnEnvelope(synthesizeTxnEnvelope(events))
+    events.select(named(decodeEvents(col)): _*)
 
   /** S1 deserialization seam: a string `payload` column carrying a
     * JSON-encoded CDC envelope -> typed nested envelope struct. This is the

@@ -53,22 +53,35 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
 object Pipelines {
 
   /** Streaming analog of the shared pre-pipeline: file-source stream of raw
-    * events -> synthesized envelope -> parsed typed txns + `event_ts`.
-    * (In production the source would be `format("kafka")` + `from_avro`;
-    * the envelope synthesis/parse and everything downstream is identical.) */
+    * events -> upsert-only parsed typed txns + `event_ts`, decoded by
+    * [[parsedStreamFromPath]]. (In production the source would be
+    * `format("kafka")` + `from_avro`, decoded by [[Sources.parsedFromWire]]
+    * through the nested envelope; the parse rules and everything
+    * downstream are identical.) */
   def parsedStream(spark: SparkSession, sfDir: String): DataFrame =
     parsedStreamFromPath(spark, sfDir, glob = "events.parquet")
 
   /** Same, over a monitored directory (the file source requires a directory
     * base path; `glob` selects files within it). `maxFilesPerTrigger` splits
     * the input into multiple micro-batches (used by tests to advance the
-    * watermark across batches). */
+    * watermark across batches).
+    *
+    * The decode is one Filter ([[EnvelopeOps.isUpsert]]) and one Project
+    * ([[EnvelopeOps.decodeEvents]] + `event_ts`) straight over the file
+    * relation, with event time read through [[graft.Tables.eventColumns]].
+    * Its rows equal `upsertsOnly(parsedTransactions(deriveEventTime(raw)))`
+    * plus `event_ts`, but Structured Streaming re-analyzes, re-optimizes
+    * and re-plans the whole logical plan on every trigger, and Spark plans
+    * each micro-batch a second time to print it (ROADMAP item 8), so the
+    * stateless prefix is handed to Catalyst already collapsed. */
   def parsedStreamFromPath(spark: SparkSession, dir: String, glob: String = "*",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val raw = rawEventStream(spark, dir, glob, maxFilesPerTrigger)
-    val parsed = EnvelopeOps.parsedTransactions(graft.Tables.deriveEventTime(raw))
-    EnvelopeOps.upsertsOnly(parsed)
-      .withColumn("event_ts", timestamp_micros(col("event_time_us")))
+    val txn = EnvelopeOps.decodeEvents(graft.Tables.eventColumns(raw.schema))
+    val byName = txn.toMap
+    raw.filter(EnvelopeOps.isUpsert(byName))
+      .select(txn.map { case (n, c) => c.as(n) } :+
+        timestamp_micros(byName("event_time_us")).as("event_ts"): _*)
   }
 
   /** The ONE events file-stream reader both parsed/event streams share.
@@ -82,7 +95,7 @@ object Pipelines {
     * 1000× too small (VERDICT r7: six streaming-equivalence failures, one
     * root cause). So: probe the on-disk footer with a metadata-only batch
     * read and declare exactly what the files carry; NO rename —
-    * [[graft.Tables.deriveEventTime]] branches on the probed type, and its
+    * [[graft.Tables.eventColumns]] branches on the probed type, and its
     * magnitude guard would reject a mislabeled long anyway. */
   private[streaming] def rawEventStream(spark: SparkSession, dir: String,
       glob: String, maxFilesPerTrigger: Option[Int]): DataFrame = {

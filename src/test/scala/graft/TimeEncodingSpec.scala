@@ -50,10 +50,13 @@ class TimeEncodingSpec extends SparkSpecBase {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(dir)
 
+  /** Each encoding's events directory, laid out as `<corpus>/events.parquet`
+    * so the batch loaders read it too. */
   private def fixtureDirs(): (String, String) = {
     val base = Files.createTempDirectory("graft_ts_enc").toString
-    writeMicros(s"$base/micros"); writeNanos(s"$base/nanos")
-    (s"$base/micros", s"$base/nanos")
+    val (micros, nanos) = (s"$base/micros/events.parquet", s"$base/nanos/events.parquet")
+    writeMicros(micros); writeNanos(nanos)
+    (micros, nanos)
   }
 
   private def keyed(df: DataFrame): Set[(Long, Long, Long, Long)] =
@@ -84,6 +87,21 @@ class TimeEncodingSpec extends SparkSpecBase {
     val batch = keyed(Tables.deriveEventTime(spark.read.parquet(micros)))
     assert(streamed(micros, "enc_micros_stream") === batch)
     assert(streamed(nanos, "enc_nanos_stream") === batch)
+
+    // the CDC decode reads event time through the same rules
+    def decoded(dir: String, name: String) = {
+      val q = graft.streaming.Pipelines.parsedStreamFromPath(spark, dir)
+        .writeStream.format("memory").queryName(name).outputMode("append")
+        .start()
+      q.processAllAvailable(); q.stop()
+      spark.table(name).collect().toSet
+    }
+    val upserts = QueryShared.upserts(spark, new java.io.File(micros).getParent)
+      .withColumn("event_ts", timestamp_micros(col("event_time_us")))
+      .collect().toSet
+    assert(upserts.size === rows.size)
+    assert(decoded(micros, "dec_micros_stream") === upserts)
+    assert(decoded(nanos, "dec_nanos_stream") === upserts)
   }
 
   test("magnitude guard: micros mislabeled as ts_ns fails loudly, not 1000x-small") {

@@ -1,7 +1,7 @@
 package graft.cdc
 
-import graft.SparkSpecBase
-import org.apache.spark.sql.Row
+import graft.{SparkSpecBase, Tables}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's envelope-handling tests
@@ -45,5 +45,36 @@ class EnvelopeOpsSpec extends SparkSpecBase {
     assert(envelope.getAs[Row]("before") === null)
     assert(envelope.getAs[Row]("after").getAs[Double]("AMOUNT") === 100.50)
     assert(envelope.getAs[String]("op") === "c")
+  }
+
+  test("flat decode == nested envelope round trip, row for row, dropped rows included") {
+    val events = Tables.events(spark, sf0001)
+    def withCol(name: String, value: org.apache.spark.sql.Column) =
+      events.orderBy("event_id").limit(3)
+        .withColumn(name, value.cast(events.schema(name).dataType))
+    // beside the corpus's own op=d rows, the rows the other upsert
+    // conditions drop: null ids and account 0
+    val all = events
+      .union(withCol("event_id", lit(null)))
+      .union(withCol("user_id", lit(null)))
+      .union(withCol("user_id", lit(0)))
+    val flat = EnvelopeOps.parsedTransactions(all)
+    val nested = EnvelopeOps.parseTxnEnvelope(EnvelopeOps.synthesizeTxnEnvelope(all))
+    assert(flat.schema === nested.schema)
+    def rows(df: DataFrame) = df.collect().toSeq.groupBy(identity).map {
+      case (r, rs) => r -> rs.size
+    }
+    val got = rows(flat)
+    assert(got === rows(nested))
+    assert(got.values.sum === all.count())
+    val dropped = got.keys.filterNot { r =>
+      !r.isNullAt(0) && r.getAs[String]("op") != "d" &&
+        !r.isNullAt(1) && r.getAs[Long]("account_id") != 0L
+    }
+    assert(dropped.exists(_.getAs[String]("op") == "d"))
+    assert(dropped.exists(_.isNullAt(0)) && dropped.exists(_.isNullAt(1)))
+    assert(dropped.exists(r => !r.isNullAt(1) && r.getAs[Long]("account_id") == 0L))
+    assert(rows(EnvelopeOps.upsertsOnly(flat)) ===
+      got.filter { case (r, _) => !dropped.toSet(r) })
   }
 }

@@ -62,6 +62,18 @@ class PipelinesSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
+  test("the file-stream decode reaches Catalyst as one Filter and one Project") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    // each trigger re-analyzes, re-optimizes and re-plans this plan (and
+    // plans it again to print it), so the decode chain must not grow back
+    val plan = Pipelines.parsedStreamFromPath(spark, sf0001, "events.parquet")
+      .queryExecution.analyzed
+    val leaves = plan.collectLeaves()
+    assert(leaves.size === 1 && leaves.head.isStreaming, plan.treeString)
+    assert(plan.collect { case p: Project => p }.size <= 1, plan.treeString)
+    assert(plan.collect { case f: Filter => f }.size <= 1, plan.treeString)
+  }
+
   test("Avro-wire streaming ingestion == batch parse (the Kafka-source swap seam)") {
     import graft.cdc.AvroWire
     val dir = Files.createTempDirectory("graft_avro_wire_stream").toString + "/frames"
