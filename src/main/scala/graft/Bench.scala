@@ -102,10 +102,12 @@ object Bench {
   val expectedSmj: Map[String, Int] = Map(
     "q_interval_join" -> 1, // bucketized range join (large-large)
     "q_importance_resample" -> 2, // vocab full-outer (x2 plan reuse)
-    // touched-id semi-join text pruning (x2: corpus+batch union sides)
-    "q_dedup_incremental" -> 2,
-    // endpoint label-lookup id joins (x2: doc_a+doc_b sides)
-    "q_dedup_clusters_incremental" -> 2,
+    // touched-id semi-join text pruning (x2: corpus+batch union sides),
+    // x2 again: the uncached shingles feed both verify sides
+    "q_dedup_incremental" -> 4,
+    // endpoint label-lookup id joins (x2: doc_a+doc_b sides), x2 again:
+    // the uncached mapped edges feed both reduced edges and fresh nodes
+    "q_dedup_clusters_incremental" -> 4,
     "q_hybrid_rrf" -> 1, // RRF full-outer list fusion (model-sized)
     // RRF fusion + qrels + idcg list joins (model-sized) and the qrels
     // pool's two doc_id joins (301/997 of the corpus: large-large)

@@ -39,8 +39,9 @@ object GraftSession {
 
   /** State-holding queries `GraftApp.start` launches: velocity fraud,
     * balance reconciliation, dormancy, daily spend, rolling spend, TWAB,
-    * the two `DimStore` KTables, funnel and the 3-step pattern
-    * (`GraftAppSpec` counts them from their progress reports). */
+    * the two KTables (each table is its query's state), funnel and the
+    * 3-step pattern (`GraftAppSpec` counts them from their progress
+    * reports). */
   val StatefulQueries = 10
 
   /** State partitions per stateful streaming query, sized so that all of

@@ -481,43 +481,6 @@ object ScaleProbe {
       println(f"PROBE streaming_rolling_spend rows=$streamN sec=$sec%.2f rate=${streamN / sec}%.0f rows/s")
     }
 
-    // round-6: incremental KTable store maintenance at dimension scale —
-    // a 1M-key store absorbing 1k-row micro-batches. The LSM contract:
-    // a normal batch is an O(|batch|) delta append; every maxDeltas
-    // batches one compaction pays the base fold — so the full-store
-    // rewrite cost is amortized 1/maxDeltas per batch, where both the
-    // naive form AND a bucketed-base-only form paid O(|store|) per batch
-    // (1k uniformly-hashed keys touch ~every bucket).
-    if (only.forall("dimstore_inc".contains)) {
-      val storeDir = java.nio.file.Files.createTempDirectory("graft_sprobe_dim").toString
-      val keys = math.min(n / 10, 1000000L)
-      def dimBatch(ids: org.apache.spark.sql.DataFrame) = ids.select(
-        col("id").as("account_id"),
-        concat(lit("ACCT-"), col("id")).as("account_number"),
-        (col("id") % 97).cast("double").as("balance"),
-        lit("u").as("op"))
-      val t0 = System.nanoTime()
-      streaming.DimStore.upsert(storeDir, Seq("account_id"), maxDeltas = 4)(
-        dimBatch(spark.range(keys).toDF()), 0L)
-      val tInit = (System.nanoTime() - t0) / 1e9
-      // batches 1-4 fill the delta window; batch 5 triggers compaction
-      val batchTimes = (1L to 5L).map { b =>
-        val tb = System.nanoTime()
-        streaming.DimStore.upsert(storeDir, Seq("account_id"), maxDeltas = 4)(
-          dimBatch(spark.range(b * 1000L, b * 1000L + 1000L).toDF()), b)
-        (System.nanoTime() - tb) / 1e9
-      }
-      val tRead = {
-        val tr = System.nanoTime()
-        streaming.DimStore.read(spark, storeDir).get
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - tr) / 1e9
-      }
-      println(f"PROBE dimstore_inc keys=$keys init_sec=$tInit%.2f " +
-        f"delta1k_med_sec=${batchTimes.take(4).sorted.apply(2)}%.2f " +
-        f"compact_sec=${batchTimes.last}%.2f read_sec=$tRead%.2f")
-    }
-
     // event analytics + feature prep at the full 10M-event scale
     val rawEvents = synthEvents(spark, n, users = 10000)
     time("funnel_conversion")(ops.EventAnalytics.clickToPurchase(

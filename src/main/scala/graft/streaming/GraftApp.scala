@@ -9,20 +9,27 @@ import graft.{GraftConfig, GraftSession, Tables}
   * (`ABBankStreamProcessorApplication.java`: load config, build the
   * topology, start, await). [[start]] launches 12 streaming queries: the
   * five reference pipelines, the rolling-spend and TWAB extensions, the
-  * two KTable [[DimStore]]s, the two-hop enrichment, and the funnel and
-  * 3-step pattern trackers. Each owns its sink and (for the stateful
-  * ones) its state store. They share the parsed stream's plan, not its
-  * rows: every query opens its own source scan and decodes each event
-  * again (perfbench's `stream_app_backlog` measured
-  * `source.rows_per_event` = 10.03); decoding once is ROADMAP item 1.
-  * Thresholds come from [[GraftConfig]] (spark conf > `ABBANK_*` env
-  * vars > oracle-verified defaults).
+  * two KTables, the two-hop enrichment, and the funnel and 3-step
+  * pattern trackers. Each owns its sink and (for the stateful ones) its
+  * state store. They share the parsed stream's plan, not its rows: every
+  * query opens its own source scan and decodes each event again
+  * (perfbench's `stream_app_backlog` measured `source.rows_per_event` =
+  * 10.03); decoding once is ROADMAP item 1. Thresholds come from
+  * [[GraftConfig]] (spark conf > `ABBANK_*` env vars > oracle-verified
+  * defaults).
   *
   * Source and sinks are config-driven ([[Sources]]): files (default) or
   * `format("kafka")` the day a connector jar is present — a `--conf`
   * switch, not a code change. Each query checkpoints under
   * `outBase/_checkpoints/<name>` so a restart resumes exactly where it
   * stopped (RecoverySpec proves the state recovery path).
+  *
+  * The two KTables live only in their queries' state stores, checkpointed
+  * at `outBase/_checkpoints/acct_store` and `cust_store`; the two-hop
+  * query reads them from there ([[Pipelines.ktableSnapshot]]). Upgrade
+  * rule: the `outBase/acct_store` and `outBase/cust_store` directories
+  * that older builds wrote are no longer read and can be deleted; the
+  * KTable checkpoints restore as before.
   *
   * Run: `spark-submit --class graft.streaming.GraftApp <jar> <srcDir> <outBase>`
   */
@@ -60,17 +67,15 @@ object GraftApp {
       // O(1) state, exact integer accrual (the interest-billing view)
       sink(Pipelines.twabUpdates(spark, parsed).toDF(), "twab_updates"),
       // 7-8: the two continuously-maintained KTables (accounts, customers
-      // — reference ABBankTopology.java:107-144), materialized as DimStore
-      // snapshots the enrichment looks up per micro-batch
-      DimStore.maintain(Pipelines.accountsDimStream(spark, srcDir),
-        s"$outBase/acct_store", Seq("account_id"),
+      // — reference ABBankTopology.java:107-144), each held in its own
+      // query's state store, which the enrichment reads per micro-batch
+      Pipelines.ktableQuery(Pipelines.accountsDimStream(spark, srcDir),
         s"$outBase/_checkpoints/acct_store"),
-      DimStore.maintain(Pipelines.customersDimStream(spark, srcDir),
-        s"$outBase/cust_store", Seq("customer_id"),
+      Pipelines.ktableQuery(Pipelines.customersDimStream(spark, srcDir),
         s"$outBase/_checkpoints/cust_store"),
       // 9: the declared two-hop enrichment against BOTH live KTables
       Pipelines.highValueTwoHopCdcStream(parsed,
-        s"$outBase/acct_store", s"$outBase/cust_store",
+        s"$outBase/_checkpoints/acct_store", s"$outBase/_checkpoints/cust_store",
         cfg.highValueThreshold, s"$outBase/high_value_two_hop",
         s"$outBase/_checkpoints/high_value_two_hop"),
       // 10-11 (extensions): product analytics over the RAW event stream

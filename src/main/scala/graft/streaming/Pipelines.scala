@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 import graft.cdc.EnvelopeOps
@@ -253,11 +256,12 @@ object Pipelines {
     * arrives as a stream (file source standing in for Kafka), travels the
     * same wire serde, and the latest version per account is maintained as
     * an update-mode `max_by` aggregation — state is one narrow struct per
-    * account, re-emitting only keys whose latest version changed each
-    * micro-batch. Tombstones surface with `op = 'd'` so an upsert sink
-    * can delete the key (filtering them BEFORE the aggregation would
-    * resurrect the previous version instead — Kafka Streams' actual
-    * tombstone semantics need the delete to win the argmax). */
+    * account. [[ktableQuery]] runs it, and the query's state store IS the
+    * KTable ([[ktableSnapshot]] reads it back). Tombstones stay in state
+    * with `op = 'd'`, so the delete wins the argmax and the reader drops
+    * the key (filtering them BEFORE the aggregation would resurrect the
+    * previous version instead — Kafka Streams' actual tombstone
+    * semantics). */
   def accountsDimStream(spark: SparkSession, customerDir: String,
       glob: String = "customer.parquet"): DataFrame = {
     // the ONE wire path (synthesize -> encode -> decode -> parse) shared
@@ -291,50 +295,75 @@ object Pipelines {
       .option("pathGlobFilter", glob)
       .parquet(customerDir)
 
+  /** Start a KTable query over [[accountsDimStream]] or
+    * [[customersDimStream]]. The table lives in the query's state store
+    * (the analog of the reference's KV store with changelog restore,
+    * `ABBankTopology.java:67-71`), so the emitted changes are discarded. */
+  def ktableQuery(dim: DataFrame, checkpoint: String): StreamingQuery =
+    dim.writeStream.format("noop").outputMode("update")
+      .option("checkpointLocation", checkpoint).start()
+
+  /** The current snapshot of a [[ktableQuery]]'s table, read in batch from
+    * its last committed state through Spark's state data source: one row
+    * per live key, tombstoned keys absent, columns as `schema` (DDL).
+    * State rows are the `max_by` aggregation's: `key` holds the key
+    * columns and the first field of `value` the latest row. A query that
+    * has not committed a batch yet reads as an empty table. */
+  def ktableSnapshot(spark: SparkSession, checkpoint: String,
+      schema: String): DataFrame = {
+    val columns = StructType.fromDDL(schema)
+    // the reader's tasks report to the state store coordinator, which
+    // Spark starts with the session's streaming query manager
+    spark.streams
+    try {
+      val state = spark.read.format("statestore").load(checkpoint)
+      val latest = state.schema("value").dataType.asInstanceOf[StructType].head.name
+      state.select(col("key.*"), col(s"value.`$latest`.*"))
+        .filter(col("op") =!= "d")
+        .select(columns.fieldNames.toIndexedSeq.map(col): _*)
+    } catch {
+      case e: SparkThrowable
+          if e.getCondition == "STDS_COMMITTED_BATCH_UNAVAILABLE" =>
+        spark.createDataFrame(java.util.List.of[Row](), columns)
+    }
+  }
+
   /** Pipeline 1's declared TWO-HOP form with BOTH dimensions continuously
     * maintained — the reference declares the customers hop
     * (`README.md:44`, comment `ABBankTopology.java:212-213`) but never
     * wires it; here it runs: each high-value micro-batch looks up the
     * CURRENT accounts snapshot, then the CURRENT customers snapshot, both
-    * [[DimStore]]s fed by their own changelog-stream queries
-    * ([[accountsDimStream]] / [[customersDimStream]] → [[DimStore.maintain]]).
-    * Re-opening the snapshot inside `foreachBatch` is exactly a Kafka
-    * Streams store lookup at batch granularity — a plain stream-static
-    * join would pin the file listing at query start and never see dim
-    * updates. Missing keys (including tombstoned dims) take the
-    * KV-store-miss fallbacks (`:252-253`); a not-yet-committed store
-    * behaves as empty. Both dims broadcast — the transaction stream never
-    * shuffles. Output columns match the batch `q_enrich_cdc_two_hop`.
+    * read by [[ktableSnapshot]] from the state of their own KTable queries
+    * ([[accountsDimStream]] / [[customersDimStream]] run by
+    * [[ktableQuery]], checkpointed at `accountsCheckpoint` /
+    * `customersCheckpoint`). Re-reading the snapshot inside
+    * `foreachBatch` is exactly a Kafka Streams store lookup at batch
+    * granularity — a plain stream-static join would pin the file listing
+    * at query start and never see dim updates. Missing keys (including
+    * tombstoned dims) take the KV-store-miss fallbacks (`:252-253`); a
+    * KTable with no committed batch behaves as empty. Both dims broadcast
+    * — the transaction stream never shuffles. Output columns match the
+    * batch `q_enrich_cdc_two_hop`.
     *
     * Delivery is at-least-once, so each micro-batch lands in its own
     * `batch=<id>` subdirectory with overwrite semantics: a replayed batch
-    * rewrites its directory instead of appending duplicates — the same
-    * batch-id-named idempotence discipline as [[DimStore.upsert]]. Readers
+    * rewrites its directory instead of appending duplicates. Readers
     * open `outDir` with partition discovery (the `batch` column is
     * droppable metadata). */
-  def highValueTwoHopCdcStream(parsed: DataFrame, accountsStore: String,
-      customersStore: String, threshold: Double, outDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+  def highValueTwoHopCdcStream(parsed: DataFrame, accountsCheckpoint: String,
+      customersCheckpoint: String, threshold: Double, outDir: String,
+      checkpoint: String): StreamingQuery = {
     val hv = completed(parsed)
       .filter(Predicates.isHighValue(col("amount"), threshold))
     hv.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val acct = DimStore.read(s, accountsStore)
-          .map(_.select("account_id", "customer_id", "account_number"))
-          .getOrElse(s.sql(
-            """SELECT CAST(NULL AS BIGINT) account_id,
-              |  CAST(NULL AS BIGINT) customer_id,
-              |  CAST(NULL AS STRING) account_number WHERE false""".stripMargin))
-        val cust = DimStore.read(s, customersStore)
-          .map(_.select("customer_id", "first_name", "last_name", "email",
-            "segment"))
-          .getOrElse(s.sql(
-            """SELECT CAST(NULL AS BIGINT) customer_id,
-              |  CAST(NULL AS STRING) first_name,
-              |  CAST(NULL AS STRING) last_name, CAST(NULL AS STRING) email,
-              |  CAST(NULL AS STRING) segment WHERE false""".stripMargin))
+        val acct = ktableSnapshot(s, accountsCheckpoint,
+          "account_id BIGINT, customer_id BIGINT, account_number STRING")
+        val cust = ktableSnapshot(s, customersCheckpoint,
+          "customer_id BIGINT, first_name STRING, last_name STRING, " +
+            "email STRING, segment STRING")
         batch.join(broadcast(acct), Seq("account_id"), "left")
           .join(broadcast(cust), Seq("customer_id"), "left")
           .select(col("txn_id"), col("account_id"), col("amount"),

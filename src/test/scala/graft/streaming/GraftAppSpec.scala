@@ -64,13 +64,15 @@ class GraftAppSpec extends SparkSpecBase {
       .collect().toSet
     assert(hv === want)
 
-    // the two KTable stores committed snapshots, and the two-hop sink
+    // the two KTable queries committed their tables, and the two-hop sink
     // emitted every high-value txn (enrichment values depend on dim-vs-txn
     // arrival order — same as a Kafka Streams stream-table join; the
     // sequenced equivalence is pinned in PipelinesSpec)
-    Seq("acct_store", "cust_store").foreach { s =>
-      assert(DimStore.currentVersion(s"$outBase/$s").nonEmpty, s)
-    }
+    Seq("acct_store" -> "account_id BIGINT", "cust_store" -> "customer_id BIGINT")
+      .foreach { case (s, key) =>
+        assert(Pipelines.ktableSnapshot(spark, s"$outBase/_checkpoints/$s", key)
+          .count() > 0, s)
+      }
     assert(spark.read.parquet(s"$outBase/high_value_two_hop").count() ===
       want.size)
   }

@@ -106,18 +106,16 @@ class PipelinesSpec extends SparkSpecBase {
   test("streaming two-hop CDC enrichment (both KTables maintained) == batch q_enrich_cdc_two_hop") {
     val base = Files.createTempDirectory("graft_twohop").toString
     // both KTables continuously maintained from their changelog streams
-    val acctQ = DimStore.maintain(
-      Pipelines.accountsDimStream(spark, sf0001),
-      s"$base/acct_store", Seq("account_id"), s"$base/ckpt_acct")
-    val custQ = DimStore.maintain(
-      Pipelines.customersDimStream(spark, sf0001),
-      s"$base/cust_store", Seq("customer_id"), s"$base/ckpt_cust")
+    val acctQ = Pipelines.ktableQuery(
+      Pipelines.accountsDimStream(spark, sf0001), s"$base/ckpt_acct")
+    val custQ = Pipelines.ktableQuery(
+      Pipelines.customersDimStream(spark, sf0001), s"$base/ckpt_cust")
     acctQ.processAllAvailable(); custQ.processAllAvailable()
     acctQ.stop(); custQ.stop()
 
     val q = Pipelines.highValueTwoHopCdcStream(
       Pipelines.parsedStream(spark, sf0001),
-      s"$base/acct_store", s"$base/cust_store", threshold = 200.0,
+      s"$base/ckpt_acct", s"$base/ckpt_cust", threshold = 200.0,
       outDir = s"$base/out", checkpoint = s"$base/ckpt_join")
     q.processAllAvailable(); q.stop()
 

@@ -16,11 +16,14 @@ class RecoverySpec extends SparkSpecBase {
   /** One parquet file of raw events `dir/f.parquet`, written elsewhere and
     * copied in whole (the file source lists the directory). */
   private def writeFile(dir: String, rows: Seq[(Long, Long, Long, String, Double)],
+      f: String): Unit =
+    writeFile(dir, rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+      .withColumn("props", lit("{}")), f)
+
+  private def writeFile(dir: String, events: org.apache.spark.sql.DataFrame,
       f: String): Unit = {
     val staging = Files.createTempDirectory("graft_rec_st").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("props", lit("{}"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
+    events.coalesce(1).write.mode("overwrite").parquet(staging)
     val part = new java.io.File(staging).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
@@ -57,6 +60,40 @@ class RecoverySpec extends SparkSpecBase {
     assert(r2.getAs[String]("recon_status") === "BALANCE_UPDATE")
     assert(r2.getAs[Double]("stored_balance") === -100.0)
     assert(r2.getAs[Double]("balance_after") === -70.0)
+  }
+
+  test("after a restart, reconcile's stored balance per account, read through " +
+      "the state data source, equals the last balance_after of its batch twin") {
+    val dir = Files.createTempDirectory("graft_recb_in").toString
+    val ckpt = Files.createTempDirectory("graft_recb_ck").toString
+    val outDir = Files.createTempDirectory("graft_recb_out").toString
+    def runBatch(): Unit = {
+      val q = Pipelines.reconcileAlerts(spark,
+          Pipelines.parsedStreamFromPath(spark, dir)).toDF()
+        .writeStream.format("parquet").option("path", outDir)
+        .outputMode("append").option("checkpointLocation", ckpt).start()
+      q.processAllAvailable(); q.stop()
+    }
+    // sf0.001's events in two event-time halves, the second after a restart
+    val raw = spark.read.parquet(s"$sf0001/events.parquet")
+    val times = raw.select("ts").orderBy("ts").collect()
+    val cut = times(times.length / 2).get(0)
+    Seq("f1" -> (col("ts") < lit(cut)), "f2" -> (col("ts") >= lit(cut)))
+      .foreach { case (f, half) => writeFile(dir, raw.filter(half), f); runBatch() }
+
+    val stored = spark.read.format("statestore").load(ckpt)
+      .select(col("key.value").as("account_id"),
+        col("value.groupState.value").as("balance"))
+      .as[(Long, Double)].collect().toMap
+    val order = graft.cdc.EnvelopeOps.parsedTransactions(
+      graft.Tables.events(spark, sf0001)).select("txn_id", "event_time_us")
+    val want = graft.SparkEntry.queries("q_balance_reconcile")(spark, sf0001)
+      .join(order, "txn_id")
+      .groupBy("account_id")
+      .agg(max_by(col("balance_after"), struct(col("event_time_us"), col("txn_id"))))
+      .as[(Long, Double)].collect().toMap
+    assert(stored === want)
+    assert(stored.size > 1)
   }
 
   test("funnel pending-click state and timers survive restart from checkpoint") {

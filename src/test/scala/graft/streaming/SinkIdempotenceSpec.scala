@@ -12,8 +12,9 @@ import graft.{SparkSpecBase, Tables}
   *  - the five notification sinks are Spark `FileStreamSink`s — committed
   *    batches live in `_spark_metadata`, and readers resolve files THROUGH
   *    the log, so a replayed batch's stray data files are invisible;
-  *  - the two KTable stores short-circuit replays on the batch-id pointer
-  *    ([[DimStoreSpec]]);
+  *  - the two KTables are their queries' state stores: a replayed batch
+  *    recomputes its state version from the previous one, and the state
+  *    reader opens only the last committed batch ([[KTableSpec]]);
   *  - the hand-rolled two-hop `foreachBatch` sink writes batch-id-named
   *    directories with overwrite, so a full re-delivery of the stream
   *    rewrites rather than duplicates (tested here end-to-end).
@@ -22,12 +23,10 @@ class SinkIdempotenceSpec extends SparkSpecBase {
 
   test("two-hop foreachBatch sink: full re-delivery leaves zero duplicate and zero lost alerts") {
     val base = Files.createTempDirectory("graft_idem_twohop").toString
-    val acctQ = DimStore.maintain(
-      Pipelines.accountsDimStream(spark, sf0001),
-      s"$base/acct_store", Seq("account_id"), s"$base/ckpt_acct")
-    val custQ = DimStore.maintain(
-      Pipelines.customersDimStream(spark, sf0001),
-      s"$base/cust_store", Seq("customer_id"), s"$base/ckpt_cust")
+    val acctQ = Pipelines.ktableQuery(
+      Pipelines.accountsDimStream(spark, sf0001), s"$base/ckpt_acct")
+    val custQ = Pipelines.ktableQuery(
+      Pipelines.customersDimStream(spark, sf0001), s"$base/ckpt_cust")
     acctQ.processAllAvailable(); custQ.processAllAvailable()
     acctQ.stop(); custQ.stop()
 
@@ -36,7 +35,7 @@ class SinkIdempotenceSpec extends SparkSpecBase {
     Seq("ckpt_join_1", "ckpt_join_2").foreach { ck =>
       val q = Pipelines.highValueTwoHopCdcStream(
         Pipelines.parsedStream(spark, sf0001),
-        s"$base/acct_store", s"$base/cust_store", threshold = 200.0,
+        s"$base/ckpt_acct", s"$base/ckpt_cust", threshold = 200.0,
         outDir = s"$base/out", checkpoint = s"$base/$ck")
       q.processAllAvailable(); q.stop()
     }
