@@ -291,7 +291,7 @@ object Bench {
     def num(v: Double): String =
       if (v == math.rint(v)) v.toLong.toString else d3(v)
     def strs(xs: Iterable[String]): String =
-      xs.map(x => s""""$x"""").mkString("[", ",", "]")
+      xs.map(Json.quote).mkString("[", ",", "]")
 
     // Artifact hygiene: subset runs (SPARK_GRAFT_ONLY) must not clobber
     // the committed full-surface artifact; idle gate runs override the

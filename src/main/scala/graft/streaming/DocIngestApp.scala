@@ -65,19 +65,20 @@ object DocIngestApp {
     * (identical text ⇒ identical gate verdicts, so WHICH copy survives
     * cannot change the curated set — asserted digest-for-digest against
     * `TextAnalysis.curate` in DocIngestAppSpec). */
-  def curatedStream(docs: DataFrame, lang: String, minQuality: Double,
-      watermarkDelay: String = "1 hour"): DataFrame =
-    TextAnalysis.annotate(DocStream.exactDeduped(docs, watermarkDelay))
-      .filter(col("pred_lang") === lang && col("quality_score") >= minQuality)
+  def curatedStream(docs: DataFrame, cfg: IngestConfig): DataFrame =
+    TextAnalysis.annotate(DocStream.exactDeduped(docs, cfg.watermarkDelay))
+      .filter(col("pred_lang") === cfg.lang &&
+        col("quality_score") >= cfg.minQuality)
       .select("doc_id", "ingest_ts", "text", "pred_lang", "quality_score",
         "n_tokens")
 
   /** Start the ingest: curated parquet + near-dup candidate log, each
     * checkpointed under `outBase/_checkpoints/<name>` (restart resumes —
-    * same discipline as [[GraftApp]]). */
-  def start(spark: SparkSession, srcDir: String, outBase: String,
-      lang: String = "en", minQuality: Double = 0.5,
-      watermarkDelay: String = "1 hour"): Seq[StreamingQuery] = {
+    * same discipline as [[GraftApp]]). Knobs come from
+    * [[IngestConfig.load]]. */
+  def start(spark: SparkSession, srcDir: String,
+      outBase: String): Seq[StreamingQuery] = {
+    val cfg = IngestConfig.load(spark)
     val docs = spark.readStream.schema(docSchema).parquet(srcDir)
 
     def sink(df: DataFrame, name: String): StreamingQuery =
@@ -90,8 +91,8 @@ object DocIngestApp {
         .start()
 
     Seq(
-      sink(curatedStream(docs, lang, minQuality, watermarkDelay), "curated"),
-      sink(DocStream.nearDupCandidates(spark, docs, watermarkDelay).toDF(),
+      sink(curatedStream(docs, cfg), "curated"),
+      sink(DocStream.nearDupCandidates(spark, docs, cfg.watermarkDelay).toDF(),
         "neardup_candidates"))
   }
 
@@ -99,10 +100,7 @@ object DocIngestApp {
     val srcDir = args.headOption.getOrElse("/tmp/graft_doc_in")
     val outBase = args.lift(1).getOrElse("/tmp/graft_doc_out")
     val spark = GraftSession.create(appName = "graft-doc-ingest")
-    val cfg = IngestConfig.load(spark)
-    val queries = start(spark, srcDir, outBase,
-      lang = cfg.lang, minQuality = cfg.minQuality,
-      watermarkDelay = cfg.watermarkDelay)
+    val queries = start(spark, srcDir, outBase)
     queries.foreach(_.awaitTermination())
   }
 }

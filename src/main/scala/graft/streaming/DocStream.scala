@@ -30,8 +30,7 @@ object DocStream {
     * (`dropDuplicatesWithinWatermark` — bounded state; a plain streaming
     * `dropDuplicates` would retain every digest forever). A duplicate
     * arriving after its original's state expired re-emits: the horizon is
-    * the dedup guarantee window, the same contract as
-    * [[Pipelines.dedupedStream]] for transaction replays.
+    * the dedup guarantee window.
     *
     * Input must carry an `ingest_ts` TIMESTAMP event-time column. */
   def exactDeduped(docs: DataFrame,
@@ -43,182 +42,6 @@ object DocStream {
       .drop("__digest")
 
   /** One exploded LSH band of one streamed document. */
-  case class KmvSourceRow(source: String, h: Long)
-  case class KmvSketchRow(source: String, n_seen: Long, sketch: Array[Long])
-
-  /** Continuously-maintained per-source KMV distinct sketch — the
-    * streaming twin of [[graft.ops.Sketches.kmvPerGroup]]. The GroupState
-    * IS the sketch: <= k longs per source, FIXED size for the lifetime of
-    * the stream (a sketch never grows past k — no watermark/TTL needed,
-    * unlike the dedup states above whose key cardinality tracks arrivals).
-    * Each batch emits the refreshed sketch per touched source; the LAST
-    * emission per source equals the batch operator over everything
-    * ingested so far — bottom-k merge is associative, so batch-boundary
-    * placement cannot change the result (spec-pinned). Feed `h` with the
-    * same content-hash chain the batch queries use
-    * (`xxhash64(graft_fnv64(text))`); downstream,
-    * [[graft.ops.Sketches.kmvOverlap]]'s pair arithmetic applies to the
-    * live sketches unchanged — a continuously-current cross-source
-    * overlap dashboard for the cost of kilobytes of state. */
-  def kmvSketches(spark: SparkSession, docs: DataFrame,
-      k: Int): Dataset[KmvSketchRow] = {
-    import spark.implicits._
-    docs.select(col("source"), col("h").cast("long").as("h"))
-      .as[KmvSourceRow]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(kmvProcess(k))
-  }
-
-  private[graft] def kmvProcess(k: Int)(source: String,
-      rows: Iterator[KmvSourceRow],
-      state: GroupState[(Array[Long], Long)]): Iterator[KmvSketchRow] = {
-    val buf = new graft.functions.KmvBuffer(k)
-    val (prev, n0) = state.getOption.getOrElse((Array.empty[Long], 0L))
-    prev.foreach(buf.add)
-    var n = n0
-    rows.foreach { r => buf.add(r.h); n += 1 }
-    val arr = buf.toArray
-    state.update((arr, n))
-    Iterator.single(KmvSketchRow(source, n, arr))
-  }
-
-  case class QSampleSourceRow(source: String, h: Long, v: Long)
-  case class QSampleRow(source: String, n_seen: Long,
-      hs: Array[Long], vs: Array[Long])
-
-  /** Continuously-maintained per-group bottom-k priority sample — the
-    * streaming twin of [[graft.ops.Sketches.qsamplePerGroup]], and with
-    * it live approximate percentiles over the full ingest history for
-    * <= k (hash, value) pairs of state per group (same fixed-size
-    * no-TTL posture as [[kmvSketches]]: a bottom-k sample never grows
-    * past k, so no watermark is needed). Bottom-k-with-payload merge is
-    * associative and commutative, so the last emission per group equals
-    * the batch aggregate over everything ingested — spec-pinned. */
-  def qsampleSketches(spark: SparkSession, rows: DataFrame,
-      k: Int): Dataset[QSampleRow] = {
-    import spark.implicits._
-    rows.select(col("source"), col("h").cast("long").as("h"),
-        col("v").cast("long").as("v"))
-      .as[QSampleSourceRow]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(qsampleProcess(k))
-  }
-
-  private[graft] def qsampleProcess(k: Int)(source: String,
-      rows: Iterator[QSampleSourceRow],
-      state: GroupState[(Array[Long], Array[Long], Long)]): Iterator[QSampleRow] = {
-    val buf = new graft.functions.QSampleBuffer(k)
-    val (hs0, vs0, n0) = state.getOption
-      .getOrElse((Array.empty[Long], Array.empty[Long], 0L))
-    var i = 0
-    while (i < hs0.length) { buf.add(hs0(i), vs0(i)); i += 1 }
-    var n = n0
-    rows.foreach { r => buf.add(r.h, r.v); n += 1 }
-    val pairs = buf.toPairs
-    val hs = pairs.map(_._1)
-    val vs = pairs.map(_._2)
-    state.update((hs, vs, n))
-    Iterator.single(QSampleRow(source, n, hs, vs))
-  }
-
-  case class GramVecRow(source: String, g: Array[Long])
-  case class GramStateRow(source: String, n_seen: Long, gram: Array[Long])
-
-  /** Continuously-maintained per-group integer Gram accumulator — the
-    * streaming twin of [[graft.sim.Gram.gramUpperTriangle]]'s
-    * aggregation (whitening/PCA statistics that stay current as
-    * embeddings stream in). GroupState is the d(d+1)/2 triangle itself:
-    * FIXED size for the stream's lifetime (integer adds are associative
-    * and commutative, so no TTL and no reordering hazard); the last
-    * emission per group equals the batch aggregate over everything
-    * ingested — the [[kmvSketches]] contract, spec-pinned. */
-  def gramSketches(spark: SparkSession, vecs: DataFrame): Dataset[GramStateRow] = {
-    import spark.implicits._
-    vecs.select(col("source"), col("g"))
-      .as[GramVecRow]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(gramProcess)
-  }
-
-  private[graft] def gramProcess(source: String,
-      rows: Iterator[GramVecRow],
-      state: GroupState[(Array[Long], Long)]): Iterator[GramStateRow] = {
-    var (acc, n) = state.getOption.getOrElse((Array.emptyLongArray, 0L))
-    rows.foreach { r =>
-      acc = graft.sim.Gram.GramAgg.reduce(acc, r.g)
-      n += 1
-    }
-    state.update((acc, n))
-    Iterator.single(GramStateRow(source, n, acc))
-  }
-
-  case class GramOcc(gh: Long, doc_id: Long, pos: Long)
-  case class DupPos(doc_id: Long, pos: Long, src: String)
-
-  /** Streaming substring-level span dedup — the continuous-ingest twin
-    * of [[graft.dedup.DupSpans.dupPositionsIncremental]], with the
-    * GroupState playing the role of the standing
-    * [[graft.dedup.DupSpans.gramIndex]]: per gram fingerprint, a
-    * doc-frequency counter plus the single holder's exemplar positions
-    * (kept ONLY while df == 1 — a gram that reaches df >= 2 drops its
-    * list after emitting it, so boilerplate grams cost one counter, not
-    * df positions). State is corpus-VOCABULARY-sized by construction,
-    * exactly like the batch index table it mirrors; there is no TTL
-    * because the standing index has none — duplication against a
-    * document ingested months ago is still duplication.
-    *
-    * Emission contract (matches the batch fold, DupSpansSpec-pinned):
-    * each `(doc_id, pos)` is emitted AT MOST ONCE, in the micro-batch
-    * where its gram's cumulative doc-frequency first reaches 2 (`src =
-    * 'batch'` for positions in the arriving documents, `'retro'` for
-    * the stored exemplars of the previously-sole holder) or, for grams
-    * already duplicated, in the batch the position arrives. The union
-    * of all emissions equals the batch
-    * [[graft.dedup.DupSpans.duplicatedPositions]] over everything
-    * ingested. Span assembly (interval-island merge) runs at read time
-    * over the accumulated position log, per touched document.
-    *
-    * Each document must arrive exactly once (one micro-batch) — the
-    * same disjointness contract as the batch incremental fold.
-    * Requires [[graft.functions.GraftFunctions.register]] (the gram
-    * fingerprint is `graft_fnv64`). */
-  def dupPositions(spark: SparkSession, docs: DataFrame,
-      n: Int = 8): Dataset[DupPos] = {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    graft.dedup.DupSpans.positionalGrams(docs, n)
-      .select(col("gh"), col("doc_id"), col("pos")).as[GramOcc]
-      .groupByKey(_.gh)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(gramProcess)
-  }
-
-  private[graft] def gramProcess(gh: Long, rows: Iterator[GramOcc],
-      state: GroupState[(Long, Vector[(Long, Long)])]): Iterator[DupPos] = {
-    val batch = rows.toVector
-    // distinct DOCS, not positions: within-doc repetition of a gram is
-    // not duplication (batch semantics), but every position of a gram
-    // that IS duplicated must be emitted (spans must cover it)
-    val bdf = batch.iterator.map(_.doc_id).toSet.size.toLong
-    val (df0, exemplars) =
-      state.getOption.getOrElse((0L, Vector.empty[(Long, Long)]))
-    if (df0 + bdf >= 2) {
-      val out = Vector.newBuilder[DupPos]
-      batch.foreach(o => out += DupPos(o.doc_id, o.pos, "batch"))
-      if (df0 == 1)
-        exemplars.foreach { case (d, p) => out += DupPos(d, p, "retro") }
-      state.update((df0 + bdf, Vector.empty))
-      out.result().iterator
-    } else { // df0 + bdf == 1: this batch's sole holder becomes the exemplar
-      if (bdf == 1)
-        state.update((1L, batch.map(o => (o.doc_id, o.pos))))
-      Iterator.empty
-    }
-  }
-
   case class BandRow(doc_id: Long, ingest_ts: java.sql.Timestamp,
       band: Int, bucket: Long)
 
@@ -312,145 +135,5 @@ object DocStream {
         math.max(maxEventMs, state.getCurrentWatermarkMs()) + stateTtlMs)
       out.result().iterator
     }
-  }
-
-  case class WSampleDocRow(bucket: Long, doc_id: Long, n_tokens: Long,
-      key_micro: Long)
-  case class WSamplePartialRow(bucket: Long, n_seen: Long,
-      doc_ids: Array[Long], n_tokens: Array[Long], keys: Array[Long])
-
-  /** Continuously-maintained weighted reservoir — the streaming twin of
-    * [[graft.text.TrainingPrep.weightedSample]] (Efraimidis–Spirakis
-    * A-ES keys ARE the streaming-reservoir algorithm: the top-n keys
-    * over everything ingested so far are an exact n-item weighted
-    * sample without replacement, at any point in the stream's life).
-    *
-    * Same two-level shape as [[concurrencyPartials]]-style merge-on-read
-    * twins: documents hash into `nBuckets` state groups, each group
-    * keeps its own top-n (bounded: ≤ n (doc, weight, key) triples per
-    * bucket, FIXED size for the stream's lifetime — no watermark/TTL
-    * needed, like the sketch states above), and [[mergeWeightedPartials]]
-    * folds the bucket reservoirs into the global top-n at read time.
-    * Top-n-by-key merge is associative and commutative, so batch
-    * boundaries and bucket placement cannot change the result — the
-    * merged last emissions equal the batch operator (spec-pinned).
-    *
-    * Input: (doc_id, text) rows; key derivation is IDENTICAL to the
-    * batch operator (xxhash64 → exact-double uniform → ln(u)/w micro). */
-  def weightedReservoir(spark: SparkSession, docs: DataFrame, n: Int,
-      nBuckets: Int = 32): Dataset[WSamplePartialRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        xxhash64(col("doc_id")).as("__h"))
-      .withColumn("__u",
-        col("__h").cast("double") /
-          expr("CAST(18446744073709551616 AS DOUBLE)") + 0.5)
-      .withColumn("key_micro",
-        floor(log(col("__u") + 1e-12) / col("n_tokens") * 1e6).cast("long"))
-      .withColumn("bucket", pmod(col("doc_id"), lit(nBuckets.toLong)))
-      .select("bucket", "doc_id", "n_tokens", "key_micro")
-      .as[WSampleDocRow]
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(wsampleProcess(n))
-  }
-
-  private[graft] def wsampleProcess(n: Int)(bucket: Long,
-      rows: Iterator[WSampleDocRow],
-      state: GroupState[(Array[Long], Array[Long], Array[Long], Long)])
-      : Iterator[WSamplePartialRow] = {
-    val (ids0, ws0, ks0, n0) = state.getOption
-      .getOrElse((Array.empty[Long], Array.empty[Long], Array.empty[Long], 0L))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var i = 0
-    while (i < ids0.length) { buf += ((ids0(i), ws0(i), ks0(i))); i += 1 }
-    var seen = n0
-    rows.foreach { r => buf += ((r.doc_id, r.n_tokens, r.key_micro)); seen += 1 }
-    val top = buf.sortBy { case (id, _, k) => (-k, id) }.take(n).toArray
-    state.update((top.map(_._1), top.map(_._2), top.map(_._3), seen))
-    Iterator.single(WSamplePartialRow(bucket, seen,
-      top.map(_._1), top.map(_._2), top.map(_._3)))
-  }
-
-  /** Merge-on-read for [[weightedReservoir]]: fold the per-bucket
-    * reservoirs into the global top-n — output schema == the batch
-    * operator's (doc_id, n_tokens, key_micro, sample_rank).
-    *
-    * Accepts the RAW append-sink output (every historical emission):
-    * the live reservoir is the LAST emission per bucket, and this
-    * selects it itself (max `n_seen` per bucket — `n_seen` is strictly
-    * increasing within a bucket, so the max IS the latest) rather than
-    * trusting callers to pre-filter; feeding all emissions unfiltered
-    * would otherwise silently rank stale duplicates into the top-n.
-    * Emissions-sized input (emissions × n rows), one window + one
-    * bounded top-k. */
-  def mergeWeightedPartials(partials: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    partials
-      .withColumn("__last", row_number().over(
-        Window.partitionBy("bucket").orderBy(col("n_seen").desc)))
-      .filter(col("__last") === 1)
-      .select(explode(arrays_zip(col("doc_ids").as("doc_id"),
-        col("n_tokens").as("n_tokens"), col("keys").as("key_micro")))
-        .as("z"))
-      .select(col("z.doc_id"), col("z.n_tokens"), col("z.key_micro"))
-      .withColumn("sample_rank", row_number().over(
-        Window.orderBy(col("key_micro").desc, col("doc_id").asc)).cast("long"))
-      .filter(col("sample_rank") <= n)
-  }
-
-  case class TermTfRow(doc_id: Long, term: String, tf: Long)
-  case class VocabStateRow(term: String, df: Long, ctf: Long)
-
-  /** Continuously-maintained retrieval-index vocabulary — the streaming
-    * maintenance twin of [[graft.text.PostingsIndex]]'s `vocab` relation
-    * (per-term document frequency + collection term frequency, the
-    * inputs to BM25's idf and query-likelihood's collection LM). Under
-    * document APPENDS both statistics only grow, so the GroupState per
-    * term is two counters: `df += 1` and `ctf += tf` per arriving
-    * (doc, term, tf) row — FIXED-size, vocabulary-keyed state, exactly
-    * the shape of the standing index table it mirrors (no TTL: an index
-    * never forgets a document). `df` is strictly increasing per term, so
-    * the LAST emission per term (max df) equals the batch `vocab` over
-    * everything ingested — counter merge is associative and commutative,
-    * so batch boundaries cannot change the result (spec-pinned).
-    *
-    * The index's other per-document relations need no state at all under
-    * appends: a document arrives WHOLE exactly once, so its postings
-    * rows ([[docTermFreqs]]) and its `dl` (their sum) are stateless
-    * per-batch derivations, and `totals`/`idf` fold from `vocab` at
-    * read time — this per-term state is the only stateful piece of
-    * continuous index maintenance. */
-  def vocabMaintained(spark: SparkSession,
-      docs: DataFrame): Dataset[VocabStateRow] = {
-    import spark.implicits._
-    docTermFreqs(spark, docs)
-      .groupByKey(_.term)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(vocabProcess)
-  }
-
-  /** Stateless per-document postings rows — (doc_id, term, tf), equal to
-    * the batch postings relation because each document arrives whole in
-    * exactly one row (a typed flatMap, not a streaming aggregation). */
-  def docTermFreqs(spark: SparkSession, docs: DataFrame): Dataset[TermTfRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        text.split(" ").groupBy(identity).map { case (t, g) =>
-          TermTfRow(id, t, g.length.toLong)
-        }
-      }
-  }
-
-  private[graft] def vocabProcess(term: String,
-      rows: Iterator[TermTfRow],
-      state: GroupState[(Long, Long)]): Iterator[VocabStateRow] = {
-    var (df, ctf) = state.getOption.getOrElse((0L, 0L))
-    rows.foreach { r => df += 1; ctf += r.tf }
-    state.update((df, ctf))
-    Iterator.single(VocabStateRow(term, df, ctf))
   }
 }

@@ -14,9 +14,9 @@ import graft.{GraftConfig, GraftSession, Tables}
   * state store. They share the parsed stream's plan, not its rows: every
   * query opens its own source scan and decodes each event again
   * (perfbench's `stream_app_backlog` measured `source.rows_per_event` =
-  * 10.03); decoding once is ROADMAP item 1. Thresholds come from
-  * [[GraftConfig]] (spark conf > `ABBANK_*` env vars > oracle-verified
-  * defaults).
+  * 10.03); decoding once per micro-batch for all of them is still open.
+  * Thresholds come from [[GraftConfig]] (spark conf > `ABBANK_*` env
+  * vars > oracle-verified defaults).
   *
   * Source and sinks are config-driven ([[Sources]]): files (default) or
   * `format("kafka")` the day a connector jar is present — a `--conf`

@@ -3,7 +3,6 @@ package graft.streaming
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.UUID
-import java.util.concurrent.Executors
 
 import scala.collection.concurrent.TrieMap
 
@@ -12,6 +11,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+
+import graft.Json
 
 /** Ops introspection sidecar — the analog of the reference's
   * `health/HealthServer.java:40-52` (liveness/readiness/metrics HTTP
@@ -90,27 +91,24 @@ class HealthServer(spark: SparkSession, port: Int = 8080) {
     else if (queryStates.nonEmpty) "REBALANCING" // queries initializing
     else "CREATED"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def probeBody(probe: String): String =
-    s"""{"status":${jsonStr(state)},"probe":${jsonStr(probe)},""" +
-      s""""timestamp":${jsonStr(java.time.Instant.now.toString)}}"""
+    s"""{"status":${Json.quote(state)},"probe":${Json.quote(probe)},""" +
+      s""""timestamp":${Json.quote(java.time.Instant.now.toString)}}"""
 
   private def metricsBody(): String = {
     val queries = queryStates.toSeq.map { case (id, (name, st)) =>
       val progress = lastProgress.get(id).getOrElse("null")
       val stName = st match {
-        case Failed(m) => s"""{"failed":${jsonStr(m.linesIterator.take(1).mkString)}}"""
-        case other => jsonStr(other.toString.toUpperCase)
+        case Failed(m) => s"""{"failed":${Json.quote(m.linesIterator.take(1).mkString)}}"""
+        case other => Json.quote(other.toString.toUpperCase)
       }
-      s"""${jsonStr(Option(name).getOrElse(id.toString))}:""" +
+      s"""${Json.quote(Option(name).getOrElse(id.toString))}:""" +
         s"""{"state":$stName,"lastProgress":$progress}"""
     }.mkString("{", ",", "}")
-    s"""{"state":${jsonStr(state)},""" +
-      s""""application":${jsonStr(spark.sparkContext.appName)},""" +
+    s"""{"state":${Json.quote(state)},""" +
+      s""""application":${Json.quote(spark.sparkContext.appName)},""" +
       s""""version":"1.0.0",""" +
-      s""""timestamp":${jsonStr(java.time.Instant.now.toString)},""" +
+      s""""timestamp":${Json.quote(java.time.Instant.now.toString)},""" +
       s""""queries":$queries}"""
   }
 
@@ -133,7 +131,9 @@ class HealthServer(spark: SparkSession, port: Int = 8080) {
         probeBody("readiness")))
     server.createContext("/metrics",
       (ex: HttpExchange) => send(ex, 200, metricsBody()))
-    server.setExecutor(Executors.newSingleThreadExecutor())
+    // no executor: requests run on the server's dispatcher thread, which
+    // stop() ends — HttpServer.stop never shuts down an executor it was
+    // given, and that executor's non-daemon thread would keep the JVM up
     server.start()
     this
   }

@@ -41,8 +41,7 @@ final class OrderedFold[E, S, O](
     orderKey: E => (Long, Long),
     zero: S,
     step: (S, E) => (S, Seq[O]),
-    endOfBatch: (Long, S, Seq[E]) => (S, Seq[O]) =
-      (_: Long, s: S, _: Seq[E]) => (s, Nil),
+    endOfBatch: (S, Seq[E]) => (S, Seq[O]) = (s: S, _: Seq[E]) => (s, Nil),
     expiry: Option[Expiry[S, O]] = None)
     extends ((Long, Iterator[E], GroupState[Sealed[S]]) => Iterator[O])
     with Serializable {
@@ -65,7 +64,7 @@ final class OrderedFold[E, S, O](
           if (Ordering[(Long, Long)].lt(k, seal)) lateRows.add(1L)
           else { s = emit(step(s, e)); seal = k; accepted += e }
         }
-        Sealed(emit(endOfBatch(key, s, accepted.toSeq)), seal._1, seal._2)
+        Sealed(emit(endOfBatch(s, accepted.toSeq)), seal._1, seal._2)
       }
     if (gs.hasTimedOut && next.state == zero) gs.remove()
     else {

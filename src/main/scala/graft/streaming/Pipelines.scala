@@ -16,7 +16,8 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
   * stream into five subgraphs). Here each pipeline is its own streaming
   * query over the parsed stream's plan, so each one scans and decodes the
   * source itself; [[fanOutStateless]] shares one scan per micro-batch
-  * across stateless sinks, but no app calls it yet (ROADMAP item 1).
+  * across stateless sinks, but no app calls it until the decode-once
+  * design chooses between it and a staging query.
   *
   * Semantics choices (SURVEY §2.5): event time = envelope record time
   * (`event_ts`); NO grace -> `withWatermark(_, "0 seconds")`; emission on
@@ -39,13 +40,13 @@ import graft.ops.{Enrich, Notify, Predicates, Windows}
   * cluster's 200). A query's first batch records the width in its
   * checkpoint, and a restart keeps it whatever the session conf says.
   *
-  * Lateness: every event-time `GroupState` tracker (dormancy timers,
-  * rolling spend, TWAB, concurrency, EWMA, the funnel and k-step
-  * patterns) folds through [[OrderedFold]]: per key, a row strictly
-  * behind the greatest order key already folded is dropped and counted in
-  * the query's `graft.late_rows.<tracker>` accumulator, the per-key form
-  * of the no-grace windows' drop. [[reconcileAlerts]] alone folds in
-  * arrival order, as the reference's balance store does.
+  * Lateness: every event-time `GroupState` tracker (rolling spend, TWAB,
+  * the funnel and k-step patterns) folds through [[OrderedFold]]: per
+  * key, a row strictly behind the greatest order key already folded is
+  * dropped and counted in the query's `graft.late_rows.<tracker>`
+  * accumulator, the per-key form of the no-grace windows' drop.
+  * [[reconcileAlerts]] alone folds in arrival order, as the reference's
+  * balance store does.
   *
   * Upgrade rule: these trackers' state carries the seal, so a checkpoint
   * written before [[OrderedFold]] does not restore — delete the tracker
@@ -75,7 +76,7 @@ object Pipelines {
     * Its rows equal `upsertsOnly(parsedTransactions(deriveEventTime(raw)))`
     * plus `event_ts`, but Structured Streaming re-analyzes, re-optimizes
     * and re-plans the whole logical plan on every trigger, and Spark plans
-    * each micro-batch a second time to print it (ROADMAP item 8), so the
+    * each micro-batch a second time to print it for the SQL UI, so the
     * stateless prefix is handed to Catalyst already collapsed. */
   def parsedStreamFromPath(spark: SparkSession, dir: String, glob: String = "*",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -172,9 +173,9 @@ object Pipelines {
     * [[graft.cdc.DimensionCdc.accountsDim]]: envelope versions through the
     * wire serde, latest-by-key, tombstones applied. In a micro-batch
     * engine the KTable is re-read per batch (stream-static join semantics);
-    * a continuously-maintained variant upserts via [[latestTable]]-style
-    * update mode. Deleted accounts fall back to "N/A" like missing
-    * KV-store rows (`:252-253`). */
+    * the continuously-maintained KTable is [[accountsDimStream]], which
+    * the two-hop query reads. Deleted accounts fall back to "N/A" like
+    * missing KV-store rows (`:252-253`). */
   def highValueCdcEnriched(parsed: DataFrame, customerTable: DataFrame,
       threshold: Double): DataFrame = {
     val hv = completed(parsed)
@@ -204,18 +205,6 @@ object Pipelines {
       parsed.withWatermark("event_ts", grace),
       windowSec, minTxns, tsCol = col("event_ts"))
 
-  /** Hopping-window velocity (the reference's dead VelocityState intent —
-    * see [[graft.ops.Windows.velocityHopping]]): identical streaming
-    * semantics to [[velocityAlerts]], each event just lands in
-    * window/advance overlapping windows, all closed by the same
-    * watermark. */
-  def velocityHoppingAlerts(parsed: DataFrame, windowSec: Int,
-      advanceSec: Int, minTxns: Long,
-      grace: String = "0 seconds"): DataFrame =
-    Windows.velocityHopping(
-      parsed.withWatermark("event_ts", grace),
-      windowSec, advanceSec, minTxns, tsCol = col("event_ts"))
-
   /** Pipeline 4 — daily spend: 24 h tumbling debit sum (reference
     * `:373-426`). `grace` as in [[velocityAlerts]]. */
   def dailySpendAlerts(parsed: DataFrame, threshold: Double,
@@ -228,27 +217,14 @@ object Pipelines {
   /** Pipeline 5 — dormancy: session windows per account (reference
     * `:327-369`). `grace` is `SessionWindows.ofInactivityGapAndGrace`'s
     * second argument: a late row within grace still merges into (or
-    * extends) its session; outside grace it is dropped. */
+    * extends) its session; outside grace it is dropped. A session emits
+    * when the watermark closes it, flagged `is_dormant` if it had one
+    * event — the reference's documented alert intent (README:73-80). */
   def dormancyAlerts(parsed: DataFrame, gap: String,
       grace: String = "0 seconds"): DataFrame =
     Windows.dormancySessions(
       parsed.withWatermark("event_ts", grace),
       gap, tsCol = col("event_ts"))
-
-  /** Streaming KTable maintenance: the continuously-updated latest row per
-    * account (reference `topology/ABBankTopology.java:119-123` — the KTable
-    * the enrichment join reads). An update-mode aggregation with `max_by`:
-    * each micro-batch re-emits only the keys whose latest version changed;
-    * state = one narrow struct per key. Run with `outputMode("update")`
-    * into an upsert-capable sink (or complete mode for a full snapshot). */
-  def latestTable(parsed: DataFrame): DataFrame =
-    graft.ops.LatestByKey.latestByMaxBy(
-        parsed.select("account_id", "txn_id", "amount",
-          "event_time_ms", "event_time_us"),
-        Seq("account_id"), struct(col("event_time_us"), col("txn_id")))
-      .select(col("account_id"), col("txn_id").as("last_txn_id"),
-        col("amount").as("last_amount"),
-        col("event_time_ms").as("last_event_time_ms"))
 
   /** Streaming ACCOUNTS KTable maintenance — the reference's accounts
     * KTable is CONTINUOUSLY maintained from its CDC topic
@@ -378,18 +354,6 @@ object Pipelines {
       .start()
   }
 
-  /** CDC delivery is at-least-once (reference
-    * `config/ABBankStreamsConfig.java:85-86`): replays duplicate the same
-    * transaction id. This stage makes downstream processing
-    * effectively-once: duplicates within the watermark horizon are dropped,
-    * and the per-id state is expired BY the watermark
-    * (`dropDuplicatesWithinWatermark`) — bounded state, unlike a plain
-    * streaming dropDuplicates which retains every id forever. */
-  def dedupedStream(parsed: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
-    parsed
-      .withWatermark("event_ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("txn_id")
-
   /** Topological fan-out (reference `topology/ABBankTopology.java:149-153`:
     * one shared parsed stream feeds five subgraphs). For stateless sinks
     * the Spark analog is ONE streaming query whose `foreachBatch` persists
@@ -430,71 +394,11 @@ object Pipelines {
     checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
   }
 
-  /** Stream–stream windowed join (absent from the reference — Kafka
-    * Streams would need a windowed KStream join; SURVEY §2.3): debit and
-    * credit streams of the same account matched within ±`toleranceSec`.
-    * Watermarks on both sides + the time-bound join condition let Spark
-    * expire join state; inner matches emit as they arrive. */
-  def creditDebitPairs(debits: DataFrame, credits: DataFrame,
-      toleranceSec: Long): DataFrame =
-    creditDebitJoin(debits, credits, toleranceSec, "inner")
-
-  /** Stream–stream LEFT OUTER windowed join: every debit emits — matched
-    * debits as they pair, unmatched debits with null credit columns once
-    * the watermark passes their join window and Spark can prove no credit
-    * will arrive (state for the expired window is freed at the same
-    * moment). The completeness-checking variant of [[creditDebitPairs]]:
-    * "which debits had NO nearby credit" is itself the alert condition.
-    *
-    * Watermark caveat: the global watermark is the MIN across both sides'
-    * watermark operators, each fed by its own filtered branch — if one
-    * branch's filter starves (e.g. no credits arrive), the unmatched
-    * results stall with it. Keep both filters broad enough that each side
-    * keeps observing event time, or set a nonzero delay policy. */
-  def creditDebitPairsOuter(debits: DataFrame, credits: DataFrame,
-      toleranceSec: Long): DataFrame =
-    creditDebitJoin(debits, credits, toleranceSec, "left_outer")
-
-  private def creditDebitJoin(debits: DataFrame, credits: DataFrame,
-      toleranceSec: Long, joinType: String): DataFrame = {
-    val d = debits
-      .select(col("txn_id"), col("account_id"), col("event_ts"))
-      .withWatermark("event_ts", "0 seconds")
-    val c = credits
-      .select(col("txn_id").as("credit_txn_id"),
-        col("account_id").as("credit_account_id"),
-        col("event_ts").as("credit_ts"))
-      .withWatermark("credit_ts", "0 seconds")
-    d.join(c,
-      col("account_id") === col("credit_account_id") &&
-        col("credit_ts") >= col("event_ts") - expr(s"INTERVAL $toleranceSec SECONDS") &&
-        col("credit_ts") <= col("event_ts") + expr(s"INTERVAL $toleranceSec SECONDS"),
-      joinType)
-      .select("txn_id", "credit_txn_id", "account_id")
-  }
-
   /** The late-row counter of one tracker query, `graft.late_rows.<tracker>`
     * (see [[OrderedFold]]). A named accumulator, so it appears in each
     * task's accumulables: the Spark UI and any `SparkListener` see it. */
   private def lateRows(spark: SparkSession, tracker: String): LongAccumulator =
     spark.sparkContext.longAccumulator(s"graft.late_rows.$tracker")
-
-  /** Pipeline 5 alternative — dormancy with state + event-time timers
-    * (see [[DormancyDetector]]): alerts fire exactly when the watermark
-    * closes a single-event session. Late rows: [[OrderedFold]],
-    * `graft.late_rows.dormancy`. */
-  def dormancyTimeoutAlerts(spark: SparkSession, parsed: DataFrame,
-      gapUs: Long): Dataset[DormancyAlert] = {
-    import spark.implicits._
-    parsed
-      .withWatermark("event_ts", "0 seconds")
-      .selectExpr("txn_id", "account_id", "event_time_us", "event_ts")
-      .as[DormTxn]
-      .groupByKey(_.account_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        DormancyDetector.fold(gapUs, lateRows(spark, "dormancy")))
-  }
 
   /** Rolling trailing-window spend as true incremental state — the
     * streaming twin of [[graft.ops.Windows.rollingSpend]]. Each account's
@@ -551,63 +455,6 @@ object Pipelines {
       .groupByKey(_.account_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(TwabTracker.fold(lateRows(spark, "twab")))
-  }
-
-  /** Session concurrency as DAY-SHARDED incremental state + merge-on-read
-    * — the streaming twin of
-    * [[graft.ops.EventAnalytics.sessionConcurrencyDaily]], shaped like the
-    * batch two-pass prefix scan rather than a single global counter: a
-    * cumulative-GLOBAL output cannot be keyed by any data column, and one
-    * all-events key would serialize the whole stream through one state
-    * partition (the streaming mirror of the one-task window the batch
-    * operator exists to avoid). So:
-    *
-    *   1. this stage keys by DAY: each day's tracker scans its own ±1
-    *      boundaries in order, maintaining (local running, local max,
-    *      net delta) RELATIVE to the day's start — O(1) state per day,
-    *      parallel across days, emitting a refined [[ConcurrencyPartial]]
-    *      per day per batch (last emission per day = the sealed partial);
-    *   2. [[mergeConcurrency]] completes the global curve AT READ TIME:
-    *      day d's offset is the net-delta sum of all prior days — a
-    *      day-cardinality table (thousands of rows at any corpus size),
-    *      so the merge is model-sized, exactly like the batch scan's
-    *      driver offset table.
-    *
-    * Lateness ([[OrderedFold]]): boundaries fold per day in (ts_ms, delta)
-    * order — ends before starts at equal ts, the batch operator's tie
-    * rule; a boundary behind its day's newest folded (ts_ms, delta) is
-    * dropped and counted in `graft.late_rows.concurrency`, and a batch
-    * that folds nothing for a day emits nothing for it. */
-  def concurrencyPartials(spark: SparkSession,
-      boundaries: DataFrame): Dataset[ConcurrencyPartial] = {
-    import spark.implicits._
-    boundaries
-      .select(col("ts_ms").cast("long").as("ts_ms"),
-        col("delta").cast("long").as("delta"),
-        timestamp_millis(col("ts_ms")).as("event_ts"))
-      .withWatermark("event_ts", "0 seconds")
-      .as[BoundaryEvent]
-      .groupByKey(e => Math.floorDiv(e.ts_ms, 86400000L))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(
-        ConcurrencyTracker.fold(lateRows(spark, "concurrency")))
-  }
-
-  /** Merge-on-read completion of [[concurrencyPartials]]: lift each day's
-    * local max by the cumulative net delta of all PRIOR days. Input is
-    * one sealed partial per day — day-cardinality, model-sized — so the
-    * single ordered window here is over thousands of rows by
-    * construction, not the event stream (the same "driver-offset"
-    * footprint as the batch scan's per-partition totals). */
-  def mergeConcurrency(partials: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    partials
-      .withColumn("__offset", coalesce(sum(col("net_delta")).over(w), lit(0L)))
-      .select(col("day"),
-        (col("__offset") + col("local_max")).as("max_concurrent"),
-        col("n_boundaries"))
   }
 
   /** Funnel conversion as incremental state + event-time timers — the
@@ -675,24 +522,6 @@ object Pipelines {
         PatternKTracker.fold(steps, horizonUs, lateRows(spark, tracker)))
   }
 
-  /** Live per-key EWMA recency scores — the streaming twin of
-    * [[graft.ops.EventAnalytics.ewmaRecency]] via [[EwmaTracker]].
-    * Input: (key, ts_us, seq, amount_cents). State: k amounts per key.
-    * A row behind its key's newest folded (ts_us, seq) is dropped and
-    * counted in `graft.late_rows.ewma` ([[OrderedFold]]). */
-  def ewmaUpdates(spark: SparkSession, rows: DataFrame, k: Int = 8)
-      : Dataset[EwmaRow] = {
-    import spark.implicits._
-    rows.select(col("key").cast("long"), col("ts_us").cast("long"),
-        col("seq").cast("long"), col("amount_cents").cast("long"),
-        timestamp_micros(col("ts_us")).as("event_ts"))
-      .withWatermark("event_ts", "0 seconds")
-      .as[EwmaTxn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(EwmaTracker.fold(k, lateRows(spark, "ewma")))
-  }
-
   /** Pipeline 3 — balance reconciliation: true incremental per-key state via
     * `flatMapGroupsWithState` (the streaming twin of
     * [[graft.ops.Reconcile]]; reference
@@ -709,48 +538,6 @@ object Pipelines {
   }
 }
 
-/** Dormancy alert emitted when a session CLOSES having had exactly one
-  * event — the reference's documented intent (README:73-80), which its
-  * eager DSL emission only approximates (SURVEY §2.5). */
-case class DormancyAlert(account_id: Long, session_start_ms: Long,
-    n_events: Long)
-
-/** Per-account session state for the timeout-based dormancy detector
-  * (`n == 0`: no open session). */
-case class SessionState(startUs: Long, lastUs: Long, n: Long)
-
-/** Input row for the dormancy detector — carries the watermarked
-  * `event_ts` column through the typed projection (dropping it would
-  * detach the watermark from the stateful operator). */
-case class DormTxn(txn_id: Long, account_id: Long, event_time_us: Long,
-    event_ts: java.sql.Timestamp)
-
-/** Timeout-driven dormancy: sessions are tracked in `GroupState` and the
-  * alert fires from the EVENT-TIME TIMEOUT callback when the watermark
-  * passes (last event + gap) — i.e., exactly at session close, with state
-  * freed on firing. The third stateful-processing pattern after the
-  * running-balance scan and watermarked windows: state + timers.
-  */
-object DormancyDetector {
-  private val NoSession = SessionState(0L, 0L, 0L)
-
-  private def alert(accountId: Long, s: SessionState): Seq[DormancyAlert] =
-    if (s.n == 1) Seq(DormancyAlert(accountId, s.startUs / 1000, s.n)) else Nil
-
-  def fold(gapUs: Long, lateRows: LongAccumulator)
-      : OrderedFold[DormTxn, SessionState, DormancyAlert] =
-    new OrderedFold[DormTxn, SessionState, DormancyAlert](lateRows,
-      orderKey = e => (e.event_time_us, e.txn_id),
-      zero = NoSession,
-      step = (s, e) =>
-        if (s.n > 0 && e.event_time_us - s.lastUs < gapUs)
-          (SessionState(s.startUs, e.event_time_us, s.n + 1), Nil)
-        else // the gap closed the open session
-          (SessionState(e.event_time_us, e.event_time_us, 1), alert(e.account_id, s)),
-      expiry = Some(Expiry[SessionState, DormancyAlert](_.lastUs + gapUs,
-        (accountId, s, _) => (NoSession, alert(accountId, s)))))
-}
-
 /** Input row for the stateful reconciler. */
 case class ReconTxn(txn_id: Long, account_id: Long, amount: Double,
     txn_type: String, event_time_us: Long, event_time_ms: Long)
@@ -762,7 +549,8 @@ case class ReconRow(txn_id: Long, account_id: Long, event_time_ms: Long,
     recon_status: String, severity: String)
 
 /** Input row for the pattern trackers — `event_ts` carries the watermark
-  * through the typed projection (same note as [[DormTxn]]). */
+  * through the typed projection (dropping it would detach the watermark
+  * from the stateful operator). */
 case class FunnelEvent(event_id: Long, user_id: Long, ts_us: Long,
     event_type: String, event_ts: java.sql.Timestamp)
 
@@ -833,7 +621,8 @@ object PatternKTracker {
 }
 
 /** Input/output rows for the rolling-spend tracker — `event_ts` carries
-  * the watermark through the typed projection (same note as [[DormTxn]]). */
+  * the watermark through the typed projection (same note as
+  * [[FunnelEvent]]). */
 case class RollTxn(txn_id: Long, account_id: Long, event_time_us: Long,
     kobo: Long, event_ts: java.sql.Timestamp)
 case class RollRow(txn_id: Long, account_id: Long, event_time_us: Long,
@@ -857,7 +646,7 @@ object RollingSpendTracker {
       step = (buf, e) => (buf :+ ((e.event_time_us, e.kobo)), Nil),
       // frames are read once the whole batch is buffered, so equal-ts
       // rows see each other — the RANGE frame's peer semantics
-      endOfBatch = (_, buf, rows) => {
+      endOfBatch = (buf, rows) => {
         val out = rows.map { e =>
           val ts = e.event_time_us
           val frame = buf.filter(p => p._1 >= ts - windowUs && p._1 <= ts)
@@ -923,41 +712,6 @@ object TwabTracker {
       })
 }
 
-/** One ±1 session boundary (start = +1, end = −1) with its event time. */
-case class BoundaryEvent(ts_ms: Long, delta: Long,
-    event_ts: java.sql.Timestamp)
-
-/** One day's sealed (or in-progress) concurrency shard: the day's local
-  * running max and net delta RELATIVE to day start, plus the boundary
-  * count (monotone — the last emission per day is the final partial). */
-case class ConcurrencyPartial(day: Long, local_max: Long, net_delta: Long,
-    n_boundaries: Long)
-
-/** Per-day tracker state: local running level, local max, boundary count. */
-case class ConcurrencyState(running: Long, local_max: Long,
-    n_boundaries: Long)
-
-/** Stateful per-day concurrency tracker: folds the day's boundaries in
-  * (ts_ms, delta) order (ends before starts at equal ts — the batch tie
-  * rule), keeps the day-local running level and max, and emits the day's
-  * partial once per batch that moved it. */
-object ConcurrencyTracker {
-  def fold(lateRows: LongAccumulator)
-      : OrderedFold[BoundaryEvent, ConcurrencyState, ConcurrencyPartial] =
-    new OrderedFold[BoundaryEvent, ConcurrencyState, ConcurrencyPartial](
-      lateRows,
-      orderKey = e => (e.ts_ms, e.delta),
-      zero = ConcurrencyState(0L, Long.MinValue, 0L),
-      step = (st, e) => {
-        val r = st.running + e.delta
-        (ConcurrencyState(r, math.max(st.local_max, r), st.n_boundaries + 1), Nil)
-      },
-      endOfBatch = (day, st, rows) =>
-        (st, if (rows.isEmpty) Nil
-          else Seq(ConcurrencyPartial(day, st.local_max, st.running,
-            st.n_boundaries))))
-}
-
 /** Per-account sequential reconciliation with one Double of state — the
   * streaming analog of the reference's RocksDB `account-balance-store`.
   * Events are ordered (event_time_us, txn_id) within each micro-batch;
@@ -992,38 +746,4 @@ object Reconciler {
     stored.foreach(state.update)
     out.iterator
   }
-}
-
-/** Input row for the EWMA tracker. */
-case class EwmaTxn(key: Long, ts_us: Long, seq: Long, amount_cents: Long,
-    event_ts: java.sql.Timestamp)
-
-/** Live EWMA emission — the batch operator's output row plus the
-  * triggering event's `seq` (identifies WHICH prefix the score is for;
-  * the max-seq emission per key is the full-history score). */
-case class EwmaRow(key: Long, seq: Long, n_recent: Long, weight_sum: Long,
-    ewma_num: Long, ewma_cents: Long)
-
-/** Stateful last-k EWMA tracker — the streaming twin of
-  * [[graft.ops.EventAnalytics.ewmaRecency]]: per-key state is the amounts
-  * of the k most recent events in (ts_us, seq) order (O(k) scalars,
-  * lifetime state like [[TwabTracker]] — the score is defined over the
-  * key's whole history, so there is nothing to time out), and every
-  * accepted event emits the key's LIVE recency score; the final emission
-  * per key equals the batch operator over the accepted events.
-  * Power-of-two weights and one truncating division per emission — exact
-  * integers end to end. */
-object EwmaTracker {
-  def fold(k: Int, lateRows: LongAccumulator)
-      : OrderedFold[EwmaTxn, Seq[Long], EwmaRow] =
-    new OrderedFold[EwmaTxn, Seq[Long], EwmaRow](lateRows,
-      orderKey = e => (e.ts_us, e.seq),
-      zero = Seq.empty,
-      step = (ring, e) => {
-        val next = (ring :+ e.amount_cents).takeRight(k) // oldest..newest
-        val ws = next.indices.map(j => 1L << (k - 1 - j))
-        val num = next.reverse.zip(ws).map { case (a, w) => a * w }.sum
-        (next, Seq(EwmaRow(e.key, e.seq, next.size.toLong, ws.sum, num,
-          num / ws.sum)))
-      })
 }

@@ -1,10 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
-import graft.{SparkSpecBase, Tables}
-import graft.cdc.EnvelopeOps
-import graft.streaming.Pipelines
+import graft.SparkSpecBase
 
 class IntervalJoinSpec extends SparkSpecBase {
   import spark.implicits._
@@ -51,85 +47,5 @@ class IntervalJoinSpec extends SparkSpecBase {
         .select("lid", "rid").as[(Long, Long)].collect().toSet
       assert(got === naive, s"seed $seed")
     }
-  }
-
-  test("outer stream-stream join emits unmatched debits after watermark passes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssoj").toString
-    def writeFile(rows: Seq[(Long, Long, Long, String, Double)], f: String): Unit = {
-      val staging = java.nio.file.Files.createTempDirectory("graft_ssoj_st").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("props", lit("{}"))
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-      val part = new java.io.File(staging).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(s"$dir/$f.parquet"))
-    }
-    val base = 1700000000000000000L
-    // debit 1 pairs with credit 11 (same account, +10 min); debit 3 never
-    // gets a credit; the second file's far-future event advances the
-    // watermark so debit 3's window provably closes
-    writeFile(Seq(
-      (1L, base, 7L, "purchase", 10.0),
-      (11L, base + 600L * 1000000000L, 7L, "signup", 20.0),
-      (3L, base, 8L, "purchase", 30.0)), "a_early")
-    // both join inputs filter the shared stream, and the global watermark
-    // is the MIN across both sides' watermark operators — so the
-    // watermark-advancing events must survive BOTH filters: one late
-    // debit and one late credit
-    writeFile(Seq(
-      (4L, base + 86400L * 1000000000L, 9L, "purchase", 5.0),
-      (14L, base + 86400L * 1000000000L, 9L, "signup", 5.0)), "b_late")
-
-    val parsed = Pipelines.parsedStreamFromPath(spark, dir,
-      maxFilesPerTrigger = Some(1))
-    val pairs = Pipelines.creditDebitPairsOuter(
-      parsed.filter(Predicates.isCompleted(col("status")) &&
-        Predicates.isDebit(col("txn_type"))),
-      parsed.filter(Predicates.isCredit(col("txn_type"))),
-      toleranceSec = 3600L)
-    val q = pairs.writeStream.format("memory").queryName("ss_outer")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // expired-state results flush on the NEXT batch evaluated under the
-    // advanced watermark — feed one more event to trigger it
-    writeFile(Seq(
-      (5L, base + 2 * 86400L * 1000000000L, 9L, "purchase", 5.0),
-      (15L, base + 2 * 86400L * 1000000000L, 9L, "signup", 5.0)), "c_later")
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("ss_outer")
-      .select("txn_id", "credit_txn_id")
-      .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
-    assert(got.contains((1L, Some(11L))))    // matched pair
-    assert(got.contains((3L, None)))         // unmatched emits with null
-  }
-
-  test("stream-stream windowed join emits the same pairs as the batch interval join") {
-    val parsedBatch = EnvelopeOps.upsertsOnly(
-      EnvelopeOps.parsedTransactions(Tables.events(spark, sf0001)))
-    val debitsB = parsedBatch
-      .filter(Predicates.isCompleted(col("status")) &&
-        Predicates.isDebit(col("txn_type")))
-      .select("txn_id", "account_id", "event_time_us")
-    val creditsB = parsedBatch.filter(Predicates.isCredit(col("txn_type")))
-      .select(col("txn_id").as("credit_txn_id"), col("account_id"),
-        col("event_time_us").as("credit_ts_us"))
-    val want = IntervalJoin.inner(debitsB, creditsB, "account_id",
-        "event_time_us", "credit_ts_us", -3600000000L, 3600000000L)
-      .select("txn_id", "credit_txn_id").as[(Long, Long)].collect().toSet
-
-    val parsedS = Pipelines.parsedStream(spark, sf0001)
-    val pairs = Pipelines.creditDebitPairs(
-      parsedS.filter(Predicates.isCompleted(col("status")) &&
-        Predicates.isDebit(col("txn_type"))),
-      parsedS.filter(Predicates.isCredit(col("txn_type"))),
-      toleranceSec = 3600L)
-    val q = pairs.writeStream.format("memory").queryName("ss_join")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("ss_join").select("txn_id", "credit_txn_id")
-      .as[(Long, Long)].collect().toSet
-    assert(got === want)
-    assert(got.nonEmpty)
   }
 }

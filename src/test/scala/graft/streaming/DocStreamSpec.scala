@@ -138,145 +138,6 @@ class DocStreamSpec extends SparkSpecBase {
     assert(got === Set((1L, 2L)))
   }
 
-  test("streaming KMV sketch: last emission per source == batch kmvPerGroup") {
-    implicit val ctx = spark.sqlContext
-    val rnd = new scala.util.Random(42L)
-    val rows = (1 to 300).map(i =>
-      ("src" + (i % 3), rnd.nextLong() % 500))  // dupes + negatives
-    val batches = rows.grouped(100).toSeq
-
-    val input = MemoryStream[(String, Long)]
-    val stream = DocStream.kmvSketches(spark,
-      input.toDF().toDF("source", "h"), k = 16)
-    val q = stream.writeStream.format("memory").queryName("kmv_live")
-      .outputMode("append").start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-
-    // one emission per source per batch; the LAST (max n_seen) is the
-    // live sketch
-    val live = spark.table("kmv_live").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2)))
-      .groupBy(_._1).map { case (s, es) =>
-        val m = es.maxBy(_._2); s -> (m._2, m._3)
-      }
-
-    val batch = graft.ops.Sketches.kmvPerGroup(
-        rows.toDF("source", "h"), "source", col("h"), k = 16)
-      .collect()
-      .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
-
-    assert(live.keySet === batch.keySet)
-    batch.foreach { case (src, (sketch, nRows)) =>
-      val (nSeen, liveSketch) = live(src)
-      assert(nSeen === nRows, s"$src n_seen")
-      assert(liveSketch === sketch, s"$src sketch")
-    }
-  }
-
-  test("streaming bottom-k sample: last emission per group == batch qsamplePerGroup") {
-    implicit val ctx = spark.sqlContext
-    val rnd = new scala.util.Random(815L)
-    val rows = (1 to 300).map(i =>
-      ("src" + (i % 3), rnd.nextLong() % 100, rnd.nextInt(1000).toLong))
-    val batches = rows.grouped(100).toSeq
-
-    val input = MemoryStream[(String, Long, Long)]
-    val stream = DocStream.qsampleSketches(spark,
-      input.toDF().toDF("source", "h", "v"), k = 16)
-    val q = stream.writeStream.format("memory").queryName("qs_live")
-      .outputMode("append").start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-
-    val live = spark.table("qs_live").collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        r.getSeq[Long](2).zip(r.getSeq[Long](3))))
-      .groupBy(_._1).map { case (s, es) =>
-        val m = es.maxBy(_._2); s -> (m._2, m._3)
-      }
-
-    val batch = graft.ops.Sketches.qsamplePerGroup(
-        rows.toDF("source", "h", "v"), "source", col("h"), col("v"), k = 16)
-      .collect()
-      .map { r =>
-        r.getString(0) -> (
-          r.getSeq[org.apache.spark.sql.Row](1).map(p => (p.getLong(0), p.getLong(1))),
-          r.getLong(2))
-      }.toMap
-
-    assert(live.keySet === batch.keySet)
-    batch.foreach { case (src, (sample, nRows)) =>
-      val (nSeen, liveSample) = live(src)
-      assert(nSeen === nRows, s"$src n_seen")
-      assert(liveSample.toSeq === sample.toSeq, s"$src sample")
-    }
-  }
-
-  test("streaming Gram accumulator: last emission per group == batch GramAgg") {
-    implicit val ctx = spark.sqlContext
-    val rnd = new scala.util.Random(2080L)
-    val d = 6
-    val rows = (1 to 90).map(i =>
-      ("s" + (i % 2), Seq.fill(d)(rnd.nextInt(100).toLong)))
-    val batches = rows.grouped(30).toSeq
-
-    val input = MemoryStream[(String, Seq[Long])]
-    val stream = DocStream.gramSketches(spark,
-      input.toDF().toDF("source", "g"))
-    val q = stream.writeStream.format("memory").queryName("gram_live")
-      .outputMode("append").start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-
-    val live = spark.table("gram_live").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2)))
-      .groupBy(_._1).map { case (s, es) =>
-        val m = es.maxBy(_._2); s -> (m._2, m._3)
-      }
-
-    rows.groupBy(_._1).foreach { case (src, grp) =>
-      val want = grp.map(_._2.toArray)
-        .foldLeft(Array.emptyLongArray)(graft.sim.Gram.GramAgg.reduce)
-      val (nSeen, gram) = live(src)
-      assert(nSeen === grp.size.toLong, s"$src n_seen")
-      assert(gram.toSeq === want.toSeq, s"$src gram")
-    }
-  }
-
-  test("streaming span-dedup positions == batch duplicatedPositions, " +
-      "each emitted exactly once") {
-    implicit val ctx = spark.sqlContext
-    val n = 4 // small gram so the sf0.001 corpus has plenty of dup spans
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    assert(docs.length > 100)
-
-    val want = graft.dedup.DupSpans.duplicatedPositions(
-        Tables.documents(spark, sf0001), n)
-      .as[(Long, Long)].collect().toSet
-    assert(want.nonEmpty)
-
-    val input = MemoryStream[(Long, Long, String)]
-    val out = run(
-      DocStream.dupPositions(spark, docsFrom(input), n).toDF(), "doc_spans")(
-      docs.grouped((docs.length + 2) / 3).toSeq.map(c => { () =>
-        input.addData(c.map { case (id, t) => (id, 1000L + id, t) }.toSeq)
-        ()
-      }): _*)
-
-    val got = out.select("doc_id", "pos").as[(Long, Long)].collect()
-    assert(got.toSet === want, "union of emissions == batch positions")
-    // at-most-once: no position is emitted in two micro-batches (or
-    // twice in one) — the retro/batch split is a partition, not overlap
-    assert(got.length === got.toSet.size, "no double emission")
-    // both sources fire on this corpus (retro = an early-batch exemplar
-    // flagged by a later batch): the incremental shape is exercised
-    val srcs = out.select("src").distinct().as[String].collect().toSet
-    assert(srcs === Set("batch", "retro"))
-  }
-
   test("NB columnar scorer runs STATELESS on a stream: union of per-batch " +
       "emissions == batch predictions, no state store involved") {
     implicit val ctx = spark.sqlContext
@@ -298,63 +159,5 @@ class DocStreamSpec extends SparkSpecBase {
     val got = out.as[(Long, String, Long)].collect()
     assert(got.toSet === want)
     assert(got.length === got.toSet.size, "each doc scored exactly once")
-  }
-
-  test("streaming vocab maintenance: last emissions == materialized index vocab") {
-    implicit val ctx = spark.sqlContext
-    val docs = (1L to 60L).map(i =>
-      (i, s"w${i % 7} w${i % 7} w${i % 11} shared tail${i % 3}"))
-    val input = MemoryStream[(Long, String)]
-    val out = run(
-      DocStream.vocabMaintained(spark,
-        input.toDF().toDF("doc_id", "text")).toDF(), "vocab_live")(
-      docs.grouped(20).toSeq.map(c => { () => input.addData(c); () }): _*)
-
-    // last emission per term = max df (df is strictly increasing per term)
-    val live = out.as[(String, Long, Long)].collect()
-      .groupBy(_._1).map { case (t, es) =>
-        val m = es.maxBy(_._2); (t, m._2, m._3)
-      }.toSet
-    val batch = graft.text.PostingsIndex
-      .derive(docs.toDF("doc_id", "text")).vocab
-      .as[(String, Long, Long)].collect().toSet
-    assert(live === batch)
-
-    // the stateless postings derivation equals the batch postings too
-    val streamTf = DocStream.docTermFreqs(spark, docs.toDF("doc_id", "text"))
-      .as[(Long, String, Long)].collect().toSet
-    val batchTf = graft.text.PostingsIndex
-      .derive(docs.toDF("doc_id", "text")).postings
-      .as[(Long, String, Long)].collect().toSet
-    assert(streamTf === batchTf)
-  }
-
-  test("streaming weighted reservoir: merged last emissions == batch weightedSample") {
-    implicit val ctx = spark.sqlContext
-    val docs = (1L to 90L).map(i => (i, ("w " * (1 + (i % 7)).toInt).trim))
-    val batches = docs.grouped(30).toSeq
-
-    val input = MemoryStream[(Long, String)]
-    val stream = DocStream.weightedReservoir(spark,
-      input.toDF().toDF("doc_id", "text"), n = 12, nBuckets = 4)
-    val q = stream.writeStream.format("memory").queryName("ws_live")
-      .outputMode("append").start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-
-    // the merge takes the RAW append-sink output (all historical
-    // emissions) and selects the last emission per bucket itself
-    val live = graft.streaming.DocStream.mergeWeightedPartials(
-        spark.table("ws_live"), n = 12)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._4)
-    val lastPerBucket = spark.table("ws_live").collect()
-      .groupBy(_.getLong(0)).values.map(_.maxBy(_.getLong(1))).toSeq
-
-    val batch = graft.text.TrainingPrep.weightedSample(
-        docs.toDF("doc_id", "text"), n = 12)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._4)
-    assert(live.toSeq === batch.toSeq)
-    // every bucket reservoir stayed bounded at n
-    assert(lastPerBucket.forall(_.getSeq[Long](2).length <= 12))
   }
 }

@@ -7,37 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpecBase, Tables}
 
 class FanOutSpec extends SparkSpecBase {
-  import spark.implicits._
-
-  private def writeEventsFile(dir: String,
-      rows: Seq[(Long, Long, Long, String, Double)], f: String): Unit = {
-    val staging = Files.createTempDirectory("graft_fo_st").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("props", lit("{}"))
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    val part = new java.io.File(staging).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/$f.parquet"))
-  }
-
-  test("at-least-once replays are deduped within the watermark (effectively-once)") {
-    val dir = Files.createTempDirectory("graft_dd").toString
-    val base = 1700000000000000000L
-    val rows = Seq(
-      (1L, base, 7L, "purchase", 10.0),
-      (2L, base + 1000000000L, 7L, "view", 20.0))
-    writeEventsFile(dir, rows, "original")
-    writeEventsFile(dir, rows, "replay") // duplicate delivery of the same batch
-
-    val deduped = Pipelines.dedupedStream(
-      Pipelines.parsedStreamFromPath(spark, dir))
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-
-    val got = spark.table("dedup_stream").select("txn_id").as[Long].collect().sorted
-    assert(got.toSeq === Seq(1L, 2L)) // 4 input rows -> 2 unique txns
-  }
 
   test("foreachBatch fan-out writes all sinks from one shared scan") {
     val outBase = Files.createTempDirectory("graft_fanout").toString

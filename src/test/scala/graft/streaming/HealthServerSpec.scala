@@ -1,8 +1,10 @@
 package graft.streaming
 
 import java.net.{HttpURLConnection, URL}
-import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpecBase
@@ -25,6 +27,9 @@ class HealthServerSpec extends SparkSpecBase {
     (code, body)
   }
 
+  /** Parses a body as JSON, failing the test if it is not valid JSON. */
+  private def json(body: String): JsonNode = new ObjectMapper().readTree(body)
+
   test("probes track query lifecycle: not-ready -> ready -> failed") {
     val health = new HealthServer(spark, port = 0).start()
     try {
@@ -36,9 +41,11 @@ class HealthServerSpec extends SparkSpecBase {
       val (r0, b1) = get(port, "/ready")
       assert(r0 === 503 && b1.contains("\"probe\":\"readiness\""), b1)
 
-      // a healthy query commits progress -> ready flips to 200
+      // a healthy query commits progress -> ready flips to 200; its name
+      // carries a tab, which /metrics must escape to stay valid JSON
+      val name = "health\tprobe_q"
       val q = Pipelines.parsedStream(spark, sf0001)
-        .writeStream.format("noop").queryName("health_probe_q").start()
+        .writeStream.format("noop").queryName(name).start()
       q.processAllAvailable()
       // processAllAvailable returns when data is processed, but the
       // progress EVENT reaches the server's listener over the async
@@ -54,8 +61,8 @@ class HealthServerSpec extends SparkSpecBase {
       val (r1, _) = get(port, "/ready")
       assert(r1 === 200)
       assert(m0 === 200)
-      assert(metrics.contains("\"health_probe_q\""), metrics.take(500))
-      assert(metrics.contains("\"batchId\""), metrics.take(500)) // real progress JSON
+      val progress = json(metrics).path("queries").path(name).path("lastProgress")
+      assert(progress.has("batchId"), metrics.take(500)) // real progress JSON
       q.stop()
 
       // graceful stop is not a failure
@@ -77,7 +84,24 @@ class HealthServerSpec extends SparkSpecBase {
       val (h2, body2) = get(port, "/health")
       assert(h2 === 503, body2)
       val (_, metrics2) = get(port, "/metrics")
-      assert(metrics2.contains("failed"), metrics2.take(500))
+      assert(json(metrics2).path("queries").path("health_bad_q").path("state")
+        .has("failed"), metrics2.take(500))
     } finally health.stop()
+  }
+
+  test("stop() leaves no non-daemon thread behind, so the JVM can exit") {
+    def nonDaemon(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = nonDaemon()
+    val health = new HealthServer(spark, port = 0).start()
+    try assert(get(health.boundPort, "/health")._1 === 200)
+    finally health.stop()
+    // the server's threads wind down asynchronously after stop()
+    val deadline = System.currentTimeMillis() + 10000
+    var left = nonDaemon() -- before
+    while (left.nonEmpty && System.currentTimeMillis() < deadline) {
+      Thread.sleep(100); left = nonDaemon() -- before
+    }
+    assert(left.isEmpty, left.map(_.getName))
   }
 }

@@ -12,7 +12,8 @@ import graft.ops.LatestByKey
 
 /** The KTables live in their queries' state stores: a [[Pipelines.ktableQuery]]
   * maintains one and [[Pipelines.ktableSnapshot]] reads its last committed
-  * batch through Spark's state data source. */
+  * batch through Spark's state data source. The KTable streams themselves
+  * must converge to the batch KTables. */
 class KTableSpec extends SparkSpecBase {
 
   import spark.implicits._
@@ -70,6 +71,20 @@ class KTableSpec extends SparkSpecBase {
       assert(got.select(key).as[Long].collect().toSet.intersect(tombstoned).isEmpty,
         key)
     }
+  }
+
+  test("streaming accounts KTable (complete snapshot) == batch accountsDim") {
+    val stream = Pipelines.accountsDimStream(spark, sf0001)
+    val q = stream.writeStream.format("memory").queryName("acct_ktable")
+      .outputMode("complete").start()
+    q.processAllAvailable(); q.stop()
+    // apply tombstones to the snapshot the way an upsert sink would
+    val got = spark.table("acct_ktable")
+      .filter(col("op") =!= "d").drop("op").collect().toSet
+    val want = DimensionCdc.accountsDim(Tables.customer(spark, sf0001))
+      .collect().toSet
+    assert(got === want)
+    assert(got.nonEmpty)
   }
 
   test("a second trigger's update and tombstone show up in the next read") {

@@ -139,22 +139,6 @@ class PipelinesSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
-  test("streaming hopping velocity == batch; every event in exactly window/advance windows") {
-    val stream = Pipelines.velocityHoppingAlerts(
-      Pipelines.parsedStream(spark, sf0001), windowSec = 3600,
-      advanceSec = 1800, minTxns = 2L)
-    val got = runToTable(stream, "vel_hop_stream", "complete").collect().toSet
-    val want = Windows.velocityHopping(batchParsed, 3600, 1800, 2L)
-      .collect().toSet
-    assert(got === want)
-    assert(got.nonEmpty)
-    // overlap arithmetic: with minTxns=1 the per-event fan-out is exactly
-    // window/advance = 2 rows summed across windows
-    val perEvent = Windows.velocityHopping(batchParsed, 3600, 1800, 1L)
-      .agg(sum(col("n_txns"))).head().getLong(0)
-    assert(perEvent === 2L * batchParsed.count())
-  }
-
   test("streaming daily spend (complete mode) == batch daily operator") {
     val stream = Pipelines.dailySpendAlerts(
       Pipelines.parsedStream(spark, sf0001), threshold = 150.0)
@@ -369,43 +353,6 @@ class PipelinesSpec extends SparkSpecBase {
         .select(p3Cols.map(col): _*).collect().toSet)
   }
 
-  test("streaming EWMA (k-ring state) final emission per key == batch " +
-      "operator, fed across micro-batches") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    val rows = for {
-      key <- 1L to 20L; i <- 1L to (3 + rnd.nextInt(12)).toLong
-    } yield (key, i * 1000000L, i, rnd.nextLong(10000))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ewma").toString + "/in"
-    // per-key in-order feed: chunk by ascending seq so no key regresses
-    rows.groupBy(_._2).toSeq.sortBy(_._1).map(_._2)
-      .grouped(5).zipWithIndex.foreach { case (chunk, _) =>
-        chunk.flatten.toDF("key", "ts_us", "seq", "amount_cents")
-          .coalesce(1).write.mode("append").parquet(dir)
-        Thread.sleep(20)
-      }
-    val stream = Pipelines.ewmaUpdates(spark,
-      spark.readStream
-        .schema("key LONG, ts_us LONG, seq LONG, amount_cents LONG")
-        .option("maxFilesPerTrigger", "1").parquet(dir))
-    val emissions = runToTable(stream.toDF(), "ewma_stream", "append")
-      .as[(Long, Long, Long, Long, Long, Long)].collect()
-    // one emission per event; the max-seq emission per key is the
-    // full-history score
-    val perKey = emissions.groupBy(_._1)
-    val got = rows.groupBy(_._1).map { case (key, g) =>
-      assert(perKey(key).size == g.size) // every event emitted once
-      val last = perKey(key).maxBy(_._2)
-      (last._1, last._3, last._4, last._5, last._6)
-    }.toSet
-    val want = graft.ops.EventAnalytics.ewmaRecency(
-        rows.toDF("key", "ts", "seq", "amount_cents"))
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(got === want)
-    assert(got.nonEmpty)
-  }
-
   /** Folds `first`, then `late` as a later batch through a fresh tracker
     * and checks the lateness policy: the late batch emits nothing, leaves
     * the state as it was and is counted, one per row. */
@@ -427,14 +374,6 @@ class PipelinesSpec extends SparkSpecBase {
     assert(counter.value === late.size.toLong)
   }
 
-  test("EWMA tracker drops and counts a row behind its key's seal") {
-    def txn(tsUs: Long, seq: Long) = EwmaTxn(7L, tsUs, seq, 100L,
-      new java.sql.Timestamp(tsUs / 1000))
-    // (1.5 s, seq 3) arrives after (2 s, seq 2) was folded
-    assertLateDropped[EwmaTxn, Seq[Long], EwmaRow](EwmaTracker.fold(8, _), 7L,
-      Seq(txn(1000000L, 1), txn(2000000L, 2)), Seq(txn(1500000L, 3)))
-  }
-
   test("TWAB tracker drops and counts a row behind its key's seal") {
     def txn(id: Long, tsUs: Long) = TwabTxn(id, 7L, tsUs, 100L,
       new java.sql.Timestamp(tsUs / 1000))
@@ -442,52 +381,6 @@ class PipelinesSpec extends SparkSpecBase {
     // corrupt the exact numerator
     assertLateDropped[TwabTxn, Option[TwabState], TwabRow](TwabTracker.fold, 7L,
       Seq(txn(1, 1000000L), txn(2, 2000000L)), Seq(txn(3, 1500000L)))
-  }
-
-  test("concurrency tracker drops and counts a boundary behind its day's seal") {
-    def b(tsMs: Long, delta: Long) = BoundaryEvent(tsMs, delta,
-      new java.sql.Timestamp(tsMs))
-    assertLateDropped[BoundaryEvent, ConcurrencyState, ConcurrencyPartial](
-      ConcurrencyTracker.fold, 0L,
-      Seq(b(1000L, 1L), b(3000L, -1L)), Seq(b(2000L, 1L)))
-  }
-
-  test("streaming session concurrency (day-sharded state + merge-on-read) == batch prefix scan") {
-    import spark.implicits._
-    val sessions = Windows.dormancySessions(batchParsed, graft.SparkEntry.DormancyGap)
-    val bounds = sessions
-      .select(col("session_start_ms").as("ts_ms"), lit(1L).as("delta"))
-      .unionAll(sessions
-        .select(col("session_end_ms").as("ts_ms"), lit(-1L).as("delta")))
-    // replay in (ts, delta) order — ends before starts at equal ts, the
-    // batch tie rule — split into three mtime-ordered files at arbitrary
-    // row cuts, so mid-day state continuation across micro-batches is
-    // exercised (the contract allows any split that preserves order)
-    val rows = bounds.as[(Long, Long)].collect().sorted
-    assert(rows.length > 10)
-    val dir = Files.createTempDirectory("graft_conc").toString + "/in"
-    rows.grouped((rows.length + 2) / 3).foreach { part =>
-      part.toSeq.toDF("ts_ms", "delta")
-        .coalesce(1).write.mode("append").parquet(dir)
-      Thread.sleep(20) // distinct mtimes -> deterministic file order
-    }
-    val stream = spark.readStream.schema("ts_ms LONG, delta LONG")
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val emissions = runToTable(
-      Pipelines.concurrencyPartials(spark, stream).toDF(),
-      "conc_stream", "append")
-      .as[(Long, Long, Long, Long)].collect()
-    // last emission per day (max boundary count) = the sealed partial
-    val sealedParts = emissions.groupBy(_._1).map(_._2.maxBy(_._4)).toSeq
-      .toDF("day", "local_max", "net_delta", "n_boundaries")
-    val got = Pipelines.mergeConcurrency(sealedParts)
-      .as[(Long, Long, Long)].collect().toSet
-    val want = graft.ops.EventAnalytics.sessionConcurrencyDaily(sessions)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === want)
-    assert(got.nonEmpty)
-    // the shard really is day-bounded state: multiple days, each tiny
-    assert(sealedParts.count() > 1)
   }
 
   test("streaming funnel (state + timers) == batch conditional RANGE frame") {
