@@ -276,7 +276,7 @@ private[graft] object QueryShared {
 
   lazy val sqlJaccardCtes: String = sqlJaccardCtesAt(JaccardThreshold)
 
-  /** Shared CTE chain replaying [[graft.sim.Similarity.lshBucket]] at
+  /** Shared CTE chain replaying [[graft.sim.Similarity.lshBucketFromPlanes]] at
     * `nBits` in DuckDB SQL — xxhash64-derived hyperplane components
     * (seed 42, step-for-step HUGEINT arithmetic), sign tests, bucket ids.
     * Ends with `n(vec_id, v, norm)` and `buck(vec_id, bucket)`; callers

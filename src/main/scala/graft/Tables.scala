@@ -195,17 +195,4 @@ object Tables {
       s"[graft] corpus schema drift at $sfDir — fix Tables loaders before trusting any query result:\n  " +
         problems.mkString("\n  "))
   }
-
-  /** Register every corpus table as a temp view + the parsed-transaction
-    * view, giving users an ad-hoc `spark.sql` surface over the engine
-    * (the reference has no SQL at all — with Catalyst it comes free). */
-  def registerViews(spark: SparkSession, sfDir: String): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "documents", "embeddings")
-      .foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
-    events(spark, sfDir).createOrReplaceTempView("events")
-    graft.cdc.EnvelopeOps.parsedTransactions(events(spark, sfDir))
-      .createOrReplaceTempView("transactions")
-    graft.functions.GraftFunctions.register(spark)
-  }
 }

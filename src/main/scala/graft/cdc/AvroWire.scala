@@ -281,25 +281,6 @@ object AvroWire {
     }
   }
 
-  /** Frame bytes -> envelope Row (null on any malformation). External-Row
-    * convenience over [[AvroWireKernel.decode]] for tests and fixtures. */
-  def decodeFrame(frame: Array[Byte], schema: StructType): Row = {
-    val ir = AvroWireKernel.decode(frame, schema)
-    if (ir == null) null
-    else CatalystTypeConverters.createToScalaConverter(schema)(ir)
-      .asInstanceOf[Row]
-  }
-
-  /** Envelope Row -> Confluent frame bytes (the inverse of
-    * [[decodeFrame]]). External-Row convenience over
-    * [[AvroWireKernel.encode]]; the row's runtime shape must match
-    * `schema` exactly (fixtures construct it from the same schema). */
-  def encodeFrame(row: Row, schema: StructType, schemaIdNum: Int): Array[Byte] = {
-    val ir = CatalystTypeConverters.createToCatalystConverter(schema)(row)
-      .asInstanceOf[InternalRow]
-    AvroWireKernel.encode(ir, AvroWireKernel.alignment(schema, schema), schemaIdNum)
-  }
-
   private def fnameFor(prefix: String, schema: StructType, extra: Long): String =
     f"${prefix}_${graft.functions.Fnv1a64Helper.hashBytes(
       (schema.catalogString + "#" + extra).getBytes("UTF-8"))}%016x"

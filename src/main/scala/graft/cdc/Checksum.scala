@@ -51,27 +51,6 @@ object Checksum {
           " THEN __m - 18446744073709551616BD ELSE __m END AS BIGINT)")
           .as("sum_h"))
 
-  /** Streaming twin of [[contentChecksum]] — the live replica checksum.
-    * Count, XOR and SUM are commutative monoids, so the per-bucket folds
-    * are incrementally maintainable by ONE streaming aggregation with
-    * state bounded at nBuckets rows (no watermark, no timers, no
-    * per-event state): after any prefix of the stream, the emitted rows
-    * equal [[contentChecksum]] over exactly that prefix — the property
-    * the equivalence spec pins. Run in complete/update output mode. */
-  def liveChecksum(rows: DataFrame, repr: Column, bucket: Column)
-      : DataFrame =
-    rows.select(bucket.as("bucket"),
-        conv(substring(md5(repr), 1, 12), 16, 10).cast("long").as("__h"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(__h)").as("xor_h"),
-        expr("sum(CAST(__h AS DECIMAL(38,0))) % 18446744073709551616BD")
-          .as("__m"))
-      .select(col("bucket"), col("n_rows"), col("xor_h"),
-        expr("CAST(CASE WHEN __m >= 9223372036854775808BD" +
-          " THEN __m - 18446744073709551616BD ELSE __m END AS BIGINT)")
-          .as("sum_h"))
-
   /** Oracle fragment: same digest, same folds, over `src(bucket, repr)`. */
   val oracleSql: String =
     """SELECT bucket, CAST(cnt AS BIGINT) AS n_rows,

@@ -204,30 +204,4 @@ object EnvelopeOps {
     df.select(
       keyCol.cast("string").cast("binary").as("key"),
       valueCol.cast("string").cast("binary").as("value"))
-
-  /** S3 robustness: decode a payload stream AND capture the undecodable
-    * payloads as a dead-letter frame. The reference only logs-and-continues
-    * (`config/ABBankStreamsConfig.java:93-94`
-    * LogAndContinueExceptionHandler); at scale you also KEEP the bad
-    * payloads — schema-drift forensics and replay-after-fix need the
-    * original bytes. One projection, two filters over it (Spark runs the
-    * shared `from_json` once per sink via plan reuse; in a `foreachBatch`
-    * fan-out persist the decoded batch and write both splits from it). */
-  def decodeWithDeadLetter(payloads: DataFrame, payloadCol: String = "payload",
-      schema: org.apache.spark.sql.types.StructType = Schemas.transactionEnvelope)
-      : (DataFrame, DataFrame) = {
-    // PERMISSIVE from_json yields an all-null struct for malformed input
-    // (never a null struct), so malformed-ness is detected the idiomatic
-    // way: a corrupt-record column inside the parse schema
-    val withCorrupt = schema.add("_corrupt_record",
-      org.apache.spark.sql.types.StringType)
-    val decoded = parseFence(payloads.withColumn("__dec",
-      from_json(col(payloadCol), withCorrupt,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record"))), "__dec")
-    (decoded.filter(col("__dec._corrupt_record").isNull)
-      .select(col("__dec").dropFields("_corrupt_record").as("envelope")),
-      decoded.filter(col("__dec._corrupt_record").isNotNull)
-        .select(col(payloadCol)))
-  }
 }

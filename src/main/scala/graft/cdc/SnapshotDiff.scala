@@ -10,20 +10,14 @@ import org.apache.spark.sql.functions._
   * `reference/src/main/java/com/abbank/streams/topology/ABBankTopology.java:107-125`
   * for the accounts/customers KTable feeds this diffs).
   *
-  * Two forms:
-  *
-  *   - [[changelogDiff]] — the scale-smart ONE-PASS form: from the raw
-  *     versioned changelog, both horizons' latest states are recovered in
-  *     a single keyed aggregation (`max(when(seq <= t, struct(seq, op,
-  *     digest)))` — conditional struct-max, map-side combined). Neither
-  *     snapshot is materialized; the corpus is scanned once and the only
-  *     shuffle carries (key, seq, op, 64-char digest) rows. At 100 TB
-  *     this beats diffing two materialized snapshots by a full corpus
-  *     scan and a second wide shuffle.
-  *   - [[snapshotDiff]] — the generic two-table form for snapshots that
-  *     exist only as tables (no shared changelog): digest both sides,
-  *     full-outer join on the key, compare digests. Each side's payload
-  *     columns collapse to one digest BEFORE the shuffle.
+  * [[changelogDiff]] is the scale-smart ONE-PASS form: from the raw
+  * versioned changelog, both horizons' latest states are recovered in a
+  * single keyed aggregation (`max(when(seq <= t, struct(seq, op,
+  * digest)))` — conditional struct-max, map-side combined). Neither
+  * snapshot is materialized; the corpus is scanned once and the only
+  * shuffle carries (key, seq, op, 64-char digest) rows. At 100 TB this
+  * beats diffing two materialized snapshots by a full corpus scan and a
+  * second wide shuffle (SnapshotDiffSpec pins it to that two-table diff).
   *
   * Change classes: 'added' (absent at T1, present at T2), 'deleted'
   * (present → absent, i.e. tombstoned in between), 'changed' (present on
@@ -81,23 +75,5 @@ object SnapshotDiff {
       .select(keyCols.map(col) ++ Seq(col("change"),
         when(presentO, col("__o.seq")).as("old_seq"),
         when(presentN, col("__n.seq")).as("new_seq")): _*)
-  }
-
-  /** Generic two-snapshot diff: digest each side, full-outer join on the
-    * key, compare. `oldSnap`/`newSnap` are plain tables (tombstones
-    * already applied); `valueCols` resolve on both. Output shape matches
-    * [[changelogDiff]] minus the seq columns. */
-  def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
-      keyCols: Seq[String], valueCols: Seq[Column]): DataFrame = {
-    def digested(df: DataFrame, tag: String): DataFrame =
-      df.select(keyCols.map(col) :+ valueDigest(valueCols).as(tag): _*)
-    digested(oldSnap, "__od")
-      .join(digested(newSnap, "__nd"), keyCols, "full_outer")
-      .withColumn("change",
-        when(col("__od").isNull && col("__nd").isNotNull, lit("added"))
-          .when(col("__od").isNotNull && col("__nd").isNull, lit("deleted"))
-          .when(col("__od") =!= col("__nd"), lit("changed")))
-      .filter(col("change").isNotNull)
-      .select(keyCols.map(col) :+ col("change"): _*)
   }
 }

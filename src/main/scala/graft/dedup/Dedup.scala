@@ -385,32 +385,12 @@ object Dedup {
         (col("doc_id") === col("keep_doc_id")).as("is_kept"))
   }
 
-  /** Embedding-cosine near-duplicate pairs (exact all-pairs, bounded
-    * candidate set). Norms are precomputed per vector (one pass) so the
-    * pair stage is a single fused dot product. This is the TEST-ORACLE
-    * path only — the registered query is [[embeddingNearDupPairsBanded]],
-    * whose candidate stage is an equi-join, not a cross product. */
-  def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double,
-      maxVecId: Long): DataFrame = {
-    val e = graft.sim.Similarity.withNorm(
-      embeddings.filter(col("vec_id") < maxVecId))
-
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("vec_a"),
-        col("b.vec_id").as("vec_b"),
-        round(
-          expr("graft_dot(a.v, b.v)")
-            / (col("a.norm") * col("b.norm")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-  }
-
   /** Embedding near-dup pairs via BANDED sign-LSH candidates + exact
     * cosine verification — the MinHash-banding pattern transplanted to
     * vectors, so the plan never contains a cross product:
     *
     *   1. one 32-bit sign signature per vector ([[graft.sim.Similarity
-    *      .lshBucket]] hyperplanes), split into `nBands` bands of
+    *      .lshBucketFromPlanes]] hyperplanes), split into `nBands` bands of
     *      `bitsPerBand` bits;
     *   2. candidates = pairs sharing ANY band's bucket — an equi-join on
     *      (band, bucket) over SCALAR postings (the float vectors do not
@@ -461,7 +441,7 @@ object Dedup {
 
   /** SemDedup-style semantic deduplication (Abbas et al. 2023): documents
     * whose embeddings agree on every sign-LSH hyperplane — one `nBits`
-    * bucket id ([[graft.sim.Similarity.lshBucket]]) — are semantic
+    * bucket id ([[graft.sim.Similarity.lshBucketFromPlanes]]) — are semantic
     * near-duplicates; each bucket collapses to one keeper, its min vec_id.
     * Deterministic and training-free (the hyperplanes are hash-derived),
     * unlike the original's k-means variant.

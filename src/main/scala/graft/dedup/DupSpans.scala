@@ -185,8 +185,8 @@ object DupSpans {
     *
     * Corpus-internal duplications are NOT re-emitted (they were output
     * when the corpus itself was ingested); by induction the union of
-    * round outputs over successive batches equals the full-corpus
-    * [[duplicatedPositions]] — DupSpansSpec pins the fold. Span
+    * round outputs over successive batches equals the full corpus's
+    * duplicated positions — DupSpansSpec pins the fold. Span
     * assembly (the interval-island merge of [[dupSpans]]) runs per
     * TOUCHED document over accumulated positions at read time; the
     * incremental pass stays position-level so rounds compose by union.
@@ -207,38 +207,6 @@ object DupSpans {
       .select(col("o.doc_id").as("doc_id"), col("o.pos").as("pos"),
         lit("retro").as("src"))
     batchHits.union(retro)
-  }
-
-  /** Fold a batch into a standing [[gramIndex]]: doc-frequencies add,
-    * and exemplar positions survive only while the merged df stays 1
-    * (a gram at df >= 2 drops its list — those positions were emitted
-    * by [[dupPositionsIncremental]] this round or earlier). Equals
-    * `gramIndex(corpus union batch)` row-for-row; DupSpansSpec pins
-    * the equality through a two-batch fold. */
-  def updatedGramIndex(index: DataFrame, batch: DataFrame,
-      n: Int = 8): DataFrame = {
-    val bIdx = gramIndex(batch, n)
-    index.as("a").join(bIdx.as("b"), Seq("gh"), "full_outer")
-      .select(col("gh"),
-        (coalesce(col("a.df"), lit(0L)) + coalesce(col("b.df"), lit(0L)))
-          .as("df"),
-        coalesce(col("a.occs"), col("b.occs")).as("occs"))
-      .select(col("gh"), col("df"),
-        when(col("df") >= 2,
-          array().cast("array<struct<doc_id:long,pos:long>>"))
-          .otherwise(col("occs")).as("occs"))
-  }
-
-  /** The position-level view of [[dupSpans]]' default path: every
-    * `(doc_id, pos)` whose gram has doc-frequency >= 2 — the frame the
-    * island merge folds into spans, exposed for the incremental fold
-    * contract. */
-  def duplicatedPositions(documents: DataFrame, n: Int = 8): DataFrame = {
-    val grams = positionalGrams(documents, n)
-      .select("doc_id", "pos", "gh")
-    grams
-      .join(duplicatedGramKeys(grams), "gh")
-      .select("doc_id", "pos").distinct()
   }
 
   /** Strip pass: rebuild each document with its duplicated spans REMOVED

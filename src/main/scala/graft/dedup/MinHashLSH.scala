@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash + LSH banding and SimHash near-dup candidate generation
@@ -80,51 +79,6 @@ object MinHashLSH {
       .select(keep :+ array(sigCols: _*).as("sig"): _*)
   }
 
-  /** The same signature as a single custom [[Aggregator]] (Spark's public
-    * UDAF surface): ONE aggregation pass with a 64-slot min buffer per key
-    * instead of 64 separate min-aggregate expressions. Same shuffle shape
-    * (partial aggregation map-side), but one buffer update per row rather
-    * than 64 expression evaluations — and it demonstrates the typed custom
-    * aggregation extension point (SURVEY §2.6: the reference's only custom
-    * aggregation surface). Verified equal to [[signatures]] in tests. */
-  object MinHashSigAgg extends Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.fill(NumPerms)(Long.MaxValue)
-    override def reduce(buf: Array[Long], h31: Long): Array[Long] = {
-      var i = 0
-      while (i < NumPerms) {
-        val (a, b) = perm(i)
-        val v = (a * h31 + b) % MersennePrime
-        if (v < buf(i)) buf(i) = v
-        i += 1
-      }
-      buf
-    }
-    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < NumPerms) { if (y(i) < x(i)) x(i) = y(i); i += 1 }
-      x
-    }
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = ExprEnc
-    override def outputEncoder: Encoder[Array[Long]] = ExprEnc
-    private lazy val ExprEnc: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** [[signatures]] computed through [[MinHashSigAgg]]. */
-  def signaturesViaAggregator(documents: DataFrame): DataFrame = {
-    val agg = udaf(MinHashSigAgg)
-    Dedup.shingles(documents)
-      .withColumn("h31", hash(col("shingle")).cast("long")
-        .bitwiseAND(lit(0x7fffffffL)))
-      .groupBy("doc_id")
-      .agg(agg(col("h31")).as("sig"))
-  }
-
-  /** Raw banding collisions over a signature frame: pairs agreeing on at
-    * least one full band — the pure candidate-generation stage, before any
-    * estimate or verification. Equi-join on (band, bucket), linear in
-    * postings. */
   /** Explode a (doc_id, sig) frame into one (doc_id, band, bucket) row per
     * band; `carry` columns pass through (the streaming twin carries its
     * event-time column). Bucket = xxhash64 of the band's signature slice. */
@@ -140,6 +94,10 @@ object MinHashLSH {
         col("bk.bucket").as("bucket")): _*)
   }
 
+  /** Raw banding collisions over a signature frame: pairs agreeing on at
+    * least one full band — the pure candidate-generation stage, before any
+    * estimate or verification. Equi-join on (band, bucket), linear in
+    * postings. */
   def bandingCandidates(sigs: DataFrame): DataFrame = {
     val banded = bandedSignatures(sigs)
 

@@ -38,14 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object PrefixJoin {
 
-  /** [[jaccardJoinOnSets]] over whitespace unigram tokens. */
-  def jaccardJoin(documents: DataFrame, tPct: Long = 60): DataFrame =
-    jaccardJoinOnSets(
-      documents
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .filter(col("term") =!= ""),
-      tPct)
-
   /** All document pairs with set Jaccard ≥ tPct/100 over an element
     * postings frame `tokens(doc_id, term)` (deduplicated here — set
     * semantics; pass shingles for the n-gram dedup shape). Returns

@@ -52,16 +52,6 @@ object Multimodal {
     }
   }
 
-  /** documents -> media rows: the text's UTF-8 bytes stand in for an image
-    * payload; width/height are deterministic metadata. */
-  def asMedia(documents: DataFrame): DataFrame =
-    documents.select(
-      col("doc_id"),
-      encode(col("text"), "UTF-8").as("payload"),
-      (lit(64) + col("doc_id") % 512).cast("int").as("width"),
-      (lit(64) + (col("doc_id") * 7) % 512).cast("int").as("height"),
-      lit("fake-rgb").as("format"))
-
   /** Frame sampling: one media payload -> N fixed-stride frames with a
     * "resize" (pad-to-width) pass — the video-frame-extraction shape: a
     * controlled 1->N explosion at scan time (no shuffle; downstream ops
@@ -81,19 +71,11 @@ object Multimodal {
       .withColumn("frame_len", length(col("frame")).cast("long"))
       .withColumn("frame_resized", rpad(col("frame"), frameWidth, "."))
 
-  /** Batched partition-level decode: the mapPartitions seam where a real
-    * codec would run. Output is a flat feature frame. */
-  def decodeFeatures(spark: SparkSession, documents: DataFrame): DataFrame = {
-    import spark.implicits._
-    val media: Dataset[MediaRow] = asMedia(documents).as[MediaRow]
-    media.mapPartitions(_.map(FakeDecoder.decode)).toDF()
-  }
-
-  /** [[decodeFeatures]] over a GENUINE media table ([[graft.Tables.media]]:
-    * binary payload + real metadata columns, full 0..255 byte range) — the
-    * registered `q_multimodal_meta` path since r10; the text-stand-in
-    * [[asMedia]] flow remains the perceptual-dedup corpus path. Same
-    * decode stub, same mapPartitions seam: only the input is real bytes. */
+  /** Batched partition-level decode over a media table
+    * ([[graft.Tables.media]]: binary payload + real metadata columns, full
+    * 0..255 byte range) — the registered `q_multimodal_meta` path: the
+    * mapPartitions seam where a real codec would run. Output is a flat
+    * feature frame. */
   def decodeMedia(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._
     media.select("doc_id", "payload", "width", "height", "format")
@@ -211,23 +193,5 @@ object Multimodal {
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
         coalesce(col("keep_doc_id"), col("doc_id")).as("keep_doc_id"))
       .withColumn("is_kept", col("doc_id") === col("keep_doc_id"))
-  }
-
-  /** Exhaustive frame-set Jaccard pairs via the frame inverted index —
-    * TEST-ORACLE path only (any pair with jaccard > 0 shares a frame, so
-    * the frame-postings self-join IS exhaustive for positive thresholds);
-    * the registered query goes through [[nearDupPairs]]'s signature-
-    * bucketed candidates instead. */
-  def exhaustiveNearDupPairs(documents: DataFrame, threshold: Double,
-      frameWidth: Int = 64): DataFrame = {
-    require(threshold > 0.0, "inverted-index exhaustiveness needs jaccard > 0")
-    val sh = framePostings(documents, frameWidth)
-    val cands = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    graft.dedup.MinHashLSH.verifyJaccard(cands, sh, threshold)
   }
 }

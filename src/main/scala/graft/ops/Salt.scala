@@ -42,22 +42,4 @@ object Salt {
       .agg(sum(col("__psum")).as(s"sum_$valueCol"),
         sum(col("__pcnt")).as("n_rows"))
   }
-
-  /** Salted equi-join for a skew-keyed fact against a non-broadcastable
-    * dim: each fact row gets a deterministic salt in `[0, buckets)`, the
-    * dim side is replicated `buckets`× (explode over the salt range), and
-    * the join runs on `(key, salt)` — a hot key's rows now land on
-    * `buckets` reducers instead of one. Result is exactly `fact.join(dim,
-    * key)` (inner; verified by SaltSpec). Shuffle cost: fact unchanged,
-    * dim × buckets — the right trade whenever `|dim| × buckets` is still
-    * small next to the fact's hot partition. AQE's skew split covers the
-    * same hazard reactively; the salt is the static guarantee for when
-    * stats mislead AQE (e.g. a first stage with no runtime stats yet). */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-      saltSource: Column, buckets: Int = 32): DataFrame = {
-    val saltedFact = withSalt(fact, saltSource, buckets)
-    val replicatedDim = dim.withColumn("__salt",
-      explode(sequence(lit(0L), lit(buckets - 1L))))
-    saltedFact.join(replicatedDim, Seq(key, "__salt")).drop("__salt")
-  }
 }

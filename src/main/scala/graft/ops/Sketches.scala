@@ -4,15 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Frequency sketching: exact per-group heavy hitters and Count-Min
-  * sketches (extension surface — the approximate counterpart pairs with
-  * the exact operator the same way approx_count_distinct pairs with
-  * countDistinct in `q_distinct_users`).
+/** Frequency sketching: exact per-group heavy hitters and mergeable
+  * per-group sketches (KMV distinct counts, quantile samples) — extension
+  * surface; the approximate operators pair with exact ones the same way
+  * approx_count_distinct pairs with countDistinct in `q_distinct_users`.
   *
   * Scale posture: the exact path is one partial-aggregating count shuffle
   * (narrow (group, id, count) rows) + a per-group top-k window —
-  * partitioned by the group key, never global. The sketch path reduces a
-  * whole partition's stream to one fixed-size CMS buffer map-side, so the
+  * partitioned by the group key, never global. The sketch paths reduce a
+  * whole partition's stream to one fixed-size buffer map-side, so the
   * shuffle moves `O(groups × sketch_bytes)` regardless of row count — the
   * standard mergeable-summary play for 100 TB frequency queries.
   */
@@ -30,24 +30,6 @@ object Sketches {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
-
-  /** One Count-Min sketch per group over `idCol` (Spark's built-in
-    * `count_min_sketch` aggregate — partial buffers merge map-side).
-    * `eps` bounds overestimation: est <= true + eps * total, w.p.
-    * `confidence`. Returns (group, sketch binary). */
-  def cmsPerGroup(df: DataFrame, groupCol: String, idCol: String,
-      eps: Double = 0.01, confidence: Double = 0.99): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(expr(s"count_min_sketch($idCol, ${eps}D, ${confidence}D, 42)")
-        .as("cms"),
-        count(lit(1)).as("n_rows"))
-
-  /** Driver-side estimate from a serialized CMS (test/lookup helper —
-    * production lookups deserialize once per executor, not per row). */
-  def cmsEstimate(sketchBytes: Array[Byte], item: Long): Long =
-    org.apache.spark.util.sketch.CountMinSketch
-      .readFrom(new java.io.ByteArrayInputStream(sketchBytes))
-      .estimateCount(item)
 
   // ---- KMV distinct sketches & cross-group overlap --------------------------
 

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   *      of high- and low-variance directions.
   *
   * Why not the full PCA rotation: eigenvectors of a float covariance
-  * have no cross-engine bit identity (see [[Whitening]], which holds
-  * that path spec-pinned). Here inputs are global-grid INTEGER codes
+  * have no cross-engine bit identity (sign and rotation freedom,
+  * iterative convergence). Here inputs are global-grid INTEGER codes
   * (the [[Gram]]/[[Projection]] discipline), `H·D` has ±1 integer
   * entries, and the variance ranking is exact integer arithmetic — so
   * the whole learned transform, and the PQ pipeline after it, replays

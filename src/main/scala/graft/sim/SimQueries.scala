@@ -439,10 +439,10 @@ object SimQueries {
     // variances, n*sum(t^2) - sum(t)^2, ranked and dealt boustrophedon),
     // then plain PQ trains/encodes/ADC-searches the rotated space; floats
     // rerank on the ORIGINALS. All-integer transform -> the whole learned
-    // pipeline replays bit-for-bit in the oracle (the PCA-rotation form
-    // stays spec-pinned in Whitening — float eigenbases have no
-    // cross-engine identity). Recall >= plain PQ at the same candidate
-    // fraction (RecallProbe; floor pinned in RecallSpec)
+    // pipeline replays bit-for-bit in the oracle (a PCA rotation would
+    // not: float eigenbases have no cross-engine identity). Recall >=
+    // plain PQ at the same candidate fraction (RecallProbe; floor pinned
+    // in RecallSpec)
     GraftQuery("q_sim_opq_topk", (s, dir) =>
       graft.sim.Opq.topKQuery(Tables.embeddings(s, dir), SimNumQueries,
         SimTopK, m = PqM, ksub = PqKsub, rerankFactor = PqRerank,

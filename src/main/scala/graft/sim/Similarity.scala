@@ -84,35 +84,13 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Sign-random-projection LSH for cosine: `nBits` deterministic
-    * pseudo-random hyperplanes (components derived from xxhash64(bit, dim)
-    * — stable across runs/partitions, no stored model), bucket = the sign
-    * bit-vector. Vectors within a small angle agree on most sign bits, so
-    * probing the exact bucket (plus optionally 1-bit-flip neighbors) finds
-    * near neighbors while scanning only a 2^nBits-th of the corpus. The
-    * companion scale path to [[ivfTopK]]: LSH needs no training pass at
-    * all, IVF gives tighter candidate sets.
-    *
-    * This inline form recomputes the hyperplane components PER ROW
-    * (nBits × dims xxhash64 evaluations — 2048/row in the 32-bit banded
-    * near-dup path); the production call sites use
-    * [[lshBucketFromPlanes]], which derives the identical components once
-    * and chains codegen'd [[dot]] calls over literal plane arrays. Kept
-    * as the reference definition the oracles and equality tests pin. */
-  def lshBucket(v: String, nBits: Int): org.apache.spark.sql.Column =
-    expr(
-      s"""aggregate(sequence(0, ${nBits - 1}), 0L, (acc, b) ->
-         |  acc + IF(aggregate(zip_with($v, sequence(0, size($v) - 1),
-         |             (x, d) -> x * (cast(xxhash64(b, d) as double) / 9.223372036854776E18)),
-         |           0D, (a, p) -> a + p) > 0, shiftleft(1L, b), 0L))""".stripMargin)
-
   private val planeCache =
     scala.collection.concurrent.TrieMap.empty[(Int, Int), Array[Array[Double]]]
 
   /** The sign-projection hyperplanes as driver-held literals:
     * planes(b)(d) = xxhash64(b, d) / 2^63 — computed through Spark's own
-    * xxhash64 (INT inputs, matching [[lshBucket]]'s sequence element
-    * types bit-for-bit) once per (nBits, dims) and cached for the
+    * xxhash64 (INT inputs, matching the `sequence` element types of the
+    * DuckDB oracle's replay bit-for-bit) once per (nBits, dims) and cached for the
     * process. nBits × dims doubles — a few KB, plan-constant material. */
   def lshPlanes(spark: org.apache.spark.sql.SparkSession, nBits: Int,
       dims: Int): Array[Array[Double]] =
@@ -148,10 +126,19 @@ object Similarity {
     mx
   }
 
-  /** [[lshBucket]] over precomputed [[lshPlanes]]: a chain of nBits
-    * codegen'd [[graft.functions.Dot]] calls against literal plane
-    * arrays — identical components, identical fold order, identical
-    * bucket bits (asserted in tests), but zero per-row hashing. */
+  /** Sign-random-projection LSH for cosine: `nBits` deterministic
+    * pseudo-random hyperplanes (components derived from xxhash64(bit, dim)
+    * — stable across runs/partitions, no stored model), bucket = the sign
+    * bit-vector. Vectors within a small angle agree on most sign bits, so
+    * probing the exact bucket (plus optionally 1-bit-flip neighbors) finds
+    * near neighbors while scanning only a 2^nBits-th of the corpus. The
+    * companion scale path to [[ivfTopK]]: LSH needs no training pass at
+    * all, IVF gives tighter candidate sets.
+    *
+    * The components come precomputed as [[lshPlanes]], so each bit is one
+    * codegen'd [[graft.functions.Dot]] call against a literal plane
+    * array — zero per-row hashing. Tests pin the bucket bits to a
+    * per-row-hashing reference form. */
   def lshBucketFromPlanes(v: String,
       planes: Array[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, b) =>
@@ -161,7 +148,7 @@ object Similarity {
     }.reduce(_ + _)
 
   /** LSH-bucketed cosine top-k: bucket all vectors and the query set with
-    * [[lshBucket]], rerank exactly within shared buckets only. Candidates
+    * [[lshBucketFromPlanes]], rerank exactly within shared buckets only. Candidates
     * come from one equi-join on the bucket id — no cross product. Recall
     * is probabilistic (rises with fewer bits / more probes); measured
     * against brute force in tests. */
@@ -605,7 +592,7 @@ object Similarity {
     * shuffles one row per vector PER DIMENSION (a dims-fold write
     * amplification that dominates at 100 TB), while the UDAF's partial
     * aggregation shuffles one partially-summed array per (partition,
-    * label). Same extension surface as [[graft.dedup.MinHashLSH.MinHashSigAgg]]. */
+    * label). */
   object VecSumAgg extends Aggregator[Array[Long], Array[Long], Array[Long]] {
     override def zero: Array[Long] = Array.emptyLongArray
     override def reduce(buf: Array[Long], x: Array[Long]): Array[Long] =

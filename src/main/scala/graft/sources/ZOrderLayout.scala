@@ -3,22 +3,21 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton-curve) clustering layout for multi-dimensional data
+/** Z-order (Morton-curve) clustering key for multi-dimensional data
   * skipping — the published Z-ORDER idea behind lakehouse `OPTIMIZE`
   * commands: quantize two filter dimensions to integer cells, interleave
   * their bits ([[graft.functions.ZOrder2]], codegen'd), and range-sort
   * files by the curve value. Per-file min/max footer stats then stay
   * tight in BOTH dimensions simultaneously, so a box predicate
   * (`x BETWEEN … AND y BETWEEN …`) prunes most files — a linear sort on
-  * one column can only ever prune on that column.
+  * one column can only ever prune on that column (ZOrderSpec measures
+  * both layouts).
   *
   * Scale posture: quantization bounds come from ONE narrow min/max agg
   * (a broadcast one-row scalar — no window, no sort); the z-value itself
-  * evaluates in the scan stage next to the write. The clustering write is
-  * a `repartitionByRange` on the z-value — the same single range shuffle
-  * a plain sorted write costs, the skipping is free after that. At
-  * 100 TB this is a per-partition maintenance job (compact+cluster recent
-  * files), not a corpus rewrite.
+  * evaluates in the scan stage. A clustering write is then a
+  * `repartitionByRange` on the z-value — the same single range shuffle
+  * a plain sorted write costs, the skipping is free after that.
   */
 object ZOrderLayout {
 
@@ -48,14 +47,4 @@ object ZOrderLayout {
       .withColumn("zval", expr(s"graft_zorder($qx, $qy, $bits)"))
       .drop("_zx_min", "_zx_max", "_zy_min", "_zy_max")
   }
-
-  /** Cluster `df` on the curve into ~`nFiles` files and write. One range
-    * shuffle (sampled boundaries), records sorted by `zval` within each
-    * file so footer min/max envelopes are curve-contiguous. */
-  def writeClustered(df: DataFrame, xCol: String, yCol: String, path: String,
-      nFiles: Int, bits: Int = 16): Unit =
-    withZValue(df, xCol, yCol, bits)
-      .repartitionByRange(nFiles, col("zval"))
-      .sortWithinPartitions("zval")
-      .write.mode("overwrite").parquet(path)
 }

@@ -33,8 +33,7 @@ object DocStream {
     * the dedup guarantee window.
     *
     * Input must carry an `ingest_ts` TIMESTAMP event-time column. */
-  def exactDeduped(docs: DataFrame,
-      watermarkDelay: String = "1 hour"): DataFrame =
+  def exactDeduped(docs: DataFrame, watermarkDelay: String): DataFrame =
     docs
       .withColumn("__digest", sha2(lower(trim(col("text"))), 256))
       .withWatermark("ingest_ts", watermarkDelay)
@@ -83,7 +82,7 @@ object DocStream {
     * how streaming dedup falls over.
     */
   def nearDupCandidates(spark: SparkSession, docs: DataFrame,
-      watermarkDelay: String = "1 hour",
+      watermarkDelay: String,
       stateTtlMs: Long = 3600L * 1000,
       maxResidents: Int = 1024): Dataset[CandPair] = {
     import spark.implicits._

@@ -69,16 +69,13 @@ object Bm25 {
     * On a Zipf vocabulary the guard is nearly free (rarest-first
     * selection avoids the head anyway); on a degenerate small-vocabulary
     * corpus it is what keeps candidates from approaching queries × N.
-    * `maxDfDen = 1` disables it. */
-  def topK(documents: DataFrame, queryMod: Long = 97, queryTerms: Int = 16,
-      k: Int = 10, maxDfDen: Long = 4L): DataFrame =
-    topKIndexed(PostingsIndex.derive(documents), queryMod, queryTerms, k,
-      maxDfDen)
-
-  /** [[topK]] over a pre-built (usually materialized — see
-    * [[PostingsIndex]]) inverted index: the production call shape, where
-    * the index is written once and scanned by every retrieval query
-    * instead of re-derived from the corpus per query. */
+    * `maxDfDen = 1` disables it.
+    *
+    * Reads a pre-built (usually materialized — see [[PostingsIndex]])
+    * inverted index: the production call shape, where the index is
+    * written once and scanned by every retrieval query instead of
+    * re-derived from the corpus per query. An ad-hoc corpus passes
+    * `PostingsIndex.derive(documents)`. */
   def topKIndexed(idx: InvIndex, queryMod: Long, queryTerms: Int,
       k: Int, maxDfDen: Long): DataFrame = {
     val tf = idx.postings
@@ -129,7 +126,7 @@ object Bm25 {
 
   /** Query-likelihood retrieval (Ponte–Croft language-model ranking,
     * Dirichlet smoothing with mass `mu`) — the probabilistic complement
-    * of [[topK]], over the SAME query log and postings shape. The naive
+    * of [[topKIndexed]], over the SAME query log and postings shape. The naive
     * score Σ_{t∈q} ln((tf + μ·p(t|C)) / (dl + μ)) touches every
     * (query, doc) pair; the standard decomposition
     *
@@ -145,15 +142,9 @@ object Bm25 {
     * is an order-independent integer sum.
     *
     * Output: (query_id, doc_id, n_terms, score_micro, doc_rank) — scores
-    * are negative log-probabilities (micro-nats), larger = better. */
-  def queryLikelihoodTopK(documents: DataFrame, queryMod: Long = 97,
-      queryTerms: Int = 16, k: Int = 10, mu: Long = 2000L,
-      maxDfDen: Long = 4L): DataFrame =
-    queryLikelihoodTopKIndexed(PostingsIndex.derive(documents), queryMod,
-      queryTerms, k, mu, maxDfDen)
-
-  /** [[queryLikelihoodTopK]] over a pre-built index — see
-    * [[topKIndexed]]. */
+    * are negative log-probabilities (micro-nats), larger = better.
+    * Like [[topKIndexed]], it reads a pre-built index; an ad-hoc corpus
+    * passes `PostingsIndex.derive(documents)`. */
   def queryLikelihoodTopKIndexed(idx: InvIndex, queryMod: Long,
       queryTerms: Int, k: Int, mu: Long, maxDfDen: Long): DataFrame = {
     val tf = idx.postings

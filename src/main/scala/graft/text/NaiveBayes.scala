@@ -138,61 +138,6 @@ object NaiveBayes {
         col("score_micro"), col("n_tokens"))
   }
 
-  /** A fitted model pulled to the driver — the plan-constant pattern of
-    * the IVF centroids / PQ codebooks: classes are ordered, `lp(c)` maps
-    * train-vocabulary terms to micro-nat log-likelihoods for class
-    * `classes(c)`. Suits vocabularies that fit a plan literal (the same
-    * regime where centroid matrices do); for larger vocabularies keep the
-    * broadcast-join form of [[predict]]. */
-  case class FittedModel(classes: Seq[String], priors: Seq[Long],
-      unseen: Seq[Long], lp: Seq[Map[String, Long]])
-
-  /** Collect the trained model into a [[FittedModel]] (model-sized pull:
-    * |vocab| × |classes| longs — the guarded-collect pattern;
-    * `maxGridRows` fails loud rather than silently embedding a
-    * corpus-sized literal). */
-  def fit(documents: DataFrame, labelCol: String = "lang",
-      holdoutMod: Long = HoldoutMod, maxGridRows: Int = 1 << 20): FittedModel = {
-    val tc = termCounts(documents, labelCol, holdoutMod)
-    val grid = modelFrom(tc).limit(maxGridRows + 1).collect()
-    require(grid.length <= maxGridRows,
-      s"model grid exceeds the plan-literal budget ($maxGridRows rows); " +
-        "use the broadcast-join predict() form for this vocabulary")
-    val cls = classConsts(documents, labelCol, holdoutMod, tc).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val classes = cls.map(_._1).toSeq
-    val lpByClass = grid.groupBy(_.getString(0)).view
-      .mapValues(_.map(r => r.getString(1) -> r.getLong(3)).toMap).toMap
-    FittedModel(classes, cls.map(_._2).toSeq, cls.map(_._3).toSeq,
-      classes.map(lpByClass(_)))
-  }
-
-  /** Score documents with a [[FittedModel]] as ONE stateless scan-stage
-    * expression — no joins, no aggregation, no state: per class, a
-    * `aggregate()` fold over the token array against a map literal, then
-    * a greatest/least argmax with the same (score DESC, label ASC)
-    * tie-break as [[predict]]. Because it is pure per-row projection it
-    * runs unchanged on a STREAMING frame (readStream → select) — the
-    * streaming twin of [[predict]] with zero state, the strongest
-    * possible posture for model-apply on a stream. */
-  def scoreColumnar(docs: DataFrame, m: FittedModel): DataFrame = {
-    val toks = split(col("text"), " ")
-    val scores = m.classes.indices.map { i =>
-      (lit(m.priors(i)) + aggregate(toks, lit(0L),
-        (acc, t) => acc +
-          coalesce(element_at(typedLit(m.lp(i)), t), lit(m.unseen(i)))))
-        .as(s"__s$i")
-    }
-    val withScores = docs.select(col("doc_id") +: scores: _*)
-    // greatest/least need >= 2 args; a one-class model is degenerate
-    require(m.classes.size >= 2, "need at least two classes")
-    val mx = greatest(m.classes.indices.map(i => col(s"__s$i")): _*)
-    val pred = least(m.classes.indices.map(i =>
-      when(col(s"__s$i") === mx, lit(m.classes(i)))): _*)
-    withScores.select(col("doc_id"), pred.as("pred_label"),
-      mx.as("score_micro"))
-  }
-
   /** Confusion matrix of [[predict]] against the true labels on the
     * held-out slice: (true_label, pred_label, n). Classes-squared rows —
     * the accuracy evidence a user gates a trained filter on. */

@@ -46,8 +46,7 @@ case class InvIndex(postings: DataFrame, doclen: DataFrame,
   *
   * Reference behavior anchor: the reference has no retrieval surface;
   * this is the LLM-data-pipeline extension's index-build job (the batch
-  * sibling of a search indexer), same family as
-  * [[graft.sources.PartitionedSink]]'s layout discipline.
+  * sibling of a search indexer).
   */
 object PostingsIndex {
 
@@ -65,32 +64,10 @@ object PostingsIndex {
     InvIndex(tf, dl, vocab, totals)
   }
 
-  /** Write an index under `dir` (postings/, doclen/, vocab/, totals/). */
-  def write(idx: InvIndex, dir: String): Unit = {
-    idx.postings
-      .repartitionByRange(col("term"), col("doc_id"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    idx.doclen
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$dir/doclen")
-    // vocab is sharded like postings (range-partitioned + sorted on term):
-    // it is model-sized on the test corpus but VOCABULARY-sized in general
-    // (a web-scale corpus has 1e8-1e9 distinct terms), and the sort keeps
-    // term-filtered lookups row-group-skippable
-    idx.vocab
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$dir/vocab")
-    // totals is a genuine 1-row constant: one file
-    idx.totals.coalesce(1).write.mode("overwrite").parquet(s"$dir/totals")
-  }
-
   /** Write the index OF `documents` under `dir`, corpus scanned once
     * (r14, guide §1.2 step 1 — don't recompute what you already wrote):
-    * `write(derive(documents), dir)` re-derived the corpus-sized
-    * explode+agg for EVERY relation write and every
+    * writing each of `derive(documents)`'s four relations re-derived the
+    * corpus-sized explode+agg for EVERY relation write and every
     * `repartitionByRange` sampling pass (doclen, vocab and totals all
     * fold from the tf aggregation — up to 8 corpus scans per build).
     * Here only the postings write touches the corpus; doclen/vocab then
@@ -162,13 +139,6 @@ object PostingsIndex {
     spark.read.parquet(s"$dir/vocab"),
     spark.read.parquet(s"$dir/totals"))
 
-  /** Build `derive(documents)` at `dir` and return the opened index. */
-  def build(documents: DataFrame, spark: SparkSession,
-      dir: String): InvIndex = {
-    write(derive(documents), dir)
-    read(spark, dir)
-  }
-
   /** Build at a fresh staging path next to `dest`, then atomically rename
     * into place — a crashed or concurrent build can never leave `dest`
     * half-written or clobber a directory another reader is scanning. The
@@ -188,17 +158,9 @@ object PostingsIndex {
     read(spark, Paths.get(dest).toAbsolutePath.normalize.toString)
   }
 
-  /** The staged-write half of [[buildAtomic]] (same contract), for
-    * callers that already hold independent relations — e.g.
-    * [[PostingsSegments]] compacting a merged generation (whose four
-    * relations are separate parquet scans, so the [[writeDerived]]
-    * shared-subtree recompute issue does not arise). */
-  def writeAtomic(idx: InvIndex, dest: String): Unit =
-    stagedWrite(dest)(staging => write(idx, staging))
-
-  /** [[writeDerived]] through the same staged atomic rename — the
-    * derive-from-corpus callers ([[buildAtomic]],
-    * [[PostingsSegments.init]]/`appendDelta`). */
+  /** [[writeDerived]] through the staged atomic rename of
+    * [[buildAtomic]] (same contract) — for [[buildAtomic]] and
+    * [[PostingsSegments.init]]/`appendDelta`. */
   def writeDerivedAtomic(documents: DataFrame, spark: SparkSession,
       dest: String): Unit =
     stagedWrite(dest)(staging => writeDerived(documents, spark, staging))

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `root/gen-<g>/seg-<k>/{postings,doclen,vocab,totals}`.
   * Readers resolve the HIGHEST complete generation; maintenance lands
-  * every directory through [[PostingsIndex.writeAtomic]]'s staged
-  * rename, so a crashed append or compaction can never leave a segment
+  * every directory through [[PostingsIndex]]'s staged rename
+  * (`stagedWrite`), so a crashed append or compaction can never leave a segment
   * (or a generation) half-visible. Compaction writes the merged index
   * as the sole segment of generation g+1 — a single atomic rename flips
   * readers from N segments to 1, with no window where old and new
@@ -44,8 +44,8 @@ import org.apache.spark.sql.functions._
   * tracks new-docs postings — measured by ScaleProbe's
   * `postings_delta_append`); query-time segment merge costs one
   * vocabulary-sized agg while postings/doclen scans stay pruned
-  * per-segment parquet; compaction bounds segment-count fan-in
-  * ([[compactIfNeeded]]) so the merge agg never grows unbounded.
+  * per-segment parquet; compaction ([[compact]]) resets segment-count
+  * fan-in to one so the merge agg never grows unbounded.
   */
 object PostingsSegments {
 
@@ -137,11 +137,10 @@ object PostingsSegments {
     * created, nothing is moved, and the old dirs are reaped only after
     * the atomic generation flip (linked inodes survive the reap). The
     * trade, stated: per-segment files accumulate across compactions
-    * (bounded by [[compactIfNeeded]]'s fan-in times compaction count);
-    * a deployment that needs file-COUNT reduction (tiny-delta churn,
-    * object stores without links) runs the byte-level rewrite instead —
-    * `PostingsIndex.writeAtomic(readMerged(...), ...)`, the pre-r15
-    * body — as a scheduled deep-compaction. Content equality with a
+    * (segment fan-in times compaction count); a deployment that needs
+    * file-COUNT reduction (tiny-delta churn, object stores without
+    * links) runs a byte-level rewrite of `readMerged(...)` instead, as a
+    * scheduled deep-compaction. Content equality with a
     * from-scratch build is pinned either way by PostingsSegmentsSpec
     * and the `q_postings_build_incremental` digest oracle. */
   def compact(spark: SparkSession, dir: String): Int = {
@@ -194,14 +193,5 @@ object PostingsSegments {
       scala.util.Try(PostingsIndex.deleteRecursively(p))
     }
     g + 1
-  }
-
-  /** The scheduled-maintenance policy: compact only once the segment
-    * fan-in exceeds `maxSegments`. Returns true if a compaction ran. */
-  def compactIfNeeded(spark: SparkSession, dir: String,
-      maxSegments: Int = 8): Boolean = {
-    require(maxSegments >= 1, s"maxSegments $maxSegments < 1")
-    if (segments(dir).size <= maxSegments) false
-    else { compact(spark, dir); true }
   }
 }

@@ -30,12 +30,6 @@ object TrainingPrep {
   def estTokens(text: Column): Column =
     greatest(ceil(length(text) / 4.0).cast("long"), lit(1L))
 
-  /** Pure-Scala twin of [[estTokens]] for property tests and driver-side
-    * sizing math — asserted equal to the Column form in
-    * TrainingPrepSpec (keep the two in lockstep). */
-  def estTokensModel(textLen: Long): Long =
-    math.max(math.ceil(textLen / 4.0).toLong, 1L)
-
   /** GPT-style sequence packing: documents are concatenated per shard (in
     * deterministic doc_id order) into one token stream, which is chunked
     * into fixed `maxTokens` training sequences. A document whose span

@@ -140,8 +140,15 @@ class DupSpansSpec extends SparkSpecBase {
     assert(got === Set((11L, 3L, "batch"), (1L, 3L, "retro")))
   }
 
-  test("incremental fold: rounds union to the full-corpus positions; index == from-scratch") {
+  test("incremental fold: rounds union to the full-corpus positions") {
     val rnd = new scala.util.Random(777)
+    val n = 4
+    // every (doc_id, pos) whose gram has doc-frequency >= 2
+    def duplicatedPositions(d: org.apache.spark.sql.DataFrame) = {
+      val grams = DupSpans.positionalGrams(d, n).select("doc_id", "pos", "gh")
+      grams.join(DupSpans.duplicatedGramKeys(grams), "gh")
+        .select("doc_id", "pos").distinct()
+    }
     for (trial <- 1 to 3) {
       val vocab = Vector("t0", "t1", "t2", "t3", "t4")
       val corpus = (1L to 15L).map { id =>
@@ -151,36 +158,26 @@ class DupSpansSpec extends SparkSpecBase {
       val base = all.filter(col("doc_id") <= 5)
       val b1 = all.filter(col("doc_id") > 5 && col("doc_id") <= 10)
       val b2 = all.filter(col("doc_id") > 10)
-      val n = 4
 
-      val idx0 = DupSpans.gramIndex(base, n)
-      val out1 = DupSpans.dupPositionsIncremental(idx0, b1, n)
-      val idx1 = DupSpans.updatedGramIndex(idx0, b1, n)
-      val out2 = DupSpans.dupPositionsIncremental(idx1, b2, n)
-      val idx2 = DupSpans.updatedGramIndex(idx1, b2, n)
+      // each round's standing index is built from scratch over the
+      // documents ingested before it
+      val out1 = DupSpans.dupPositionsIncremental(DupSpans.gramIndex(base, n), b1, n)
+      val out2 = DupSpans.dupPositionsIncremental(
+        DupSpans.gramIndex(base.union(b1), n), b2, n)
 
       // union of round outputs + base-internal dups == full-corpus positions
-      val folded = DupSpans.duplicatedPositions(base, n)
+      val folded = duplicatedPositions(base)
         .select("doc_id", "pos")
         .union(out1.select("doc_id", "pos"))
         .union(out2.select("doc_id", "pos"))
         .as[(Long, Long)].collect().toSet
-      val full = DupSpans.duplicatedPositions(all, n)
+      val full = duplicatedPositions(all)
         .as[(Long, Long)].collect().toSet
       assert(folded === full, s"trial $trial fold")
       // no round emits a position twice across rounds
       val perRound = Seq(out1, out2).map(
         _.select("doc_id", "pos").as[(Long, Long)].collect().toSet)
       assert(perRound(0).intersect(perRound(1)) === Set.empty, s"trial $trial overlap")
-
-      // the folded index equals the from-scratch one (df exact; exemplar
-      // SETS equal — list order is unspecified)
-      def norm(ix: org.apache.spark.sql.DataFrame) = ix
-        .select(col("gh"), col("df"),
-          array_sort(col("occs")).as("occs"))
-        .as[(Long, Long, Seq[(Long, Long)])].collect()
-        .map(r => r._1 -> ((r._2, r._3.toSet))).toMap
-      assert(norm(idx2) === norm(DupSpans.gramIndex(all, n)), s"trial $trial index")
     }
   }
 }

@@ -345,16 +345,6 @@ class DedupSpec extends SparkSpecBase {
     assert(inc.nonEmpty) // the sf0.001 corpus plants dups across the split
   }
 
-  test("custom Aggregator signatures == 64-min-agg signatures") {
-    val docs = Tables.documents(spark, sf0001).limit(100)
-    val a = MinHashLSH.signatures(docs)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val b = MinHashLSH.signaturesViaAggregator(docs)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(a === b)
-    assert(a.nonEmpty)
-  }
-
   test("ivf assign kernel: NaN sims order like max_by (first NaN wins, no crash)") {
     import org.apache.spark.sql.catalyst.util.ArrayData
     // 3 unit-ish centroids on the x/y/z axes, d=3
@@ -438,7 +428,7 @@ class DedupSpec extends SparkSpecBase {
     val w = Array.tabulate(8)(i => -(i + 1).toFloat)
     val df = Seq((1L, v), (2L, v.map(x => x * 2f)), (3L, w))
       .toDF("vec_id", "embedding")
-    val got = Dedup.embeddingNearDupPairs(df, 0.99, 100L)
+    val got = Oracles.embeddingNearDupPairs(df, 0.99, 100L)
       .select("vec_a", "vec_b").as[(Long, Long)].collect()
     assert(got.toSeq === Seq((1L, 2L))) // colinear -> cos 1; opposite -> -1
   }
@@ -467,7 +457,7 @@ class DedupSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, sf0001)
       .filter(org.apache.spark.sql.functions.col("vec_id") < 500)
     val banded = Dedup.embeddingNearDupPairsBanded(emb, 0.45)
-    val exact = Dedup.embeddingNearDupPairs(emb, 0.45, 500L)
+    val exact = Oracles.embeddingNearDupPairs(emb, 0.45, 500L)
     val b = banded.as[(Long, Long, Double)].collect().toSet
     val e = exact.as[(Long, Long, Double)].collect().toSet
     assert(b === e) // candidate stage lost no true pair; verify stage exact
@@ -547,7 +537,7 @@ class SimilaritySpec extends SparkSpecBase {
       val planes = Similarity.lshPlanes(spark, nBits,
         Similarity.embeddingDims(Tables.embeddings(spark, sf0001)))
       val diff = all
-        .withColumn("b1", Similarity.lshBucket("v", nBits))
+        .withColumn("b1", Oracles.lshBucket("v", nBits))
         .withColumn("b2", Similarity.lshBucketFromPlanes("v", planes))
         .filter(col("b1") =!= col("b2")).count()
       assert(diff === 0, s"nBits=$nBits")
@@ -647,8 +637,9 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("stub decode: byte stats + metadata survive the mapPartitions seam") {
-    val df = Seq((3L, "abc")).toDF("doc_id", "text")
-    val got = Multimodal.decodeFeatures(spark, df).head()
+    val media = Seq((3L, "abc".getBytes("UTF-8"), 64 + 3, 64 + 21, "fake-rgb"))
+      .toDF("doc_id", "payload", "width", "height", "format")
+    val got = Multimodal.decodeMedia(spark, media).head()
     assert(got.getAs[Long]("byte_len") === 3L)
     assert(got.getAs[Long]("checksum") === (97 + 98 + 99) % 256)
     assert(got.getAs[Double]("avg_byte") === 98.0)
@@ -724,7 +715,7 @@ class MultimodalSpec extends SparkSpecBase {
     for (dir <- Seq(sf0001, "/root/testdata/sf0.01")) {
       val bounded = Tables.documents(spark, dir)
         .filter(col("doc_id") < SparkEntry.JaccardMaxDocId)
-      val exact = Multimodal.exhaustiveNearDupPairs(bounded,
+      val exact = Oracles.exhaustiveNearDupPairs(bounded,
         SparkEntry.MultimodalDupThreshold)
       val sig = Multimodal.frameSignatures(Multimodal.framePostings(bounded))
       val worst = exact

@@ -1,10 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-
-import graft.sources.PartitionedSink
 
 /** Plan-shape regressions: the scale properties the engine promises must
   * be visible in the physical plan, not just asserted in prose. */
@@ -130,27 +126,6 @@ class PlanShapeSpec extends SparkSpecBase {
     val plan = formattedPlan(
       SparkEntry.queries("q_mixture_sample")(spark, sf0001))
     assert(!plan.contains("Exchange"), plan.take(2000))
-  }
-
-  test("partitioned sink layout prunes partitions on read") {
-    val out = Files.createTempDirectory("graft_part").toString
-    val df = txns(Seq(
-      (1L, 1700000000000000000L, 7L, "purchase", 10.0),
-      (2L, 1700300000000000000L, 8L, "view", 20.0)))
-      .withColumn("event_date",
-        to_date(timestamp_micros(col("event_time_us"))))
-    PartitionedSink.writePartitioned(df, out, Seq("event_date"))
-
-    val read = PartitionedSink.read(spark, out)
-      .filter(col("event_date") === "2023-11-14")
-    val plan = formattedPlan(read)
-    val pf = plan.linesIterator.find(_.trim.startsWith("PartitionFilters")).get
-    assert(pf.contains("event_date"), pf) // pruning predicate reached the scan
-    assert(read.count() === 1)
-
-    // one leaf dir per date, no small-file explosion (1 file per partition here)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.count(_.startsWith("event_date=")) === 2, dirs.toSeq)
   }
 
   test("AQE splits a planted power-law skew join (skew=true in the final plan)") {

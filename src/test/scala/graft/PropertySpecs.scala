@@ -51,15 +51,15 @@ object ConversionProps extends Properties("conversions") {
 }
 
 /** Properties of the training-prep arithmetic, driven by the PRODUCTION
-  * constants and the production pure-model estimator
-  * (`TrainingPrep.estTokensModel`, asserted equal to the Column form in
+  * constants and the pure-model estimator
+  * (`Oracles.estTokensModel`, asserted equal to the Column form in
   * TrainingPrepSpec) — a cut or estimator change in the operator flows
   * into these properties rather than past them. */
 object TrainingPrepProps extends Properties("training-prep") {
   import graft.text.TrainingPrep
 
   private val MaxTokens = 256L
-  private def estTokens(len: Int): Long = TrainingPrep.estTokensModel(len)
+  private def estTokens(len: Int): Long = Oracles.estTokensModel(len)
 
   property("packing: per-shard streams are contiguous, gap-free, EOS-floored") =
     forAll(Gen.listOf(Gen.chooseNum(0, 2000))) { lens =>

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * and multi-probe unions make the nominal number wrong in both
   * directions. Timing is min-of-2 on the registered-query parameters.
   *
-  * Run: `sbt "runMain graft.RecallProbe /root/testdata/sf0.1"`
+  * Run: `sbt "Test/runMain graft.RecallProbe <sfDir>"` (default: the
+  * sf0.1 corpus).
   * Results recorded per round in COVERAGE.md (ANN tier table).
   */
 object RecallProbe {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * testdata mutation) and timing the core keyed operators on it — plus a
   * hot-key skew trial comparing plain vs salted aggregation.
   *
-  * Run: `sbt "runMain graft.ScaleProbe 10000000"`
+  * Run: `sbt "Test/runMain graft.ScaleProbe 10000000"`
   */
 object ScaleProbe {
 
@@ -153,7 +153,9 @@ object ScaleProbe {
         |         THEN concat('t', xxhash64(id - 1, i))
         |       ELSE concat('t', xxhash64(id, i)) END))""".stripMargin)
         .as("text"))
-    time("prefix_jaccard_join")(dedup.PrefixJoin.jaccardJoin(pjDocs, tPct = 60))
+    time("prefix_jaccard_join")(dedup.PrefixJoin.jaccardJoinOnSets(
+      pjDocs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .filter(col("term") =!= ""), tPct = 60))
 
     // BM25 at n/20-doc scale (20 tokens/doc -> n postings) over a
     // Zipf-ish vocabulary (token id = hash mod (hash2 mod V + 1): low
@@ -169,7 +171,8 @@ object ScaleProbe {
         |  concat('t', pmod(xxhash64(id, i),
         |    pmod(xxhash64(i, id + 1), $bmVocab) + 1))))""".stripMargin)
         .as("text"))
-    time("bm25_topk")(text.Bm25.topK(bmDocs, queryMod = 997))
+    time("bm25_topk")(text.Bm25.topKIndexed(text.PostingsIndex.derive(bmDocs),
+      queryMod = 997, queryTerms = 16, k = 10, maxDfDen = 4L))
 
     // Postings-index maintenance (r13): the materialized-index build must
     // be linear in postings (one explode + three folded aggs + the
@@ -184,7 +187,7 @@ object ScaleProbe {
         s"graft-probe-index-$n").toString
       val buildRuns = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        text.PostingsIndex.write(text.PostingsIndex.derive(bmDocs), idxDir)
+        text.PostingsIndex.writeDerived(bmDocs, spark, idxDir)
         (System.nanoTime() - t0) / 1e9
       }
       println(f"PROBE postings_index_build rows=$n min_sec=${buildRuns.min}%.2f")
@@ -578,12 +581,10 @@ object ScaleProbe {
     // a deterministic hash-uniform: rank ≈ 1/(1-u); hottest key carries
     // ~50% of all rows, #2 ~17%, ... — the adversarial shape of real
     // account/user activity). Dim = 1000 keys with broadcast disabled (at
-    // 100 TB the dim wouldn't fit). Three plans over identical input:
+    // 100 TB the dim wouldn't fit). Two plans over identical input:
     //   - no AQE: the unsplit SortMergeJoin straggler (one reducer owns
     //     half the fact table);
-    //   - AQE skew-split: runtime re-plan splits the hot partition;
-    //   - salted join (ops/Salt.saltedJoin): static spreading, dim×32
-    //     replication — the guarantee for stages where AQE has no stats.
+    //   - AQE skew-split: runtime re-plan splits the hot partition.
     // PlanShapeSpec pins that the AQE split FIRES; this measures what each
     // buys. Results recorded in SCALING.md.
     {
@@ -604,55 +605,12 @@ object ScaleProbe {
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       conf.set("spark.sql.adaptive.enabled", "false")
       time("skew_join_zipf_no_aqe")(zipfFact.join(dim, "k"))
-      time("skew_join_zipf_salted")(
-        ops.Salt.saltedJoin(zipfFact, dim, "k", col("id"), buckets = 32))
       conf.set("spark.sql.adaptive.enabled", "true")
       time("skew_join_zipf_aqe_split")(zipfFact.join(dim, "k"))
-      time("skew_join_zipf_salted_aqe")(
-        ops.Salt.saltedJoin(zipfFact, dim, "k", col("id"), buckets = 32))
       Seq("spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes").foreach(conf.unset)
-    }
-
-    // ---- Z-order layout at scale: what the curve write costs over a plain
-    //      single-column sorted write (both are one range shuffle — the
-    //      delta is the z-value kernel + two-dim boundary sampling), and
-    //      what it buys (files scanned for a secondary-dimension box, from
-    //      the same per-file min/max envelopes the parquet footers carry).
-    //      ZOrderSpec pins the correctness; this measures cost at N rows.
-    if (only.forall("zorder".contains)) {
-      graft.functions.GraftFunctions.register(spark)
-      val dims = spark.range(n).select(
-        col("id"),
-        pmod(xxhash64(col("id")), lit(100000L)).as("x"),
-        pmod(xxhash64(col("id"), lit(7)), lit(100000L)).as("y"))
-      val base = java.nio.file.Files.createTempDirectory("graft_zprobe").toString
-      val nFiles = 64
-      def timeWrite(name: String)(f: => Unit): Unit = {
-        val runs = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          f
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"PROBE $name rows=$n min_sec=${runs.min}%.2f")
-      }
-      timeWrite("zorder_write_linear")(
-        dims.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
-          .write.mode("overwrite").parquet(s"$base/linear"))
-      timeWrite("zorder_write_curve")(
-        sources.ZOrderLayout.writeClustered(dims, "x", "y", s"$base/curve", nFiles))
-      def scanned(dir: String): (Long, Long) = {
-        val env = spark.read.parquet(dir).groupBy(input_file_name())
-          .agg(min("y").as("y0"), max("y").as("y1"))
-          .select("y0", "y1").collect()
-        val hit = env.count(r => r.getLong(1) >= 40000L && r.getLong(0) <= 55000L)
-        (hit.toLong, env.length.toLong)
-      }
-      val (zh, zn) = scanned(s"$base/curve")
-      val (lh, ln) = scanned(s"$base/linear")
-      println(s"PROBE zorder_skip_ybox curve=$zh/$zn linear=$lh/$ln")
     }
 
     // ---- round-10: substring-level span dedup (DupSpans) at corpus

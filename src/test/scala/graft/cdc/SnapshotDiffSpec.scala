@@ -62,7 +62,7 @@ class SnapshotDiffSpec extends SparkSpecBase {
         "event_time_us", "op", SnapshotDiff.valueDigest(valueCols),
         lit(t1), lit(t2))
       .select("account_id", "change").as[(Long, String)].collect().toSet
-    val twoSided = SnapshotDiff.snapshotDiff(asOf(t1), asOf(t2),
+    val twoSided = graft.Oracles.snapshotDiff(asOf(t1), asOf(t2),
         Seq("account_id"), valueCols)
       .as[(Long, String)].collect().toSet
     assert(onePass == twoSided)

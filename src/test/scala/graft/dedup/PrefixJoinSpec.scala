@@ -1,14 +1,19 @@
 package graft.dedup
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpecBase
 
 class PrefixJoinSpec extends SparkSpecBase {
   import spark.implicits._
 
+  // whitespace unigram postings
   private def got(texts: Seq[String], tPct: Long) =
-    PrefixJoin.jaccardJoin(
+    PrefixJoin.jaccardJoinOnSets(
         texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-          .toDF("doc_id", "text"), tPct)
+          .toDF("doc_id", "text")
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+          .filter(col("term") =!= ""), tPct)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))

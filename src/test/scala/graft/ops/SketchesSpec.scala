@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.{SparkSpecBase, Tables}
-import graft.cdc.EnvelopeOps
+import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
 class SketchesSpec extends SparkSpecBase {
@@ -15,23 +14,6 @@ class SketchesSpec extends SparkSpecBase {
       .as[(String, Long, Long, Long)].collect().toSet
     // ties (1 and 3 both count 2) break by id ASC
     assert(got === Set(("A", 1L, 2L, 1L), ("A", 3L, 2L, 2L), ("B", 9L, 1L, 1L)))
-  }
-
-  test("CMS estimates: never under, over by at most eps * group total") {
-    val up = EnvelopeOps.upsertsOnly(
-      EnvelopeOps.parsedTransactions(Tables.events(spark, sf0001)))
-    val exact = up.groupBy("txn_type", "account_id").count()
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val sketches = Sketches.cmsPerGroup(up, "txn_type", "account_id", eps = 0.01)
-      .collect().map(r => r.getString(0) -> (r.getAs[Array[Byte]]("cms"), r.getLong(2))).toMap
-    assert(sketches.nonEmpty)
-    exact.foreach { case ((txnType, acct), trueN) =>
-      val (bytes, total) = sketches(txnType)
-      val est = Sketches.cmsEstimate(bytes, acct)
-      assert(est >= trueN, s"CMS underestimated $txnType/$acct")
-      assert(est <= trueN + math.ceil(0.01 * total).toLong,
-        s"CMS overshoot beyond eps bound: $est vs $trueN (total $total)")
-    }
   }
 
   // ---- KMV ------------------------------------------------------------------

@@ -137,27 +137,4 @@ class DocStreamSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 2L)))
   }
-
-  test("NB columnar scorer runs STATELESS on a stream: union of per-batch " +
-      "emissions == batch predictions, no state store involved") {
-    implicit val ctx = spark.sqlContext
-    val d = Tables.documents(spark, sf0001)
-    val model = graft.text.NaiveBayes.fit(d)
-    val heldOut = d.filter(col("doc_id") % 5 === 0)
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val want = graft.text.NaiveBayes.predict(d)
-      .select("doc_id", "pred_label", "score_micro")
-      .as[(Long, String, Long)].collect().toSet
-
-    val input = MemoryStream[(Long, String)]
-    val out = run(
-      graft.text.NaiveBayes.scoreColumnar(
-        input.toDF().toDF("doc_id", "text"), model), "nb_stream")(
-      heldOut.grouped((heldOut.length + 2) / 3).toSeq.map(c => { () =>
-        input.addData(c); ()
-      }): _*)
-    val got = out.as[(Long, String, Long)].collect()
-    assert(got.toSet === want)
-    assert(got.length === got.toSet.size, "each doc scored exactly once")
-  }
 }

@@ -55,7 +55,8 @@ class Bm25Spec extends SparkSpecBase {
     97L -> "rare unicorn scan")
 
   test("BM25 matches the independent scalar model exactly") {
-    val got = Bm25.topK(docs(corpus: _*), queryMod = 97, queryTerms = 2, k = 3, maxDfDen = 1)
+    val got = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+      queryMod = 97, queryTerms = 2, k = 3, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got === model(corpus, 97, 2, 3))
     assert(got.nonEmpty)
@@ -63,7 +64,8 @@ class Bm25Spec extends SparkSpecBase {
 
   test("a query document retrieves itself first") {
     // doc 97's query terms are its rarest terms; it carries all of them
-    val got = Bm25.topK(docs(corpus: _*), queryMod = 97, queryTerms = 2, k = 3, maxDfDen = 1)
+    val got = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+      queryMod = 97, queryTerms = 2, k = 3, maxDfDen = 1)
       .filter("query_id = 97 AND doc_rank = 1")
       .select("doc_id").as[Long].collect()
     assert(got.toSeq === Seq(97L))
@@ -72,8 +74,8 @@ class Bm25Spec extends SparkSpecBase {
   test("stop-term guard: df > N/maxDfDen terms leave selection and scoring") {
     // "spark" is in every doc (df 6 of 6); at maxDfDen = 2 it is a
     // stop term — matches through it alone must vanish
-    val got = Bm25.topK(docs(corpus: _*), queryMod = 1, queryTerms = 16,
-      k = 6, maxDfDen = 2)
+    val got = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+      queryMod = 1, queryTerms = 16, k = 6, maxDfDen = 2)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got === model(corpus, 1, 16, 6, maxDfDen = 2))
     // doc 1 ("spark shuffle join join") shares ONLY capped-or-kept terms
@@ -116,8 +118,9 @@ class Bm25Spec extends SparkSpecBase {
   }
 
   test("query likelihood matches the scalar Dirichlet model exactly") {
-    val got = Bm25.queryLikelihoodTopK(docs(corpus: _*), queryMod = 97,
-      queryTerms = 2, k = 3, maxDfDen = 1)
+    val got = Bm25.queryLikelihoodTopKIndexed(
+      PostingsIndex.derive(docs(corpus: _*)), queryMod = 97,
+      queryTerms = 2, k = 3, mu = 2000L, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got === qlModel(corpus, 97, 2, 3))
     assert(got.nonEmpty)
@@ -145,13 +148,14 @@ class Bm25Spec extends SparkSpecBase {
         id -> Seq.fill(1 + rnd.nextInt(12))(
           words(rnd.nextInt(words.size))).mkString(" ")
       }
-      val gotB = Bm25.topK(docs(corpus: _*), queryMod = 3,
-        queryTerms = 4, k = 5, maxDfDen = 2)
+      val gotB = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+        queryMod = 3, queryTerms = 4, k = 5, maxDfDen = 2)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       assert(gotB === model(corpus, 3, 4, 5, maxDfDen = 2),
         s"bm25 trial $trial")
-      val gotQ = Bm25.queryLikelihoodTopK(docs(corpus: _*), queryMod = 3,
-        queryTerms = 4, k = 5, maxDfDen = 2)
+      val gotQ = Bm25.queryLikelihoodTopKIndexed(
+        PostingsIndex.derive(docs(corpus: _*)), queryMod = 3,
+        queryTerms = 4, k = 5, mu = 2000L, maxDfDen = 2)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
       assert(gotQ === qlModel(corpus, 3, 4, 5, maxDfDen = 2),
         s"ql trial $trial")
@@ -180,17 +184,18 @@ class Bm25Spec extends SparkSpecBase {
 
   test("materialized index round-trip: indexed rankers == inline rankers") {
     val tmp = java.nio.file.Files.createTempDirectory("bm25idx").toString
-    PostingsIndex.write(PostingsIndex.derive(docs(corpus: _*)), tmp)
+    PostingsIndex.writeDerived(docs(corpus: _*), spark, tmp)
     val idx = PostingsIndex.read(spark, tmp)
-    val bmInline = Bm25.topK(docs(corpus: _*), queryMod = 1,
-      queryTerms = 16, k = 3, maxDfDen = 1)
+    val bmInline = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+      queryMod = 1, queryTerms = 16, k = 3, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     val bmIdx = Bm25.topKIndexed(idx, queryMod = 1, queryTerms = 16,
       k = 3, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(bmIdx === bmInline)
-    val qlInline = Bm25.queryLikelihoodTopK(docs(corpus: _*), queryMod = 1,
-      queryTerms = 16, k = 3, maxDfDen = 1)
+    val qlInline = Bm25.queryLikelihoodTopKIndexed(
+      PostingsIndex.derive(docs(corpus: _*)), queryMod = 1,
+      queryTerms = 16, k = 3, mu = 2000L, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     val qlIdx = Bm25.queryLikelihoodTopKIndexed(idx, queryMod = 1,
       queryTerms = 16, k = 3, mu = 2000L, maxDfDen = 1)
@@ -262,7 +267,8 @@ class Bm25Spec extends SparkSpecBase {
   }
 
   test("top-k bound and rank totality hold per query") {
-    val got = Bm25.topK(docs(corpus: _*), queryMod = 1, queryTerms = 16, k = 2, maxDfDen = 1)
+    val got = Bm25.topKIndexed(PostingsIndex.derive(docs(corpus: _*)),
+      queryMod = 1, queryTerms = 16, k = 2, maxDfDen = 1)
       .as[(Long, Long, Long, Long, Long)].collect()
     val byQ = got.groupBy(_._1)
     assert(byQ.keySet === corpus.map(_._1).toSet) // every doc is a query

@@ -91,26 +91,6 @@ class NaiveBayesSpec extends SparkSpecBase {
     assert(scored(5L)._1 == "a")
   }
 
-  test("stateless columnar scorer == broadcast-join predict on the real " +
-      "held-out slice (and on the hand corpus incl. ties)") {
-    for (d <- Seq(docs(corpus),
-        Tables.documents(spark, sf0001))) {
-      val m = NaiveBayes.fit(d)
-      val viaJoin = NaiveBayes.predict(d).select("doc_id", "pred_label",
-        "score_micro").as[(Long, String, Long)].collect().toSet
-      val viaCols = NaiveBayes.scoreColumnar(
-          d.filter(col("doc_id") % 5 === 0), m)
-        .as[(Long, String, Long)].collect().toSet
-      assert(viaCols == viaJoin)
-    }
-  }
-
-  test("fit refuses a grid over the plan-literal budget") {
-    intercept[IllegalArgumentException] {
-      NaiveBayes.fit(docs(corpus), maxGridRows = 3)
-    }
-  }
-
   test("confusion matrix sums to the held-out doc count on the corpus") {
     val d = Tables.documents(spark, sf0001)
     val heldOut = d.filter(col("doc_id") % 5 === 0).count()

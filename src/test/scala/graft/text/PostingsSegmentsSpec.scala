@@ -68,17 +68,6 @@ class PostingsSegmentsSpec extends SparkSpecBase {
       PostingsIndex.derive(docs(corpus: _*)))
   }
 
-  test("compactIfNeeded respects the fan-in threshold") {
-    val root = tmpRoot()
-    PostingsSegments.init(docs(corpus.take(5): _*), spark, root)
-    PostingsSegments.appendDelta(docs(corpus.slice(5, 6): _*), spark, root)
-    assert(!PostingsSegments.compactIfNeeded(spark, root, maxSegments = 2))
-    assert(PostingsSegments.segments(root).size === 2)
-    PostingsSegments.appendDelta(docs(corpus.slice(6, 7): _*), spark, root)
-    assert(PostingsSegments.compactIfNeeded(spark, root, maxSegments = 2))
-    assert(PostingsSegments.segments(root).size === 1)
-  }
-
   test("retrieval over the merged view equals retrieval over a full build") {
     val root = tmpRoot()
     PostingsSegments.init(docs(corpus.take(5): _*), spark, root)

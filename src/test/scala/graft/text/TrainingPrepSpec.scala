@@ -68,7 +68,7 @@ class TrainingPrepSpec extends SparkSpecBase {
     val got = d.select(col("doc_id"), TrainingPrep.estTokens(col("text")).as("t"))
       .as[(Long, Long)].collect().toMap
     (0 to 60).foreach { n =>
-      assert(got(n.toLong) === TrainingPrep.estTokensModel(n.toLong), s"len $n")
+      assert(got(n.toLong) === graft.Oracles.estTokensModel(n.toLong), s"len $n")
     }
   }
 
