@@ -19,7 +19,10 @@ Specs (src/test) never count.
 
 Entry points started by name are roots. The named exceptions below are
 printed with their reason; any other hit is printed as UNREACHED and the
-script exits 1.
+script exits 1. So does an exception that no longer holds: one naming an
+object or def the scan finds reached (DEAD EXCEPTION), or one that is not
+declared at all (UNKNOWN EXCEPTION). Class members are outside the scan;
+the deliberate ones are listed apart, so the whole set is here.
 
 Run from anywhere:  python3 scripts/unreached_defs.py
 """
@@ -34,22 +37,24 @@ BENCH = os.path.join(ROOT, "perfbench", "src")
 # Entry points started by name (`runMain`, spark-submit, the driver contract).
 ROOTS = {"GraftApp", "DocIngestApp", "Bench", "Verify"}
 
-# Unreached on purpose: "Object" or "Object.def" -> reason. Class members
-# (HealthServer.boundPort, the NioLocalFileSystem overrides) are outside the
-# scan; they are listed so the whole set of deliberate exceptions is here.
+# Unreached on purpose: "Object" or "Object.def" -> reason. Each must name
+# a declaration the scan finds unreached.
 EXCEPTIONS = {
     "Pipelines.fanOutStateless":
         "ROADMAP item 2 decides between it and a staging query",
-    "Pipelines.highValueAlerts":
-        "ROADMAP item 2 decides it together with fanOutStateless",
-    "HealthServer.boundPort":
-        "the port-0 test seam: a server bound to port 0 reports its port",
     "ExtensionsCheck":
         "scripts/check_extensions.sh spark-submits it against the built jar",
-    "NioLocalFileSystem":
-        "Hadoop instantiates it and calls its overrides from fs.file.impl",
     "SparkEntry.entry":
         "the batch surface's smoke-check contract, called by name from outside",
+}
+
+# Class members unreached on purpose. The scan does not look inside classes,
+# so these are printed, not checked.
+OUTSIDE_SCAN = {
+    "HealthServer.boundPort":
+        "the port-0 test seam: a server bound to port 0 reports its port",
+    "NioLocalFileSystem":
+        "Hadoop instantiates it and calls its overrides from fs.file.impl",
 }
 
 # Members Scala or a framework calls without naming them at the call site.
@@ -193,29 +198,38 @@ def main():
     texts = {p: strip_comments(open(p, encoding="utf-8").read())
              for base in (MAIN, BENCH) for p in scala_files(base)}
     main_files = [p for p in texts if p.startswith(MAIN + os.sep)]
-    hits, excepted = [], []
+    hits, excepted, declared, used = [], [], set(), set()
     for path in sorted(main_files):
         others = [t for q, t in texts.items() if q != path]
         for obj, name, start, end in declarations(texts[path]):
+            key = obj if name is None else "%s.%s" % (obj, name)
+            declared.add(key)
             if name is None and obj in ROOTS:
                 continue
             if name in IMPLICIT_MEMBERS:
                 continue
             if reached(obj, name, start, end, texts[path], others):
                 continue
-            key = obj if name is None else "%s.%s" % (obj, name)
             rel = os.path.relpath(path, ROOT)
-            if key in EXCEPTIONS or obj in EXCEPTIONS:
-                excepted.append("%s  %s  -- kept: %s"
-                                % (rel, key, EXCEPTIONS.get(key) or EXCEPTIONS[obj]))
+            entry = key if key in EXCEPTIONS else obj if obj in EXCEPTIONS else None
+            if entry:
+                used.add(entry)
+                excepted.append("%s  %s  -- kept: %s" % (rel, key, EXCEPTIONS[entry]))
             else:
                 hits.append("%s  %s" % (rel, key))
+    stale = ["%s %s" % ("DEAD EXCEPTION" if e in declared else "UNKNOWN EXCEPTION", e)
+             for e in sorted(set(EXCEPTIONS) - used)]
     for line in excepted:
         print(line)
+    for key, why in sorted(OUTSIDE_SCAN.items()):
+        print("(class member, outside the scan)  %s  -- kept: %s" % (key, why))
     for line in hits:
         print("UNREACHED " + line)
-    print("%d unreached, %d kept on purpose" % (len(hits), len(excepted)))
-    return 1 if hits else 0
+    for line in stale:
+        print(line)
+    print("%d unreached, %d kept on purpose, %d outside the scan, %d dead exceptions"
+          % (len(hits), len(excepted), len(OUTSIDE_SCAN), len(stale)))
+    return 1 if hits or stale else 0
 
 
 if __name__ == "__main__":

@@ -302,7 +302,7 @@ private[graft] object QueryShared {
 
   /** DuckDB CTEs reproducing the synthesized ACCOUNTS CDC changelog + its
     * latest-per-key KTable reduction (the flat twin of
-    * [[graft.cdc.DimensionCdc.accountsDim]] — the nested JSON serde round
+    * `DimensionCdc.Accounts.dim` — the nested JSON serde round
     * trip is Spark-side behavior under test). */
   val sqlAcctDim =
     """acct_ver AS (
@@ -324,7 +324,7 @@ private[graft] object QueryShared {
       |)""".stripMargin
 
   /** Same for the synthesized CUSTOMERS changelog
-    * ([[graft.cdc.DimensionCdc.customersDim]]). */
+    * (`DimensionCdc.Customers.dim`). */
   val sqlCustDim =
     """cust_ver AS (
       |  SELECT c_custkey AS customer_id,

@@ -208,7 +208,7 @@ case class AvroWireEncode(child: Expression, schema: StructType,
   *
   * The container ships no spark-avro jar, so this is a MINIMAL hand-written
   * Avro binary codec proving the wire seam against the real byte format
-  * (GoldenWireSpec's fixtures), not its JSON shadow: zigzag-varint
+  * (GoldenWireSpec's fixtures), apart from the JSON wire: zigzag-varint
   * longs/ints, little-endian IEEE doubles, length-prefixed UTF-8 strings,
   * and `union [null, T]` branches — the Avro primitives a Debezium
   * envelope uses. The serde is DRIVEN BY the same [[Schemas]] StructTypes

@@ -88,7 +88,7 @@ object CdcQueries {
     // versions -> JSON wire payload -> from_json(accountEnvelope) -> typed
     // rows -> latest-by-key with tombstones applied
     GraftQuery("q_cdc_account_dim", (s, dir) =>
-      DimensionCdc.accountsDim(Tables.customer(s, dir))
+      DimensionCdc.Accounts.dim(Tables.customer(s, dir), Wire.Json)
         .select("account_id", "customer_id", "account_number", "account_type",
           "balance", "currency", "account_status", "cdc_ts_us"),
       s"WITH $sqlAcctDim\n" +
@@ -97,14 +97,14 @@ object CdcQueries {
           |FROM acct_dim""".stripMargin),
 
     // the same ACCOUNTS KTable with the changelog carried over the BINARY
-    // Avro wire (Confluent frame -> scan-stage AvroWireDecode) instead of
-    // its JSON shadow — S1 is three Avro topics, not one
+    // Avro wire (Confluent frame -> scan-stage AvroWireDecode), the
+    // reference's wire — S1 is three Avro topics, not one
     GraftQuery("q_cdc_account_dim_avro", (s, dir) =>
-      DimensionCdc.accountsDimAvro(Tables.customer(s, dir))
+      DimensionCdc.Accounts.dim(Tables.customer(s, dir), Wire.Avro)
         .select("account_id", "customer_id", "account_number", "account_type",
           "balance", "currency", "account_status", "cdc_ts_us"),
       // wire format differs (Avro binary vs JSON), typed KTable is the
-      // contract — same oracle as the JSON-shadow query
+      // contract — same oracle as the JSON-wire query
       s"WITH $sqlAcctDim\n" +
         """SELECT account_id, customer_id, account_number, account_type,
           |       balance, currency, account_status, cdc_ts_us
@@ -113,7 +113,7 @@ object CdcQueries {
     // J2 over the CUSTOMERS CDC changelog (the second KTable the reference
     // builds, `ABBankTopology.java:127-144`) — EMAIL is the versioned field
     GraftQuery("q_cdc_customer_dim", (s, dir) =>
-      DimensionCdc.customersDim(Tables.customer(s, dir))
+      DimensionCdc.Customers.dim(Tables.customer(s, dir), Wire.Json)
         .select("customer_id", "first_name", "last_name", "email", "segment",
           "cdc_ts_us"),
       s"WITH $sqlCustDim\n" +
@@ -121,7 +121,7 @@ object CdcQueries {
 
     // CUSTOMERS KTable over the Avro wire (third of the three S1 topics)
     GraftQuery("q_cdc_customer_dim_avro", (s, dir) =>
-      DimensionCdc.customersDimAvro(Tables.customer(s, dir))
+      DimensionCdc.Customers.dim(Tables.customer(s, dir), Wire.Avro)
         .select("customer_id", "first_name", "last_name", "email", "segment",
           "cdc_ts_us"),
       s"WITH $sqlCustDim\n" +
@@ -134,7 +134,7 @@ object CdcQueries {
     // nullable fields (reason/reviewer/reviewed_at/notes) exercised so
     // null transport is proven
     GraftQuery("q_audit_parse", (s, dir) =>
-      DimensionCdc.auditChangelog(Tables.table(s, dir, "orders")),
+      DimensionCdc.Audit.changelog(Tables.table(s, dir, "orders"), Wire.Json),
       // the serde round trip is the Spark-side operator under test; the
       // oracle replays the synthesis arithmetic + flat projection (the
       // established cdc-dim discipline)
@@ -158,7 +158,7 @@ object CdcQueries {
     // dimension row with a validity interval — the warehouse
     // materialization of the same changelog the KTable reduces
     GraftQuery("q_cdc_account_scd2", (s, dir) => {
-      val log = DimensionCdc.accountChangelog(Tables.customer(s, dir))
+      val log = DimensionCdc.Accounts.changelog(Tables.customer(s, dir), Wire.Json)
         .filter(col("op") =!= "d")
       LatestByKey.scd2(log, Seq("account_id"), Seq(col("cdc_ts_us")),
           "cdc_ts_us")
@@ -256,9 +256,9 @@ object CdcQueries {
          |  FROM lineitem)
          |""".stripMargin + graft.cdc.Checksum.oracleSql),
 
-    // S1/S2 serde seam: envelope -> JSON wire payload -> decode -> parse
-    // (the Kafka value-codec path; JSON stands in for Avro — no spark-avro
-    // jar in this container)
+    // S1/S2 serde seam over the JSON wire: envelope -> JSON payload ->
+    // from_json -> parse (the binary Confluent Avro wire of the reference
+    // is q_envelope_avro_serde below)
     GraftQuery("q_envelope_json_serde", (s, dir) =>
       EnvelopeOps.parseTxnEnvelope(
         EnvelopeOps.decodeJsonEnvelope(

@@ -95,32 +95,42 @@ object EnvelopeOps {
   private def named(cols: Seq[(String, Column)]): Seq[Column] =
     cols.map { case (n, c) => c.as(n) }
 
+  /** The Debezium envelope shell around a row image: `before`/`after`
+    * images, the `source` block (connector, database, `table`, change
+    * number `scn`), the op code and the record time in millis, micros and
+    * nanos. The one envelope layout of every topic
+    * ([[Schemas.envelope]]). */
+  private[cdc] def envelope(table: String, before: Column, after: Column,
+      op: Column, tsMs: Column, tsUs: Column, tsNs: Column, scn: Column): Column =
+    struct(
+      before.as("before"),
+      after.as("after"),
+      struct(
+        lit("3.2.0").as("version"),
+        lit("oracle").as("connector"),
+        lit("abbank").as("name"),
+        tsMs.as("ts_ms"),
+        lit("ORCLCDB").as("db"),
+        lit("ABBANK").as("schema"),
+        lit(table).as("table"),
+        scn.cast("string").as("scn")
+      ).as("source"),
+      op.as("op"),
+      tsMs.as("ts_ms"),
+      tsUs.as("ts_us"),
+      tsNs.as("ts_ns"))
+
   /** events (from [[graft.Tables.events]]) -> one nested `envelope` column
     * shaped like [[Schemas.transactionEnvelope]], `after` built by
     * [[afterImage]]. */
   def synthesizeTxnEnvelope(events: DataFrame): DataFrame = {
     val after = struct(named(afterImage(col)): _*)
-    val tsMs = millis(col("ts_us"))
-    events.select(
-      struct(
-        // typed null of the same struct shape (insert events carry no before-image)
-        when(lit(false), after).as("before"),
-        after.as("after"),
-        struct(
-          lit("3.2.0").as("version"),
-          lit("oracle").as("connector"),
-          lit("abbank").as("name"),
-          tsMs.as("ts_ms"),
-          lit("ORCLCDB").as("db"),
-          lit("ABBANK").as("schema"),
-          lit("TRANSACTIONS").as("table"),
-          col("event_id").cast("string").as("scn")
-        ).as("source"),
-        opCode(col("event_id")).as("op"),
-        tsMs.as("ts_ms"),
-        col("ts_us").as("ts_us"),
-        col("ts_ns").as("ts_ns")
-      ).as("envelope"))
+    events.select(envelope("TRANSACTIONS",
+      // typed null of the same struct shape (insert events carry no before-image)
+      before = when(lit(false), after), after = after,
+      op = opCode(col("event_id")), tsMs = millis(col("ts_us")),
+      tsUs = col("ts_us"), tsNs = col("ts_ns"), scn = col("event_id")
+    ).as("envelope"))
   }
 
   /** Envelope -> flat typed transaction row: [[parseRules]] over the
@@ -153,12 +163,12 @@ object EnvelopeOps {
   def parsedTransactions(events: DataFrame): DataFrame =
     events.select(named(decodeEvents(col)): _*)
 
-  /** S1 deserialization seam: a string `payload` column carrying a
-    * JSON-encoded CDC envelope -> typed nested envelope struct. This is the
-    * exact code shape of the production Kafka source (`format("kafka")` +
-    * `from_avro(value, registrySchema)` — reference
-    * `serde/AvroSerdes.java:35-59`); the container ships no spark-avro /
-    * kafka connector jars, so the wire format here is JSON. Parse is
+  /** S1 deserialization seam over the JSON wire: a string `payload` column
+    * carrying a JSON-encoded CDC envelope -> typed nested envelope struct,
+    * the same struct [[AvroWire.decodeAvroEnvelope]] yields from the binary
+    * Confluent Avro wire of the reference (`serde/AvroSerdes.java:35-59`).
+    * The `GraftApp` KTables, the dimension queries without an `_avro`
+    * suffix and `q_envelope_json_serde` travel this wire. Parse is
     * permissive: malformed payloads become null envelopes and are dropped by
     * [[upsertsOnly]], never failed (reference
     * `config/ABBankStreamsConfig.java:93-94` LogAndContinueExceptionHandler). */

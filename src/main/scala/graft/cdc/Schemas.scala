@@ -110,7 +110,6 @@ object Schemas {
   val transactionEnvelope: StructType = envelope(transactionRow)
   val accountEnvelope: StructType = envelope(accountRow)
   val customerEnvelope: StructType = envelope(customerRow)
-  val auditEnvelope: StructType = envelope(auditRow)
 
   /** Output notification document (reference `model/NotificationEvent.java:23-45`):
     * enum-ish string fields + ordered string->string metadata map. */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryShared.{completed, P, sqlAcctDim, sqlCustDim, upserts}
 import graft.SparkEntry.{DailySpendAlert, DormancyGap, DormancyGapUs,
   HighValueThreshold, VelocityAdvanceSec, VelocityMinTxns, VelocityWindowSec}
-import graft.cdc.DimensionCdc
+import graft.cdc.{DimensionCdc, Wire}
 
 /** Reference-pipeline filters, dimension enrichment, notification
   * formatting, velocity/daily-spend/dormancy alerts and reconciliation
@@ -46,8 +46,7 @@ object FilterEnrichQueries {
 
     // P7: inclusive >= high-value threshold
     GraftQuery("q_high_value_filter", (s, dir) =>
-      completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
+      Enrich.highValue(upserts(s, dir), HighValueThreshold)
         .select("txn_id", "account_id", "amount", "currency", "event_time_ms"),
       P +
       s"SELECT txn_id, account_id, amount, currency, event_time_ms FROM completed WHERE amount >= $HighValueThreshold"),
@@ -78,18 +77,15 @@ object FilterEnrichQueries {
 
     // J1: high-value stream enriched against the account dimension
     // (broadcast hash join; "N/A" fallback on missing dim row)
-    GraftQuery("q_high_value_enrich", (s, dir) => {
-      val hv = completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
-      Enrich.withDim(hv,
+    GraftQuery("q_high_value_enrich", (s, dir) =>
+      Enrich.withDim(Enrich.highValue(upserts(s, dir), HighValueThreshold),
           Tables.customer(s, dir).withColumnRenamed("c_custkey", "account_id"),
           "account_id")
         .select(col("txn_id"), col("account_id"), col("amount"), col("currency"),
           coalesce(col("c_name"), lit("N/A")).as("account_name"),
           coalesce(col("c_mktsegment"), lit("N/A")).as("segment"),
           Notify.formatAmount(col("amount"), col("currency")).as("formatted_amount"),
-          col("event_time_ms"))
-    },
+          col("event_time_ms")),
       P +
       s"""SELECT txn_id, account_id, amount, currency,
          |  coalesce(c_name, 'N/A') AS account_name,
@@ -100,16 +96,13 @@ object FilterEnrichQueries {
          |WHERE amount >= $HighValueThreshold""".stripMargin),
 
     // J3: declared-but-unwired second hop — customer -> nation
-    GraftQuery("q_two_hop_enrich", (s, dir) => {
-      val hv = completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
-      Enrich.twoHop(hv, "account_id",
+    GraftQuery("q_two_hop_enrich", (s, dir) =>
+      Enrich.twoHop(Enrich.highValue(upserts(s, dir), HighValueThreshold), "account_id",
           Tables.customer(s, dir), "c_custkey",
           Tables.nation(s, dir), "c_nationkey", "n_nationkey")
         .select(col("txn_id"), col("account_id"), col("amount"),
           coalesce(col("c_name"), lit("N/A")).as("customer_name"),
-          coalesce(col("n_name"), lit("N/A")).as("nation_name"))
-    },
+          coalesce(col("n_name"), lit("N/A")).as("nation_name")),
       P +
       s"""SELECT txn_id, account_id, amount,
          |  coalesce(c_name, 'N/A') AS customer_name,
@@ -122,18 +115,11 @@ object FilterEnrichQueries {
     // J1 against the CDC-built dimension: high-value transactions left-join
     // the accounts KTable (the reference's actual enrichment data flow —
     // `topology/ABBankTopology.java:233-240`; deleted accounts fall back to
-    // "N/A" like missing KV-store rows)
-    GraftQuery("q_enrich_cdc_dim", (s, dir) => {
-      val hv = completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
-      Enrich.withDim(hv, DimensionCdc.accountsDim(Tables.customer(s, dir)),
-          "account_id")
-        .select(col("txn_id"), col("account_id"), col("amount"),
-          coalesce(col("account_number"), lit("N/A")).as("account_number"),
-          coalesce(col("customer_id"), lit(-1L)).as("customer_id"),
-          coalesce(col("balance"), lit(-1.0)).as("account_balance"),
-          coalesce(col("account_status"), lit("N/A")).as("account_status"))
-    },
+    // "N/A" like missing KV-store rows); pipeline 1's own enrichment
+    GraftQuery("q_enrich_cdc_dim", (s, dir) =>
+      Enrich.highValueCdcEnriched(upserts(s, dir),
+        DimensionCdc.Accounts.dim(Tables.customer(s, dir), Wire.Json),
+        HighValueThreshold),
       P + s", $sqlAcctDim\n" +
       s"""SELECT txn_id, t.account_id, amount,
          |  coalesce(account_number, 'N/A') AS account_number,
@@ -145,24 +131,12 @@ object FilterEnrichQueries {
 
     // J1+J3 full reference flow: transactions -> accounts KTable (CDC) ->
     // customers KTable (CDC), surfacing getFullName/contact info
-    // (reference builds both KTables at `ABBankTopology.java:107-144`)
-    GraftQuery("q_enrich_cdc_two_hop", (s, dir) => {
-      val hv = completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
-      val acct = DimensionCdc.accountsDim(Tables.customer(s, dir))
-        .select("account_id", "customer_id", "account_number")
-      val cust = DimensionCdc.customersDim(Tables.customer(s, dir))
-        .select("customer_id", "first_name", "last_name", "email", "segment")
-      hv.join(broadcast(acct), Seq("account_id"), "left")
-        .join(broadcast(cust), Seq("customer_id"), "left")
-        .select(col("txn_id"), col("account_id"), col("amount"),
-          coalesce(col("account_number"), lit("N/A")).as("account_number"),
-          when(col("first_name").isNull, lit("N/A"))
-            .otherwise(Notify.fullName(col("first_name"), col("last_name")))
-            .as("customer_name"),
-          coalesce(col("email"), lit("N/A")).as("email"),
-          coalesce(col("segment"), lit("N/A")).as("segment"))
-    },
+    // (reference builds both KTables at `ABBankTopology.java:107-144`);
+    // the body of the two-hop stream's micro-batch
+    GraftQuery("q_enrich_cdc_two_hop", (s, dir) =>
+      Enrich.twoHopCdcEnriched(Enrich.highValue(upserts(s, dir), HighValueThreshold),
+        DimensionCdc.Accounts.dim(Tables.customer(s, dir), Wire.Json),
+        DimensionCdc.Customers.dim(Tables.customer(s, dir), Wire.Json)),
       P + s", $sqlAcctDim,\n$sqlCustDim\n" +
       s"""SELECT t.txn_id, t.account_id, t.amount,
          |  coalesce(a.account_number, 'N/A') AS account_number,
@@ -277,32 +251,12 @@ object FilterEnrichQueries {
          |       THEN 'HIGH' ELSE 'LOW' END AS severity
          |FROM disc""".stripMargin),
 
-    // O2: notification JSON assembly (deterministic id; uuid()/now() live
-    // only in the streaming sinks, excluded from verification)
-    GraftQuery("q_notification_json", (s, dir) => {
-      val hv = completed(s, dir)
-        .filter(Predicates.isHighValue(col("amount"), HighValueThreshold))
-      val enriched = Enrich.withDim(hv,
-        Tables.customer(s, dir).withColumnRenamed("c_custkey", "account_id"),
-        "account_id")
-      val fmt = Notify.formatAmount(col("amount"), col("currency"))
-      enriched.select(
-        col("txn_id"),
-        Notify.notificationJson(
-          idPrefix = "HV",
-          notificationType = "HIGH_VALUE_ALERT",
-          severity = "HIGH",
-          channel = "BOTH",
-          entityId = col("txn_id"),
-          accountId = col("account_id"),
-          subject = lit("High value transaction alert"),
-          body = concat(lit("Account "), col("account_id"), lit(" spent "), fmt),
-          metadata = map(
-            lit("amount"), fmt,
-            lit("currency"), col("currency"),
-            lit("accountName"), coalesce(col("c_name"), lit("N/A")))
-        ).as("notification"))
-    },
+    // O2: notification JSON assembly — pipeline 1's own alert
+    // (deterministic id; uuid()/now() live only in the streaming sinks,
+    // excluded from verification)
+    GraftQuery("q_notification_json", (s, dir) =>
+      Enrich.highValueAlerts(upserts(s, dir), Tables.customer(s, dir),
+        HighValueThreshold).drop("account_id"),
       P +
       s""", enriched AS (
          |  SELECT txn_id, account_id, amount, currency,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{GraftConfig, GraftSession, Tables}
+import graft.cdc.{DimensionCdc, Wire}
+import graft.ops.Enrich
 
 /** Application entrypoint — the analog of the reference's `main()`
   * (`ABBankStreamProcessorApplication.java`: load config, build the
@@ -49,7 +51,10 @@ object GraftApp {
 
     Seq(
       // 1: high-value alerts against the CDC-built accounts KTable
-      sink(Pipelines.highValueCdcEnriched(parsed, customerDim,
+      // (stream-static join; the table is rebuilt through the JSON wire on
+      // every trigger)
+      sink(Enrich.highValueCdcEnriched(parsed,
+        DimensionCdc.Accounts.dim(customerDim, Wire.Json),
         cfg.highValueThreshold), "high_value_alerts"),
       // 2: velocity fraud (windowed count; append emits on window close)
       sink(Pipelines.velocityAlerts(parsed, cfg.velocityWindowSec,
@@ -69,9 +74,11 @@ object GraftApp {
       // 7-8: the two continuously-maintained KTables (accounts, customers
       // — reference ABBankTopology.java:107-144), each held in its own
       // query's state store, which the enrichment reads per micro-batch
-      Pipelines.ktableQuery(Pipelines.accountsDimStream(spark, srcDir),
+      Pipelines.ktableQuery(
+        Pipelines.ktableStream(spark, DimensionCdc.Accounts, srcDir),
         s"$outBase/_checkpoints/acct_store"),
-      Pipelines.ktableQuery(Pipelines.customersDimStream(spark, srcDir),
+      Pipelines.ktableQuery(
+        Pipelines.ktableStream(spark, DimensionCdc.Customers, srcDir),
         s"$outBase/_checkpoints/cust_store"),
       // 9: the declared two-hop enrichment against BOTH live KTables
       Pipelines.highValueTwoHopCdcStream(parsed,

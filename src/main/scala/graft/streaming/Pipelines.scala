@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
-import graft.cdc.EnvelopeOps
+import graft.cdc.{CdcTable, EnvelopeOps, Wire}
 import graft.ops.{Enrich, Notify, Predicates, Windows}
 
 /** The reference's five stream pipelines recomposed as Structured Streaming
@@ -145,50 +145,6 @@ object Pipelines {
   private def completed(parsed: DataFrame): DataFrame =
     parsed.filter(Predicates.isCompleted(col("status")))
 
-  /** Pipeline 1 — high-value alerts: stateless filter + stream-static
-    * broadcast join + notification JSON (reference `:215-245`). */
-  def highValueAlerts(parsed: DataFrame, customerDim: DataFrame,
-      threshold: Double): DataFrame = {
-    val hv = completed(parsed)
-      .filter(Predicates.isHighValue(col("amount"), threshold))
-    val fmt = Notify.formatAmount(col("amount"), col("currency"))
-    Enrich.withDim(hv, customerDim.withColumnRenamed("c_custkey", "account_id"),
-        "account_id")
-      .select(col("txn_id"), col("account_id"),
-        Notify.notificationJson(
-          idPrefix = "HV", notificationType = "HIGH_VALUE_ALERT",
-          severity = "HIGH", channel = "BOTH",
-          entityId = col("txn_id"), accountId = col("account_id"),
-          subject = lit("High value transaction alert"),
-          body = concat(lit("Account "), col("account_id"), lit(" spent "), fmt),
-          metadata = map(lit("amount"), fmt, lit("currency"), col("currency"),
-            lit("accountName"), coalesce(col("c_name"), lit("N/A")))
-        ).as("notification"))
-  }
-
-  /** Pipeline 1 against the CDC-BUILT accounts KTable — the reference's
-    * actual enrichment data flow (`topology/ABBankTopology.java:233-240`
-    * joins the high-value stream to the KTable built from the ACCOUNTS CDC
-    * topic at `:107-125`). The dimension side is
-    * [[graft.cdc.DimensionCdc.accountsDim]]: envelope versions through the
-    * wire serde, latest-by-key, tombstones applied. In a micro-batch
-    * engine the KTable is re-read per batch (stream-static join semantics);
-    * the continuously-maintained KTable is [[accountsDimStream]], which
-    * the two-hop query reads. Deleted accounts fall back to "N/A" like
-    * missing KV-store rows (`:252-253`). */
-  def highValueCdcEnriched(parsed: DataFrame, customerTable: DataFrame,
-      threshold: Double): DataFrame = {
-    val hv = completed(parsed)
-      .filter(Predicates.isHighValue(col("amount"), threshold))
-    Enrich.withDim(hv, graft.cdc.DimensionCdc.accountsDim(customerTable),
-        "account_id")
-      .select(col("txn_id"), col("account_id"), col("amount"),
-        coalesce(col("account_number"), lit("N/A")).as("account_number"),
-        coalesce(col("customer_id"), lit(-1L)).as("customer_id"),
-        coalesce(col("balance"), lit(-1.0)).as("account_balance"),
-        coalesce(col("account_status"), lit("N/A")).as("account_status"))
-  }
-
   /** Pipeline 2 — velocity fraud: tumbling count per account
     * (reference `:160-207`).
     *
@@ -226,42 +182,25 @@ object Pipelines {
       parsed.withWatermark("event_ts", grace),
       gap, tsCol = col("event_ts"))
 
-  /** Streaming ACCOUNTS KTable maintenance — the reference's accounts
-    * KTable is CONTINUOUSLY maintained from its CDC topic
-    * (`ABBankTopology.java:107-125` `.toTable(...)`); here the changelog
-    * arrives as a stream (file source standing in for Kafka), travels the
-    * same wire serde, and the latest version per account is maintained as
-    * an update-mode `max_by` aggregation — state is one narrow struct per
-    * account. [[ktableQuery]] runs it, and the query's state store IS the
-    * KTable ([[ktableSnapshot]] reads it back). Tombstones stay in state
-    * with `op = 'd'`, so the delete wins the argmax and the reader drops
-    * the key (filtering them BEFORE the aggregation would resurrect the
-    * previous version instead — Kafka Streams' actual tombstone
-    * semantics). */
-  def accountsDimStream(spark: SparkSession, customerDir: String,
-      glob: String = "customer.parquet"): DataFrame = {
-    // the ONE wire path (synthesize -> encode -> decode -> parse) shared
-    // with the batch KTable — all lazy transforms, so it lifts to the
-    // streaming frame unchanged
-    val changelog = graft.cdc.DimensionCdc.accountChangelog(
-        customerStream(spark, customerDir, glob))
-      .filter(col("account_id").isNotNull)
-    graft.ops.LatestByKey.latestByMaxBy(changelog,
-      Seq("account_id"), struct(col("cdc_ts_us")))
-  }
-
-  /** Streaming CUSTOMERS KTable maintenance — the second continuously-
-    * maintained KTable of the reference topology
-    * (`ABBankTopology.java:128-144`), same wire path and update-mode
-    * argmax as [[accountsDimStream]]. */
-  def customersDimStream(spark: SparkSession, customerDir: String,
-      glob: String = "customer.parquet"): DataFrame = {
-    val changelog = graft.cdc.DimensionCdc.customerChangelog(
-        customerStream(spark, customerDir, glob))
-      .filter(col("customer_id").isNotNull)
-    graft.ops.LatestByKey.latestByMaxBy(changelog,
-      Seq("customer_id"), struct(col("cdc_ts_us")))
-  }
+  /** Streaming KTable maintenance for a dimension topic (ACCOUNTS or
+    * CUSTOMERS) — the reference's KTables are CONTINUOUSLY maintained from
+    * their CDC topics (`ABBankTopology.java:107-144` `.toTable(...)`); here
+    * the changelog arrives as a stream (file source standing in for
+    * Kafka), travels the JSON wire through the table's own codec
+    * ([[graft.cdc.CdcTable.keyed]], all lazy transforms, so it lifts to
+    * the streaming frame unchanged), and the latest version per key is
+    * maintained as an update-mode `max_by` aggregation — state is one
+    * narrow struct per key. [[ktableQuery]] runs it, and the query's state
+    * store IS the KTable ([[ktableSnapshot]] reads it back). Tombstones
+    * stay in state with `op = 'd'`, so the delete wins the argmax and the
+    * reader drops the key (filtering them BEFORE the aggregation would
+    * resurrect the previous version instead — Kafka Streams' actual
+    * tombstone semantics). */
+  def ktableStream(spark: SparkSession, table: CdcTable, customerDir: String,
+      glob: String = "customer.parquet"): DataFrame =
+    graft.ops.LatestByKey.latestByMaxBy(
+      table.keyed(customerStream(spark, customerDir, glob), Wire.Json),
+      Seq(table.key), struct(col("cdc_ts_us")))
 
   /** The customer file-stream both KTables' changelogs are built from. */
   private def customerStream(spark: SparkSession, customerDir: String,
@@ -271,10 +210,10 @@ object Pipelines {
       .option("pathGlobFilter", glob)
       .parquet(customerDir)
 
-  /** Start a KTable query over [[accountsDimStream]] or
-    * [[customersDimStream]]. The table lives in the query's state store
-    * (the analog of the reference's KV store with changelog restore,
-    * `ABBankTopology.java:67-71`), so the emitted changes are discarded. */
+  /** Start a KTable query over a [[ktableStream]]. The table lives in the
+    * query's state store (the analog of the reference's KV store with
+    * changelog restore, `ABBankTopology.java:67-71`), so the emitted
+    * changes are discarded. */
   def ktableQuery(dim: DataFrame, checkpoint: String): StreamingQuery =
     dim.writeStream.format("noop").outputMode("update")
       .option("checkpointLocation", checkpoint).start()
@@ -310,16 +249,16 @@ object Pipelines {
     * wires it; here it runs: each high-value micro-batch looks up the
     * CURRENT accounts snapshot, then the CURRENT customers snapshot, both
     * read by [[ktableSnapshot]] from the state of their own KTable queries
-    * ([[accountsDimStream]] / [[customersDimStream]] run by
-    * [[ktableQuery]], checkpointed at `accountsCheckpoint` /
-    * `customersCheckpoint`). Re-reading the snapshot inside
-    * `foreachBatch` is exactly a Kafka Streams store lookup at batch
+    * ([[ktableStream]]s run by [[ktableQuery]], checkpointed at
+    * `accountsCheckpoint` / `customersCheckpoint`). Re-reading the snapshot
+    * inside `foreachBatch` is exactly a Kafka Streams store lookup at batch
     * granularity — a plain stream-static join would pin the file listing
     * at query start and never see dim updates. Missing keys (including
     * tombstoned dims) take the KV-store-miss fallbacks (`:252-253`); a
     * KTable with no committed batch behaves as empty. Both dims broadcast
-    * — the transaction stream never shuffles. Output columns match the
-    * batch `q_enrich_cdc_two_hop`.
+    * — the transaction stream never shuffles. Each micro-batch runs
+    * [[Enrich.twoHopCdcEnriched]], the body of the batch
+    * `q_enrich_cdc_two_hop`.
     *
     * Delivery is at-least-once, so each micro-batch lands in its own
     * `batch=<id>` subdirectory with overwrite semantics: a replayed batch
@@ -329,26 +268,13 @@ object Pipelines {
   def highValueTwoHopCdcStream(parsed: DataFrame, accountsCheckpoint: String,
       customersCheckpoint: String, threshold: Double, outDir: String,
       checkpoint: String): StreamingQuery = {
-    val hv = completed(parsed)
-      .filter(Predicates.isHighValue(col("amount"), threshold))
-    hv.writeStream
+    Enrich.highValue(parsed, threshold).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val acct = ktableSnapshot(s, accountsCheckpoint,
-          "account_id BIGINT, customer_id BIGINT, account_number STRING")
-        val cust = ktableSnapshot(s, customersCheckpoint,
-          "customer_id BIGINT, first_name STRING, last_name STRING, " +
-            "email STRING, segment STRING")
-        batch.join(broadcast(acct), Seq("account_id"), "left")
-          .join(broadcast(cust), Seq("customer_id"), "left")
-          .select(col("txn_id"), col("account_id"), col("amount"),
-            coalesce(col("account_number"), lit("N/A")).as("account_number"),
-            when(col("first_name").isNull, lit("N/A"))
-              .otherwise(graft.ops.Notify.fullName(col("first_name"),
-                col("last_name"))).as("customer_name"),
-            coalesce(col("email"), lit("N/A")).as("email"),
-            coalesce(col("segment"), lit("N/A")).as("segment"))
+        Enrich.twoHopCdcEnriched(batch,
+            ktableSnapshot(s, accountsCheckpoint, Enrich.TwoHopAccountColumns),
+            ktableSnapshot(s, customersCheckpoint, Enrich.TwoHopCustomerColumns))
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()
@@ -384,7 +310,7 @@ object Pipelines {
           // transform output stays deterministic (reference
           // `model/NotificationEvent.java:70-71`)
           writeIdempotent(
-            Notify.dispatchStamp(highValueAlerts(batch, customerDim, threshold)),
+            Notify.dispatchStamp(Enrich.highValueAlerts(batch, customerDim, threshold)),
             id, s"$outBase/hv_alerts")
           writeIdempotent(batch.filter(Predicates.isDebit(col("txn_type"))),
             id, s"$outBase/debits")

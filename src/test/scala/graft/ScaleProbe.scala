@@ -337,7 +337,8 @@ object ScaleProbe {
       pmod(col("id"), lit(25L)).cast("int").as("c_nationkey"),
       (pmod(xxhash64(col("id")), lit(100000L)) / 100.0).as("c_acctbal"),
       lit("BUILDING").as("c_mktsegment"))
-    time("cdc_accounts_dim")(cdc.DimensionCdc.accountsDim(synthCustomers))
+    time("cdc_accounts_dim")(
+      cdc.DimensionCdc.Accounts.dim(synthCustomers, cdc.Wire.Json))
 
     // streaming state at larger key cardinality: the same
     // flatMapGroupsWithState reconciliation with 20x the keys, on the

@@ -1,12 +1,14 @@
 package graft.cdc
 
 import graft.SparkSpecBase
+import graft.ops.LatestByKey
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** CDC-built dimension KTables (reference `ABBankTopology.java:107-144`):
-  * envelope serde round trip, latest-by-key, tombstone application, and the
-  * enrichment join's N/A fallback for deleted accounts. */
+  * envelope serde round trip of every table over both wires, latest-by-key,
+  * tombstone application, and the enrichment join's N/A fallback for
+  * deleted accounts. */
 class DimensionCdcSpec extends SparkSpecBase {
 
   // c_custkey: 1 (1 ver), 5 (3 vers), 13 (2 vers, ends tombstoned),
@@ -22,35 +24,40 @@ class DimensionCdcSpec extends SparkSpecBase {
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
   }
 
+  private lazy val orders: DataFrame = {
+    import spark.implicits._
+    Seq(3L, 6L, 7L, 10L).toDF("o_orderkey")
+  }
+
   test("changelog versions: 1 + custkey%3 per account, create then updates") {
-    val ops = DimensionCdc.accountChangelog(customers)
+    val ops = DimensionCdc.Accounts.changelog(customers, Wire.Json)
       .filter(col("account_id") === 5)
       .orderBy("cdc_ts_us").select("op").collect().map(_.getString(0))
     assert(ops.toSeq === Seq("c", "u", "u"))
   }
 
-  test("JSON wire round trip preserves doubles bit-for-bit") {
-    val direct = DimensionCdc.parseAccountEnvelope(
-      DimensionCdc.synthesizeAccountEnvelope(customers))
-    val wire = DimensionCdc.accountChangelog(customers)
-    assert(wire.exceptAll(direct).count() === 0)
-    assert(direct.exceptAll(wire).count() === 0)
-  }
-
-  test("Avro binary wire yields the same changelog and KTables as the JSON shadow") {
-    // byte format differs, typed output is the contract — both topics
-    val jsonAcct = DimensionCdc.accountChangelog(customers)
-    val avroAcct = DimensionCdc.accountChangelogAvro(customers)
-    assert(avroAcct.exceptAll(jsonAcct).count() === 0)
-    assert(jsonAcct.exceptAll(avroAcct).count() === 0)
-    assert(DimensionCdc.accountsDimAvro(customers).exceptAll(
-      DimensionCdc.accountsDim(customers)).count() === 0)
-    assert(DimensionCdc.customersDimAvro(customers).exceptAll(
-      DimensionCdc.customersDim(customers)).count() === 0)
+  test("every table and wire: changelog == parse(synthesize)") {
+    // byte formats differ, the typed rows are the contract: doubles
+    // bit-for-bit, nulls transported, deletes keyed from the before-image
+    def same(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    for {
+      (table, source) <- Seq(DimensionCdc.Accounts -> customers,
+        DimensionCdc.Customers -> customers, DimensionCdc.Audit -> orders)
+      wire <- Seq(Wire.Json, Wire.Avro)
+    } {
+      val direct = table.parseEnvelope(table.synthesize(source))
+      val clue = s"${table.table} over $wire"
+      assert(!direct.isEmpty, clue)
+      assert(same(table.changelog(source, wire), direct), clue)
+      assert(same(table.dim(source, wire),
+        LatestByKey.latestWithTombstones(direct, Seq(table.key),
+          Seq(col("cdc_ts_us"))).drop("op")), clue)
+    }
   }
 
   test("accountsDim keeps latest version; balance reflects the newest update") {
-    val dim = DimensionCdc.accountsDim(customers)
+    val dim = DimensionCdc.Accounts.dim(customers, Wire.Json)
     val row5 = dim.filter(col("account_id") === 5).head()
     // custkey 5: 3 versions, latest v=2 -> balance = 200.50 + 200
     assert(row5.getAs[Double]("balance") === 400.50)
@@ -59,13 +66,13 @@ class DimensionCdcSpec extends SparkSpecBase {
   }
 
   test("tombstoned accounts are absent from the materialized KTable") {
-    val ids = DimensionCdc.accountsDim(customers)
+    val ids = DimensionCdc.Accounts.dim(customers, Wire.Json)
       .select("account_id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq === Seq(1L, 5L, 22L)) // 13, 26 deleted (custkey%13=0)
   }
 
   test("delete envelopes carry the key in the before-image (after is null)") {
-    val tomb = DimensionCdc.accountChangelog(customers)
+    val tomb = DimensionCdc.Accounts.changelog(customers, Wire.Json)
       .filter(col("op") === "d")
     assert(tomb.count() === 2)
     assert(tomb.filter(col("account_id").isNull).count() === 0)
@@ -78,15 +85,13 @@ class DimensionCdcSpec extends SparkSpecBase {
       (17L, "Customer#17", 0, 10.0, "BUILDING"),  // 17%17=0 -> tombstoned
       (3L, "Customer#3", 1, 20.0, "MACHINERY"))   // 2 versions, latest v=1
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-    val dim = DimensionCdc.customersDim(custs)
+    val dim = DimensionCdc.Customers.dim(custs, Wire.Json)
     assert(dim.select("customer_id").collect().map(_.getLong(0)).toSeq === Seq(3L))
     assert(dim.head().getAs[String]("email") === "c3.v1@abbank.example")
   }
 
   test("auditChangelog: wire round trip preserves typed fields AND nulls") {
-    import spark.implicits._
-    val orders = Seq(3L, 6L, 7L, 10L).toDF("o_orderkey")
-    val got = DimensionCdc.auditChangelog(orders).collect()
+    val got = DimensionCdc.Audit.changelog(orders, Wire.Json).collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(got.keySet === Set(3L, 6L, 7L, 10L))
     // 6 % 3 = 0 -> FLAGGED with AMOUNT_THRESHOLD (even), no reviewer
@@ -114,7 +119,7 @@ class DimensionCdcSpec extends SparkSpecBase {
     val facts = Seq((100L, 5L, 250.0), (101L, 13L, 300.0))
       .toDF("txn_id", "account_id", "amount")
     val joined = graft.ops.Enrich.withDim(facts,
-        DimensionCdc.accountsDim(customers), "account_id")
+        DimensionCdc.Accounts.dim(customers, Wire.Json), "account_id")
       .select(col("txn_id"),
         coalesce(col("account_number"), lit("N/A")).as("account_number"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap

@@ -294,7 +294,7 @@ class GoldenWireSpec extends SparkSpecBase {
 
   test("golden delete keeps its key in the before-image (tombstone contract)") {
     // Debezium deletes carry before=row, after=null; the KTable path keys
-    // deletes from the before-image (DimensionCdc.parseAccountEnvelope)
+    // deletes from the before-image (CdcTable.parseEnvelope)
     val wire = wireFrame(Seq((400L, txnJson(6, 400, "DEBIT", 10000.0, op = "d"))))
     val env = EnvelopeOps.decodeJsonEnvelope(
       wire.select(col("value").cast("string").as("payload")))

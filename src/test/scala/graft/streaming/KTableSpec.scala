@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.{SparkSpecBase, Tables}
-import graft.cdc.DimensionCdc
+import graft.cdc.{DimensionCdc, Wire}
 import graft.ops.LatestByKey
 
 /** The KTables live in their queries' state stores: a [[Pipelines.ktableQuery]]
@@ -20,7 +20,7 @@ class KTableSpec extends SparkSpecBase {
 
   /** A small KTable over a monitored directory of changelog files
     * `(account_id, account_number, op, ts)`, the same `max_by` shape as
-    * [[Pipelines.accountsDimStream]]. */
+    * [[Pipelines.ktableStream]]. */
   private def changelogTable(dir: String): DataFrame =
     LatestByKey.latestByMaxBy(
       spark.readStream
@@ -51,11 +51,9 @@ class KTableSpec extends SparkSpecBase {
       "tombstoned keys absent") {
     val base = Files.createTempDirectory("graft_ktable_sf").toString
     val customer = Tables.customer(spark, sf0001)
-    Seq(
-      ("account_id", Pipelines.accountsDimStream(spark, sf0001),
-        DimensionCdc.accountsDim(customer), DimensionCdc.accountChangelog(customer)),
-      ("customer_id", Pipelines.customersDimStream(spark, sf0001),
-        DimensionCdc.customersDim(customer), DimensionCdc.customerChangelog(customer))
+    Seq(DimensionCdc.Accounts, DimensionCdc.Customers).map(t =>
+      (t.key, Pipelines.ktableStream(spark, t, sf0001),
+        t.dim(customer, Wire.Json), t.changelog(customer, Wire.Json))
     ).foreach { case (key, stream, batchDim, changelog) =>
       val ckpt = s"$base/$key"
       val q = Pipelines.ktableQuery(stream, ckpt)
@@ -74,14 +72,14 @@ class KTableSpec extends SparkSpecBase {
   }
 
   test("streaming accounts KTable (complete snapshot) == batch accountsDim") {
-    val stream = Pipelines.accountsDimStream(spark, sf0001)
+    val stream = Pipelines.ktableStream(spark, DimensionCdc.Accounts, sf0001)
     val q = stream.writeStream.format("memory").queryName("acct_ktable")
       .outputMode("complete").start()
     q.processAllAvailable(); q.stop()
     // apply tombstones to the snapshot the way an upsert sink would
     val got = spark.table("acct_ktable")
       .filter(col("op") =!= "d").drop("op").collect().toSet
-    val want = DimensionCdc.accountsDim(Tables.customer(spark, sf0001))
+    val want = DimensionCdc.Accounts.dim(Tables.customer(spark, sf0001), Wire.Json)
       .collect().toSet
     assert(got === want)
     assert(got.nonEmpty)

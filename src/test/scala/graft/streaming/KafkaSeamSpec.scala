@@ -90,7 +90,7 @@ class KafkaSeamSpec extends SparkSpecBase {
     val out = Files.createTempDirectory("graft_seam_sink").toString
     withConf("spark.graft.sink", "kafka") {
       val parsed = Pipelines.parsedStream(spark, sf0001)
-      val notif = Pipelines.highValueAlerts(parsed,
+      val notif = graft.ops.Enrich.highValueAlerts(parsed,
         Tables.customer(spark, sf0001), threshold = 200.0)
       val e = intercept[Exception] {
         val q = Sources.sink(notif, "high-value-alerts", out)

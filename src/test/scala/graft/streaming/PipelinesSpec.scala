@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpecBase, Tables}
-import graft.cdc.EnvelopeOps
+import graft.cdc.{DimensionCdc, EnvelopeOps, Wire}
 import graft.ops.{Predicates, Reconcile, Windows}
 
 /** Streaming pipelines must agree with their batch twins — the batch
@@ -51,7 +51,7 @@ class PipelinesSpec extends SparkSpecBase {
     twabRows(graft.ops.EventAnalytics.timeWeightedBalance(batchCompleted)).toSet
 
   test("streaming high-value alerts == batch notification query") {
-    val stream = Pipelines.highValueAlerts(
+    val stream = graft.ops.Enrich.highValueAlerts(
       Pipelines.parsedStream(spark, sf0001),
       Tables.customer(spark, sf0001), threshold = 200.0)
     val got = runToTable(stream, "hv_stream", "append")
@@ -91,9 +91,10 @@ class PipelinesSpec extends SparkSpecBase {
   }
 
   test("streaming CDC-dim enrichment == batch q_enrich_cdc_dim (stream-KTable join)") {
-    val stream = Pipelines.highValueCdcEnriched(
+    val stream = graft.ops.Enrich.highValueCdcEnriched(
       Pipelines.parsedStream(spark, sf0001),
-      Tables.customer(spark, sf0001), threshold = 200.0)
+      DimensionCdc.Accounts.dim(Tables.customer(spark, sf0001), Wire.Json),
+      threshold = 200.0)
     val got = runToTable(stream, "hv_cdc_stream", "append").collect().toSet
     val want = graft.SparkEntry.queries("q_enrich_cdc_dim")(spark, sf0001)
       .collect().toSet
@@ -107,9 +108,9 @@ class PipelinesSpec extends SparkSpecBase {
     val base = Files.createTempDirectory("graft_twohop").toString
     // both KTables continuously maintained from their changelog streams
     val acctQ = Pipelines.ktableQuery(
-      Pipelines.accountsDimStream(spark, sf0001), s"$base/ckpt_acct")
+      Pipelines.ktableStream(spark, DimensionCdc.Accounts, sf0001), s"$base/ckpt_acct")
     val custQ = Pipelines.ktableQuery(
-      Pipelines.customersDimStream(spark, sf0001), s"$base/ckpt_cust")
+      Pipelines.ktableStream(spark, DimensionCdc.Customers, sf0001), s"$base/ckpt_cust")
     acctQ.processAllAvailable(); custQ.processAllAvailable()
     acctQ.stop(); custQ.stop()
 

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import graft.{SparkSpecBase, Tables}
+import graft.cdc.DimensionCdc
 
 /** At-least-once replay audit for every GraftApp sink class (SURVEY §4's
   * delivery contract, reference `config/ABBankStreamsConfig.java:85-86`):
@@ -24,9 +25,9 @@ class SinkIdempotenceSpec extends SparkSpecBase {
   test("two-hop foreachBatch sink: full re-delivery leaves zero duplicate and zero lost alerts") {
     val base = Files.createTempDirectory("graft_idem_twohop").toString
     val acctQ = Pipelines.ktableQuery(
-      Pipelines.accountsDimStream(spark, sf0001), s"$base/ckpt_acct")
+      Pipelines.ktableStream(spark, DimensionCdc.Accounts, sf0001), s"$base/ckpt_acct")
     val custQ = Pipelines.ktableQuery(
-      Pipelines.customersDimStream(spark, sf0001), s"$base/ckpt_cust")
+      Pipelines.ktableStream(spark, DimensionCdc.Customers, sf0001), s"$base/ckpt_cust")
     acctQ.processAllAvailable(); custQ.processAllAvailable()
     acctQ.stop(); custQ.stop()
 
@@ -51,7 +52,7 @@ class SinkIdempotenceSpec extends SparkSpecBase {
 
   test("FileStreamSink readers resolve through _spark_metadata: a replayed batch's stray data file is invisible") {
     val outBase = Files.createTempDirectory("graft_idem_file").toString
-    val q = Pipelines.highValueAlerts(
+    val q = graft.ops.Enrich.highValueAlerts(
         Pipelines.parsedStream(spark, sf0001),
         Tables.customer(spark, sf0001), threshold = 200.0)
       .writeStream.format("parquet")
