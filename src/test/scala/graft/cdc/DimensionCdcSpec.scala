@@ -36,6 +36,26 @@ class DimensionCdcSpec extends SparkSpecBase {
     assert(ops.toSeq === Seq("c", "u", "u"))
   }
 
+  test("JSON wire round trip preserves doubles bit-for-bit") {
+    val direct = DimensionCdc.Accounts.parseEnvelope(
+      DimensionCdc.Accounts.synthesize(customers))
+    val wire = DimensionCdc.Accounts.changelog(customers, Wire.Json)
+    assert(wire.exceptAll(direct).count() === 0)
+    assert(direct.exceptAll(wire).count() === 0)
+  }
+
+  test("Avro binary wire yields the same changelog and KTables as the JSON shadow") {
+    // byte format differs, typed output is the contract — both topics
+    val jsonAcct = DimensionCdc.Accounts.changelog(customers, Wire.Json)
+    val avroAcct = DimensionCdc.Accounts.changelog(customers, Wire.Avro)
+    assert(avroAcct.exceptAll(jsonAcct).count() === 0)
+    assert(jsonAcct.exceptAll(avroAcct).count() === 0)
+    assert(DimensionCdc.Accounts.dim(customers, Wire.Avro).exceptAll(
+      DimensionCdc.Accounts.dim(customers, Wire.Json)).count() === 0)
+    assert(DimensionCdc.Customers.dim(customers, Wire.Avro).exceptAll(
+      DimensionCdc.Customers.dim(customers, Wire.Json)).count() === 0)
+  }
+
   test("every table and wire: changelog == parse(synthesize)") {
     // byte formats differ, the typed rows are the contract: doubles
     // bit-for-bit, nulls transported, deletes keyed from the before-image
